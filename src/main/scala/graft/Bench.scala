@@ -63,24 +63,24 @@ object Bench {
     // subject) — all memoized per JVM. q38/q39/q54 then time the
     // pipeline itself (read → parse → unpivot → dedup → layout-write →
     // read), q56 times the exchange-free join, q57 the pruned lookup —
-    // never fixture setup.
-    try graft.queries.ScaleQueries.stageFixtures(spark, sfDir)
-    catch { case _: Throwable => () }
-    // Dedup-cluster artifact (q58 read-back / q64 survivor selection).
-    try graft.ext.CurationQueries.stageFixtures(spark, sfDir)
-    catch { case _: Throwable => () }
-    // Z-ordered lineitem layout (q73 box-slice subject).
-    try graft.queries.AnalyticsQueries.stageFixtures(spark, sfDir)
-    catch { case _: Throwable => () }
-    // Fragmented orders copy (q84 compaction subject).
-    try graft.queries.MiningQueries.stageFixtures(spark, sfDir)
-    catch { case _: Throwable => () }
-    // q184 streaming ops-CDC landing files (mtime-ordered micro-batches).
-    try graft.queries.AuditQueries.stageFixtures(spark, sfDir)
-    catch { case _: Throwable => () }
-    // q216 typed-docs landing (mtime-ordered micro-batches).
-    try graft.queries.TableFormatQueries.stageFixtures(spark, sfDir)
-    catch { case _: Throwable => () }
+    // never fixture setup. The other stages: the dedup-cluster artifact
+    // (q58 read-back / q64 survivor selection), the z-ordered lineitem
+    // layout (q73 box-slice subject), the fragmented orders copy (q84
+    // compaction subject), and the mtime-ordered micro-batch landings
+    // of q184 (streaming ops-CDC) and q216 (typed docs). A stage that
+    // fails says so on stderr: its queries then time something else.
+    Seq[(String, (SparkSession, String) => Unit)](
+      "ScaleQueries" -> graft.queries.ScaleQueries.stageFixtures,
+      "CurationQueries" -> graft.ext.CurationQueries.stageFixtures,
+      "AnalyticsQueries" -> graft.queries.AnalyticsQueries.stageFixtures,
+      "MiningQueries" -> graft.queries.MiningQueries.stageFixtures,
+      "AuditQueries" -> graft.queries.AuditQueries.stageFixtures,
+      "TableFormatQueries" -> graft.queries.TableFormatQueries.stageFixtures
+    ).foreach { case (stage, fn) =>
+      try fn(spark, sfDir) catch { case e: Throwable =>
+        System.err.println(s"[bench] fixture $stage FAILED: ${e.getMessage}")
+      }
+    }
 
     val trials = sys.env.getOrElse("SPARK_GRAFT_BENCH_TRIALS", "3").toInt max 1
     // Opt-in subset filter (comma-separated names) for targeted

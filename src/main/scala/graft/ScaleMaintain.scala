@@ -36,8 +36,8 @@ import graft.transform.Rollup
   *  4. (round 12) THE DELETE PATH inherits all three: tombstone
   *     commits cost O(delta) exactly like upserts (measured ratio
   *     0.92 over 40 alternating delete/upsert commits at 100k-row
-  *     deltas), `snapshotAtOps` pays the same unfolded-history read
-  *     (2.98 s over 41 commits at 2M keys) and `checkpointOps`
+  *     deltas), the ops `snapshotAt` pays the same unfolded-history read
+  *     (2.98 s over 41 commits at 2M keys) and `checkpoint`
   *     collapses it 7.0× (0.43 s) — while PHYSICALLY erasing dead
   *     history: the raw API-free read after checkpoint holds exactly
   *     the 1,000,000 live rows and zero tombstones (law-checked).
@@ -167,7 +167,7 @@ object ScaleMaintain {
     // O(delta) like upserts (a delete writes keys+nulls into its own
     // commit dir, never reads the log), the ops snapshot pays the
     // same unfolded-history read amplification and collapses under
-    // checkpointOps, and the checkpoint PHYSICALLY erases dead
+    // checkpoint, and the checkpoint PHYSICALLY erases dead
     // history (no tombstone row and no dead key survives in any
     // file). Liveness law: commit 0 upserts every key; commit
     // c ∈ [1, C] touches keys k ≡ c (mod S) — odd commits tombstone,
@@ -208,7 +208,7 @@ object ScaleMaintain {
     val (expN, expS) = (lawAgg.getLong(0), lawAgg.getLong(1))
     def checkOps(tag: String): Double = {
       val ((rows, got), secs) = timed {
-        val agg = Changelog.snapshotAtOps(spark, ops, Seq("stock"), vOps)
+        val agg = Changelog.snapshotAt(spark, ops, Seq("stock"), vOps)
           .agg(count(lit(1)), sum("value")).head()
         (agg.getLong(0), agg.getLong(1))
       }
@@ -220,7 +220,7 @@ object ScaleMaintain {
     }
     val opsPre = checkOps(s"pre-ckpt, ${nCommits + 1} commits")
     val (_, opsCkptSecs) = timed(
-      Changelog.checkpointOps(spark, ops, Seq("stock"), vOps))
+      Changelog.checkpoint(spark, ops, Seq("stock"), vOps))
     val opsPost = checkOps("post-ckpt, 1 base commit")
     // physical erasure at scale: no tombstone row and no dead key in
     // any surviving file — the raw (API-free) read proves the bytes

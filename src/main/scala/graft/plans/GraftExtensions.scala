@@ -81,14 +81,14 @@ object GraftSqlFunctions {
     *
     * WINDOW SEMANTICS, stated loudly: the window is EXCLUSIVE-START
     * `(start, end]` — this engine's feed law everywhere
-    * (changesBetweenOps, feed tables, the CDC stream) — whereas
+    * (changesBetween, feed tables, the CDC stream) — whereas
     * Delta's table_changes INCLUDES changes at startVersion. Porting
     * a Delta query: pass your startVersion − 1.
     *
     * Resolves the table through the same conf-backed registration the
     * catalog reads use; tracked columns are every non-key column of
     * the log's schema (the full-row CDF). The builder returns the
-    * engine's OWN feed plan (`Changelog.changesBetweenOps`),
+    * engine's OWN feed plan (`Changelog.changesBetween`),
     * analyzed — the nested-resolution discipline ResolveGraftLog
     * already uses. Arguments must be literals (a TVF's window is part
     * of the query text); a FEED registration refuses — it already IS
@@ -174,7 +174,7 @@ object GraftSqlFunctions {
       .filterNot(keys.contains)
       .filterNot(Seq(graft.sources.Changelog.OpCol,
         graft.sources.Changelog.CommitCol).contains)
-    graft.sources.Changelog.changesBetweenOps(spark, path, keys, v0, v1,
+    graft.sources.Changelog.changesBetween(spark, path, keys, v0, v1,
         trackCols)
       .queryExecution.analyzed
   }

@@ -321,7 +321,7 @@ object AuditQueries {
     // compaction; the liveness filter is one predicate AFTER the
     // per-key reduction.
     "q181_ops_snapshot" -> ((s, d) =>
-      Changelog.snapshotAtOps(s, stagedOpsLog(s, d),
+      Changelog.snapshotAt(s, stagedOpsLog(s, d),
         Seq("o_orderkey"), 2L)),
 
     // FULL-LABEL CHANGE DATA FEED over the ops log: insert / update /
@@ -332,7 +332,7 @@ object AuditQueries {
     // the pruned (v0, v1] commits, endpoint states semi-joined to
     // candidates before compaction.
     "q182_ops_cdf" -> ((s, d) =>
-      Changelog.changesBetweenOps(s, stagedOpsLog(s, d),
+      Changelog.changesBetween(s, stagedOpsLog(s, d),
         Seq("o_orderkey"), 0L, 2L, trackCols = Seq("o_totalprice"))),
 
     // DELETE-AWARE CDF MAINTENANCE — the proof q182's feed is
@@ -354,12 +354,12 @@ object AuditQueries {
       val path = stagedOpsLog(s, d)
       val cents = (c: org.apache.spark.sql.Column) =>
         (round(c * 100)).cast("long")
-      val roll0 = Changelog.snapshotAtOps(s, path, Seq("o_orderkey"), 0L)
+      val roll0 = Changelog.snapshotAt(s, path, Seq("o_orderkey"), 0L)
         .groupBy("o_custkey")
         .agg(count(lit(1)).as("n_orders"),
           sum(cents(col("o_totalprice"))).as("_c"))
       val ct = col("change_type")
-      val delta = Changelog.changesBetweenOps(s, path, Seq("o_orderkey"),
+      val delta = Changelog.changesBetween(s, path, Seq("o_orderkey"),
           0L, 2L, trackCols = Seq("o_totalprice", "o_custkey"))
         .groupBy(coalesce(col("new_o_custkey"), col("old_o_custkey"))
           .as("o_custkey"))
@@ -388,8 +388,8 @@ object AuditQueries {
     // carry the new column — the q143 evolution law, now with the
     // delete classes interleaved.
     "q185_ops_evolved_snapshot" -> ((s, d) =>
-      Changelog.snapshotAtOpsEvolved(s, opsLogEvolved(s, d),
-        Seq("o_orderkey"), 2L)),
+      Changelog.snapshotAt(s, opsLogEvolved(s, d),
+        Seq("o_orderkey"), 2L, mergeSchema = true)),
 
     // STREAMING CDC INGESTION into the ops log — the delete path's
     // delivery leg: the three ops commits land as files (mtime-
@@ -421,7 +421,7 @@ object AuditQueries {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      Changelog.snapshotAtOps(s, path, Seq("o_orderkey"), Long.MaxValue)
+      Changelog.snapshotAt(s, path, Seq("o_orderkey"), Long.MaxValue)
     }),
 
     // OPS CHECKPOINT + VACUUM — q137's bounded-history story for the
@@ -436,8 +436,8 @@ object AuditQueries {
     // refusal).
     "q189_ops_checkpoint" -> ((s, d) => {
       val path = opsLog(s, d, "orders_ops_log_q189")
-      Changelog.checkpointOps(s, path, Seq("o_orderkey"), 1L)
-      Changelog.snapshotAtOps(s, path, Seq("o_orderkey"), 2L)
+      Changelog.checkpoint(s, path, Seq("o_orderkey"), 1L)
+      Changelog.snapshotAt(s, path, Seq("o_orderkey"), 2L)
     }),
 
     // AS OF TIMESTAMP time travel — the clock addressing every
@@ -480,9 +480,9 @@ object AuditQueries {
       val path = opsLog(s, d, "orders_ops_log_q191")
       val dom = opsOrders(s, d)
         .agg(max(col("o_orderkey"))).head().getLong(0) + 1L
-      Changelog.checkpointOpsClustered(s, path, Seq("o_orderkey"), 1L,
-        "o_orderkey", dom, 8)
-      Changelog.snapshotAtOps(s, path, Seq("o_orderkey"), 2L)
+      Changelog.checkpoint(s, path, Seq("o_orderkey"), 1L,
+        Some(Changelog.RangeCluster("o_orderkey", dom, 8)))
+      Changelog.snapshotAt(s, path, Seq("o_orderkey"), 2L)
     }),
 
     // ZERO-COPY SHALLOW CLONE (branching) — "CREATE TABLE ... CLONE
@@ -502,7 +502,7 @@ object AuditQueries {
         opsOrders(s, d).filter(col("o_orderkey") % 20 === 0)
           .withColumn("o_totalprice", col("o_totalprice") + 2000.0),
         dest, 2L)
-      Changelog.snapshotAtOps(s, dest, Seq("o_orderkey"), Long.MaxValue)
+      Changelog.snapshotAt(s, dest, Seq("o_orderkey"), Long.MaxValue)
     }),
 
     // RESTORE to version v as a NEW commit — roll the DATA back
@@ -516,7 +516,7 @@ object AuditQueries {
     "q194_ops_restore" -> ((s, d) => {
       val path = opsLog(s, d, "orders_ops_log_q194")
       Changelog.restoreOps(s, path, Seq("o_orderkey"), 1L, 3L)
-      Changelog.snapshotAtOps(s, path, Seq("o_orderkey"), Long.MaxValue)
+      Changelog.snapshotAt(s, path, Seq("o_orderkey"), Long.MaxValue)
     }),
 
     // STATS-PRUNED POINT LOOKUP — per-commit key-range statistics (the
@@ -568,7 +568,7 @@ object AuditQueries {
         .withColumn("o_totalprice", col("o_totalprice") + 700.0)
       Changelog.mergeIntoOps(s, path, Seq("o_orderkey"), src, 3L,
         deleteWhen = Some(col("o_orderkey") % 12 === 0))
-      Changelog.snapshotAtOps(s, path, Seq("o_orderkey"), Long.MaxValue)
+      Changelog.snapshotAt(s, path, Seq("o_orderkey"), Long.MaxValue)
     }),
 
     // MULTI-WRITER OPTIMISTIC COMMITS — the OCC layer on the
@@ -585,7 +585,7 @@ object AuditQueries {
     // release) are race-specced in TopKChangelogSpec.
     "q205_occ_two_writers" -> ((s, d) => {
       val path = opsLog(s, d, "orders_ops_log_q205")
-      val head = Changelog.snapshotAtOps(s, path, Seq("o_orderkey"), 2L)
+      val head = Changelog.snapshotAt(s, path, Seq("o_orderkey"), 2L)
       val k = col("o_orderkey")
       val deltaA = head.filter(k % 5 === 1)
         .withColumn("o_totalprice", col("o_totalprice") + 9000.0)
@@ -599,7 +599,7 @@ object AuditQueries {
         deltaB, readVersion = 2L, writer = "wB")
       require(idA == 3L && idB == 4L,
         s"retry loop mis-assigned ids: A=$idA B=$idB")
-      Changelog.snapshotAtOps(s, path, Seq("o_orderkey"), Long.MaxValue)
+      Changelog.snapshotAt(s, path, Seq("o_orderkey"), Long.MaxValue)
     }),
 
     // THE OPS LOG AS A STREAMING SINK (DSv2 StreamingWrite) — q184's
@@ -627,7 +627,7 @@ object AuditQueries {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      Changelog.snapshotAtOps(s, path, Seq("o_orderkey"), Long.MaxValue)
+      Changelog.snapshotAt(s, path, Seq("o_orderkey"), Long.MaxValue)
     }),
 
     // LOG-TO-LOG INCREMENTAL REPLICATION — the composition the two
@@ -672,7 +672,7 @@ object AuditQueries {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      Changelog.snapshotAtOps(s, replica, Seq("o_orderkey"), Long.MaxValue)
+      Changelog.snapshotAt(s, replica, Seq("o_orderkey"), Long.MaxValue)
     }),
 
     // SELECTIVE (TENANT-SLICE) REPLICATION — q206 with the feed's
@@ -714,7 +714,7 @@ object AuditQueries {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      Changelog.snapshotAtOps(s, replica, Seq("o_orderkey"), Long.MaxValue)
+      Changelog.snapshotAt(s, replica, Seq("o_orderkey"), Long.MaxValue)
     }),
 
     // THE FULLY DECLARATIVE MATERIALIZED VIEW — the SEVENTH IVM path
@@ -769,7 +769,7 @@ object AuditQueries {
           .start()
         q.awaitTermination()
       }
-      Changelog.snapshotAtOps(s, viewLog, Seq("o_custkey"), Long.MaxValue)
+      Changelog.snapshotAt(s, viewLog, Seq("o_custkey"), Long.MaxValue)
         .filter(col("n_orders") > 0)
         .select(col("o_custkey"), col("n_orders"),
           (col("cents").cast("double") / 100.0).as("sum_price"))
@@ -801,7 +801,7 @@ object AuditQueries {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      Changelog.snapshotAtOps(s, path, Seq("event_id"), Long.MaxValue)
+      Changelog.snapshotAt(s, path, Seq("event_id"), Long.MaxValue)
     }),
 
     // MULTI-PRODUCER STREAMING INGESTION — the OCC layer under the
@@ -839,7 +839,7 @@ object AuditQueries {
       val qb = producer(0, ckptB)
       qa.awaitTermination()
       qb.awaitTermination()
-      Changelog.snapshotAtOps(s, path, Seq("o_orderkey"), Long.MaxValue)
+      Changelog.snapshotAt(s, path, Seq("o_orderkey"), Long.MaxValue)
     }),
 
     // THE CDC FEED AS A STREAMING SOURCE (DSv2 MicroBatchStream) —
@@ -926,7 +926,7 @@ object AuditQueries {
       Changelog.optimizeOps(s, path, Seq("o_orderkey"), 3L,
         "o_orderkey", dom, 8)
       Seq(1L, 2L, 3L).map(v =>
-        Changelog.snapshotAtOps(s, path, Seq("o_orderkey"), v)
+        Changelog.snapshotAt(s, path, Seq("o_orderkey"), v)
           .withColumn("asof", lit(v)))
         .reduce(_ unionByName _)
     }),
@@ -943,7 +943,7 @@ object AuditQueries {
       Changelog.stampCommit(path, 0L, 1000L)
       Changelog.stampCommit(path, 1L, 2000L)
       Changelog.stampCommit(path, 2L, 3000L)
-      Changelog.changesBetweenOpsTimestamps(s, path, Seq("o_orderkey"),
+      Changelog.changesBetweenTimestamps(s, path, Seq("o_orderkey"),
         1000L, 3000L, trackCols = Seq("o_totalprice"))
     }),
 

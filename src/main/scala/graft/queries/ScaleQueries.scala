@@ -417,8 +417,10 @@ object ScaleQueries {
 
     // Schema evolution across changelog commits — the drift every
     // long-lived table suffers: day 3's delta ships an ADDED column
-    // (ingest_ver) the earlier commits never had. snapshotAtEvolved
-    // merges the commit schemas (union), pre-evolution rows null-fill,
+    // (ingest_ver) the earlier commits never had. snapshotAt with
+    // mergeSchema = true merges the commit schemas (union) — the log
+    // evolves through plain `commit` with no evolution marker, so the
+    // caller states it —, pre-evolution rows null-fill,
     // and LWW compaction is unchanged — so the snapshot shows the flag
     // exactly on the keys whose LATEST version arrived after the
     // evolution (the odd symbols; the evens' day-2 versions predate
@@ -437,7 +439,7 @@ object ScaleQueries {
           if (i == 2) delta.withColumn("ingest_ver", lit("v2")) else delta,
           path, i.toLong)
       }
-      Changelog.snapshotAtEvolved(s, path, Financials.Pk, 2L)
+      Changelog.snapshotAt(s, path, Financials.Pk, 2L, mergeSchema = true)
     }),
 
     // Streaming materialized-view maintenance — the q128 exact-IVM day

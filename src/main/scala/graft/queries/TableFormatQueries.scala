@@ -349,7 +349,7 @@ object TableFormatQueries {
     }),
 
     // CHANGE FEED through the batch table — `readChangeFeed=true` with
-    // startingVersion/endingVersion resolves to changesBetweenOps's
+    // startingVersion/endingVersion resolves to changesBetween's
     // full-label feed (insert/update/delete, net semantics, no-op
     // suppression): q182's oracle verbatim through the reader options.
     "q214_log_table_cdf" -> ((s, d) =>
@@ -416,7 +416,7 @@ object TableFormatQueries {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      Changelog.snapshotAtOps(s, path, Seq("doc_id"), Long.MaxValue)
+      Changelog.snapshotAt(s, path, Seq("doc_id"), Long.MaxValue)
         .select(col("doc_id"), col("lang"), col("added"),
           col("score").cast("double").as("score"),
           col("payload").cast("string").as("payload_str"),
@@ -494,7 +494,7 @@ object TableFormatQueries {
       val path = AuditQueries.docsOpsLog(s, d, "docs_ops_log_q218")
       Changelog.optimizeOpsString(s, path, Seq("doc_key"), 3L,
         "doc_key", numFiles = 8)
-      Changelog.snapshotAtOps(s, path, Seq("doc_key"), Long.MaxValue)
+      Changelog.snapshotAt(s, path, Seq("doc_key"), Long.MaxValue)
     }),
 
     // SQL INSERT INTO THE TABLE FORMAT — the write half of the q212
@@ -752,7 +752,7 @@ object TableFormatQueries {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      Changelog.snapshotAtOps(s, path, Seq("doc_id"), Long.MaxValue)
+      Changelog.snapshotAt(s, path, Seq("doc_id"), Long.MaxValue)
         .select(col("doc_id"), col("meta.lang").as("lang"),
           col("meta.n").as("n"), col("big").cast("string").as("big_str"))
     }),
@@ -911,7 +911,7 @@ object TableFormatQueries {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      Changelog.snapshotAtOps(s, path, Seq("doc_id"), Long.MaxValue)
+      Changelog.snapshotAt(s, path, Seq("doc_id"), Long.MaxValue)
         .select(col("doc_id"),
           array_join(col("toks"), "|").as("toks_str"),
           array_join(transform(col("ids"), _.cast("string")), ",")
@@ -2214,7 +2214,7 @@ object TableFormatQueries {
         |   OR o_orderkey % 20 = 0""".stripMargin,
 
     // q192's clock-window oracle verbatim — the TVF's timestamp
-    // spelling and the library's changesBetweenOpsTimestamps converge
+    // spelling and the library's changesBetweenTimestamps converge
     "q243_tvf_by_timestamp" ->
       """SELECT o_orderkey, 'delete' AS change_type,
         |  o_totalprice AS old_o_totalprice,

@@ -15,6 +15,14 @@ import graft.transform.Upsert
   * ("exactly what did the model train on at release 12?") that an
   * overwrite-in-place upsert destroys.
   *
+  * The read and fold surface is five verbs — [[snapshotAt]],
+  * [[snapshotAsOf]], [[changesBetween]], [[changesBetweenTimestamps]]
+  * and [[checkpoint]] — and each serves both log shapes: a PLAIN log
+  * (every row an upsert, [[commit]]) and an OPS log (rows carry
+  * [[OpCol]], so deletes are tombstones — [[commitUpsert]] /
+  * [[commitDelete]]). The shape is read from the log's own schema,
+  * never chosen by the caller (see "Reads" below).
+  *
   * Scale:
   *  - a commit is O(delta): one append of the delta rows into a new
   *    `_commit=<v>` partition directory — no read, no merge, no lock
@@ -25,10 +33,10 @@ import graft.transform.Upsert
   *    one shuffle on the key with map-side partial combine, no sort,
   *    AQE-splittable — the same kernel the streaming changelog sinks
   *    compact with;
-  *  - history growth is bounded operationally by checkpointing: fold
-  *    commits ≤ v into a new base commit (itself just `snapshotAt(v)`
-  *    committed as v's replacement) and drop the olds — same math as
-  *    the streaming compaction, deliberately not automated here.
+  *  - history growth is bounded operationally by `checkpoint`: fold
+  *    commits ≤ v into a base commit written as v's replacement and
+  *    drop the olds — same math as the streaming compaction,
+  *    deliberately not automated here.
   */
 object Changelog {
 
@@ -36,7 +44,7 @@ object Changelog {
 
   // ---- Checkpoint horizon -------------------------------------------
   //
-  // `checkpoint`/`checkpointOps` ERASE history below the fold version.
+  // `checkpoint` ERASES history below the fold version.
   // A snapshot below the horizon would read empty, and — worse — a
   // change feed whose v0 sits below the horizon would see stateAt(v0)
   // as empty and label EVERY surviving key `insert` with null olds,
@@ -212,21 +220,14 @@ object Changelog {
     stamps.filter(_._2 <= tsMillis).map(_._1).max
   }
 
-  /** The plain table AS OF TIMESTAMP — resolve, then [[snapshotAt]]
-    * (whose horizon guard keeps retention loud on the clock path too).
+  /** The table AS OF TIMESTAMP — resolve, then [[snapshotAt]] (whose
+    * horizon guard keeps retention loud on the clock path too).
     */
   def snapshotAsOf(spark: SparkSession, path: String, keys: Seq[String],
                    tsMillis: Long): DataFrame =
     snapshotAt(spark, path, keys, versionAtTimestamp(path, tsMillis))
 
-  /** The ops table AS OF TIMESTAMP ([[snapshotAtOps]] after the same
-    * resolution).
-    */
-  def snapshotAsOfOps(spark: SparkSession, path: String, keys: Seq[String],
-                      tsMillis: Long): DataFrame =
-    snapshotAtOps(spark, path, keys, versionAtTimestamp(path, tsMillis))
-
-  /** [[changesBetweenOps]] addressed by the clock — "every change
+  /** [[changesBetween]] addressed by the clock — "every change
     * between last night's run and tonight's": both endpoints resolve
     * through [[versionAtTimestamp]] (latest commit stamped ≤ t), then
     * the versioned feed runs unchanged, so the window is
@@ -237,11 +238,11 @@ object Changelog {
     * violated — loud, because a consumer polling faster than commits
     * land should skip the cycle, not process a silently-empty feed).
     */
-  def changesBetweenOpsTimestamps(spark: SparkSession, path: String,
-                                  keys: Seq[String], t0Millis: Long,
-                                  t1Millis: Long,
-                                  trackCols: Seq[String]): DataFrame =
-    changesBetweenOps(spark, path, keys,
+  def changesBetweenTimestamps(spark: SparkSession, path: String,
+                               keys: Seq[String], t0Millis: Long,
+                               t1Millis: Long,
+                               trackCols: Seq[String]): DataFrame =
+    changesBetween(spark, path, keys,
       versionAtTimestamp(path, t0Millis),
       versionAtTimestamp(path, t1Millis), trackCols)
 
@@ -262,11 +263,12 @@ object Changelog {
     if (ids.isEmpty) None else Some(ids.max)
   }
 
-  /** Whether the log is OPS-shaped (rows carry [[OpCol]]) — ONE
-    * footer read, the same probe [[requireMatchingShape]] uses on the
-    * write path; loud on an empty log (shape is undefined there).
+  /** The first parquet file of the oldest commit directory — ONE
+    * file's footer decides the log's shape (every commit carries _op
+    * or none does, by induction on [[requireMatchingShape]]) — never a
+    * listing of the whole log, whose cost would grow with history.
     */
-  private[graft] def isOpsLog(spark: SparkSession, path: String): Boolean = {
+  private def shapeProbe(path: String): Option[String] = {
     def firstParquet(dir: String): Option[String] = {
       val children = LogFs.list(dir).sortBy(_.getPath.getName)
       children.find(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
@@ -274,10 +276,20 @@ object Changelog {
         .orElse(children.filter(_.isDirectory)
           .flatMap(d => firstParquet(d.getPath.toString).toSeq).headOption)
     }
-    val probe = LogFs.list(path)
+    LogFs.list(path)
       .filter(_.getPath.getName.startsWith(s"$CommitCol="))
       .sortBy(_.getPath.getName)
       .flatMap(d => firstParquet(d.getPath.toString).toSeq).headOption
+  }
+
+  /** Whether the log is OPS-shaped (rows carry [[OpCol]]) — ONE
+    * footer read, the same probe [[requireMatchingShape]] uses; loud on
+    * an empty log (shape is undefined there). Table metadata and write
+    * routing only: the read and fold verbs take the shape from the
+    * schema Spark already inferred for their own scan.
+    */
+  private[graft] def isOpsLog(spark: SparkSession, path: String): Boolean = {
+    val probe = shapeProbe(path)
     require(probe.nonEmpty,
       s"$path has no landed commit data — the log's shape is undefined")
     spark.read.parquet(probe.get).columns.contains(OpCol)
@@ -289,26 +301,12 @@ object Changelog {
     * a plain delta appended into an ops log gets `_op` null and the
     * liveness filter classifies every such row DEAD (a mis-routed
     * upsert vanishes from every snapshot); an ops delta into a plain
-    * log would surface tombstones as data rows. Mirror of
-    * requirePlainLog/requireOpsLog on the write path — one driver-side
-    * footer read, only when the log already exists.
+    * log would surface tombstones as data rows. The read verbs trust
+    * the shape this guard keeps uniform — one driver-side footer read,
+    * only when the log already exists.
     */
   private[graft] def requireMatchingShape(delta: DataFrame, path: String): Unit = {
-    // ONE file's footer decides the shape (every commit carries _op or
-    // none does, by induction on this very guard) — never a listing of
-    // the whole log, whose cost would grow with history
-    def firstParquet(dir: String): Option[String] = {
-      val children = LogFs.list(dir).sortBy(_.getPath.getName)
-      children.find(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath.toString)
-        .orElse(children.filter(_.isDirectory)
-          .flatMap(d => firstParquet(d.getPath.toString).toSeq).headOption)
-    }
-    val probe = LogFs.list(path)
-      .filter(_.getPath.getName.startsWith(s"$CommitCol="))
-      .sortBy(_.getPath.getName)
-      .flatMap(d => firstParquet(d.getPath.toString).toSeq).headOption
-    probe.foreach { f =>
+    shapeProbe(path).foreach { f =>
       val logHasOp = delta.sparkSession.read
         .parquet(f).columns.contains(OpCol)
       val deltaHasOp = delta.columns.contains(OpCol)
@@ -410,7 +408,7 @@ object Changelog {
 
   // ---- Maintenance mutex: ONE maintenance actor per log -------------
   //
-  // checkpoint/checkpointOps/checkpointOpsClustered/optimizeOps rewrite
+  // checkpoint/optimizeOps/vacuumRetain/resolveStaleTxn rewrite
   // shared state (the staging dir, the folded base, the horizon, the
   // vacuum) that the claim-per-commit protocol does not arbitrate —
   // before round 15 "one maintenance actor" was an ASSUMPTION. It is
@@ -668,7 +666,7 @@ object Changelog {
     * on. `ops = true` (the default, the table format's real shape)
     * appends the `_op` column; plain logs take the schema as-is. The
     * empty frame cannot ride [[commit]]'s dynamic partition overwrite
-    * (zero rows land zero partitions — the [[checkpointOps]] empty-fold
+    * (zero rows land zero partitions — the [[checkpoint]] empty-fold
     * special case, shared here), so the genesis writes its directory
     * directly. Loud when `path` already holds commits — CREATE makes a
     * table; an existing log is ADOPTED by registration, never
@@ -1150,9 +1148,7 @@ object Changelog {
     // resolve against the LOGICAL head frame: unknown/reserved names
     // and type errors refuse here, loudly, before anything lands
     val snap = applyMapping(
-      if (isOpsLog(spark, path))
-        snapshotAtOpsEvolved(spark, path, keys, head)
-      else snapshotAtEvolved(spark, path, keys, head),
+      snapshotAt(spark, path, keys, head, mergeSchema = true),
       currentMapping(path))
     val pred = org.apache.spark.sql.functions.expr(predicateSql)
     require(snap.select(pred.cast("boolean")).schema.head.dataType ==
@@ -1433,149 +1429,201 @@ object Changelog {
     -1L // unreachable
   }
 
-  /** Plain-log reads must never run against an OPS log: the plain
-    * compaction would surface tombstones as ordinary rows (a delete
-    * silently becomes an update-to-null) and the plain feed would
-    * mislabel them. The schema is already on the lazy frame — the
-    * check costs nothing beyond the footer read the caller is about
-    * to do anyway.
+  // ---- Reads: one snapshot, one feed, one fold -----------------------
+  //
+  // A log has one of two shapes, fixed by its first commit and kept
+  // uniform by [[requireMatchingShape]]: PLAIN rows are all upserts,
+  // OPS rows carry [[OpCol]] (`u` upsert / `d` tombstone). A plain log
+  // reads as an ops log whose `_op` column is missing and reads as
+  // `u`, so [[snapshotAt]], [[changesBetween]] and [[checkpoint]] take
+  // the shape from the schema Spark inferred for their own scan
+  // (`columns.contains(OpCol)` — no extra IO) and pick:
+  //  - the version order: `_commit` (plain) or [[opsVersion]] (ops —
+  //    a tombstone wins an equal-commit tie);
+  //  - the window: commits ≤ v (plain — the bare partition filter) or
+  //    `[newest base ≤ v, v]` (ops — base commits are OPTIMIZE
+  //    rewrites, which only ops logs land);
+  //  - liveness: none (plain) or `_op = 'u'` AFTER the per-key
+  //    reduction (ops), so a key deleted then re-inserted resolves
+  //    purely by commit order.
+  // Callers never choose an entry point by shape.
+
+  private def isOps(df: DataFrame): Boolean = df.columns.contains(OpCol)
+
+  /** The log's scan: `mergeSchema` folds every commit's footer into
+    * the union schema (an EVOLVED log — pre-evolution rows null-fill
+    * the later columns); the default infers from one footer, the
+    * planning cost the fixed-schema hot path must not silently pay.
     */
-  private def requirePlainLog(df: DataFrame, path: String): DataFrame = {
-    require(!df.columns.contains(OpCol),
-      s"$path is an OPS log (has $OpCol) — use snapshotAtOps/" +
-        "changesBetweenOps/checkpointOps, or tombstones would read " +
-        "as ordinary rows")
-    df
+  private def readLog(spark: SparkSession, path: String,
+                      mergeSchema: Boolean): DataFrame =
+    if (mergeSchema) spark.read.option("mergeSchema", "true").parquet(path)
+    else spark.read.parquet(path)
+
+  /** `log` pruned to the commits a read AS OF `v` must consider — both
+    * partition filters, so later (and, on an ops log, pre-base) commit
+    * directories are never opened.
+    */
+  private def window(log: DataFrame, path: String, v: Long): DataFrame = {
+    val upTo = log.filter(col(CommitCol) <= v)
+    val floor = if (isOps(log)) baseFloor(path, v) else Long.MinValue
+    if (floor == Long.MinValue) upTo
+    else upTo.filter(col(CommitCol) >= floor)
   }
+
+  /** Keyed last-write-wins in the shape's version order (`max_by`: one
+    * shuffle on the key with map-side partial combine). `_commit` and
+    * `_op` survive for the caller.
+    */
+  private def compact(rows: DataFrame, keys: Seq[String]): DataFrame =
+    Upsert.latestByKey(rows, keys,
+      if (isOps(rows)) opsVersion else col(CommitCol))
+
+  /** A compaction's LIVE rows, data columns only. */
+  private def live(state: DataFrame): DataFrame =
+    if (isOps(state)) state.filter(col(OpCol) === "u").drop(CommitCol, OpCol)
+    else state.drop(CommitCol)
 
   /** The table as of commit `v` (inclusive): keyed last-write-wins over
-    * the partition-pruned commits ≤ v. Returns the data columns only —
-    * `_commit` is the log's coordinate, not the table's.
+    * the partition-pruned commits ≤ v, tombstoned keys removed on an
+    * ops log. Returns the data columns only — `_commit` is the log's
+    * coordinate, not the table's. `mergeSchema` reads an EVOLVED log
+    * (columns added over its life, [[commitAddColumns]]) through the
+    * union of its footers; columns can only be ADDED — a type change
+    * or rename is a new table (or a column mapping, applied above this
+    * physical read).
     */
   def snapshotAt(spark: SparkSession, path: String, keys: Seq[String],
-                 v: Long): DataFrame = {
+                 v: Long, mergeSchema: Boolean = false): DataFrame = {
     requireAboveHorizon(path, v, "snapshot version")
-    Upsert.latestByKey(
-      requirePlainLog(spark.read.parquet(path), path)
-        .filter(col(CommitCol) <= v),
-      keys, col(CommitCol)).drop(CommitCol)
+    live(compact(window(readLog(spark, path, mergeSchema), path, v), keys))
   }
 
-  /** Latest committed snapshot (AS OF the max commit id present). */
-  def snapshotLatest(spark: SparkSession, path: String,
-                     keys: Seq[String]): DataFrame =
-    Upsert.latestByKey(requirePlainLog(spark.read.parquet(path), path),
-        keys, col(CommitCol))
-      .drop(CommitCol)
-
-  /** CHANGE DATA FEED between two snapshots — every key whose tracked
-    * columns differ between AS OF `v0` and AS OF `v1`, labeled
-    * `insert` (no v0 version) or `update`, with old/new values side
-    * by side. The lakehouse "what changed since release v0" query,
-    * computed the changelog-native way: O(delta), never two full
+  /** CHANGE DATA FEED between two snapshots — every key whose state
+    * differs between AS OF `v0` and AS OF `v1`, labeled `insert`,
+    * `update` or `delete` (ops logs only — a plain log has no
+    * tombstones), with old/new values side by side. NET semantics: a
+    * key deleted AND re-inserted inside the window reports as one
+    * update/insert, the churn every CDC consumer wants collapsed.
+    * Computed the changelog-native way: O(delta), never two full
     * snapshots diffed.
     *
     *  - candidate keys come ONLY from commits in (v0, v1] (partition-
     *    pruned — a key untouched in the window cannot have changed and
-    *    is never read);
-    *  - both endpoint states are `latestByKey` over commits ≤ v
-    *    SEMI-JOINED to the candidates first, so the LWW compaction
-    *    runs on O(touched × history-per-key), not the table;
-    *  - a candidate whose tracked columns come out equal (a commit
-    *    rewrote the row byte-identically, or touched only untracked
-    *    columns) is SUPPRESSED — the no-op-churn filter every CDC
-    *    consumer wants; null-safe compare, so null→x, x→null are
-    *    changes and null→null is not.
+    *    is never read; base commits are pure rewrites and excluded);
+    *  - both endpoint states are the keyed compaction over the window
+    *    ≤ v SEMI-JOINED to the candidates first, so it runs on
+    *    O(touched × history-per-key), not the table;
+    *  - old live → new live with tracked columns differing →
+    *    `update`; equal → SUPPRESSED (the no-op-churn filter, null-
+    *    safe: null→x and x→null are changes, null→null is not);
+    *  - old absent-or-tombstoned → new live → `insert`;
+    *  - old live → new tombstoned → `delete` (old values carried, new
+    *    side null — the downstream retraction needs the olds).
     *
     * `trackCols` scopes the diff to the measures the consumer cares
-    * about (the common CDC shape); pass all non-key columns for a
-    * whole-row feed. Deletes cannot occur in an append-only LWW log
-    * (no tombstones), so the feed is insert/update only.
-    *
-    * Plan shape: three pruned passes over the log (candidates, then
-    * one compaction per endpoint), each O(delta)-bounded by the
-    * semi-join — deliberately NOT materialized between passes: the
-    * read is side-effect-free, so re-derivation is merely repeated
-    * pruned IO, and keeping the plan lazy lets AQE size each pass
-    * independently (a checkpoint here would trade that for executor-
-    * block durability the result does not need).
+    * about; pass all non-key columns for a whole-row feed. Three
+    * pruned passes over the log, deliberately NOT materialized between
+    * them: the read is side-effect-free, and keeping the plan lazy
+    * lets AQE size each pass independently.
     */
   def changesBetween(spark: SparkSession, path: String,
                      keys: Seq[String], v0: Long, v1: Long,
-                     trackCols: Seq[String]): DataFrame = {
+                     trackCols: Seq[String],
+                     keyFilter: Option[String] = None): DataFrame = {
     require(v0 < v1, s"need v0 < v1, got $v0 >= $v1")
     requireAboveHorizon(path, v0, "change-feed start version v0")
     // loud contract on generated names (the strideOrder discipline):
-    // a key named change_type / _had_old, or a tracked column whose
+    // a key named change_type / _old_live, or a tracked column whose
     // old_/new_ form collides with a key, would silently clobber
-    val generated = Set("change_type", "_had_old") ++
+    val generated = Set("change_type", "_old_live", "_new_live") ++
       trackCols.flatMap(c => Seq(s"old_$c", s"new_$c"))
     require(keys.forall(!generated.contains(_)),
       s"key columns collide with generated feed columns: " +
         keys.filter(generated.contains).mkString(", "))
-    val log = requirePlainLog(spark.read.parquet(path), path)
-    val touched = log
-      .filter(col(CommitCol) > v0 && col(CommitCol) <= v1)
+    val log = spark.read.parquet(path)
+    val ops = isOps(log)
+    // base commits are pure rewrites (zero changes): excluding them
+    // from the candidate scan keeps the feed O(delta) across an
+    // OPTIMIZE — without it, a window containing a base would treat
+    // the whole table as touched (then suppress every no-op: correct
+    // but O(table))
+    val basesInWindow =
+      if (ops) baseIds(path).filter(id => id > v0 && id <= v1) else Nil
+    val candidateCommits = {
+      val inWindow = col(CommitCol) > v0 && col(CommitCol) <= v1
+      if (basesInWindow.isEmpty) inWindow
+      else inWindow && !col(CommitCol).isin(basesInWindow: _*)
+    }
+    // keyFilter is the SELECTIVE-feed knob (one tenant's keys out of a
+    // shared log): a boolean SQL expression over the KEY columns,
+    // applied to the touched-key set BEFORE the two endpoint
+    // compactions — both left_semi joins then carry only matching
+    // keys, so a consumer of an f-fraction slice pays O(f · delta),
+    // not O(delta)-then-filter. Equivalent to filtering the full feed
+    // (each key's labels are independent of other keys) — spec-pinned.
+    // The key-columns-only precondition is checked by PARSING the
+    // expression's references, not by trusting analysis: Spark's
+    // ResolveMissingReferences would happily resolve a non-key column
+    // back THROUGH the projection and filter by pre-compaction row
+    // values — silently wrong (which version of the key's value?).
+    keyFilter.foreach { f =>
+      val refs = spark.sessionState.sqlParser.parseExpression(f)
+        .collect {
+          case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
+            a.name
+        }
+      require(refs.nonEmpty && refs.forall(keys.contains),
+        s"keyFilter may reference only the key columns " +
+          s"[${keys.mkString(", ")}]; got [${refs.mkString(", ")}] — a " +
+          "non-key column has no single value per key before the " +
+          "compaction, so pruning by it would be silently wrong")
+    }
+    val touchedAll = log.filter(candidateCommits)
       .select(keys.map(col): _*).distinct()
-    def stateAt(v: Long) = Upsert.latestByKey(
-      log.filter(col(CommitCol) <= v).join(touched, keys, "left_semi"),
-      keys, col(CommitCol))
+    val touched = keyFilter.fold(touchedAll)(f => touchedAll.filter(expr(f)))
+    def stateAt(v: Long) =
+      compact(window(log, path, v).join(touched, keys, "left_semi"), keys)
+    // a plain row is always an upsert
+    val isLive = if (ops) col(OpCol) === "u" else lit(true)
     val newSide = stateAt(v1).select(
-      keys.map(col) ++ trackCols.map(c => col(c).as(s"new_$c")): _*)
+      keys.map(col) ++ trackCols.map(c => col(c).as(s"new_$c")) :+
+        isLive.as("_new_live"): _*)
     val oldSide = stateAt(v0).select(
       keys.map(col) ++ trackCols.map(c => col(c).as(s"old_$c")) :+
-        lit(true).as("_had_old"): _*)
+        isLive.as("_old_live"): _*)
     val changed = trackCols
       .map(c => differsNullSafe(col(s"old_$c"), col(s"new_$c"),
         log.schema(c).dataType))
       .reduce(_ || _)
-    newSide.join(oldSide, keys, "left")
-      .filter(col("_had_old").isNull || changed)
+    val oldLive = coalesce(col("_old_live"), lit(false))
+    val newLive = coalesce(col("_new_live"), lit(false))
+    // without tombstones every candidate is live at v1, so the plain
+    // feed's left join IS the full outer join
+    newSide.join(oldSide, keys, if (ops) "full_outer" else "left")
       .withColumn("change_type",
-        when(col("_had_old").isNull, lit("insert")).otherwise(lit("update")))
-      .drop("_had_old")
-  }
-
-  /** [[snapshotAt]] under SCHEMA EVOLUTION: commits may carry different
-    * column sets (columns added over the log's life — the drift every
-    * long-lived table suffers); `mergeSchema` folds the commit dirs
-    * into the union schema, rows from pre-evolution commits null-fill
-    * the later columns, and the keyed LWW compaction then works
-    * unchanged (the payload struct simply carries the widened set). A
-    * SEPARATE entry point on purpose: schema merging reads every
-    * file's footer up front, a planning cost the fixed-schema read
-    * path must not silently pay; callers opt in when their log has
-    * actually evolved. Columns can only be ADDED — a type change or
-    * rename is a new table, the same rule every lakehouse format
-    * enforces without column-mapping metadata.
-    */
-  def snapshotAtEvolved(spark: SparkSession, path: String,
-                        keys: Seq[String], v: Long): DataFrame = {
-    requireAboveHorizon(path, v, "snapshot version")
-    Upsert.latestByKey(
-      requirePlainLog(
-        spark.read.option("mergeSchema", "true").parquet(path), path)
-        .filter(col(CommitCol) <= v),
-      keys, col(CommitCol)).drop(CommitCol)
+        when(oldLive && newLive && changed, lit("update"))
+          .when(!oldLive && newLive, lit("insert"))
+          .when(oldLive && !newLive, lit("delete")))
+      .filter(col("change_type").isNotNull)
+      .drop("_old_live", "_new_live")
   }
 
   // ---- Ops log: the DELETE path (tombstones) ------------------------
   //
-  // The plain changelog above is append-only last-write-wins — deletes
-  // cannot occur (changesBetween's feed is insert/update only). The
-  // OPS log closes that hole the way every lakehouse format does:
-  // each row carries an operation column (`_op` = "u" upsert / "d"
-  // delete tombstone), a snapshot is the keyed LWW compaction with
-  // tombstoned keys filtered OUT, and the change feed gains the
-  // `delete` label. Tombstones are ordinary rows — a delete commit is
-  // still O(delta) appended metadata+keys, snapshots still partition-
-  // prune and compact with the same max_by kernel (the filter is one
-  // predicate AFTER the per-key reduction, so a key deleted then
-  // re-inserted resolves purely by commit order), and checkpointing
-  // PHYSICALLY ERASES tombstoned history: the fold keeps only live
-  // rows, so after `checkpointOps(v)` no file below the horizon holds
-  // the deleted rows' data — the right-to-be-forgotten guarantee a
-  // logical tombstone alone never gives.
+  // A plain changelog is append-only last-write-wins — deletes cannot
+  // occur (its feed is insert/update only). The OPS log closes that
+  // hole the way every lakehouse format does: each row carries an
+  // operation column (`_op` = "u" upsert / "d" delete tombstone), a
+  // snapshot is the keyed LWW compaction with tombstoned keys
+  // filtered OUT, and the change feed gains the `delete` label.
+  // Tombstones are ordinary rows — a delete commit is still O(delta)
+  // appended metadata+keys, and snapshots still partition-prune and
+  // compact with the same max_by kernel. Checkpointing PHYSICALLY
+  // ERASES tombstoned history: the fold keeps only live rows, so after
+  // `checkpoint(v)` no file below the horizon holds the deleted rows'
+  // data — the right-to-be-forgotten guarantee a logical tombstone
+  // alone never gives.
 
   val OpCol = "_op"
 
@@ -1644,17 +1692,6 @@ object Changelog {
       .withColumn(OpCol, lit("d")), path, commitId, SoloWriter, "delete")
   }
 
-  /** The mirror guard: ops reads against a PLAIN log fail with the
-    * API pointer, not an unresolved-column error.
-    */
-  private def requireOpsLog(df: DataFrame, path: String): DataFrame = {
-    require(df.columns.contains(OpCol),
-      s"$path is not an ops log (no $OpCol column) — use snapshotAt/" +
-        "changesBetween/checkpoint, or build it with commitUpsert/" +
-        "commitDelete")
-    df
-  }
-
   // ---- Base commits: OPTIMIZE without losing history ----------------
   //
   // A `_graft_base_<id>` marker declares commit id a SELF-CONTAINED
@@ -1688,14 +1725,14 @@ object Changelog {
   private def baseFloor(path: String, v: Long): Long =
     baseIds(path).filter(_ <= v).foldLeft(Long.MinValue)(math.max)
 
-  /** OPTIMIZE AT HEAD WITHOUT LOSING HISTORY — the maintenance verb
-    * [[checkpointOpsClustered]] deliberately is not: recluster the
+  /** OPTIMIZE AT HEAD WITHOUT LOSING HISTORY — what a clustered
+    * [[checkpoint]] deliberately is not: recluster the
     * current live state into ONE new commit `newCommitId` (landed via
     * [[ZOrderLayout.rangeClustered]]: `numFiles` files placed by the
     * arithmetic range of `clusterCol`, sorted within each), marked as
     * a BASE, with its commit-stats marker written — while EVERY
     * historical version stays readable (no horizon advance, no
-    * vacuum; a later [[checkpointOps]] reclaims the superseded
+    * vacuum; a later [[checkpoint]] reclaims the superseded
     * history when retention allows). The base is a pure rewrite:
     * snapshots at any w (before or after `newCommitId`) are
     * value-identical to pre-OPTIMIZE reads, feeds skip it, and reads
@@ -1800,8 +1837,12 @@ object Changelog {
     // law: every read served FROM the base is at/above the base, and
     // drops only accumulate, so no reachable read wants those bytes;
     // reads below the base open the original commits, untouched)
-    reclaimDropped(snapshotAtOpsEvolved(spark, path, keys, head),
-      path, head)
+    val folded = compact(
+      window(readLog(spark, path, mergeSchema = true), path, head), keys)
+    require(isOps(folded),
+      s"$path is a PLAIN log — an OPTIMIZE base is an ops rewrite; " +
+        "cluster a plain log's fold with checkpoint(..., cluster)")
+    reclaimDropped(live(folded), path, head)
       .withColumn(OpCol, lit("u"))
       .write.mode("overwrite").parquet(staging)
     val staged = spark.read.parquet(staging)
@@ -1816,10 +1857,6 @@ object Changelog {
     LogFs.delete(staging)
   }
 
-  /** `df` pruned to the commits a read AS OF `v` must consider:
-    * `[newest base ≤ v, v]` — both partition filters, so pre-base
-    * commit directories are never opened.
-    */
   /** `!(a <=> b)` for a column of type `dt`, with MAP types
     * canonicalized first: `<=>` cannot order maps (SQL defines no map
     * ordering), but a map's entries sorted by key are a faithful
@@ -1856,197 +1893,7 @@ object Changelog {
     if (hasMap(dt)) !(canon(a, dt) <=> canon(b, dt)) else !(a <=> b)
   }
 
-  private def opsWindow(df: DataFrame, path: String, v: Long): DataFrame = {
-    val floor = baseFloor(path, v)
-    val upTo = df.filter(col(CommitCol) <= v)
-    if (floor == Long.MinValue) upTo
-    else upTo.filter(col(CommitCol) >= floor)
-  }
-
-  /** The ops table as of commit `v`: keyed LWW over pruned commits,
-    * tombstoned keys REMOVED. Data columns only. Commits below the
-    * newest base ≤ v are pruned out (the base holds their surviving
-    * effect — see the base-commit contract above).
-    */
-  def snapshotAtOps(spark: SparkSession, path: String, keys: Seq[String],
-                    v: Long): DataFrame = {
-    requireAboveHorizon(path, v, "snapshot version")
-    Upsert.latestByKey(
-      opsWindow(requireOpsLog(spark.read.parquet(path), path), path, v),
-      keys, opsVersion)
-      .filter(col(OpCol) === "u")
-      .drop(CommitCol, OpCol)
-  }
-
-  /** [[snapshotAtEvolved]] for the ops log: same union-schema fold
-    * (columns only ever ADDED; pre-evolution rows null-fill), same
-    * separate-entry-point rule (footer-merge planning is opt-in), and
-    * the liveness filter works unchanged — `_op` is present in every
-    * commit by construction, so evolution can never strand a
-    * tombstone. Pairs with [[checkpointOps]], whose fold already
-    * reads mergeSchema for exactly this case (a single-footer fold
-    * would silently drop later-added columns, then vacuum the only
-    * copy).
-    */
-  def snapshotAtOpsEvolved(spark: SparkSession, path: String,
-                           keys: Seq[String], v: Long): DataFrame = {
-    requireAboveHorizon(path, v, "snapshot version")
-    Upsert.latestByKey(
-      opsWindow(requireOpsLog(
-        spark.read.option("mergeSchema", "true").parquet(path), path),
-        path, v),
-      keys, opsVersion)
-      .filter(col(OpCol) === "u")
-      .drop(CommitCol, OpCol)
-  }
-
-  /** [[changesBetween]] for the ops log — the full CDC label set
-    * (insert / update / delete), NET semantics between the two
-    * snapshots (a key deleted AND re-inserted inside the window
-    * reports as one update/insert, the churn every CDC consumer
-    * wants collapsed):
-    *  - candidates only from commits in (v0, v1] (partition-pruned);
-    *  - old live → new live, tracked differ → `update` (equal →
-    *    suppressed);
-    *  - old absent-or-tombstoned → new live → `insert`;
-    *  - old live → new tombstoned → `delete` (old values carried,
-    *    new side null — the downstream retraction needs the olds);
-    *  - dead on both sides → suppressed.
-    */
-  def changesBetweenOps(spark: SparkSession, path: String,
-                        keys: Seq[String], v0: Long, v1: Long,
-                        trackCols: Seq[String],
-                        keyFilter: Option[String] = None): DataFrame = {
-    require(v0 < v1, s"need v0 < v1, got $v0 >= $v1")
-    requireAboveHorizon(path, v0, "change-feed start version v0")
-    val generated = Set("change_type", "_old_live", "_new_live") ++
-      trackCols.flatMap(c => Seq(s"old_$c", s"new_$c"))
-    require(keys.forall(!generated.contains(_)),
-      s"key columns collide with generated feed columns: " +
-        keys.filter(generated.contains).mkString(", "))
-    val log = requireOpsLog(spark.read.parquet(path), path)
-    // base commits are pure rewrites (zero changes): excluding them
-    // from the candidate scan keeps the feed O(delta) across an
-    // OPTIMIZE — without it, a window containing a base would treat
-    // the whole table as touched (then suppress every no-op: correct
-    // but O(table))
-    val basesInWindow = baseIds(path).filter(id => id > v0 && id <= v1)
-    val candidateCommits = {
-      val window = col(CommitCol) > v0 && col(CommitCol) <= v1
-      if (basesInWindow.isEmpty) window
-      else window && !col(CommitCol).isin(basesInWindow: _*)
-    }
-    // keyFilter is the SELECTIVE-feed knob (one tenant's keys out of a
-    // shared log): a boolean SQL expression over the KEY columns,
-    // applied to the touched-key set BEFORE the two endpoint
-    // compactions — both left_semi joins then carry only matching
-    // keys, so a consumer of an f-fraction slice pays O(f · delta),
-    // not O(delta)-then-filter. Equivalent to filtering the full feed
-    // (each key's labels are independent of other keys) — spec-pinned.
-    // The key-columns-only precondition is checked by PARSING the
-    // expression's references, not by trusting analysis: Spark's
-    // ResolveMissingReferences would happily resolve a non-key column
-    // back THROUGH the projection and filter by pre-compaction row
-    // values — silently wrong (which version of the key's value?).
-    keyFilter.foreach { f =>
-      val refs = spark.sessionState.sqlParser.parseExpression(f)
-        .collect {
-          case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-            a.name
-        }
-      require(refs.nonEmpty && refs.forall(keys.contains),
-        s"keyFilter may reference only the key columns " +
-          s"[${keys.mkString(", ")}]; got [${refs.mkString(", ")}] — a " +
-          "non-key column has no single value per key before the " +
-          "compaction, so pruning by it would be silently wrong")
-    }
-    val touchedAll = log.filter(candidateCommits)
-      .select(keys.map(col): _*).distinct()
-    val touched = keyFilter.fold(touchedAll)(f => touchedAll.filter(expr(f)))
-    def stateAt(v: Long) = Upsert.latestByKey(
-      opsWindow(log, path, v).join(touched, keys, "left_semi"),
-      keys, opsVersion)
-    val newSide = stateAt(v1).select(
-      keys.map(col) ++ trackCols.map(c => col(c).as(s"new_$c")) :+
-        (col(OpCol) === "u").as("_new_live"): _*)
-    val oldSide = stateAt(v0).select(
-      keys.map(col) ++ trackCols.map(c => col(c).as(s"old_$c")) :+
-        (col(OpCol) === "u").as("_old_live"): _*)
-    val changed = trackCols
-      .map(c => differsNullSafe(col(s"old_$c"), col(s"new_$c"),
-        log.schema(c).dataType))
-      .reduce(_ || _)
-    val oldLive = coalesce(col("_old_live"), lit(false))
-    val newLive = coalesce(col("_new_live"), lit(false))
-    newSide.join(oldSide, keys, "full_outer")
-      .withColumn("change_type",
-        when(oldLive && newLive && changed, lit("update"))
-          .when(!oldLive && newLive, lit("insert"))
-          .when(oldLive && !newLive, lit("delete")))
-      .filter(col("change_type").isNotNull)
-      .drop("_old_live", "_new_live")
-  }
-
-  /** [[checkpoint]] for the ops log: fold commits ≤ v into a base of
-    * ONLY THE LIVE ROWS (re-tagged `u`), then vacuum below — same
-    * crash-safety order (base lands before anything is destroyed).
-    * Because the fold drops tombstoned keys entirely, the checkpoint
-    * is also the PHYSICAL-ERASURE step: after it, no surviving file
-    * holds a deleted row's data, which is what a deletion-compliance
-    * clock actually measures (LayoutSpec-style byte proof in
-    * TopKChangelogSpec).
-    */
-  /** Land the staged fold as the `_commit=v` base. The EMPTY fold
-    * (every key dead at v — a legal ops-log state) needs an explicit
-    * branch: a dynamic partition overwrite of ZERO rows rewrites
-    * nothing, so the pre-fold `_commit=v` directory would survive the
-    * vacuum and the physical-erasure guarantee would be violated for
-    * exactly the data landed in commit v itself. Instead the old
-    * directory is removed and a schema-bearing empty commit is written
-    * in its place (the partition value rides on the directory name),
-    * so the log's shape stays readable and snapshots at ≥ v read
-    * empty — never a partition-discovery failure over a bare dir.
-    */
-  private def landFold(spark: SparkSession, staging: String, path: String,
-                       v: Long): Unit = {
-    val staged = spark.read.parquet(staging)
-    if (staged.isEmpty) {
-      val dir = LogFs.child(path, s"$CommitCol=$v")
-      LogFs.delete(dir)
-      staged.write.mode("overwrite").parquet(dir)
-    } else overwriteCommit(staged, path, v, Nil)
-    // claim-free on purpose: the fold REWRITES an id legitimately
-    // claimed by whoever committed it; the checkpoint's own guard is
-    // the horizon ordering (base lands → horizon → vacuum)
-  }
-
-  /** Stage the window's full LWW compaction — live rows AND the
-    * window's surviving tombstones — partitioned by `_op` (tombstone
-    * presence is then a directory fact, and the erasure pass reads
-    * the live side pruned). The tombstones are load-bearing for
-    * CONCURRENT readers: between the fold landing at `_commit=v` and
-    * the vacuum of the older commits, a reader lists BOTH — without
-    * the tombstones in the fold, its per-key LWW would pick a deleted
-    * key's latest surviving UPSERT from a pre-vacuum commit and
-    * silently resurrect it (a real interleaving, caught by the
-    * checkpoint-vs-reader race spec). With them, the fold's row at
-    * commit v wins for every key under any listing interleaving:
-    * every completed concurrent read is correct, every stale plan
-    * fails loudly on the swapped files.
-    */
-  private def stageFold(spark: SparkSession, path: String,
-                        keys: Seq[String], v: Long,
-                        staging: String): Unit = {
-    LogFs.delete(staging)
-    reclaimDropped(
-      Upsert.latestByKey(
-        opsWindow(requireOpsLog(
-          spark.read.option("mergeSchema", "true").parquet(path), path),
-          path, v),
-        keys, opsVersion)
-        .drop(CommitCol), path, v)
-      .write.mode("overwrite").partitionBy(OpCol).parquet(staging)
-  }
+  // ---- Checkpoint: fold, horizon, vacuum -----------------------------
 
   /** PHYSICAL reclaim of logically-dropped columns at the fold
     * boundary — the DROP COLUMN half of the right-to-be-forgotten
@@ -2069,11 +1916,6 @@ object Changelog {
       case None => folded
     }
 
-  /** The staged fold's LIVE side, `_op` column restored. */
-  private def stagedLive(spark: SparkSession, staging: String): DataFrame =
-    spark.read.option("basePath", staging)
-      .parquet(LogFs.child(staging, s"$OpCol=u"))
-
   /** Test-only interleave point, invoked right after the checkpoint's
     * phase-1 fold lands (the fold and the not-yet-vacuumed commits
     * coexist): a spec reads here to pin deterministically that a
@@ -2093,38 +1935,104 @@ object Changelog {
   private[graft] val testAfterVacuum =
     new java.util.concurrent.atomic.AtomicReference[() => Unit](() => ())
 
-  /** Land `df` (possibly empty) as the fold at `_commit=v` — the
-    * zero-row case writes the schema-bearing empty directory directly
-    * (a zero-row dynamic overwrite is a silent no-op that would leave
-    * the pre-fold directory to survive the vacuum).
+  /** The lakehouse OPTIMIZE pass fused into [[checkpoint]]: the live
+    * fold lands as `numFiles` files placed by the arithmetic range of
+    * `clusterCol` in `[0, domain)` ([[ZOrderLayout.rangeClustered]] —
+    * seed-free, no sampling pass), sorted on it within each, so
+    * key-range reads over the base prune to the files whose min/max
+    * span the range instead of touching every file. `clusterCol` must
+    * be a non-negative long, non-null on every live row (a key column
+    * always is). Clustering moves rows between files, never changes
+    * them; and because placement is arithmetic, successive checkpoints
+    * put the same key ranges in the same file slots, so downstream
+    * caches stay warm across maintenance cycles.
     */
-  private def landFoldFrame(df: DataFrame, path: String, v: Long): Unit =
-    if (df.isEmpty) {
-      val dir = LogFs.child(path, s"$CommitCol=$v")
-      LogFs.delete(dir)
-      df.write.mode("overwrite").parquet(dir)
-    } else overwriteCommit(df, path, v, Nil)
+  final case class RangeCluster(clusterCol: String, domain: Long,
+                                numFiles: Int)
 
-  def checkpointOps(spark: SparkSession, path: String, keys: Seq[String],
-                    v: Long): Unit =
-      withMaintenanceMutex(path, s"checkpointOps@$v") {
+  /** Checkpoint the log at commit `v`: fold every commit ≤ v into ONE
+    * base commit written as `v` itself, then VACUUM the superseded
+    * commit directories. Cost is O(live keys ≤ v) — one compaction —
+    * plus directory deletes; commits > v are never read or touched, so
+    * maintenance cost is independent of how much history sits ABOVE
+    * the horizon. `cluster` lays the base out by key range.
+    *
+    * Contract (the same retention trade every compacting log makes —
+    * Kafka compacted topics, lakehouse VACUUM):
+    *  - `snapshotAt(w)` for any w ≥ v is value-identical before and
+    *    after (the base holds exactly the state at v);
+    *  - reads BELOW the horizon (w < v, or a change feed whose v0 < v)
+    *    FAIL LOUDLY — the log no longer distinguishes pre-v states, a
+    *    silent empty read would be wrong, and a feed would mislabel
+    *    every surviving key `insert`; the horizon marker records v so
+    *    the guard survives restarts. Pick v to match the time-travel
+    *    retention you owe readers;
+    *  - on an ops log the base holds ONLY THE LIVE ROWS: after it, no
+    *    surviving file holds a deleted row's data (physical erasure —
+    *    what a deletion-compliance clock actually measures), and
+    *    columns dropped at/below v are projected out on either shape.
+    *
+    * Crash-safety law: the base LANDS before anything is destroyed.
+    * (1) Stage the window's full compaction in a dir that is a SIBLING
+    * of the log — same filesystem, durable across a JVM exit, never
+    * the PID-scoped scratch root whose shutdown hook would delete the
+    * only copy mid-sequence; outside the log because Spark's file
+    * index skips `_`-prefixed dirs even when addressed directly, and
+    * any non-`_commit=` child would corrupt partition discovery. An
+    * ops fold keeps the window's surviving TOMBSTONES, partitioned by
+    * `_op` (tombstone presence is then a directory fact): between the
+    * fold landing and the vacuum a concurrent reader lists BOTH, and
+    * without the tombstones its per-key LWW would pick a deleted key's
+    * latest surviving upsert from a pre-vacuum commit and silently
+    * resurrect it. (2) Dynamic-overwrite `_commit=v` with the fold,
+    * which swaps at job commit — the log is then already correct.
+    * (3) Horizon, then vacuum strictly below v. (4) Ops only, when the
+    * window had deletes: with history gone the tombstones are inert —
+    * rewrite the base LIVE-ONLY. A crash anywhere leaves a readable
+    * log; re-run `checkpoint(v)` to finish (a crash before (4) leaves
+    * a value-clean base whose tombstones delete exactly like a
+    * tombstone in a delta).
+    *
+    * The fold reads with `mergeSchema=true`: commits ≤ v may carry
+    * evolved schemas, and a single-footer read would silently drop
+    * later-added columns from the base — with the vacuum then
+    * destroying the only copy. The footer-merge planning cost is the
+    * price of deleting data safely; the hot read path never pays it.
+    */
+  def checkpoint(spark: SparkSession, path: String, keys: Seq[String],
+                 v: Long, cluster: Option[RangeCluster] = None): Unit =
+      withMaintenanceMutex(path, s"checkpoint@$v") {
     requireAboveHorizon(path, v, "checkpoint version")
     val staging = s"${path.stripSuffix("/")}__ckpt_staging_v$v"
-    stageFold(spark, path, keys, v, staging)
-    val hasLive = LogFs.exists(LogFs.child(staging, s"$OpCol=u"))
-    val hasDead = LogFs.exists(LogFs.child(staging, s"$OpCol=d"))
-    // phase 1: land live ∪ tombstones (concurrent readers stay
-    // correct while the fold and the pre-vacuum commits coexist). A
-    // ZERO-ROW window (every commit in it empty) leaves no staging
-    // partition dirs to read — land the schema-bearing empty base
-    // from the log's own schema.
+    LogFs.delete(staging)
+    val log = readLog(spark, path, mergeSchema = true)
+    val ops = isOps(log)
+    val fold = reclaimDropped(
+      compact(window(log, path, v), keys).drop(CommitCol), path, v)
+    (if (ops) fold.write.partitionBy(OpCol) else fold.write)
+      .mode("overwrite").parquet(staging)
+    val hasLive = !ops || LogFs.exists(LogFs.child(staging, s"$OpCol=u"))
+    val hasDead = ops && LogFs.exists(LogFs.child(staging, s"$OpCol=d"))
+    def staged(op: String): DataFrame = spark.read
+      .option("basePath", staging).parquet(LogFs.child(staging, s"$OpCol=$op"))
+    // the zero-row case writes the schema-bearing empty directory
+    // directly: a zero-row dynamic overwrite is a silent no-op that
+    // would leave the pre-fold directory to survive the vacuum (and
+    // commit v's own deleted rows with it)
+    def land(df: DataFrame, layout: Option[RangeCluster]): Unit =
+      if (df.isEmpty) {
+        val dir = LogFs.child(path, s"$CommitCol=$v")
+        LogFs.delete(dir)
+        df.write.mode("overwrite").parquet(dir)
+      } else overwriteCommit(layout.fold(df)(c => ZOrderLayout
+        .rangeClustered(df, c.clusterCol, c.domain, c.numFiles)), path, v, Nil)
+    // phase 1. An ops window with no rows at all stages no partition
+    // dirs — land the empty base from the log's own schema. A fold
+    // with tombstones lands unclustered: phase 2 is its clustered,
+    // live-only landing.
     if (!hasLive && !hasDead)
-      landFoldFrame(
-        reclaimDropped(
-          requireOpsLog(spark.read.option("mergeSchema", "true")
-            .parquet(path), path).drop(CommitCol).limit(0), path, v),
-        path, v)
-    else landFold(spark, staging, path, v)
+      land(reclaimDropped(log.drop(CommitCol).limit(0), path, v), None)
+    else land(spark.read.parquet(staging), if (hasDead) None else cluster)
     testAfterFold.get()()
     // the fold REWROTE _commit=v: its pre-fold info marker no longer
     // describes the directory — re-record as the checkpoint's own verb
@@ -2135,85 +2043,10 @@ object Changelog {
     writeHorizon(path, v)
     vacuumBelow(path, v)
     testAfterVacuum.get()()
-    // phase 2 (erasure): with the history vacuumed the tombstones are
-    // inert — rewrite the base LIVE-ONLY so no surviving file holds
-    // even a deleted key (the physical-erasure contract). Skipped when
-    // the window had no deletes (a directory fact — zero extra cost on
-    // the delete-free checkpoint). A crash between the vacuum and here
-    // leaves a value-clean base whose tombstones the next checkpoint's
-    // own phase 2 erases; readers stay correct throughout (a tombstone
-    // in the base deletes exactly like a tombstone in a delta).
+    // phase 2 (erasure), skipped when the window had no deletes (a
+    // directory fact — zero extra cost on the delete-free checkpoint)
     if (hasDead) {
-      landFoldFrame(
-        if (hasLive) stagedLive(spark, staging)
-        else spark.read.option("basePath", staging)
-          .parquet(LogFs.child(staging, s"$OpCol=d")).limit(0),
-        path, v)
-      writeCommitInfo(path, v, "checkpoint", SoloWriter)
-    }
-    LogFs.delete(staging)
-  }
-
-  /** [[checkpointOps]] with the folded base CLUSTERED on `clusterCol`
-    * — the lakehouse OPTIMIZE pass fused into the checkpoint: the
-    * live-rows fold lands as `numFiles` files placed by the arithmetic
-    * key range ([[ZOrderLayout.rangeClustered]] — seed-free, no
-    * sampling pass), sorted on the key within each file, so downstream
-    * key-range reads over the base prune to the files whose min/max
-    * span the range instead of touching every file. Content is
-    * byte-equal to [[checkpointOps]] (clustering moves rows between
-    * files, never changes them); crash-safety order is identical
-    * (durable staging copy → dynamic-overwrite landing that swaps at
-    * job commit → horizon → vacuum). `clusterCol` must be a
-    * non-negative long in `[0, domain)` and non-null on every live row
-    * (a key column always is). At 100 TB this is the difference
-    * between a maintenance job's point/range re-reads scanning the
-    * whole base and scanning range/width files of it — and because the
-    * placement is arithmetic, successive checkpoints put the same key
-    * ranges in the same file slots, so downstream caches stay warm
-    * across maintenance cycles.
-    */
-  def checkpointOpsClustered(spark: SparkSession, path: String,
-                             keys: Seq[String], v: Long, clusterCol: String,
-                             domain: Long, numFiles: Int): Unit =
-      withMaintenanceMutex(path, s"checkpointOpsClustered@$v") {
-    requireAboveHorizon(path, v, "checkpoint version")
-    val staging = s"${path.stripSuffix("/")}__ckpt_staging_v$v"
-    stageFold(spark, path, keys, v, staging)
-    val hasLive = LogFs.exists(LogFs.child(staging, s"$OpCol=u"))
-    val hasDead = LogFs.exists(LogFs.child(staging, s"$OpCol=d"))
-    // cluster + land: one file per arithmetic key range inside the
-    // _commit=v directory; the dynamic overwrite swaps at job commit,
-    // and no shuffle sits between the placement and the write (the
-    // partition-column sort the writer inserts is on a constant).
-    def landClustered(df: DataFrame): Unit =
-      ZOrderLayout.rangeClustered(df, clusterCol, domain, numFiles)
-        .withColumn(CommitCol, lit(v))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(CommitCol).parquet(path)
-    // phase 1: with deletes in the window, land the PLAIN live ∪
-    // tombstone fold (what concurrent readers need while the
-    // pre-vacuum commits are still listed — see checkpointOps); the
-    // clustered live-only landing is then the phase-2 erasure rewrite.
-    // Without deletes, cluster directly in one landing.
-    if (!hasLive && !hasDead)
-      landFoldFrame(
-        reclaimDropped(
-          requireOpsLog(spark.read.option("mergeSchema", "true")
-            .parquet(path), path).drop(CommitCol).limit(0), path, v),
-        path, v)
-    else if (!hasDead) landClustered(stagedLive(spark, staging))
-    else landFold(spark, staging, path, v)
-    writeCommitInfo(path, v, "checkpoint", SoloWriter)
-    writeHorizon(path, v)
-    vacuumBelow(path, v)
-    if (hasDead) {
-      if (hasLive) landClustered(stagedLive(spark, staging))
-      else landFoldFrame(
-        spark.read.option("basePath", staging)
-          .parquet(LogFs.child(staging, s"$OpCol=d")).limit(0),
-        path, v)
+      land(if (hasLive) staged("u") else staged("d").limit(0), cluster)
       writeCommitInfo(path, v, "checkpoint", SoloWriter)
     }
     LogFs.delete(staging)
@@ -2230,7 +2063,7 @@ object Changelog {
     * loudly when `retainVersion` exceeds the head, and when no base
     * exists at or below it — vacuuming un-folded history would
     * destroy live state (land an optimize first, or use
-    * [[checkpointOps]] which folds and vacuums in one pass). After
+    * [[checkpoint]] which folds and vacuums in one pass). After
     * it: snapshots at/above the base are byte-identical (reads there
     * start at the base floor and never opened the reclaimed
     * directories), reads below fail loudly through the horizon guard,
@@ -2254,7 +2087,7 @@ object Changelog {
         "reclaims history BELOW a fold, never un-folded commits " +
         "(deleting them would destroy live state); land a base first " +
         "(optimizeOps / CALL system.optimize keeps history readable " +
-        "until this verb reclaims it) or use checkpointOps, which " +
+        "until this verb reclaims it) or use checkpoint, which " +
         "folds and vacuums in one pass")
     writeHorizon(path, b)
     vacuumBelow(path, b, statsAtVStale = false)
@@ -2464,7 +2297,7 @@ object Changelog {
     * append-only log cannot express.
     *
     * Both states read through the EVOLVED (mergeSchema) path — like
-    * [[checkpointOps]]'s fold, a single-footer read on an evolved log
+    * [[checkpoint]]'s fold, a single-footer read on an evolved log
     * would silently drop later-added columns from the restore commit;
     * restore is rare maintenance, so it pays the footer-merge
     * planning cost the hot snapshot path must not.
@@ -2480,8 +2313,8 @@ object Changelog {
     require(newCommitId > head,
       s"restore must land as a NEW commit above the head $head of " +
         s"$path, got $newCommitId — commit ids are the version order")
-    val target = snapshotAtOpsEvolved(spark, path, keys, v)
-    val current = snapshotAtOpsEvolved(spark, path, keys, head)
+    val target = snapshotAt(spark, path, keys, v, mergeSchema = true)
+    val current = snapshotAt(spark, path, keys, head, mergeSchema = true)
     // columns DROPPED as of the head never ride the restore commit:
     // the drop contract says new commits omit retired bytes — a
     // restore below the drop that re-materialized the dropped
@@ -2680,7 +2513,7 @@ object Changelog {
     * where the key was touched in 3 commits, the lookup reads 3
     * commit directories instead of opening 10k footers — the Delta
     * data-skipping story at the commit level. Result is identical to
-    * `snapshotAtOps(...).filter(statsCol === value)` (spec-pinned,
+    * `snapshotAt(...).filter(statsCol === value)` (spec-pinned,
     * including through tombstones and resurrections).
     */
   def pointLookupOps(spark: SparkSession, path: String, keys: Seq[String],
@@ -2815,7 +2648,7 @@ object Changelog {
     // version whenever the key's latest value moved out of range in a
     // stats-skipped commit, and tombstones (null data columns) would
     // be filtered out, un-deleting keys — silently violating the
-    // "identical to snapshotAtOps(...).filter(...)" contract.
+    // "identical to snapshotAt(...).filter(...)" contract.
     // COLUMN MAPPING never reaches this path: key columns refuse to
     // rename/drop (resolveMappedColumn), so a probe-able stats
     // column's logical and physical spellings coincide by
@@ -2850,17 +2683,12 @@ object Changelog {
       if (selected.isEmpty)
         // nothing admits the window: any commit's schema gives the
         // shape, the false filter gives the empty result without a scan
-        requireOpsLog(spark.read.option("mergeSchema", ms).parquet(path),
-          path).filter(lit(false))
+        spark.read.option("mergeSchema", ms).parquet(path)
+          .filter(lit(false))
       else
-        requireOpsLog(
-          spark.read.option("basePath", path).option("mergeSchema", ms)
-            .parquet(selected.map(_.getPath.toString): _*), path)
-    Upsert.latestByKey(
-      log.filter(col(CommitCol) <= v && probe),
-      keys, opsVersion)
-      .filter(col(OpCol) === "u")
-      .drop(CommitCol, OpCol)
+        spark.read.option("basePath", path).option("mergeSchema", ms)
+          .parquet(selected.map(_.getPath.toString): _*)
+    live(compact(log.filter(col(CommitCol) <= v && probe), keys))
   }
 
   /** MERGE INTO the ops log — the lakehouse three-clause merge,
@@ -2893,7 +2721,7 @@ object Changelog {
     require(newCommitId > head,
       s"merge must land as a NEW commit above the head $head of $path, " +
         s"got $newCommitId — commit ids are the version order")
-    val current = snapshotAtOpsEvolved(spark, path, keys, head)
+    val current = snapshotAt(spark, path, keys, head, mergeSchema = true)
     require(source.columns.toSet == current.columns.toSet,
       s"merge source columns [${source.columns.sorted.mkString(", ")}] " +
         s"must equal the table's [${current.columns.sorted.mkString(", ")}]")
@@ -2994,68 +2822,5 @@ object Changelog {
             .toOption.exists(_ < v)
       }
       .foreach(s => LogFs.delete(s.getPath.toString))
-  }
-
-  /** Checkpoint the log at commit `v`: fold every commit ≤ v into ONE
-    * base commit written as `v` itself, then VACUUM the superseded
-    * commit directories — the bounded-history answer the class doc
-    * promised ("fold commits ≤ v into a new base commit and drop the
-    * olds"). Cost is O(live keys ≤ v) — one snapshot compaction — plus
-    * directory deletes; commits > v are never read or touched, so
-    * maintenance cost is independent of how much history sits ABOVE
-    * the horizon.
-    *
-    * Contract (the same retention trade every compacting log makes —
-    * Kafka compacted topics, lakehouse VACUUM):
-    *  - `snapshotAt(w)` for any w ≥ v is byte-identical before and
-    *    after (the base holds exactly the pre-checkpoint state at v);
-    *  - reads BELOW the horizon (w < v, or a change feed whose v0 < v)
-    *    FAIL LOUDLY — the log no longer distinguishes pre-v states, a
-    *    silent empty read would be wrong, and a feed would mislabel
-    *    every surviving key `insert`; the horizon marker records v so
-    *    the guard survives restarts. Pick v to match the time-travel
-    *    retention you owe readers.
-    *
-    * Crash-safety law: the base LANDS before anything is destroyed.
-    * The sequence is (1) fold into a staging dir that is a SIBLING of
-    * the log — same filesystem, durable across a JVM exit, never the
-    * PID-scoped scratch root whose shutdown hook would delete the
-    * only copy mid-sequence; (2) dynamic-overwrite the `_commit=v`
-    * directory with the fold (so the log is already fully correct:
-    * the base's rows carry `_commit=v` and LWW-beat every superseded
-    * copy below the horizon); (3) only then vacuum commits STRICTLY
-    * below v and drop the staging dir. Every failure point therefore
-    * leaves a recoverable log: before (2) completes all source
-    * commits are intact (the overwrite swaps at job commit), and
-    * after (2) the remaining steps only remove redundancy — re-run
-    * `checkpoint(v)` to finish. The staging dir is OUTSIDE the log
-    * dir because Spark's file index skips `_`-prefixed dirs even when
-    * addressed directly, and any non-`_commit=` child would corrupt
-    * partition discovery.
-    *
-    * The fold reads with `mergeSchema=true`: commits ≤ v may carry
-    * evolved schemas ([[snapshotAtEvolved]]), and a single-footer
-    * read would silently drop later-added columns from the base —
-    * with the vacuum then destroying the only copy. The
-    * footer-merge planning cost is the price of deleting data safely;
-    * the hot read path ([[snapshotAt]]) still never pays it.
-    */
-  def checkpoint(spark: SparkSession, path: String, keys: Seq[String],
-                 v: Long): Unit =
-      withMaintenanceMutex(path, s"checkpoint@$v") {
-    requireAboveHorizon(path, v, "checkpoint version")
-    val staging = s"${path.stripSuffix("/")}__ckpt_staging_v$v"
-    LogFs.delete(staging)
-    Upsert.latestByKey(
-      requirePlainLog(
-        spark.read.option("mergeSchema", "true").parquet(path), path)
-        .filter(col(CommitCol) <= v),
-      keys, col(CommitCol)).drop(CommitCol)
-      .write.mode("overwrite").parquet(staging)
-    landFold(spark, staging, path, v)
-    writeCommitInfo(path, v, "checkpoint", SoloWriter)
-    writeHorizon(path, v)
-    vacuumBelow(path, v)
-    LogFs.delete(staging)
   }
 }

@@ -28,8 +28,8 @@ import graft.streaming.CdcSource
   *   .option("trackCols", "o_totalprice")
   * }}}
   *
-  * instead of calling [[Changelog.snapshotAtOps]] / [[Changelog.snapshotAsOf]]
-  * / [[Changelog.changesBetweenOps]] as a library. [[GraftLogCatalog]]
+  * instead of calling [[Changelog.snapshotAt]] / [[Changelog.snapshotAsOf]]
+  * / [[Changelog.changesBetween]] as a library. [[GraftLogCatalog]]
   * adds the catalog half — `SELECT … FROM cat.t VERSION AS OF v` /
   * `TIMESTAMP AS OF t`, the `cat.t.history` metadata child, feed
   * tables that also serve `spark.readStream.table` (MICRO_BATCH_READ
@@ -184,9 +184,12 @@ object GraftLog {
         mergeSchema = Changelog.isEvolvedLog(rawOpts.path))
 
     /** Ops vs plain, sniffed once from a footer (the write guard's
-      * probe) — routes every mode below to the right library verb.
+      * probe) — routes the WRITE surface (INSERT's verb, the DELETE /
+      * UPDATE / MERGE and streaming guards) and the ops-only
+      * stats-skipping lookup. The snapshot and feed read the shape
+      * from their own scan, so a plain read never pays this probe.
       */
-    val opsShape: Boolean = Changelog.isOpsLog(spark, opts.path)
+    lazy val opsShape: Boolean = Changelog.isOpsLog(spark, opts.path)
 
     /** The read's version coordinate, pinned at load: explicit
       * version, resolved timestamp, or the head as listed NOW.
@@ -288,37 +291,16 @@ object GraftLog {
     private[graft] def freshResolved: DataFrame = buildResolved
 
     private def buildResolved: DataFrame =
-      if (opts.readChangeFeed) {
-        if (opsShape)
-          mapFeedNames(
-            Changelog.changesBetweenOps(spark, opts.path, opts.keys,
-              opts.startingVersion.get, pinnedEnd, physTrackCols,
-              opts.keyFilter))
-        else {
-          require(opts.keyFilter.isEmpty,
-            "keyFilter is an ops-feed option (the plain feed has no " +
-              "selective-slice path)")
-          mapFeedNames(
-            Changelog.changesBetween(spark, opts.path, opts.keys,
-              opts.startingVersion.get, pinnedEnd, physTrackCols))
-        }
-      } else if (opsShape) {
+      if (opts.readChangeFeed)
+        mapFeedNames(
+          Changelog.changesBetween(spark, opts.path, opts.keys,
+            opts.startingVersion.get, pinnedEnd, physTrackCols,
+            opts.keyFilter))
+      else
         Changelog.applyMapping(
-          if (opts.mergeSchema)
-            Changelog.snapshotAtOpsEvolved(spark, opts.path, opts.keys,
-              pinnedVersion)
-          else Changelog.snapshotAtOps(spark, opts.path, opts.keys,
-            pinnedVersion),
+          Changelog.snapshotAt(spark, opts.path, opts.keys, pinnedVersion,
+            opts.mergeSchema),
           pinnedMapping)
-      } else {
-        Changelog.applyMapping(
-          if (opts.mergeSchema)
-            Changelog.snapshotAtEvolved(spark, opts.path, opts.keys,
-              pinnedVersion)
-          else Changelog.snapshotAt(spark, opts.path, opts.keys,
-            pinnedVersion),
-          pinnedMapping)
-      }
 
     override def name(): String = {
       val coord =
@@ -715,12 +697,9 @@ object GraftLog {
       // on an evolved log and apply the mapping before filtering; the
       // key columns are never mapped, so the tombstone frame is
       // physical as commitDelete requires
-      val snap =
-        if (opts.mergeSchema)
-          Changelog.snapshotAtOpsEvolved(spark, opts.path, opts.keys,
-            head)
-        else Changelog.snapshotAtOps(spark, opts.path, opts.keys, head)
-      val keysDf = Changelog.applyMapping(snap,
+      val keysDf = Changelog.applyMapping(
+          Changelog.snapshotAt(spark, opts.path, opts.keys, head,
+            opts.mergeSchema),
           Changelog.mappingAt(opts.path, head)).filter(cond)
         .select(opts.keys.map(col): _*)
       if (!keysDf.isEmpty) {

@@ -181,7 +181,7 @@ class GraftLogCatalog extends TableCatalog with ProcedureCatalog {
 
   /** `TIMESTAMP AS OF t` — Spark hands epoch micros; stamps are
     * millis. Feed tables refuse the clock clause loudly (the feed's
-    * clock addressing is [[Changelog.changesBetweenOpsTimestamps]] —
+    * clock addressing is [[Changelog.changesBetweenTimestamps]] —
     * a WINDOW of two instants, which one AS OF literal cannot name).
     */
   override def loadTable(ident: Identifier, timestampMicros: Long): Table = {
@@ -189,7 +189,7 @@ class GraftLogCatalog extends TableCatalog with ProcedureCatalog {
     require(!base.readChangeFeed,
       s"TIMESTAMP AS OF on feed table $catName.$ident — a feed is a " +
         "window of TWO coordinates; use VERSION AS OF for the end, or " +
-        "the library's changesBetweenOpsTimestamps for a clock window")
+        "the library's changesBetweenTimestamps for a clock window")
     new GraftLog.LogTable(base.copy(
       timestampAsOfMillis = Some(Math.floorDiv(timestampMicros, 1000L))))
   }
@@ -283,9 +283,7 @@ class GraftLogCatalog extends TableCatalog with ProcedureCatalog {
           inParam("version", DataTypes.LongType)),
         (s, o, in) => {
           val v = in.getLong(1)
-          if (Changelog.isOpsLog(s, o.path))
-            Changelog.checkpointOps(s, o.path, o.keys, v)
-          else Changelog.checkpoint(s, o.path, o.keys, v)
+          Changelog.checkpoint(s, o.path, o.keys, v)
           v
         })
       case "optimize" => new MaintenanceProcedure("optimize",
@@ -377,8 +375,9 @@ class GraftLogCatalog extends TableCatalog with ProcedureCatalog {
           inParam("num_files", DataTypes.IntegerType)),
         (s, o, in) => {
           val v = in.getLong(1)
-          Changelog.checkpointOpsClustered(s, o.path, o.keys, v,
-            in.getUTF8String(2).toString, in.getLong(3), in.getInt(4))
+          Changelog.checkpoint(s, o.path, o.keys, v,
+            Some(Changelog.RangeCluster(in.getUTF8String(2).toString,
+              in.getLong(3), in.getInt(4))))
           v
         })
       // zero-copy branch of the log at `as_of_version` into a FRESH

@@ -341,10 +341,8 @@ object GraftRowLevel {
                 Changelog.stringWindow(k, lo, hi)
             },
             mergeSchema = opts.mergeSchema)
-        else if (opts.mergeSchema)
-          Changelog.snapshotAtOpsEvolved(spark, opts.path, opts.keys,
-            head)
-        else Changelog.snapshotAtOps(spark, opts.path, opts.keys, head)
+        else Changelog.snapshotAt(spark, opts.path, opts.keys, head,
+          opts.mergeSchema)
       // an EVOLVED table's spool must serve the UNION schema even when
       // the pruned window admits only pre-evolution commits: conform —
       // missing columns null-fill, exactly the evolved read's semantics

@@ -67,7 +67,7 @@ object ZOrderLayout {
     * within each — a plain write of the result produces one clustered
     * file per partition, and callers that need a different landing
     * (e.g. a changelog's dynamic-overwrite commit directory,
-    * [[Changelog.checkpointOpsClustered]]) compose their own write on
+    * [[Changelog.checkpoint]]'s `cluster`) compose their own write on
     * top without losing the placement (no shuffle sits between this
     * and the write). RDD usage is the justified kind: per-partition
     * imperative placement with an arithmetic partitioner is exactly

@@ -21,7 +21,7 @@ import graft.sources.{Changelog, LogFs}
   * ergonomics for [[graft.sources.Changelog]]: ANY streaming query can
   * consume the full-label feed (insert / update / delete with old/new
   * values) with a plain `readStream.format(...).load()`, instead of
-  * hand-orchestrating per-batch `changesBetweenOps(b−1, b]` windows
+  * hand-orchestrating per-batch `changesBetween(b−1, b]` windows
   * inside `foreachBatch` (the q186 consumer's burden — q200
   * re-expresses it on this source).
   *
@@ -34,7 +34,7 @@ import graft.sources.{Changelog, LogFs}
   *    an IVM consumer wants), so a burst of commits never lands as one
   *    giant batch.
   *  - A batch (start, end] is the engine's own
-  *    [[Changelog.changesBetweenOps]] over exactly that window —
+  *    [[Changelog.changesBetween]] over exactly that window —
   *    computed DISTRIBUTED (the same pruned candidate/endpoint plan as
   *    the batch API), SPOOLED as parquet under the query's own
   *    checkpoint location, and served to executors one file per
@@ -170,7 +170,7 @@ object CdcSource {
 
   /** The feed's schema, derived from the engine's own lazy plan over
     * the log (analysis only — nothing executes). Exactly
-    * [[Changelog.changesBetweenOps]]'s shape: keys ++ new_* ++ old_*
+    * [[Changelog.changesBetween]]'s shape: keys ++ new_* ++ old_*
     * ++ change_type.
     */
   private[streaming] def feedSchema(opts: Opts): StructType = {
@@ -179,7 +179,7 @@ object CdcSource {
       throw new IllegalArgumentException(
         s"${opts.path} has no commits — the CDC source needs an " +
           "existing ops log to derive the feed schema"))
-    val schema = Changelog.changesBetweenOps(spark, opts.path, opts.keys,
+    val schema = Changelog.changesBetween(spark, opts.path, opts.keys,
       head, head + 1, opts.trackCols).schema
     schema.fields.foreach { f =>
       require(LogSink.supportedType(f.dataType),
@@ -521,7 +521,7 @@ object CdcSource {
       // earlier invocation's file list (part file names are not
       // deterministic). A partial spool (crash mid-write) has no
       // _SUCCESS and is rebuilt. The horizon guard inside
-      // changesBetweenOps keeps a below-horizon window LOUD.
+      // changesBetween keeps a below-horizon window LOUD.
       // mapping drift: the stream's schema (and its logical output
       // names) were pinned when the query started — a rename/drop
       // landing mid-stream would silently desynchronize them, so a
@@ -549,7 +549,7 @@ object CdcSource {
       val dir = spoolDir(winStart, winEnd, ns)
       if (!LogFs.exists(LogFs.child(dir, "_SUCCESS"))) {
         LogFs.delete(dir)
-        val raw = Changelog.changesBetweenOps(spark, opts.path,
+        val raw = Changelog.changesBetween(spark, opts.path,
           opts.keys, winStart, winEnd, opts.trackCols, opts.keyFilter)
         // tableShape (the snapshot table's own stream): the window's
         // UPSERTED ROW VALUES in the table's shape — the feed's new

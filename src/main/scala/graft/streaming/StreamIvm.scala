@@ -320,7 +320,7 @@ object StreamIvm {
     *     land as ops-log commit `b` (idempotent dynamic overwrite —
     *     the q184 ingestion discipline, verbatim);
     *  2. the maintenance delta is derived from
-    *     `changesBetweenOps(b−1, b]` — exactly this batch's window;
+    *     `changesBetween(b−1, b]` — exactly this batch's window;
     *     insert → +1/+measure, update → +new−old, DELETE → −1/−old
     *     (the retraction the carried olds make possible);
     *  3. the delta commits ADDITIVELY as rollup-log commit `b`.
@@ -352,14 +352,14 @@ object StreamIvm {
         "redeliver (a silent empty old-state would double-count)")
     Changelog.commitIdempotent(batch, opsLog, b)
     val delta = cdcDelta(
-      Changelog.changesBetweenOps(s, opsLog, Seq(key), b - 1, b,
+      Changelog.changesBetween(s, opsLog, Seq(key), b - 1, b,
         trackCols = Seq(measure, groupCol)),
       groupCol, measure)
     Changelog.commitIdempotent(delta, rollLog, b)
   }
 
   /** The signed per-group maintenance delta of a FULL-LABEL feed
-    * frame (`changesBetweenOps` shape — or a [[CdcSource]] micro-
+    * frame (`changesBetween` shape — or a [[CdcSource]] micro-
     * batch, which is the same frame delivered by `readStream`):
     * insert → (+1, +new), delete → (−1, −old), update → per-SIDE
     * contributions exploded before the groupBy. The explode is what

@@ -73,7 +73,7 @@ class CdcSourceSpec extends SparkSpec {
     assert(served(rollLog) == Seq((10L, 2L, 36.0), (20L, 2L, 70.0)))
     // feed-sufficiency: equals the recompute from the log's snapshot
     val recompute = Changelog
-      .snapshotAtOps(spark, opsLog, Seq("o_orderkey"), 2L)
+      .snapshotAt(spark, opsLog, Seq("o_orderkey"), 2L)
       .groupBy("o_custkey")
       .agg(count(lit(1)).as("n"),
         (sum((round(col("o_totalprice") * 100)).cast("long"))
@@ -144,13 +144,13 @@ class CdcSourceSpec extends SparkSpec {
     }
     // batch-API equivalence over the full window (the streaming path
     // feeds through the identical call)
-    val full = Changelog.changesBetweenOps(spark, opsLog,
+    val full = Changelog.changesBetween(spark, opsLog,
         Seq("o_orderkey"), -1L, 2L, Seq("o_totalprice"))
       .filter(col("o_orderkey") % 2 === 0)
       .select("o_orderkey", "change_type", "old_o_totalprice",
         "new_o_totalprice")
       .as[(Long, String, Option[Double], Option[Double])].collect().toSet
-    val sliced = Changelog.changesBetweenOps(spark, opsLog,
+    val sliced = Changelog.changesBetween(spark, opsLog,
         Seq("o_orderkey"), -1L, 2L, Seq("o_totalprice"),
         keyFilter = Some("o_orderkey % 2 = 0"))
       .select("o_orderkey", "change_type", "old_o_totalprice",
@@ -162,7 +162,7 @@ class CdcSourceSpec extends SparkSpec {
     // ResolveMissingReferences resolve it through the projection and
     // filter by pre-compaction row values — silently wrong)
     val e = intercept[IllegalArgumentException] {
-      Changelog.changesBetweenOps(spark, opsLog, Seq("o_orderkey"),
+      Changelog.changesBetween(spark, opsLog, Seq("o_orderkey"),
         -1L, 2L, Seq("o_totalprice"),
         keyFilter = Some("o_totalprice > 0"))
     }
@@ -266,11 +266,11 @@ class CdcSourceSpec extends SparkSpec {
     // the union of all batches IS the per-commit feed (same final
     // state as the unsplit consumer)
     val want =
-      Changelog.changesBetweenOps(spark, opsLog, Seq("o_orderkey"),
+      Changelog.changesBetween(spark, opsLog, Seq("o_orderkey"),
           -1L, 0L, Seq("o_totalprice"))
-        .unionByName(Changelog.changesBetweenOps(spark, opsLog,
+        .unionByName(Changelog.changesBetween(spark, opsLog,
           Seq("o_orderkey"), 0L, 1L, Seq("o_totalprice")))
-        .unionByName(Changelog.changesBetweenOps(spark, opsLog,
+        .unionByName(Changelog.changesBetween(spark, opsLog,
           Seq("o_orderkey"), 1L, 2L, Seq("o_totalprice")))
         .select("o_orderkey", "change_type", "old_o_totalprice",
           "new_o_totalprice")
@@ -401,7 +401,7 @@ class CdcSourceSpec extends SparkSpec {
     // land one more commit and fold everything — the consumer's next
     // window (1, 2] now starts below horizon 2
     Changelog.commit(commits(2), opsLog, 2L)
-    Changelog.checkpointOps(spark, opsLog, Seq("o_orderkey"), 2L)
+    Changelog.checkpoint(spark, opsLog, Seq("o_orderkey"), 2L)
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       runConsumer(opsLog, rollLog, ckpt)
     }
@@ -425,7 +425,7 @@ class CdcSourceSpec extends SparkSpec {
     commits.zipWithIndex.foreach { case (c, i) =>
       Changelog.commit(c, opsLog, i.toLong)
     }
-    Changelog.checkpointOps(spark, opsLog, Seq("o_orderkey"), 1L)
+    Changelog.checkpoint(spark, opsLog, Seq("o_orderkey"), 1L)
     // horizon is 1: a fresh consumer's first window is (1, 2] — only
     // commit 2's changes flow; the folded history is not replayed
     runConsumer(opsLog, rollLog, ckpt)
@@ -466,9 +466,9 @@ class CdcSourceSpec extends SparkSpec {
     val got = spark.read.parquet(out)
       .select("o_orderkey", "change_type").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
-    val want = (Changelog.changesBetweenOps(spark, opsLog,
+    val want = (Changelog.changesBetween(spark, opsLog,
         Seq("o_orderkey"), 0L, 1L, Seq("o_totalprice"))
-      .unionByName(Changelog.changesBetweenOps(spark, opsLog,
+      .unionByName(Changelog.changesBetween(spark, opsLog,
         Seq("o_orderkey"), 1L, 2L, Seq("o_totalprice"))))
       .select("o_orderkey", "change_type").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet

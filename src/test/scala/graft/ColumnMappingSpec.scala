@@ -20,15 +20,17 @@ class ColumnMappingSpec extends SparkSpec {
     p
   }
 
-  /** Two-commit ops log (k BIGINT, v DOUBLE, note STRING). */
-  private def fixture(name: String): String = {
+  /** Two-commit log (k BIGINT, v DOUBLE, note STRING) — ops-shaped
+    * unless `ops = false`.
+    */
+  private def fixture(name: String, ops: Boolean = true): String = {
     import spark.implicits._
     val path = freshDir(name)
-    Changelog.commitUpsert(
-      (0L until 20L).map(k => (k, k * 10.0, s"n$k")).toDF("k", "v", "note"),
-      path, 0L)
-    Changelog.commitUpsert(
-      Seq((3L, 333.0, "upd")).toDF("k", "v", "note"), path, 1L)
+    val land: (org.apache.spark.sql.DataFrame, String, Long) => Unit =
+      if (ops) Changelog.commitUpsert(_, _, _) else Changelog.commit(_, _, _)
+    land((0L until 20L).map(k => (k, k * 10.0, s"n$k"))
+      .toDF("k", "v", "note"), path, 0L)
+    land(Seq((3L, 333.0, "upd")).toDF("k", "v", "note"), path, 1L)
     path
   }
 
@@ -52,7 +54,7 @@ class ColumnMappingSpec extends SparkSpec {
     assert(spark.read.parquet(s"$path/${Changelog.CommitCol}=0")
       .columns.contains("v"))
     // the LIBRARY read stays physical (mapping is a TABLE-surface law)
-    assert(Changelog.snapshotAtOps(spark, path, Seq("k"), 2L)
+    assert(Changelog.snapshotAt(spark, path, Seq("k"), 2L)
       .columns.toSeq == Seq("k", "v", "note"))
   }
 
@@ -292,7 +294,7 @@ class ColumnMappingSpec extends SparkSpec {
     // read of the folded log is still correct, merely conservative)
     Changelog.commitUpsert(Seq((9L, 9.0, "late")).toDF("k", "v", "src"),
       path, 2L)
-    Changelog.checkpointOps(spark, path, Seq("k"), 2L)
+    Changelog.checkpoint(spark, path, Seq("k"), 2L)
     assert(Changelog.isEvolvedLog(path),
       "the evolution marker must survive maintenance")
     assert(spark.read.format(fmt).option("path", path).option("keys", "k")
@@ -301,29 +303,32 @@ class ColumnMappingSpec extends SparkSpec {
 
   test("checkpoint PHYSICALLY reclaims dropped columns at the fold — " +
        "the DROP half of right-to-be-forgotten") {
-    val path = fixture("reclaim")
-    GraftLogCatalog.register(spark, "cmspec7", "t", path, Seq("k"))
-    spark.sql("ALTER TABLE cmspec7.t DROP COLUMN note") // commit 2
-    Changelog.checkpointOps(spark, path, Seq("k"), 2L)
-    // no surviving footer carries the dropped column's bytes
-    assert(!spark.read.option("mergeSchema", "true").parquet(path)
-      .columns.contains("note"),
-      "the fold must project the dropped column out of the base")
-    // head reads unchanged, values intact
-    val head = spark.table("cmspec7.t")
-    assert(head.schema.fieldNames.toSeq == Seq("k", "v"))
-    assert(head.filter(col("k") === 3L).select("v").head()
-      .getDouble(0) == 333.0)
-    // the retired name still refuses re-addition AFTER the physical
-    // reclaim (the footer-union check no longer holds it — the
-    // mapping's retirement does)
-    assert(scala.util.Try(spark.sql(
-      "ALTER TABLE cmspec7.t ADD COLUMNS (note STRING)")).isFailure,
-      "a physically-reclaimed dropped name must stay retired")
-    // a fresh name still evolves fine
-    spark.sql("ALTER TABLE cmspec7.t ADD COLUMNS (note2 STRING)")
-    assert(spark.table("cmspec7.t").schema.fieldNames.toSeq ==
-      Seq("k", "v", "note2"))
+    // both log shapes: one fold serves plain and ops logs alike
+    for ((ops, ns) <- Seq(true -> "cmspec7", false -> "cmspec7p")) {
+      val path = fixture(s"reclaim_$ns", ops)
+      GraftLogCatalog.register(spark, ns, "t", path, Seq("k"))
+      spark.sql(s"ALTER TABLE $ns.t DROP COLUMN note") // commit 2
+      Changelog.checkpoint(spark, path, Seq("k"), 2L)
+      // no surviving footer carries the dropped column's bytes
+      assert(!spark.read.option("mergeSchema", "true").parquet(path)
+        .columns.contains("note"),
+        "the fold must project the dropped column out of the base")
+      // head reads unchanged, values intact
+      val head = spark.table(s"$ns.t")
+      assert(head.schema.fieldNames.toSeq == Seq("k", "v"))
+      assert(head.filter(col("k") === 3L).select("v").head()
+        .getDouble(0) == 333.0)
+      // the retired name still refuses re-addition AFTER the physical
+      // reclaim (the footer-union check no longer holds it — the
+      // mapping's retirement does)
+      assert(scala.util.Try(spark.sql(
+        s"ALTER TABLE $ns.t ADD COLUMNS (note STRING)")).isFailure,
+        "a physically-reclaimed dropped name must stay retired")
+      // a fresh name still evolves fine
+      spark.sql(s"ALTER TABLE $ns.t ADD COLUMNS (note2 STRING)")
+      assert(spark.table(s"$ns.t").schema.fieldNames.toSeq ==
+        Seq("k", "v", "note2"))
+    }
     // the OPTIMIZE base reclaims too — while the commits below it
     // keep the bytes for time travel below the drop
     val path2 = fixture("reclaim_opt")
@@ -525,7 +530,8 @@ class ColumnMappingSpec extends SparkSpec {
       "a restore commit must omit columns dropped as of the head")
     // and restores the surviving columns to their v0 state
     val head = Changelog.applyMapping(
-      Changelog.snapshotAtOpsEvolved(spark, path, Seq("k"), 3L),
+      Changelog.snapshotAt(spark, path, Seq("k"), 3L,
+      mergeSchema = true),
       Changelog.currentMapping(path))
     assert(head.columns.toSeq == Seq("k", "v"))
     assert(head.filter(col("k") === 3L).select("v")
@@ -589,7 +595,7 @@ class ColumnMappingSpec extends SparkSpec {
     assert(r.getAs[Long]("num_data_files") > 0L &&
       r.getAs[Long]("size_bytes") > 0L)
     // after a checkpoint the horizon surfaces
-    Changelog.checkpointOps(spark, path, Seq("k"), 3L)
+    Changelog.checkpoint(spark, path, Seq("k"), 3L)
     val r2 = spark.sql("SELECT * FROM cmspec8.t.detail").collect().head
     assert(r2.getAs[Long]("horizon") == 3L)
     assert(r2.getAs[Long]("num_commits") == 1L)

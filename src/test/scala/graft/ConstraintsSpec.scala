@@ -123,7 +123,7 @@ class ConstraintsSpec extends SparkSpec {
       Seq((7L, 700.0, "ok")).toDF("k", "v", "note"), path, 2L)
     Changelog.commitDelete(spark,
       Seq(Tuple1(4L)).toDF("k"), path, 3L)
-    val snap = Changelog.snapshotAtOps(spark, path, Seq("k"), 3L)
+    val snap = Changelog.snapshotAt(spark, path, Seq("k"), 3L)
     assert(snap.filter(col("k") === 7L).select("v")
       .head().getDouble(0) == 700.0)
     assert(snap.filter(col("k") === 4L).isEmpty)

@@ -39,7 +39,7 @@ class GraftLogTableSpec extends SparkSpec {
   }
 
   private def expectedHead(path: String) =
-    Changelog.snapshotAtOps(spark, path, Seq("k"), 2L)
+    Changelog.snapshotAt(spark, path, Seq("k"), 2L)
 
   private def sortedRows(df: org.apache.spark.sql.DataFrame) =
     df.orderBy("k").collect().toSeq
@@ -56,7 +56,7 @@ class GraftLogTableSpec extends SparkSpec {
       .option("path", path).option("keys", "k")
       .option("versionAsOf", 1).load()
     assert(sortedRows(v1) ==
-      sortedRows(Changelog.snapshotAtOps(spark, path, Seq("k"), 1L)))
+      sortedRows(Changelog.snapshotAt(spark, path, Seq("k"), 1L)))
   }
 
   test("latest read pins the head at load") {
@@ -78,7 +78,7 @@ class GraftLogTableSpec extends SparkSpec {
     val df = spark.read.format(fmt)
       .option("path", path).option("keys", "k").load()
     assert(sortedRows(df) ==
-      sortedRows(Changelog.snapshotLatest(spark, path, Seq("k"))))
+      sortedRows(Changelog.snapshotAt(spark, path, Seq("k"), Long.MaxValue)))
   }
 
   test("readChangeFeed equals the library feed") {
@@ -88,7 +88,7 @@ class GraftLogTableSpec extends SparkSpec {
       .option("readChangeFeed", "true")
       .option("startingVersion", 0).option("endingVersion", 2)
       .option("trackCols", "v").load()
-    val lib = Changelog.changesBetweenOps(spark, path, Seq("k"), 0L, 2L,
+    val lib = Changelog.changesBetween(spark, path, Seq("k"), 0L, 2L,
       Seq("v"))
     assert(df.schema == lib.schema)
     assert(df.orderBy("k").collect().toSeq ==
@@ -168,7 +168,7 @@ class GraftLogTableSpec extends SparkSpec {
     // VERSION AS OF 1: updates applied, deletes not yet
     val v1 = spark.sql("SELECT * FROM glogspec.t VERSION AS OF 1")
     assert(sortedRows(v1) ==
-      sortedRows(Changelog.snapshotAtOps(spark, path, Seq("k"), 1L)))
+      sortedRows(Changelog.snapshotAt(spark, path, Seq("k"), 1L)))
     // TIMESTAMP AS OF 2.5s epoch: resolves to the commit stamped 2000
     val t = spark.sql(
       "SELECT * FROM glogspec.t TIMESTAMP AS OF '1970-01-01 00:00:02.5'")
@@ -176,7 +176,7 @@ class GraftLogTableSpec extends SparkSpec {
     // bare name reads the head
     val head = spark.sql("SELECT * FROM glogspec.t")
     assert(sortedRows(head) ==
-      sortedRows(Changelog.snapshotAtOps(spark, path, Seq("k"), 2L)))
+      sortedRows(Changelog.snapshotAt(spark, path, Seq("k"), 2L)))
     // SQL aggregation over a time-travel clause composes
     val n = spark.sql(
       "SELECT count(*) AS n FROM glogspec.t VERSION AS OF 0")
@@ -196,8 +196,8 @@ class GraftLogTableSpec extends SparkSpec {
       .select(col("k"), ($"n.v" - $"o.v").as("dv"))
       .filter($"dv" =!= 0.0)
       .orderBy("k").collect().map(r => (r.getLong(0), r.getDouble(1)))
-    val lib = Changelog.snapshotAtOps(spark, path, Seq("k"), 2L).as("n")
-      .join(Changelog.snapshotAtOps(spark, path, Seq("k"), 0L).as("o"), "k")
+    val lib = Changelog.snapshotAt(spark, path, Seq("k"), 2L).as("n")
+      .join(Changelog.snapshotAt(spark, path, Seq("k"), 0L).as("o"), "k")
       .select(col("k"), ($"n.v" - $"o.v").as("dv"))
       .filter($"dv" =!= 0.0)
       .orderBy("k").collect().map(r => (r.getLong(0), r.getDouble(1)))
@@ -224,7 +224,7 @@ class GraftLogTableSpec extends SparkSpec {
         p.output.foreach(a => ids += a.exprId.id))
       ids.groupBy(identity).filter(_._2.size > 1)
     }
-    val lib = Changelog.snapshotAtOps(spark, path, Seq("k"), 2L)
+    val lib = Changelog.snapshotAt(spark, path, Seq("k"), 2L)
     val want = lib.as("a").join(lib.as("b"), col("a.k") === col("b.k") + 1)
       .select(col("a.k").as("k"), ($"a.v" + $"b.v").as("vv"))
       .orderBy("k").collect().toSeq
@@ -260,13 +260,13 @@ class GraftLogTableSpec extends SparkSpec {
     val hist1 = Changelog.commitInfos(path)
     assert(hist1(3L)._1 == "upsert", s"info: ${hist1.get(3L)}")
     assert(hist1(3L)._3 == 2L)
-    val snap1 = Changelog.snapshotAtOps(spark, path, Seq("k"), 3L)
+    val snap1 = Changelog.snapshotAt(spark, path, Seq("k"), 3L)
       .as[(Long, Double)].collect().toMap
     assert(snap1(500L) == 1.5 && snap1(2L) == 999.0)
     // DataFrame API append lands the NEXT claimed commit
     Seq((501L, 2.5)).toDF("k", "v").writeTo("glogspec3.t").append()
     val snap2 = Changelog
-      .snapshotAtOps(spark, path, Seq("k"), Long.MaxValue)
+      .snapshotAt(spark, path, Seq("k"), Long.MaxValue)
       .as[(Long, Double)].collect().toMap
     assert(snap2(501L) == 2.5 && snap2(500L) == 1.5)
     assert(Changelog.commitInfos(path)(4L) ==
@@ -302,7 +302,7 @@ class GraftLogTableSpec extends SparkSpec {
     // a replay AFTER later commits skips — head flat, both rows served
     put(Seq((700L, 1.0)), 1L)
     assert(Changelog.headVersion(path).contains(4L))
-    val snap = Changelog.snapshotAtOps(spark, path, Seq("k"),
+    val snap = Changelog.snapshotAt(spark, path, Seq("k"),
         Long.MaxValue).as[(Long, Double)].collect().toMap
     assert(snap(700L) == 1.0 && snap(701L) == 2.0)
     // txnVersion without an explicit writer refuses loudly
@@ -320,16 +320,16 @@ class GraftLogTableSpec extends SparkSpec {
     Seq((800L, 8.0)).toDF("k", "v").writeTo("glogspec34.t")
       .option("writer", "appc").option("txnVersion", "1").append()
     assert(Changelog.headVersion(path).contains(3L))
-    val before = Changelog.snapshotAtOps(spark, path, Seq("k"),
+    val before = Changelog.snapshotAt(spark, path, Seq("k"),
         Long.MaxValue).as[(Long, Double)].collect().toMap
     // checkpoint folds the ENTIRE live state into commit 3 — exactly
     // the txn's recorded id; its marker (content 3, not < horizon 3)
     // survives the sweep. Before the fix a replay re-landed into
     // _commit=3 via delete-then-rename, wiping every other key.
-    Changelog.checkpointOps(spark, path, Seq("k"), 3L)
+    Changelog.checkpoint(spark, path, Seq("k"), 3L)
     Seq((800L, 8.0)).toDF("k", "v").writeTo("glogspec34.t")
       .option("writer", "appc").option("txnVersion", "1").append()
-    val after = Changelog.snapshotAtOps(spark, path, Seq("k"),
+    val after = Changelog.snapshotAt(spark, path, Seq("k"),
         Long.MaxValue).as[(Long, Double)].collect().toMap
     assert(after == before,
       "a post-checkpoint txn replay must leave the folded base intact")
@@ -344,7 +344,7 @@ class GraftLogTableSpec extends SparkSpec {
     intercept[Exception] { Changelog.vacuumRetain(path, 2L) }
     Changelog.optimizeOps(spark, path, Seq("k"), 3L, "k", 40L, 4)
     val before = sortedRows(
-      Changelog.snapshotAtOps(spark, path, Seq("k"), Long.MaxValue))
+      Changelog.snapshotAt(spark, path, Seq("k"), Long.MaxValue))
     // retain above the head → refuse
     intercept[Exception] { Changelog.vacuumRetain(path, 99L) }
     Changelog.vacuumRetain(path, 3L)
@@ -353,10 +353,10 @@ class GraftLogTableSpec extends SparkSpec {
     assert(Changelog.commitColumnStats(path).keySet == Set(3L),
       "the base's own stats marker survives — the directory was not " +
         "rewritten, so its ranges still bound it")
-    assert(sortedRows(Changelog.snapshotAtOps(spark, path, Seq("k"),
+    assert(sortedRows(Changelog.snapshotAt(spark, path, Seq("k"),
       Long.MaxValue)) == before, "retention must not move the state")
     intercept[IllegalArgumentException] {
-      Changelog.snapshotAtOps(spark, path, Seq("k"), 1L)
+      Changelog.snapshotAt(spark, path, Seq("k"), 1L)
     }
     // idempotent re-run: nothing left to sweep, same horizon
     Changelog.vacuumRetain(path, 3L)
@@ -419,13 +419,13 @@ class GraftLogTableSpec extends SparkSpec {
     val path = opsFixture("dml_delete")
     GraftLogCatalog.register(spark, "glogspec4", "t", path, Seq("k"))
     val before = Changelog
-      .snapshotAtOps(spark, path, Seq("k"), Long.MaxValue)
+      .snapshotAt(spark, path, Seq("k"), Long.MaxValue)
       .as[(Long, Double)].collect().toMap
     // non-key predicate: every CURRENT row with v > 900 dies — the
     // key set derives from the head snapshot, so SQL semantics hold
     spark.sql("DELETE FROM glogspec4.t WHERE v > 900.0")
     val after = Changelog
-      .snapshotAtOps(spark, path, Seq("k"), Long.MaxValue)
+      .snapshotAt(spark, path, Seq("k"), Long.MaxValue)
       .as[(Long, Double)].collect().toMap
     assert(after == before.filter(_._2 <= 900.0))
     assert(Changelog.commitInfos(path)(3L)._1 == "delete")
@@ -434,7 +434,7 @@ class GraftLogTableSpec extends SparkSpec {
     assert(Changelog.headVersion(path).contains(3L))
     spark.sql("DELETE FROM glogspec4.t WHERE k IN (1, 2)")
     assert(!Changelog
-      .snapshotAtOps(spark, path, Seq("k"), Long.MaxValue)
+      .snapshotAt(spark, path, Seq("k"), Long.MaxValue)
       .as[(Long, Double)].collect().toMap.keySet.exists(Set(1L, 2L)))
     // a PLAIN log cannot delete — the planner is told via canDeleteWhere
     val plain = freshDir("dml_delete_plain")
@@ -453,7 +453,7 @@ class GraftLogTableSpec extends SparkSpec {
     for (c <- 0L to 2L) Changelog.writeCommitStats(spark, path, c, "k")
     GraftLogCatalog.register(spark, "glogspec5", "t", path, Seq("k"))
     val before = Changelog
-      .snapshotAtOps(spark, path, Seq("k"), Long.MaxValue)
+      .snapshotAt(spark, path, Seq("k"), Long.MaxValue)
       .as[(Long, Double)].collect().toMap
     val spools0 = GraftRowLevel.spoolsPlanned.get()
     // key-window predicate: the spool routes through rangeLookupOps
@@ -464,7 +464,7 @@ class GraftLogTableSpec extends SparkSpec {
       s"the pushed key conjuncts must extract a window, got " +
         s"${GraftRowLevel.lastWindow.get()}")
     val after = Changelog
-      .snapshotAtOps(spark, path, Seq("k"), Long.MaxValue)
+      .snapshotAt(spark, path, Seq("k"), Long.MaxValue)
       .as[(Long, Double)].collect().toMap
     assert(after == before.map { case (k, v) =>
       k -> (if (k >= 30 && k < 35) v + 7.0 else v) })
@@ -584,7 +584,7 @@ class GraftLogTableSpec extends SparkSpec {
     val path = opsFixture("dml_merge")
     GraftLogCatalog.register(spark, "glogspec7", "t", path, Seq("k"))
     val before = Changelog
-      .snapshotAtOps(spark, path, Seq("k"), Long.MaxValue)
+      .snapshotAt(spark, path, Seq("k"), Long.MaxValue)
       .as[(Long, Double)].collect().toMap
     // every clause misses: matched-delete guard selects nothing,
     // not-matched guard excludes the only unmatched row
@@ -608,7 +608,7 @@ class GraftLogTableSpec extends SparkSpec {
     assert(Changelog.commitInfos(path)(3L)._3 == 1L,
       "the commit carries only the re-emitted matched row")
     val after = Changelog
-      .snapshotAtOps(spark, path, Seq("k"), Long.MaxValue)
+      .snapshotAt(spark, path, Seq("k"), Long.MaxValue)
       .as[(Long, Double)].collect().toMap
     assert(after == before, "value-identical re-upsert is idempotent")
   }
@@ -624,7 +624,7 @@ class GraftLogTableSpec extends SparkSpec {
       Seq("k"), Seq("v"))
     // batch surface: the full-window feed by NAME equals the library
     val viaSql = spark.sql("SELECT * FROM glogspec8.tc")
-    val viaLib = Changelog.changesBetweenOps(spark, path, Seq("k"),
+    val viaLib = Changelog.changesBetween(spark, path, Seq("k"),
       -1L, 2L, Seq("v"))
     assert(viaSql.collect().toSet == viaLib.collect().toSet)
     // streaming surface: same name, the live stream, one commit per
@@ -648,11 +648,11 @@ class GraftLogTableSpec extends SparkSpec {
       .collect().sorted.toSeq == Seq(0L, 1L, 2L),
       "three commits must serve as three micro-batches")
     // the stream is PER-COMMIT diffs (the IVM consumer's shape), not
-    // the net window: batch i must equal changesBetweenOps(i-1, i]
+    // the net window: batch i must equal changesBetween(i-1, i]
     (0L to 2L).foreach { i =>
       assert(streamed.filter($"batch" === i).drop("batch")
         .collect().toSet ==
-        Changelog.changesBetweenOps(spark, path, Seq("k"),
+        Changelog.changesBetween(spark, path, Seq("k"),
           i - 1, i, Seq("v")).collect().toSet,
         s"batch $i must be commit $i's own feed window")
     }
@@ -693,7 +693,7 @@ class GraftLogTableSpec extends SparkSpec {
     // batch i = commit i's effective upserts (new values; deletes and
     // no-op rewrites excluded) — commit 1 is delete-only, so empty
     def upserts(i: Long) =
-      Changelog.changesBetweenOps(spark, path, Seq("k"), i - 1, i,
+      Changelog.changesBetween(spark, path, Seq("k"), i - 1, i,
           Seq("v"))
         .filter($"change_type" =!= "delete")
         .select($"k", $"new_v".as("v")).collect().toSet
@@ -708,7 +708,7 @@ class GraftLogTableSpec extends SparkSpec {
     // rebuild the head — here the simpler pin: streamed keys at their
     // LAST batch equal the head values for keys alive at head
     val live = Changelog
-      .snapshotAtOps(spark, path, Seq("k"), Long.MaxValue)
+      .snapshotAt(spark, path, Seq("k"), Long.MaxValue)
       .as[(Long, Double)].collect().toMap
     val lastSeen = streamed.as[(Long, Double, Long)].collect()
       .groupBy(_._1).map { case (k, rs) => k -> rs.maxBy(_._3)._2 }
@@ -747,7 +747,7 @@ class GraftLogTableSpec extends SparkSpec {
     assert(Changelog.headVersion(path).contains(4L))
     val infos = Changelog.commitInfos(path)
     assert(infos(3L)._1 == "stream-epoch" && infos(4L)._1 == "stream-epoch")
-    val snap = Changelog.snapshotAtOps(spark, path, Seq("k"), Long.MaxValue)
+    val snap = Changelog.snapshotAt(spark, path, Seq("k"), Long.MaxValue)
       .as[(Long, Double)].collect().toMap
     assert(snap(600L) == 3.0, "the later epoch's upsert wins (LWW)")
     assert(snap(601L) == 2.0 && snap(2L) == 777.0)
@@ -802,7 +802,7 @@ class GraftLogTableSpec extends SparkSpec {
       .toTable("glogspec21.mv")
     q.awaitTermination()
     // the MV converges: per-key running totals, LWW-compacted
-    val got = Changelog.snapshotAtOps(spark, path, Seq("k"), Long.MaxValue)
+    val got = Changelog.snapshotAt(spark, path, Seq("k"), Long.MaxValue)
       .filter($"k" >= 0L).as[(Long, Double)].collect().toMap
     assert(got == Map(1L -> 15.0, 2L -> 20.0, 3L -> 7.0))
   }
@@ -849,20 +849,20 @@ class GraftLogTableSpec extends SparkSpec {
     LogFs.delete(LogFs.child(path, "_graft_mx_maintenance"))
     // the CALL itself: fold ≤ 1, horizon advances, reads above intact
     val before = Changelog
-      .snapshotAtOps(spark, path, Seq("k"), 2L).collect().toSet
+      .snapshotAt(spark, path, Seq("k"), 2L).collect().toSet
     val r = spark.sql("CALL glogspec10.system.checkpoint('t', 1)")
       .collect()
     assert(r.length == 1 && r(0).getString(1) == "checkpoint" &&
       r(0).getLong(2) == 1L)
     assert(Changelog.horizonOf(path) == 1L)
-    assert(Changelog.snapshotAtOps(spark, path, Seq("k"), 2L)
+    assert(Changelog.snapshotAt(spark, path, Seq("k"), 2L)
       .collect().toSet == before)
     // restore through CALL: back to the post-checkpoint v1 state as a
     // NEW commit
-    val v1 = Changelog.snapshotAtOps(spark, path, Seq("k"), 1L)
+    val v1 = Changelog.snapshotAt(spark, path, Seq("k"), 1L)
       .collect().toSet
     spark.sql("CALL glogspec10.system.restore('t', 1, 3)").collect()
-    assert(Changelog.snapshotAtOps(spark, path, Seq("k"), Long.MaxValue)
+    assert(Changelog.snapshotAt(spark, path, Seq("k"), Long.MaxValue)
       .collect().toSet == v1)
     // unknown procedure: loud, names the available ones
     val u = intercept[Exception] {
@@ -888,7 +888,7 @@ class GraftLogTableSpec extends SparkSpec {
     GraftLogCatalog.register(spark, "glogspec22", "branch", dest, Seq("k"))
     val branch = spark.sql("SELECT * FROM glogspec22.branch")
       .as[(Long, Double)].collect().toMap
-    val want = Changelog.snapshotAtOps(spark, path, Seq("k"), 1L)
+    val want = Changelog.snapshotAt(spark, path, Seq("k"), 1L)
       .as[(Long, Double)].collect().toMap
     assert(branch == want && !branch.contains(999L))
     // analyze: record stats on the branch's base, then a beyond-max
@@ -975,7 +975,7 @@ class GraftLogTableSpec extends SparkSpec {
       assert(Changelog.claimHolder(path, 4L).isEmpty,
         "the refused statement must release its claim")
       // the concurrent write survives untouched
-      assert(Changelog.snapshotAtOps(spark, path, Seq("k"), Long.MaxValue)
+      assert(Changelog.snapshotAt(spark, path, Seq("k"), Long.MaxValue)
         .filter($"k" === 2L).as[(Long, Double)].head()._2 == 9999.0)
       // leg 2: DISJOINT — a concurrent commit on keys the statement
       // never touches serializes cleanly; the statement lands after it
@@ -987,7 +987,7 @@ class GraftLogTableSpec extends SparkSpec {
       spark.sql("UPDATE glogspec11.t SET v = v + 1.0 WHERE k = 3")
       assert(Changelog.headVersion(path).contains(5L))
       val live = Changelog
-        .snapshotAtOps(spark, path, Seq("k"), Long.MaxValue)
+        .snapshotAt(spark, path, Seq("k"), Long.MaxValue)
         .as[(Long, Double)].collect().toMap
       assert(live(3L) == 31.0 && live(1001L) == 1.0 && live(2L) == 9999.0)
     } finally GraftRowLevel.testInterleave.set(() => ())
@@ -1022,9 +1022,9 @@ class GraftLogTableSpec extends SparkSpec {
     assert(nBatches == 4,
       s"40-row c0 at budget 15 → 3 slices, then c1+c2 batch: expected " +
         s"4 batches, got $nBatches")
-    val want = Changelog.changesBetweenOps(spark, path, Seq("k"),
+    val want = Changelog.changesBetween(spark, path, Seq("k"),
         -1L, 0L, Seq("v"))
-      .unionByName(Changelog.changesBetweenOps(spark, path, Seq("k"),
+      .unionByName(Changelog.changesBetween(spark, path, Seq("k"),
         0L, 2L, Seq("v")))
     assert(streamed.drop("batch").collect().toSet ==
       want.collect().toSet)
@@ -1044,7 +1044,7 @@ class GraftLogTableSpec extends SparkSpec {
       .start()
     q2.awaitTermination()
     assert(spark.read.parquet(out2).collect().toSet ==
-      Changelog.changesBetweenOps(spark, path, Seq("k"), 1L, 2L,
+      Changelog.changesBetween(spark, path, Seq("k"), 1L, 2L,
         Seq("v")).collect().toSet)
     // startingVersion and startingTimestamp are mutually exclusive
     val bad = spark.readStream
@@ -1068,7 +1068,7 @@ class GraftLogTableSpec extends SparkSpec {
     val path = opsFixture("dml_pruned_spool")
     GraftLogCatalog.register(spark, "glogspec14", "t", path, Seq("k"))
     val live = Changelog
-      .snapshotAtOps(spark, path, Seq("k"), Long.MaxValue)
+      .snapshotAt(spark, path, Seq("k"), Long.MaxValue)
       .as[(Long, Double)].collect().toMap
     val matched = live.count(_._2 > 900.0)
     require(matched > 0 && matched < live.size / 2,
@@ -1079,7 +1079,7 @@ class GraftLogTableSpec extends SparkSpec {
       s"the spool must hold exactly the ${matched} matched rows, " +
         s"got ${GraftRowLevel.lastSpoolRows.get()}")
     val after = Changelog
-      .snapshotAtOps(spark, path, Seq("k"), Long.MaxValue)
+      .snapshotAt(spark, path, Seq("k"), Long.MaxValue)
       .as[(Long, Double)].collect().toMap
     assert(after == live.map { case (k, v) =>
       k -> (if (v > 900.0) v - 1000.0 else v) })
@@ -1094,7 +1094,7 @@ class GraftLogTableSpec extends SparkSpec {
     val asof1 = spark.sql(
       "SELECT * FROM glogspec15.tc VERSION AS OF 1")
     assert(asof1.collect().toSet ==
-      Changelog.changesBetweenOps(spark, path, Seq("k"), -1L, 1L,
+      Changelog.changesBetween(spark, path, Seq("k"), -1L, 1L,
         Seq("v")).collect().toSet)
     val e = intercept[Exception] {
       spark.sql("SELECT * FROM glogspec15.tc " +
@@ -1111,14 +1111,14 @@ class GraftLogTableSpec extends SparkSpec {
     val path = opsFixture("dml_truncate")
     GraftLogCatalog.register(spark, "glogspec12", "t", path, Seq("k"))
     val preHead = Changelog
-      .snapshotAtOps(spark, path, Seq("k"), 2L).collect().toSet
+      .snapshotAt(spark, path, Seq("k"), 2L).collect().toSet
     spark.sql("TRUNCATE TABLE glogspec12.t")
     assert(Changelog.headVersion(path).contains(3L),
       "truncate lands exactly one commit")
     assert(Changelog
-      .snapshotAtOps(spark, path, Seq("k"), Long.MaxValue).isEmpty,
+      .snapshotAt(spark, path, Seq("k"), Long.MaxValue).isEmpty,
       "the head state is empty after TRUNCATE")
-    assert(Changelog.snapshotAtOps(spark, path, Seq("k"), 2L)
+    assert(Changelog.snapshotAt(spark, path, Seq("k"), 2L)
       .collect().toSet == preHead,
       "history below the truncate commit stays readable")
     assert(Changelog.commitInfos(path)(3L)._1 == "delete")
@@ -1329,7 +1329,7 @@ class GraftLogTableSpec extends SparkSpec {
       "SELECT k, change_type, old_v, new_v " +
         "FROM table_changes('glogspec24.t', 1, 2)")
       .orderBy("k", "change_type").collect().toSeq
-    val want = Changelog.changesBetweenOps(spark, path, Seq("k"), 1L, 2L,
+    val want = Changelog.changesBetween(spark, path, Seq("k"), 1L, 2L,
         Seq("v"))
       .select($"k", $"change_type", $"old_v", $"new_v")
       .orderBy("k", "change_type").collect().toSeq
@@ -1338,7 +1338,7 @@ class GraftLogTableSpec extends SparkSpec {
     val n = spark.sql("SELECT count(*) FROM " +
       "table_changes('glogspec24.t', 0, 2) WHERE change_type = 'insert'")
       .as[Long].head()
-    assert(n == Changelog.changesBetweenOps(spark, path, Seq("k"), 0L, 2L,
+    assert(n == Changelog.changesBetween(spark, path, Seq("k"), 0L, 2L,
       Seq("v")).filter($"change_type" === "insert").count())
     // refusals: unregistered name; a FEED registration (already a
     // window); non-literal arguments
@@ -1424,7 +1424,7 @@ class GraftLogTableSpec extends SparkSpec {
     val head = Changelog.headVersion(path).get
     val tvf = spark.sql("SELECT * FROM table_changes('glogspec26.t', " +
       s"0, $head)").collect().toSet
-    val lib = Changelog.changesBetweenOps(spark, path, Seq("a", "b"),
+    val lib = Changelog.changesBetween(spark, path, Seq("a", "b"),
       0L, head, Seq("v")).collect().toSet
     assert(tvf.nonEmpty && tvf == lib)
     // the snapshot table's own stream groups by the tuple too: the

@@ -69,7 +69,7 @@ class LogSinkSpec extends SparkSpec {
     // three epochs = three commits, each claimed for the default writer
     for (c <- 0L to 2L)
       assert(Changelog.claimHolder(log, c).contains(Changelog.SoloWriter))
-    val got = Changelog.snapshotAtOps(spark, log, Seq("o_orderkey"),
+    val got = Changelog.snapshotAt(spark, log, Seq("o_orderkey"),
         Long.MaxValue)
       .select("o_orderkey", "o_totalprice")
       .as[(Long, Double)].collect().toMap
@@ -80,7 +80,7 @@ class LogSinkSpec extends SparkSpec {
     commits.zipWithIndex.foreach { case (c, i) =>
       Changelog.commit(c, ctl, i.toLong)
     }
-    assert(Changelog.snapshotAtOps(spark, ctl, Seq("o_orderkey"),
+    assert(Changelog.snapshotAt(spark, ctl, Seq("o_orderkey"),
         Long.MaxValue)
       .select("o_orderkey", "o_totalprice")
       .as[(Long, Double)].collect().toMap == got)
@@ -89,7 +89,7 @@ class LogSinkSpec extends SparkSpec {
       .toSeq.flatten.isEmpty)
     // the feed over the sunk log serves the usual labels — the sink
     // and CdcSource compose into stream-in/stream-out
-    assert(Changelog.changesBetweenOps(spark, log, Seq("o_orderkey"),
+    assert(Changelog.changesBetween(spark, log, Seq("o_orderkey"),
         0L, 2L, trackCols = Seq("o_totalprice"))
       .filter(col("change_type") === "update").count() == 2L)
   }
@@ -102,7 +102,7 @@ class LogSinkSpec extends SparkSpec {
     Seq(landing, log, ckpt).foreach(Sinks.deleteRecursively)
     stage(landing, commits.take(2))
     runSink(landing, log, ckpt)
-    assert(Changelog.snapshotAtOps(spark, log, Seq("o_orderkey"), 1L)
+    assert(Changelog.snapshotAt(spark, log, Seq("o_orderkey"), 1L)
       .count() == 2L) // k1 deleted, k2+k3 live
     val before = Option(new java.io.File(log,
       s"${Changelog.CommitCol}=0").listFiles()).toSeq.flatten
@@ -110,7 +110,7 @@ class LogSinkSpec extends SparkSpec {
     stage(landing, Seq(commits(2)))
     runSink(landing, log, ckpt)
     // epoch 2 landed; commit 0's files untouched byte-for-byte
-    assert(Changelog.snapshotAtOps(spark, log, Seq("o_orderkey"), 2L)
+    assert(Changelog.snapshotAt(spark, log, Seq("o_orderkey"), 2L)
       .count() == 4L)
     val after = Option(new java.io.File(log,
       s"${Changelog.CommitCol}=0").listFiles()).toSeq.flatten
@@ -128,18 +128,18 @@ class LogSinkSpec extends SparkSpec {
     commits.take(2).zipWithIndex.foreach { case (c, i) =>
       Changelog.commit(c, log, i.toLong)
     }
-    val snap1 = Changelog.snapshotAtOps(spark, log, Seq("o_orderkey"), 1L)
+    val snap1 = Changelog.snapshotAt(spark, log, Seq("o_orderkey"), 1L)
       .select("o_orderkey", "o_totalprice")
       .as[(Long, Double)].collect().toMap
     // a brand-new sink query delivers one batch — its epoch 0 must
     // land as commit 2, not clobber commit 0
     stage(landing, Seq(commits(2)))
     runSink(landing, log, Sinks.tmpPath("log_sink_spec_fresh_ckpt1"))
-    assert(Changelog.snapshotAtOps(spark, log, Seq("o_orderkey"), 1L)
+    assert(Changelog.snapshotAt(spark, log, Seq("o_orderkey"), 1L)
       .select("o_orderkey", "o_totalprice")
       .as[(Long, Double)].collect().toMap == snap1,
       "a fresh sink query rewrote existing history")
-    assert(Changelog.snapshotAtOps(spark, log, Seq("o_orderkey"), 2L)
+    assert(Changelog.snapshotAt(spark, log, Seq("o_orderkey"), 2L)
       .count() == 4L)
     // a SECOND fresh query appends again — at commit 3
     val landing2 = Sinks.tmpPath("log_sink_spec_fresh_landing2")
@@ -147,7 +147,7 @@ class LogSinkSpec extends SparkSpec {
     stage(landing2, Seq(frame(Seq((9L, Some(30L), Some(90.0), "u")))))
     runSink(landing2, log, Sinks.tmpPath("log_sink_spec_fresh_ckpt2"))
     assert(new java.io.File(log, s"${Changelog.CommitCol}=3").isDirectory)
-    assert(Changelog.snapshotAtOps(spark, log, Seq("o_orderkey"), 3L)
+    assert(Changelog.snapshotAt(spark, log, Seq("o_orderkey"), 3L)
       .count() == 5L)
   }
 
@@ -189,7 +189,7 @@ class LogSinkSpec extends SparkSpec {
         s"trial $trial")
       // the final state is interleave-independent (keys disjoint,
       // per-producer epoch order monotone in commit id)
-      assert(Changelog.snapshotAtOps(spark, log, Seq("o_orderkey"),
+      assert(Changelog.snapshotAt(spark, log, Seq("o_orderkey"),
           Long.MaxValue)
         .select("o_orderkey", "o_totalprice")
         .as[(Long, Double)].collect().toMap ==
@@ -257,14 +257,14 @@ class LogSinkSpec extends SparkSpec {
     stage(landingC, Seq(commits(2)))
     sink2(landingC, ckptC) // epoch 2 claims PAST the foreign id → 3
     assert(new java.io.File(log2, s"${Changelog.CommitCol}=3").isDirectory)
-    assert(Changelog.snapshotAtOps(spark, log2, Seq("o_orderkey"),
+    assert(Changelog.snapshotAt(spark, log2, Seq("o_orderkey"),
         Long.MaxValue)
       .select("o_orderkey", "o_totalprice")
       .as[(Long, Double)].collect().toMap ==
       Map(1L -> 11.0, 2L -> 25.0, 3L -> 30.0, 4L -> 40.0, 8L -> 80.0))
     // the checkpoint sweeps map markers whose commit folded below the
     // horizon; the at-horizon marker survives
-    Changelog.checkpointOps(spark, log2, Seq("o_orderkey"), 3L)
+    Changelog.checkpoint(spark, log2, Seq("o_orderkey"), 3L)
     val left = Option(new java.io.File(log2).listFiles()).toSeq.flatten
       .filter(_.getName.startsWith("_graft_sinkmap_"))
     assert(left.length == 1 &&
@@ -299,7 +299,7 @@ class LogSinkSpec extends SparkSpec {
     assert(causes(e).exists(c => Option(c.getMessage)
       .exists(_.contains("OPS log"))), e.getMessage)
     // nothing landed
-    assert(Changelog.snapshotAtOps(spark, log, Seq("o_orderkey"),
+    assert(Changelog.snapshotAt(spark, log, Seq("o_orderkey"),
       Long.MaxValue).count() == 1L)
     // foreign claim: epoch 0 of a FRESH log pre-claimed by another
     // writer — the stream's first commit must fail loudly

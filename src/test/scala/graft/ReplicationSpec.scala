@@ -63,7 +63,7 @@ class ReplicationSpec extends SparkSpec {
   }
 
   private def snapshot(path: String, key: String = "o_orderkey") =
-    Changelog.snapshotAtOps(spark, path, Seq(key), Long.MaxValue)
+    Changelog.snapshotAt(spark, path, Seq(key), Long.MaxValue)
 
   private def rowsOf(df: DataFrame): Set[(Long, Long, Double)] =
     df.select("o_orderkey", "o_custkey", "o_totalprice")
@@ -87,7 +87,7 @@ class ReplicationSpec extends SparkSpec {
     assert(rowsOf(snapshot(replica)) == rowsOf(snapshot(upstream)))
     // the delete really replicated as a TOMBSTONE mid-history: the
     // replica AS OF 1 must not serve k1, exactly like the upstream
-    assert(Changelog.snapshotAtOps(spark, replica, Seq("o_orderkey"), 1L)
+    assert(Changelog.snapshotAt(spark, replica, Seq("o_orderkey"), 1L)
       .select("o_orderkey").as[Long].collect().toSet == Set(2L, 3L))
   }
 
@@ -241,7 +241,7 @@ class ReplicationSpec extends SparkSpec {
       .start()
     q.awaitTermination()
     // the log reads back as TimestampType with MICROSECOND precision
-    val snap = Changelog.snapshotAtOps(spark, log, Seq("k"), Long.MaxValue)
+    val snap = Changelog.snapshotAt(spark, log, Seq("k"), Long.MaxValue)
     assert(snap.schema("ts").dataType ==
       org.apache.spark.sql.types.TimestampType)
     assert(snap.select("ts").as[java.sql.Timestamp].head() == t1)

@@ -175,7 +175,7 @@ class StreamIvmSpec extends SparkSpec {
     // the consumer's rollup equals the recompute from the log's own
     // final snapshot — the feed-sufficiency contract
     val recompute = graft.sources.Changelog
-      .snapshotAtOps(spark, opsLog, Seq("o_orderkey"), 2L)
+      .snapshotAt(spark, opsLog, Seq("o_orderkey"), 2L)
       .groupBy("o_custkey")
       .agg(count(lit(1)).as("n"),
         (sum((round(col("o_totalprice") * 100)).cast("long"))
@@ -195,7 +195,7 @@ class StreamIvmSpec extends SparkSpec {
     // batch: its feed window (1, 2] now starts BELOW the horizon — the
     // guard must refuse (a silent empty stateAt(1) would relabel the
     // batch's updates as inserts and double-count downstream)
-    graft.sources.Changelog.checkpointOps(spark, opsLog,
+    graft.sources.Changelog.checkpoint(spark, opsLog,
       Seq("o_orderkey"), 2L)
     val e = intercept[IllegalArgumentException] {
       StreamIvm.applyBatchCdc(spark, batches(2), 2L, opsLog, rollLog,
@@ -208,7 +208,7 @@ class StreamIvmSpec extends SparkSpec {
     // intact (a commit-first ordering would have overwritten it with
     // just the batch's two rows)
     assert(graft.sources.Changelog
-      .snapshotAtOps(spark, opsLog, Seq("o_orderkey"), 2L).count() == 4L)
+      .snapshotAt(spark, opsLog, Seq("o_orderkey"), 2L).count() == 4L)
   }
 
   test("CDC consumer: an update that MOVES a key between groups " +
@@ -240,7 +240,7 @@ class StreamIvmSpec extends SparkSpec {
     assert(served == Seq((10L, 1L, 22.0), (20L, 2L, 45.0)))
     // feed-sufficiency: equals the recompute from the final snapshot
     val recompute = graft.sources.Changelog
-      .snapshotAtOps(spark, opsLog, Seq("o_orderkey"), 1L)
+      .snapshotAt(spark, opsLog, Seq("o_orderkey"), 1L)
       .groupBy("o_custkey")
       .agg(count(lit(1)).as("n"),
         (sum((round(col("o_totalprice") * 100)).cast("long"))

@@ -98,14 +98,14 @@ class StreamTypesSpec extends SparkSpec {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    val got = Changelog.snapshotAtOps(spark, log, Seq("k"), Long.MaxValue)
+    val got = Changelog.snapshotAt(spark, log, Seq("k"), Long.MaxValue)
       .orderBy("k").collect().toSeq.map(canon)
     // the control: the same frames batch-committed (Spark's own writer)
     val ctl = Sinks.tmpPath("types_sink_ctl")
     Sinks.deleteRecursively(ctl)
     Seq(b0, b1).zipWithIndex.foreach { case (d, i) =>
       Changelog.commit(d, ctl, i.toLong) }
-    val want = Changelog.snapshotAtOps(spark, ctl, Seq("k"), Long.MaxValue)
+    val want = Changelog.snapshotAt(spark, ctl, Seq("k"), Long.MaxValue)
       .orderBy("k").collect().toSeq.map(canon)
     assert(got == want)
     // value pins (independent of the control path): the update's bytes,
@@ -168,14 +168,14 @@ class StreamTypesSpec extends SparkSpec {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    val got = Changelog.snapshotAtOps(spark, log, Seq("k"), Long.MaxValue)
+    val got = Changelog.snapshotAt(spark, log, Seq("k"), Long.MaxValue)
       .orderBy("k").collect().toSeq
     // the control: the same frames batch-committed (Spark's writer)
     val ctl = Sinks.tmpPath("types_wide_ctl")
     Sinks.deleteRecursively(ctl)
     Seq(w0, w1).zipWithIndex.foreach { case (d, i) =>
       Changelog.commit(d, ctl, i.toLong) }
-    val want = Changelog.snapshotAtOps(spark, ctl, Seq("k"), Long.MaxValue)
+    val want = Changelog.snapshotAt(spark, ctl, Seq("k"), Long.MaxValue)
       .orderBy("k").collect().toSeq
     assert(got == want)
     val byK = got.map(r => r.getLong(0) -> r).toMap
@@ -217,9 +217,9 @@ class StreamTypesSpec extends SparkSpec {
     val streamed = spark.read.parquet(out).select(cols: _*)
       .orderBy("k", "change_type").collect().toSeq
     val batchFeed =
-      Changelog.changesBetweenOps(spark, log, Seq("k"), -1L, 0L,
+      Changelog.changesBetween(spark, log, Seq("k"), -1L, 0L,
           Seq("meta", "big"))
-        .unionByName(Changelog.changesBetweenOps(spark, log, Seq("k"),
+        .unionByName(Changelog.changesBetween(spark, log, Seq("k"),
           0L, 1L, Seq("meta", "big")))
         .select(cols: _*).orderBy("k", "change_type").collect().toSeq
     assert(streamed.nonEmpty && streamed == batchFeed)
@@ -269,9 +269,9 @@ class StreamTypesSpec extends SparkSpec {
         })
     val tsStreamed = canonTs(spark.read.parquet(tsOut))
     val tsBatch = canonTs(
-      Changelog.changesBetweenOps(spark, tsLog, Seq("k"), -1L, 0L,
+      Changelog.changesBetween(spark, tsLog, Seq("k"), -1L, 0L,
           Seq("meta", "times", "byname"))
-        .unionByName(Changelog.changesBetweenOps(spark, tsLog, Seq("k"),
+        .unionByName(Changelog.changesBetween(spark, tsLog, Seq("k"),
           0L, 1L, Seq("meta", "times", "byname"))))
     assert(tsStreamed.nonEmpty && tsStreamed == tsBatch)
   }
@@ -332,14 +332,14 @@ class StreamTypesSpec extends SparkSpec {
       case m: scala.collection.Map[_, _] => m.toMap
       case other => other
     }
-    val got = Changelog.snapshotAtOps(spark, log, Seq("k"), Long.MaxValue)
+    val got = Changelog.snapshotAt(spark, log, Seq("k"), Long.MaxValue)
       .orderBy("k").collect().toSeq.map(canonG)
     // the control: the same frames batch-committed (Spark's own writer)
     val ctl = Sinks.tmpPath("types_gen_ctl")
     Sinks.deleteRecursively(ctl)
     Seq(g0, g1).zipWithIndex.foreach { case (d, i) =>
       Changelog.commit(d, ctl, i.toLong) }
-    val want = Changelog.snapshotAtOps(spark, ctl, Seq("k"), Long.MaxValue)
+    val want = Changelog.snapshotAt(spark, ctl, Seq("k"), Long.MaxValue)
       .orderBy("k").collect().toSeq.map(canonG)
     assert(got == want)
     val byK = got.map(r => r.head.asInstanceOf[Long] -> r).toMap
@@ -392,8 +392,8 @@ class StreamTypesSpec extends SparkSpec {
       Seq(col(s"new_$c"), col(s"old_$c"))) :+ col("change_type")
     val streamed = canonFeed(spark.read.parquet(out).select(cols: _*))
     val batchFeed = canonFeed(
-      Changelog.changesBetweenOps(spark, log, Seq("k"), -1L, 0L, tracked)
-        .unionByName(Changelog.changesBetweenOps(spark, log, Seq("k"),
+      Changelog.changesBetween(spark, log, Seq("k"), -1L, 0L, tracked)
+        .unionByName(Changelog.changesBetween(spark, log, Seq("k"),
           0L, 1L, tracked))
         .select(cols: _*))
     assert(streamed.nonEmpty && streamed == batchFeed)
@@ -431,8 +431,8 @@ class StreamTypesSpec extends SparkSpec {
       .start()
     q.awaitTermination()
     // the evolved read serves the union: old rows carry null w
-    val got = Changelog.snapshotAtOpsEvolved(spark, log, Seq("k"),
-        Long.MaxValue)
+    val got = Changelog.snapshotAt(spark, log, Seq("k"),
+        Long.MaxValue, mergeSchema = true)
       .orderBy("k").collect().toSeq.map(r =>
         (r.getLong(r.fieldIndex("k")),
           r.getDouble(r.fieldIndex("v")),
@@ -489,9 +489,9 @@ class StreamTypesSpec extends SparkSpec {
     // the stream serves ONE window per commit from the initial offset
     // (-1): batch 0 = (-1, 0] (the inserts), batch 1 = (0, 1]
     val batchFeed = canonFeed(
-      Changelog.changesBetweenOps(spark, log, Seq("k"), -1L, 0L,
+      Changelog.changesBetween(spark, log, Seq("k"), -1L, 0L,
           Seq("added", "score", "payload", "emb"))
-        .unionByName(Changelog.changesBetweenOps(spark, log, Seq("k"),
+        .unionByName(Changelog.changesBetween(spark, log, Seq("k"),
           0L, 1L, Seq("added", "score", "payload", "emb")))
       .select(b0.columns.filter(_ != op).flatMap(c =>
         if (c == "k") Seq(col("k")) else Seq(col(s"new_$c"), col(s"old_$c")))

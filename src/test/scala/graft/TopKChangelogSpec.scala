@@ -63,7 +63,7 @@ class TopKChangelogSpec extends SparkSpec {
     assert(snap(0L) == Map("k1" -> "a", "k2" -> "b"))
     assert(snap(1L) == Map("k1" -> "a", "k2" -> "c", "k3" -> "d"))
     assert(snap(2L) == Map("k1" -> "e", "k2" -> "c", "k3" -> "d"))
-    assert(Changelog.snapshotLatest(spark, path, Seq("k"))
+    assert(Changelog.snapshotAt(spark, path, Seq("k"), Long.MaxValue)
       .as[(String, String)].collect().toMap == snap(2L))
     // the snapshot never exposes the log coordinate
     assert(!snap(1L).contains(Changelog.CommitCol))
@@ -99,7 +99,8 @@ class TopKChangelogSpec extends SparkSpec {
     Changelog.commit(Seq(("k1", "a"), ("k2", "b")).toDF("k", "v"), path, 0L)
     // commit 1 adds column `tag` and replaces k2 only
     Changelog.commit(Seq(("k2", "c", "t1")).toDF("k", "v", "tag"), path, 1L)
-    val snap = Changelog.snapshotAtEvolved(spark, path, Seq("k"), 1L)
+    val snap = Changelog.snapshotAt(spark, path, Seq("k"), 1L,
+      mergeSchema = true)
     assert(snap.columns.sorted.toSeq == Seq("k", "tag", "v"))
     val got = snap.select("k", "v", "tag")
       .as[(String, String, Option[String])].collect().toSet
@@ -136,7 +137,7 @@ class TopKChangelogSpec extends SparkSpec {
     // reads at and above the horizon are value-identical
     assert(snap(1L) == before1)
     assert(snap(2L) == before2)
-    assert(Changelog.snapshotLatest(spark, path, Seq("k"))
+    assert(Changelog.snapshotAt(spark, path, Seq("k"), Long.MaxValue)
       .as[(String, String)].collect().toMap == before2)
     // below the horizon the log no longer distinguishes states — a
     // silent empty read would be wrong, so the guard fails LOUDLY
@@ -174,7 +175,8 @@ class TopKChangelogSpec extends SparkSpec {
     // silently dropped, then vacuumed out of existence
     Changelog.commit(Seq(("k2", "c", "t1")).toDF("k", "v", "tag"), path, 1L)
     Changelog.checkpoint(spark, path, Seq("k"), 1L)
-    val base = Changelog.snapshotAtEvolved(spark, path, Seq("k"), 1L)
+    val base = Changelog.snapshotAt(spark, path, Seq("k"), 1L,
+      mergeSchema = true)
     assert(base.columns.sorted.toSeq == Seq("k", "tag", "v"))
     assert(base.select("k", "v", "tag")
       .as[(String, String, Option[String])].collect().toSet ==
@@ -232,7 +234,7 @@ class TopKChangelogSpec extends SparkSpec {
     Changelog.commitUpsert(Seq(("k3", "c2"), ("k4", "d")).toDF("k", "v"),
       path, 2L)
     def snap(v: Long) =
-      Changelog.snapshotAtOps(spark, path, Seq("k"), v)
+      Changelog.snapshotAt(spark, path, Seq("k"), v)
         .as[(String, String)].collect().sorted.toSeq
     assert(snap(0L) == Seq(("k1", "secret1"), ("k2", "b"), ("k3", "c")))
     assert(snap(1L) == Seq(("k2", "b")))
@@ -241,7 +243,7 @@ class TopKChangelogSpec extends SparkSpec {
     assert(snap(2L) == Seq(("k2", "b"), ("k3", "c2"), ("k4", "d")))
     // full-label feed: k1 delete (olds carried), k3 NET update
     // (delete+re-insert collapses), k4 insert, k2 untouched → absent
-    val feed = Changelog.changesBetweenOps(spark, path, Seq("k"), 0L, 2L,
+    val feed = Changelog.changesBetween(spark, path, Seq("k"), 0L, 2L,
         trackCols = Seq("v"))
       .collect().map(r => r.getAs[String]("k") ->
         ((r.getAs[String]("change_type"), r.getAs[Any]("old_v"),
@@ -253,7 +255,7 @@ class TopKChangelogSpec extends SparkSpec {
     // checkpoint at the head: snapshots ≥ v unchanged, and NO
     // surviving parquet file holds the deleted row's data — the
     // physical-erasure guarantee a logical tombstone never gives
-    Changelog.checkpointOps(spark, path, Seq("k"), 2L)
+    Changelog.checkpoint(spark, path, Seq("k"), 2L)
     assert(snap(2L) == Seq(("k2", "b"), ("k3", "c2"), ("k4", "d")))
     val survivors = spark.read.parquet(path)
     assert(survivors.filter(col("k") === "k1" || col("v") === "secret1")
@@ -303,49 +305,19 @@ class TopKChangelogSpec extends SparkSpec {
     // commit 2 deletes k1 AFTER evolution — the tombstone shape must
     // come from the union schema, or the added column strands
     Changelog.commitDelete(spark, Seq("k1").toDF("k"), path, 2L)
-    val got = Changelog.snapshotAtOpsEvolved(spark, path, Seq("k"), 2L)
+    val got = Changelog.snapshotAt(spark, path, Seq("k"), 2L,
+      mergeSchema = true)
       .select("k", "v", "tag")
       .as[(String, String, Option[String])].collect().sorted.toSeq
     assert(got == Seq(("k2", "b", None), ("k3", "c", Some("t1"))))
     // checkpoint folds the union schema and erases the dead key
-    Changelog.checkpointOps(spark, path, Seq("k"), 2L)
-    val after = Changelog.snapshotAtOpsEvolved(spark, path, Seq("k"), 2L)
+    Changelog.checkpoint(spark, path, Seq("k"), 2L)
+    val after = Changelog.snapshotAt(spark, path, Seq("k"), 2L,
+      mergeSchema = true)
       .select("k", "v", "tag")
       .as[(String, String, Option[String])].collect().sorted.toSeq
     assert(after == got)
     assert(spark.read.parquet(path).filter(col("k") === "k1").isEmpty)
-  }
-
-  test("plain and ops APIs refuse each other's logs loudly — a plain " +
-       "read of an ops log would surface tombstones as rows") {
-    val plain = Sinks.tmpPath("changelog_spec_mutual_plain")
-    val ops = Sinks.tmpPath("changelog_spec_mutual_ops")
-    Sinks.deleteRecursively(plain); Sinks.deleteRecursively(ops)
-    Changelog.commit(Seq(("k1", "a")).toDF("k", "v"), plain, 0L)
-    Changelog.commitUpsert(Seq(("k1", "a")).toDF("k", "v"), ops, 0L)
-    // ops log through the plain API: refused (every entry point)
-    val e = intercept[IllegalArgumentException](
-      Changelog.snapshotAt(spark, ops, Seq("k"), 0L))
-    assert(e.getMessage.contains("snapshotAtOps"))
-    intercept[IllegalArgumentException](
-      Changelog.snapshotLatest(spark, ops, Seq("k")))
-    intercept[IllegalArgumentException](
-      Changelog.snapshotAtEvolved(spark, ops, Seq("k"), 0L))
-    intercept[IllegalArgumentException](
-      Changelog.changesBetween(spark, ops, Seq("k"), 0L, 1L, Seq("v")))
-    intercept[IllegalArgumentException](
-      Changelog.checkpoint(spark, ops, Seq("k"), 0L))
-    // plain log through the ops API: refused with the API pointer
-    val e2 = intercept[IllegalArgumentException](
-      Changelog.snapshotAtOps(spark, plain, Seq("k"), 0L))
-    assert(e2.getMessage.contains("commitUpsert"))
-    intercept[IllegalArgumentException](
-      Changelog.changesBetweenOps(spark, plain, Seq("k"), 0L, 1L, Seq("v")))
-    intercept[IllegalArgumentException](
-      Changelog.checkpointOps(spark, plain, Seq("k"), 0L))
-    // and the refused checkpoints deleted nothing
-    assert(Changelog.snapshotAtOps(spark, ops, Seq("k"), 0L).count() == 1L)
-    assert(Changelog.snapshotAt(spark, plain, Seq("k"), 0L).count() == 1L)
   }
 
   // ---- Concurrency (round-12: pin the MVCC claims under racing
@@ -386,7 +358,7 @@ class TopKChangelogSpec extends SparkSpec {
       Changelog.commit(Seq(("k1", "a"), ("k2", "a")).toDF("k", "v"), path, 0L)
       val delta = Seq(("k1", "b"), ("k3", "b")).toDF("k", "v")
       raceTwo(Changelog.commitIdempotent(delta, path, 1L))
-      val got = Changelog.snapshotLatest(spark, path, Seq("k"))
+      val got = Changelog.snapshotAt(spark, path, Seq("k"), Long.MaxValue)
         .as[(String, String)].collect().sorted.toSeq
       assert(got == Seq(("k1", "b"), ("k2", "a"), ("k3", "b")))
     }
@@ -411,7 +383,7 @@ class TopKChangelogSpec extends SparkSpec {
         Future(Changelog.commitIdempotent(d1, path, 1L)),
         Future(Changelog.commitIdempotent(d2, path, 2L)))), 3.minutes): Unit
       finally pool.shutdown()
-      val got = Changelog.snapshotLatest(spark, path, Seq("k"))
+      val got = Changelog.snapshotAt(spark, path, Seq("k"), Long.MaxValue)
         .as[(String, String)].collect().sorted.toSeq
       // k1: commit 2 wins by ID even if commit 1's job finished later
       assert(got == Seq(("k1", "c2"), ("k2", "a"), ("k3", "c1"),
@@ -498,9 +470,9 @@ class TopKChangelogSpec extends SparkSpec {
     Changelog.commitDelete(spark,
       spark.range(0, 5).select(concat(lit("k"), col("id")).as("k")),
       path, 4L)
-    val expected = Changelog.snapshotAtOps(spark, path, Seq("k"), 4L)
+    val expected = Changelog.snapshotAt(spark, path, Seq("k"), 4L)
       .as[(String, String)].collect().sorted.toSeq
-    val stalePlan = Changelog.snapshotAtOps(spark, path, Seq("k"), 4L)
+    val stalePlan = Changelog.snapshotAt(spark, path, Seq("k"), 4L)
     stalePlan.count() // plan + list pre-race
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration._
@@ -513,7 +485,7 @@ class TopKChangelogSpec extends SparkSpec {
       val wrong = Seq.newBuilder[Seq[(String, String)]]
       while (!stop) {
         try {
-          val got = Changelog.snapshotAtOps(spark, path, Seq("k"), 4L)
+          val got = Changelog.snapshotAt(spark, path, Seq("k"), 4L)
             .as[(String, String)].collect().sorted.toSeq
           completed += 1
           if (got != expected) wrong += got
@@ -522,13 +494,13 @@ class TopKChangelogSpec extends SparkSpec {
       (completed, failed, wrong.result())
     }
     try {
-      Changelog.checkpointOps(spark, path, Seq("k"), 4L)
+      Changelog.checkpoint(spark, path, Seq("k"), 4L)
     } finally stop = true
     val (completed, failed, wrong) = Await.result(reader, 3.minutes)
     assert(wrong.isEmpty,
       s"concurrent ops reader saw a WRONG state ($completed completed, " +
         s"$failed loud failures): ${wrong.take(1)}")
-    assert(Changelog.snapshotAtOps(spark, path, Seq("k"), 4L)
+    assert(Changelog.snapshotAt(spark, path, Seq("k"), 4L)
       .as[(String, String)].collect().sorted.toSeq == expected)
     intercept[Throwable](stalePlan.as[(String, String)].collect())
     // physical erasure survived the race: deleted keys' values (ids
@@ -543,7 +515,7 @@ class TopKChangelogSpec extends SparkSpec {
       assert(!hay.contains(s"opssecret${id}_c$c"), s"id=$id c=$c survived")
     // and the horizon guard is now active below v
     intercept[IllegalArgumentException](
-      Changelog.snapshotAtOps(spark, path, Seq("k"), 3L))
+      Changelog.snapshotAt(spark, path, Seq("k"), 3L))
   }
 
   test("the mid-checkpoint listing is DETERMINISTICALLY correct: a " +
@@ -561,23 +533,23 @@ class TopKChangelogSpec extends SparkSpec {
     Changelog.commitDelete(spark,
       spark.range(0, 5).select(concat(lit("k"), col("id")).as("k")),
       path, 4L)
-    val expected = Changelog.snapshotAtOps(spark, path, Seq("k"), 4L)
+    val expected = Changelog.snapshotAt(spark, path, Seq("k"), 4L)
       .as[(String, String)].collect().sorted.toSeq
     // read EXACTLY in the window the old single-phase fold left wrong:
     // fold landed at _commit=4, commits 0..3 still listed
     @volatile var midState: Seq[(String, String)] = null
     Changelog.testAfterFold.set { () =>
-      midState = Changelog.snapshotAtOps(spark, path, Seq("k"), 4L)
+      midState = Changelog.snapshotAt(spark, path, Seq("k"), 4L)
         .as[(String, String)].collect().sorted.toSeq
     }
-    try Changelog.checkpointOps(spark, path, Seq("k"), 4L)
+    try Changelog.checkpoint(spark, path, Seq("k"), 4L)
     finally Changelog.testAfterFold.set(() => ())
     assert(midState == expected,
       s"the mid-checkpoint mixed listing resurrected deleted keys: " +
         s"${midState.filterNot(expected.contains).take(3)}")
     // post-checkpoint: the erasure pass ran — no tombstone rows (or
     // deleted keys) survive in the base, and the snapshot is intact
-    assert(Changelog.snapshotAtOps(spark, path, Seq("k"), 4L)
+    assert(Changelog.snapshotAt(spark, path, Seq("k"), 4L)
       .as[(String, String)].collect().sorted.toSeq == expected)
     val base = spark.read.parquet(path)
     assert(base.filter(col(Changelog.OpCol) === "d").isEmpty,
@@ -597,17 +569,17 @@ class TopKChangelogSpec extends SparkSpec {
     Changelog.commitDelete(spark,
       spark.range(0, 3).select(concat(lit("k"), col("id")).as("k")),
       path, 1L)
-    val expected = Changelog.snapshotAtOps(spark, path, Seq("k"), 1L)
+    val expected = Changelog.snapshotAt(spark, path, Seq("k"), 1L)
       .as[(String, String)].collect().sorted.toSeq
     Changelog.testAfterVacuum.set(() =>
       throw new RuntimeException("simulated crash before phase 2"))
     try intercept[RuntimeException](
-      Changelog.checkpointOps(spark, path, Seq("k"), 1L))
+      Changelog.checkpoint(spark, path, Seq("k"), 1L))
     finally Changelog.testAfterVacuum.set(() => ())
     // post-crash: the base carries tombstones (history already
     // vacuumed) — reads stay CORRECT and the deleted VALUES are
     // already gone (a tombstone holds the key and nulls, never data)
-    assert(Changelog.snapshotAtOps(spark, path, Seq("k"), 1L)
+    assert(Changelog.snapshotAt(spark, path, Seq("k"), 1L)
       .as[(String, String)].collect().sorted.toSeq == expected)
     val mid = spark.read.parquet(path)
     assert(mid.filter(col(Changelog.OpCol) === "d").count() == 3,
@@ -625,12 +597,12 @@ class TopKChangelogSpec extends SparkSpec {
         s"deleted VALUE $i must be gone even on the crash leg")
     // the RE-RUN checkpoint (v == horizon passes the guard) finishes
     // phase 2: no tombstone rows, no deleted keys, snapshot intact
-    Changelog.checkpointOps(spark, path, Seq("k"), 1L)
+    Changelog.checkpoint(spark, path, Seq("k"), 1L)
     val base = spark.read.parquet(path)
     assert(base.filter(col(Changelog.OpCol) === "d").isEmpty)
     assert(base.filter(col("k").isin("k0", "k1", "k2")).isEmpty,
       "the re-run must finish the key-level erasure")
-    assert(Changelog.snapshotAtOps(spark, path, Seq("k"), 1L)
+    assert(Changelog.snapshotAt(spark, path, Seq("k"), 1L)
       .as[(String, String)].collect().sorted.toSeq == expected)
   }
 
@@ -649,7 +621,7 @@ class TopKChangelogSpec extends SparkSpec {
           path, 1L)
         Changelog.commitDelete(spark, Seq("k1").toDF("k"), path, 1L)
       }
-      val got = Changelog.snapshotAtOps(spark, path, Seq("k"), 1L)
+      val got = Changelog.snapshotAt(spark, path, Seq("k"), 1L)
         .as[(String, String)].collect().sorted.toSeq
       // delete wins the intra-commit tie EVERY trial: k1 dead, k2
       // untouched, k3 inserted — never an arrival-order-dependent k1
@@ -665,17 +637,17 @@ class TopKChangelogSpec extends SparkSpec {
       Seq(("k1", "a"), ("k2", "a")).toDF("k", "v"), path, 0L)
     Changelog.commitUpsert(Seq(("k2", "b")).toDF("k", "v"), path, 1L)
     Changelog.commitDelete(spark, Seq("k1").toDF("k"), path, 2L)
-    Changelog.checkpointOps(spark, path, Seq("k"), 1L)
+    Changelog.checkpoint(spark, path, Seq("k"), 1L)
     // below the horizon: snapshot and feed both refuse — a silent feed
     // would label every surviving key `insert` with null olds and a
     // q183-style maintenance consumer would double-count
     intercept[IllegalArgumentException](
-      Changelog.snapshotAtOps(spark, path, Seq("k"), 0L))
+      Changelog.snapshotAt(spark, path, Seq("k"), 0L))
     val e = intercept[IllegalArgumentException](
-      Changelog.changesBetweenOps(spark, path, Seq("k"), 0L, 2L, Seq("v")))
+      Changelog.changesBetween(spark, path, Seq("k"), 0L, 2L, Seq("v")))
     assert(e.getMessage.contains("horizon"))
     // at v0 = horizon the feed is exact: only k1's delete sits in (1, 2]
-    val feed = Changelog.changesBetweenOps(spark, path, Seq("k"), 1L, 2L,
+    val feed = Changelog.changesBetween(spark, path, Seq("k"), 1L, 2L,
         Seq("v"))
       .select("k", "change_type", "old_v", "new_v")
       .as[(String, String, Option[String], Option[String])]
@@ -702,7 +674,7 @@ class TopKChangelogSpec extends SparkSpec {
       Changelog.commit(
         Seq(("k2", "b", "u")).toDF("k", "v", Changelog.OpCol), plain, 1L))
     // neither refused write landed
-    assert(Changelog.snapshotAtOps(spark, ops, Seq("k"), 99L).count() == 1L)
+    assert(Changelog.snapshotAt(spark, ops, Seq("k"), 99L).count() == 1L)
     assert(Changelog.snapshotAt(spark, plain, Seq("k"), 99L).count() == 1L)
   }
 
@@ -717,7 +689,7 @@ class TopKChangelogSpec extends SparkSpec {
     assert(e.getMessage.contains("type"))
     // the correctly-typed delete still works
     Changelog.commitDelete(spark, Seq(1L).toDF("k"), path, 1L)
-    assert(Changelog.snapshotAtOps(spark, path, Seq("k"), 1L)
+    assert(Changelog.snapshotAt(spark, path, Seq("k"), 1L)
       .as[(Long, String)].collect().toSeq == Seq((2L, "b")))
   }
 
@@ -771,20 +743,20 @@ class TopKChangelogSpec extends SparkSpec {
     Changelog.stampCommit(path, 1L, 2000L)
     Changelog.commitDelete(spark, Seq("k1").toDF("k"), path, 2L)
     Changelog.stampCommit(path, 2L, 3000L)
-    Changelog.checkpointOps(spark, path, Seq("k"), 1L)
+    Changelog.checkpoint(spark, path, Seq("k"), 1L)
     // instants at/after the horizon commit still resolve and read
-    assert(Changelog.snapshotAsOfOps(spark, path, Seq("k"), 2500L)
+    assert(Changelog.snapshotAsOf(spark, path, Seq("k"), 2500L)
       .as[(String, String)].collect().toMap == Map("k1" -> "a", "k2" -> "b"))
-    assert(Changelog.snapshotAsOfOps(spark, path, Seq("k"), 3000L)
+    assert(Changelog.snapshotAsOf(spark, path, Seq("k"), 3000L)
       .as[(String, String)].collect().toMap == Map("k2" -> "b"))
     // an instant that RESOLVES below the horizon hits the same loud
     // guard as a versioned read — retention applies to the clock too
     val e = intercept[IllegalArgumentException](
-      Changelog.snapshotAsOfOps(spark, path, Seq("k"), 1500L))
+      Changelog.snapshotAsOf(spark, path, Seq("k"), 1500L))
     assert(e.getMessage.contains("horizon"))
     // the feed addressed by clock: (2000, 3000] resolves to (v1, v2]
     // — exactly k1's delete with its old value carried
-    val feed = Changelog.changesBetweenOpsTimestamps(spark, path,
+    val feed = Changelog.changesBetweenTimestamps(spark, path,
         Seq("k"), 2000L, 3000L, Seq("v"))
       .select("k", "change_type", "old_v", "new_v")
       .as[(String, String, Option[String], Option[String])]
@@ -794,7 +766,7 @@ class TopKChangelogSpec extends SparkSpec {
     // (a consumer polling faster than commits land should skip the
     // cycle, not process a silently-empty feed)
     intercept[IllegalArgumentException](
-      Changelog.changesBetweenOpsTimestamps(spark, path, Seq("k"),
+      Changelog.changesBetweenTimestamps(spark, path, Seq("k"),
         2000L, 2500L, Seq("v")))
   }
 
@@ -810,8 +782,8 @@ class TopKChangelogSpec extends SparkSpec {
     Changelog.commitUpsert(
       spark.range(50).select((col("id") * 20).as("k"),
         concat(lit("r"), col("id") * 20).as("v")), path, 2L)
-    Changelog.checkpointOpsClustered(spark, path, Seq("k"), 1L,
-      "k", 1000L, 8)
+    Changelog.checkpoint(spark, path, Seq("k"), 1L,
+      Some(Changelog.RangeCluster("k", 1000L, 8)))
     // content: live-at-1 (k not a multiple of 10) ∪ commit-2
     // resurrections/rewrites under LWW — exactly the Scala model
     val expected = (0L until 1000L).flatMap { k =>
@@ -819,7 +791,7 @@ class TopKChangelogSpec extends SparkSpec {
       else if (k % 10 == 0) None
       else Some(k -> s"v$k")
     }.toMap
-    val got = Changelog.snapshotAtOps(spark, path, Seq("k"), 2L)
+    val got = Changelog.snapshotAt(spark, path, Seq("k"), 2L)
       .as[(Long, String)].collect().toMap
     assert(got == expected)
     // layout: the folded base is exactly 8 arithmetic range files
@@ -835,7 +807,7 @@ class TopKChangelogSpec extends SparkSpec {
     assert(touched(100L, 374L) == 3L) // spans ranges 0,1,2 -> three files
     // below the horizon the clustered checkpoint guards like the rest
     intercept[IllegalArgumentException](
-      Changelog.snapshotAtOps(spark, path, Seq("k"), 0L))
+      Changelog.snapshotAt(spark, path, Seq("k"), 0L))
   }
 
   test("shallow clone at v: branch diverges, origin untouched, and a " +
@@ -851,7 +823,7 @@ class TopKChangelogSpec extends SparkSpec {
     Changelog.cloneAt(spark, origin, dest, 1L)
     // the clone is the v=1 state — commit 2 (the delete) not taken
     def snap(p: String) = Changelog
-      .snapshotAtOps(spark, p, Seq("k"), Long.MaxValue)
+      .snapshotAt(spark, p, Seq("k"), Long.MaxValue)
       .as[(String, String)].collect().toMap
     assert(snap(dest) == Map("k1" -> "a", "k2" -> "b", "k3" -> "a"))
     // branch commit on the clone; the origin never sees it
@@ -866,7 +838,7 @@ class TopKChangelogSpec extends SparkSpec {
     // the physical-independence law: checkpoint the ORIGIN (vacuums
     // commits 0 and 1 — the very directories the clone hardlinked);
     // the clone must still read every byte (inode refcounting)
-    Changelog.checkpointOps(spark, origin, Seq("k"), 2L)
+    Changelog.checkpoint(spark, origin, Seq("k"), 2L)
     assert(snap(origin) == Map("k2" -> "b", "k3" -> "a"))
     assert(snap(dest) ==
       Map("k1" -> "a", "k2" -> "b", "k3" -> "a", "k5" -> "z"))
@@ -877,7 +849,7 @@ class TopKChangelogSpec extends SparkSpec {
     Changelog.cloneAt(spark, origin, dest2, 2L)
     assert(snap(dest2) == Map("k2" -> "b", "k3" -> "a"))
     val h = intercept[IllegalArgumentException](
-      Changelog.snapshotAtOps(spark, dest2, Seq("k"), 1L))
+      Changelog.snapshotAt(spark, dest2, Seq("k"), 1L))
     assert(h.getMessage.contains("horizon"))
   }
 
@@ -896,7 +868,7 @@ class TopKChangelogSpec extends SparkSpec {
     // {k2→b, k3→c, k4→c} — diff = re-insert k1, roll back k3,
     // tombstone k4; k2 is untouched and must NOT appear
     Changelog.restoreOps(spark, path, Seq("k"), 1L, 4L)
-    def snap(v: Long) = Changelog.snapshotAtOps(spark, path, Seq("k"), v)
+    def snap(v: Long) = Changelog.snapshotAt(spark, path, Seq("k"), v)
       .as[(String, String)].collect().toMap
     assert(snap(4L) == Map("k1" -> "a", "k2" -> "b", "k3" -> "a"))
     // history intact: the pre-restore head still reads exactly
@@ -924,7 +896,7 @@ class TopKChangelogSpec extends SparkSpec {
       ("k4", "d"), ("k5", "DEL")).toDF("k", "v")
     Changelog.mergeIntoOps(spark, path, Seq("k"), src, 1L,
       deleteWhen = Some(col("v") === "DEL"))
-    assert(Changelog.snapshotAtOps(spark, path, Seq("k"), 1L)
+    assert(Changelog.snapshotAt(spark, path, Seq("k"), 1L)
       .as[(String, String)].collect().toMap ==
       Map("k1" -> "a", "k2" -> "B", "k4" -> "d"))
     // minimal commit: exactly update + tombstone + insert = 3 rows
@@ -955,7 +927,7 @@ class TopKChangelogSpec extends SparkSpec {
             concat(lit("k"), col("id")).as("k"),
             concat(lit("v"), col("id"), lit("_"), lit(c)).as("v")),
           origin, c)
-      val expected = Changelog.snapshotAtOps(spark, origin, Seq("k"), 2L)
+      val expected = Changelog.snapshotAt(spark, origin, Seq("k"), 2L)
         .as[(String, String)].collect().toMap
       val dest = Sinks.tmpPath(s"changelog_race_clone_dst$trial")
       Sinks.deleteRecursively(dest)
@@ -968,7 +940,7 @@ class TopKChangelogSpec extends SparkSpec {
       // the checkpoint's vacuum destroys the very directories the
       // clone is linking (fold at 3 vacuums commits 0–2)
       val ckptF = Future {
-        Changelog.checkpointOps(spark, origin, Seq("k"), 3L)
+        Changelog.checkpoint(spark, origin, Seq("k"), 3L)
       }
       val cloned = Await.result(cloneF, 3.minutes)
       Await.result(ckptF, 3.minutes)
@@ -978,7 +950,7 @@ class TopKChangelogSpec extends SparkSpec {
         // a clone that RETURNED must be exact — the vacuum only
         // unlinked the origin's references, never the clone's bytes
         assert(Changelog
-          .snapshotAtOps(spark, dest, Seq("k"), Long.MaxValue)
+          .snapshotAt(spark, dest, Seq("k"), Long.MaxValue)
           .as[(String, String)].collect().toMap == expected,
           s"trial $trial: raced clone returned a WRONG state")
       } else {
@@ -1040,7 +1012,7 @@ class TopKChangelogSpec extends SparkSpec {
     // pruned == unpruned on every class (the correctness law)
     for (k <- Seq(0L, 50L, 99L, 100L, 149L, 155L, 199L))
       assert(lookup(k).as[(Long, String)].collect().toSeq ==
-        Changelog.snapshotAtOps(spark, path, Seq("k"), 3L)
+        Changelog.snapshotAt(spark, path, Seq("k"), 3L)
           .filter(col("k") === k).as[(Long, String)].collect().toSeq, s"k=$k")
     // the RANGE form (q198): [100, 149] intersects only commit 1's
     // range; the window compacts exactly the unpruned slice
@@ -1054,7 +1026,7 @@ class TopKChangelogSpec extends SparkSpec {
     assert(Changelog.rangeLookupOps(spark, path, Seq("k"), 3L,
         "k", 90L, 160L)
       .as[(Long, String)].collect().toMap ==
-      Changelog.snapshotAtOps(spark, path, Seq("k"), 3L)
+      Changelog.snapshotAt(spark, path, Seq("k"), 3L)
         .filter(col("k").between(90L, 160L))
         .as[(Long, String)].collect().toMap)
     intercept[IllegalArgumentException](
@@ -1069,7 +1041,7 @@ class TopKChangelogSpec extends SparkSpec {
     // 0–99) must be swept, or a lookup for key 160 (live, held only
     // by the folded base) would wrong-skip it. Stats below the
     // horizon go with their commits.
-    Changelog.checkpointOps(spark, path, Seq("k"), 2L)
+    Changelog.checkpoint(spark, path, Seq("k"), 2L)
     val left = Changelog.commitColumnStats(path).keySet
     assert(!left.contains(2L) && !left.contains(0L),
       s"stale markers survived the fold: $left")
@@ -1129,7 +1101,7 @@ class TopKChangelogSpec extends SparkSpec {
     val got = Changelog.rangeLookupOpsString(spark, path, Seq("k"), 3L,
         "k", "b040", "b070")
       .select("k", "v").as[(String, String)].collect().toMap
-    val want = Changelog.snapshotAtOps(spark, path, Seq("k"), 3L)
+    val want = Changelog.snapshotAt(spark, path, Seq("k"), 3L)
       .filter(col("k") >= "b040" && col("k") <= "b070")
       .select("k", "v").as[(String, String)].collect().toMap
     assert(got == want && got.size == 21 && !got.contains("b055"))
@@ -1183,10 +1155,10 @@ class TopKChangelogSpec extends SparkSpec {
     Changelog.commitUpsert(
       spark.range(50).select((col("id") * 20).as("k"),
         concat(lit("r"), col("id") * 20).as("v")), path, 2L)
-    def snap(v: Long) = Changelog.snapshotAtOps(spark, path, Seq("k"), v)
+    def snap(v: Long) = Changelog.snapshotAt(spark, path, Seq("k"), v)
       .as[(Long, String)].collect().toMap
     val pre = (0L to 3L).map(v => v -> snap(math.min(v, 2L))).toMap
-    val feedPre = Changelog.changesBetweenOps(spark, path, Seq("k"),
+    val feedPre = Changelog.changesBetween(spark, path, Seq("k"),
       0L, 2L, trackCols = Seq("v"))
       .collect().map(_.toSeq).toSet
     // guards: not-above-head and non-key cluster column are loud
@@ -1202,7 +1174,7 @@ class TopKChangelogSpec extends SparkSpec {
     // head reads PRUNE to the base: the scan carries the base floor as
     // a PARTITION filter (>= 3 alongside <= 3 — directories below the
     // base are pruned before any footer opens)
-    val plan = Changelog.snapshotAtOps(spark, path, Seq("k"), 3L)
+    val plan = Changelog.snapshotAt(spark, path, Seq("k"), 3L)
       .queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("<= 3") &&
       plan.contains(">= 3"),
@@ -1222,7 +1194,7 @@ class TopKChangelogSpec extends SparkSpec {
     // the feed SKIPS the pure rewrite: a window crossing the base
     // reports exactly the pre-OPTIMIZE changes (and the base id is
     // not scanned for candidates — zero feed rows from it)
-    assert(Changelog.changesBetweenOps(spark, path, Seq("k"),
+    assert(Changelog.changesBetween(spark, path, Seq("k"),
       0L, 3L, trackCols = Seq("v"))
       .collect().map(_.toSeq).toSet == feedPre)
     // commitWithRetry ignores the base in conflict detection: a delta
@@ -1235,7 +1207,7 @@ class TopKChangelogSpec extends SparkSpec {
     assert(id == 4L)
     assert(snap(4L)(1L) == "post")
     // a later checkpoint reclaims superseded history as usual
-    Changelog.checkpointOps(spark, path, Seq("k"), 3L)
+    Changelog.checkpoint(spark, path, Seq("k"), 3L)
     assert(snap(4L)(1L) == "post" && snap(3L) == pre(3L))
     intercept[IllegalArgumentException](snap(2L))
   }
@@ -1350,7 +1322,7 @@ class TopKChangelogSpec extends SparkSpec {
     Changelog.commitIdempotent(
       Seq(("k2", "b")).toDF("k", "v")
         .withColumn(Changelog.OpCol, lit("u")), path, 1L)
-    assert(Changelog.snapshotAtOps(spark, path, Seq("k"), 1L).count() == 2L)
+    assert(Changelog.snapshotAt(spark, path, Seq("k"), 1L).count() == 2L)
     // a different writer may NOT overwrite the held id
     val e = intercept[IllegalArgumentException](
       Changelog.commitIdempotent(
@@ -1369,7 +1341,7 @@ class TopKChangelogSpec extends SparkSpec {
     assert(ec2.getMessage.contains("claimed by writer"))
     // checkpoint sweeps claims below the horizon with their commits
     Changelog.commitUpsert(Seq(("k3", "c")).toDF("k", "v"), path, 2L)
-    Changelog.checkpointOps(spark, path, Seq("k"), 2L)
+    Changelog.checkpoint(spark, path, Seq("k"), 2L)
     assert(Changelog.claimHolder(path, 0L).isEmpty &&
       Changelog.claimHolder(path, 1L).isEmpty &&
       Changelog.claimHolder(path, 2L).isDefined)
@@ -1392,7 +1364,7 @@ class TopKChangelogSpec extends SparkSpec {
     // binding would have written them to a literal './file:...' path
     assert(new java.io.File(base, "_graft_ts_0").isFile)
     // clock addressing resolves through the URI
-    assert(Changelog.snapshotAsOfOps(spark, path, Seq("k"), 2500L)
+    assert(Changelog.snapshotAsOf(spark, path, Seq("k"), 2500L)
       .as[(Long, String)].collect().toMap == Map(2L -> "b"))
     // stats markers + pruned lookup through the URI
     for (c <- 0L to 2L) Changelog.writeCommitStats(spark, path, c, "k")
@@ -1403,17 +1375,17 @@ class TopKChangelogSpec extends SparkSpec {
     val destBase = Sinks.tmpPath("changelog_spec_hadoopfs_clone")
     Sinks.deleteRecursively(destBase)
     Changelog.cloneAt(spark, path, "file:" + destBase, 2L)
-    assert(Changelog.snapshotAtOps(spark, "file:" + destBase,
+    assert(Changelog.snapshotAt(spark, "file:" + destBase,
       Seq("k"), 2L).as[(Long, String)].collect().toMap ==
       Map(2L -> "b", 3L -> "c"))
     // checkpoint + vacuum + horizon through the URI
-    Changelog.checkpointOps(spark, path, Seq("k"), 2L)
+    Changelog.checkpoint(spark, path, Seq("k"), 2L)
     assert(Changelog.horizonOf(path) == 2L)
     assert(new java.io.File(base, "_graft_horizon").isFile)
-    assert(Changelog.snapshotAtOps(spark, path, Seq("k"), 2L)
+    assert(Changelog.snapshotAt(spark, path, Seq("k"), 2L)
       .as[(Long, String)].collect().toMap == Map(2L -> "b", 3L -> "c"))
     val eh = intercept[IllegalArgumentException](
-      Changelog.snapshotAtOps(spark, path, Seq("k"), 1L))
+      Changelog.snapshotAt(spark, path, Seq("k"), 1L))
     assert(eh.getMessage.contains("horizon"))
   }
 
@@ -1429,7 +1401,7 @@ class TopKChangelogSpec extends SparkSpec {
       .toDF("k", "x")
     Changelog.mergeIntoOps(spark, path, Seq("k"), src, 1L,
       deleteWhen = Some(col("x") > 5))
-    assert(Changelog.snapshotAtOps(spark, path, Seq("k"), 1L)
+    assert(Changelog.snapshotAt(spark, path, Seq("k"), 1L)
       .as[(String, Option[Long])].collect().toMap ==
       Map("k1" -> None, "k3" -> None))
   }
@@ -1442,7 +1414,7 @@ class TopKChangelogSpec extends SparkSpec {
       Seq(("k1", "SECRET1"), ("k2", "SECRET2")).toDF("k", "v"), path, 0L)
     Changelog.commitDelete(spark,
       Seq("k1", "k2").toDF("k"), path, 1L)
-    Changelog.checkpointOps(spark, path, Seq("k"), 1L)
+    Changelog.checkpoint(spark, path, Seq("k"), 1L)
     // the folded state is empty — and NO surviving file below or at
     // the horizon may hold the deleted rows' bytes (the zero-row
     // dynamic overwrite was a silent no-op before the landFold branch:
@@ -1458,11 +1430,11 @@ class TopKChangelogSpec extends SparkSpec {
     }
     assert(!survivingBytes.contains("SECRET"),
       "deleted rows' bytes survived the empty-fold checkpoint")
-    assert(Changelog.snapshotAtOps(spark, path, Seq("k"), 1L).isEmpty)
+    assert(Changelog.snapshotAt(spark, path, Seq("k"), 1L).isEmpty)
     // the log stays writable and readable after the empty base: a new
     // commit on top serves normally
     Changelog.commitUpsert(Seq(("k3", "c")).toDF("k", "v"), path, 2L)
-    assert(Changelog.snapshotAtOps(spark, path, Seq("k"), 2L)
+    assert(Changelog.snapshotAt(spark, path, Seq("k"), 2L)
       .as[(String, String)].collect().toSeq == Seq(("k3", "c")))
     // same law for the PLAIN log's checkpoint: fold of an empty plain
     // log state — plain logs cannot delete, so emptiness arises from
@@ -1476,9 +1448,9 @@ class TopKChangelogSpec extends SparkSpec {
         concat(lit("S3CR3T"), col("id")).as("v")), path2, 0L)
     Changelog.commitDelete(spark,
       spark.range(0, 50).select(col("id").as("k")), path2, 1L)
-    Changelog.checkpointOpsClustered(spark, path2, Seq("k"), 1L,
-      "k", 50L, 4)
-    assert(Changelog.snapshotAtOps(spark, path2, Seq("k"), 1L).isEmpty)
+    Changelog.checkpoint(spark, path2, Seq("k"), 1L,
+      Some(Changelog.RangeCluster("k", 50L, 4)))
+    assert(Changelog.snapshotAt(spark, path2, Seq("k"), 1L).isEmpty)
   }
 
   test("commitInfo: every verb records (verb, writer, footer rows); " +
@@ -1519,7 +1491,7 @@ class TopKChangelogSpec extends SparkSpec {
     // checkpoint at 2: the fold re-records commit 2 as 'checkpoint'
     // (the pre-fold 'merge' marker no longer describes the directory)
     // and sweeps the markers of the vacuumed commits 0/1
-    Changelog.checkpointOps(spark, path, Seq("k"), 2L)
+    Changelog.checkpoint(spark, path, Seq("k"), 2L)
     val after = Changelog.commitInfos(path)
     assert(after.keySet == Set(2L, 3L, 4L))
     assert(after(2L)._1 == "checkpoint")
@@ -1549,7 +1521,7 @@ class TopKChangelogSpec extends SparkSpec {
     Changelog.commitUpsert(
       spark.range(20).select(format_string("K%04d", col("id") * 20).as("k"),
         concat(lit("r"), col("id") * 20).as("v")), path, 2L)
-    val preV1 = Changelog.snapshotAtOps(spark, path, Seq("k"), 1L)
+    val preV1 = Changelog.snapshotAt(spark, path, Seq("k"), 1L)
       .as[(String, String)].collect().toMap
     Changelog.optimizeOpsString(spark, path, Seq("k"), 3L, "k",
       numFiles = 4)
@@ -1559,10 +1531,10 @@ class TopKChangelogSpec extends SparkSpec {
       else if (id % 10 == 0) None
       else Some(key(id) -> s"v$id")
     }.toMap
-    assert(Changelog.snapshotAtOps(spark, path, Seq("k"), Long.MaxValue)
+    assert(Changelog.snapshotAt(spark, path, Seq("k"), Long.MaxValue)
       .as[(String, String)].collect().toMap == model)
     // history intact: the pre-optimize version still serves exactly
-    assert(Changelog.snapshotAtOps(spark, path, Seq("k"), 1L)
+    assert(Changelog.snapshotAt(spark, path, Seq("k"), 1L)
       .as[(String, String)].collect().toMap == preV1)
     // layout: 380 live keys into 4 files of EXACTLY 95, string-ordered
     // and disjoint across files — equal depth by rank, not by value
@@ -1620,12 +1592,12 @@ class TopKChangelogSpec extends SparkSpec {
       spark.range(32).select(col("id").as("x"), col("id").as("y"),
         concat(lit("d"), col("id")).as("v")), path, 1L)
     val pre = Changelog
-      .snapshotAtOps(spark, path, Seq("x", "y"), Long.MaxValue)
+      .snapshotAt(spark, path, Seq("x", "y"), Long.MaxValue)
       .as[(Long, Long, String)].collect().toSet
     Changelog.optimizeOpsZOrder(spark, path, Seq("x", "y"), 2L,
       "x", "y", bits = 5, numFiles = 4)
     val got = Changelog
-      .snapshotAtOps(spark, path, Seq("x", "y"), Long.MaxValue)
+      .snapshotAt(spark, path, Seq("x", "y"), Long.MaxValue)
       .as[(Long, Long, String)].collect().toSet
     assert(got == pre, "OPTIMIZE must be a pure rewrite")
     // layout: z domain 2^10 into 4 files of width 256; the box
@@ -1673,14 +1645,14 @@ class TopKChangelogSpec extends SparkSpec {
             concat(lit("v"), col("id"), lit("_"), lit(c)).as("v")),
           path, c)
       val expectedBase = Changelog
-        .snapshotAtOps(spark, path, Seq("k"), 2L)
+        .snapshotAt(spark, path, Seq("k"), 2L)
         .as[(Long, String)].collect().toMap
       val delta = spark.range(1000, 1010).select(col("id").as("k"),
           concat(lit("occ"), col("id")).as("v"))
         .withColumn(Changelog.OpCol, lit("u"))
       val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      val ckptF = Future(Changelog.checkpointOps(spark, path, Seq("k"), 2L))
+      val ckptF = Future(Changelog.checkpoint(spark, path, Seq("k"), 2L))
       val occF = Future(Changelog.commitWithRetry(spark, path, Seq("k"),
         delta, readVersion = 2L, writer = "wR"))
       Await.result(ckptF, 3.minutes)
@@ -1689,13 +1661,13 @@ class TopKChangelogSpec extends SparkSpec {
       assert(occId == 3L, s"trial $trial: OCC landed at $occId")
       assert(Changelog.horizonOf(path) == 2L)
       val got = Changelog
-        .snapshotAtOps(spark, path, Seq("k"), Long.MaxValue)
+        .snapshotAt(spark, path, Seq("k"), Long.MaxValue)
         .as[(Long, String)].collect().toMap
       val want = expectedBase ++
         (1000L until 1010L).map(k => k -> s"occ$k").toMap
       assert(got == want, s"trial $trial: fold+OCC state diverged")
       val eh = intercept[IllegalArgumentException](
-        Changelog.snapshotAtOps(spark, path, Seq("k"), 1L))
+        Changelog.snapshotAt(spark, path, Seq("k"), 1L))
       assert(eh.getMessage.contains("horizon"))
     }
   }
@@ -1714,12 +1686,12 @@ class TopKChangelogSpec extends SparkSpec {
             concat(lit("v"), col("id"), lit("_"), lit(c)).as("v")),
           path, c)
       val expected = Changelog
-        .snapshotAtOps(spark, path, Seq("k"), 2L)
+        .snapshotAt(spark, path, Seq("k"), 2L)
         .as[(Long, String)].collect().toMap
       val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
       val fs = (1 to 2).map(_ => Future {
-        try { Changelog.checkpointOps(spark, path, Seq("k"), 2L); None }
+        try { Changelog.checkpoint(spark, path, Seq("k"), 2L); None }
         catch { case t: Throwable => Some(t) }
       })
       val outcomes = Await.result(Future.sequence(fs), 3.minutes)
@@ -1733,11 +1705,11 @@ class TopKChangelogSpec extends SparkSpec {
           t.getMessage.contains("maintenance mutex"),
           s"trial $trial: loser failed for the wrong reason: $t")
         lostLoudly += 1
-        Changelog.checkpointOps(spark, path, Seq("k"), 2L)
+        Changelog.checkpoint(spark, path, Seq("k"), 2L)
       }
       assert(Changelog.horizonOf(path) == 2L)
       val got = Changelog
-        .snapshotAtOps(spark, path, Seq("k"), Long.MaxValue)
+        .snapshotAt(spark, path, Seq("k"), Long.MaxValue)
         .as[(Long, String)].collect().toMap
       assert(got == expected, s"trial $trial: concurrent folds diverged")
     }
@@ -1759,7 +1731,7 @@ class TopKChangelogSpec extends SparkSpec {
             concat(lit("v"), col("id"), lit("_"), lit(c)).as("v")),
           path, c)
       val expectedBase = Changelog
-        .snapshotAtOps(spark, path, Seq("k"), 2L)
+        .snapshotAt(spark, path, Seq("k"), 2L)
         .as[(Long, String)].collect().toMap
       // NEW keys only: a blind append serializes against the rewrite
       // in either order (an intersecting delta would be refused loudly
@@ -1790,7 +1762,7 @@ class TopKChangelogSpec extends SparkSpec {
         assert(occId == 4L,
           s"trial $trial: optimize held id 3, writer must land at 4")
       val got = Changelog
-        .snapshotAtOps(spark, path, Seq("k"), Long.MaxValue)
+        .snapshotAt(spark, path, Seq("k"), Long.MaxValue)
         .as[(Long, String)].collect().toMap
       val want = expectedBase ++
         (2000L until 2008L).map(k => k -> s"w$k").toMap
