@@ -33,16 +33,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Tuning.localIo(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // see Tables.events
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus(4))
     Quiet.shutdownNoise()
 
     def consume(fn: (SparkSession, String) => DataFrame, dir: String): Unit =
@@ -52,8 +43,12 @@ object Bench {
     // paths at ~1% of the data cost); fall back to the bench dir itself.
     val warmDir = Seq("/root/testdata/sf0.001", sfDir)
       .find(d => new java.io.File(d).isDirectory).getOrElse(sfDir)
-    SparkEntry.queries.foreach { case (_, fn) =>
-      try consume(fn, warmDir) catch { case _: Throwable => () }
+    // A failed warmup leaves that query's first-touch compile inside
+    // its timed window: say so on stderr.
+    SparkEntry.queries.foreach { case (name, fn) =>
+      try consume(fn, warmDir) catch { case e: Throwable =>
+        System.err.println(s"[bench] warmup $name FAILED: ${e.getMessage}")
+      }
     }
 
     // Stage the sf-proportional FIXTURES for the bench dir outside the
@@ -122,7 +117,9 @@ object Bench {
     try {
       val w = new java.io.PrintWriter("bench_summary.json", "UTF-8")
       try { w.println(fullLine); w.println(summaryLine) } finally w.close()
-    } catch { case _: Throwable => () }
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] sidecar FAILED: ${e.getMessage}")
+    }
     Quiet.stopNoise()
     spark.stop()
     // Re-print AFTER stop(): whatever shutdown noise the streaming state

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: print the formatted physical plan of one named query
   * (or `entry`) so shuffle/pushdown/codegen shape can be audited.
   * Usage: runMain graft.Explain <queryName> [sfDir]
@@ -10,28 +8,9 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("entry")
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.01")
-    // honor the bench's core-count env so plan/job attribution can run
-    // at the same parallelism the bench times (default stays 4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = Tuning.localIo(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-    // ad-hoc conf overrides for perf experiments, e.g.
-    // SPARK_GRAFT_CONF="spark.foo=1;spark.bar=2" (never used by Bench)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(
-      _.split(";").filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k.trim, v.trim)
-      })
-    val spark = builder
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // opt-in verbosity for job-level attribution during plan audits
-    spark.sparkContext.setLogLevel(
-      sys.env.getOrElse("SPARK_GRAFT_LOG", "ERROR"))
+    // honor the bench's core-count env so plans can be audited at the
+    // same parallelism the bench times (default stays 4)
+    val spark = Session.local(Session.cpus(4))
     if (name == "all") {
       // one-line audit per query: exchanges, generators, broadcast vs
       // sort-merge joins, from_json count — and a hard flag on any

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-evidence harness (dev aid, not driver contract): run the
@@ -15,15 +14,7 @@ import org.apache.spark.sql.functions._
 object Scale {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(55000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Tuning.localIo(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus(32))
 
     import graft.ingest.RawZoneGen
     import graft.sources.Sinks
@@ -34,6 +25,11 @@ object Scale {
       val r = f
       println(f"[scale] $name%-24s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
       r
+    }
+    // a broken row-count law fails the run, never just prints
+    def law(ok: Boolean, what: String): Unit = {
+      require(ok, s"[scale] $what MISMATCH")
+      println(s"[scale] $what OK")
     }
 
     val rawPath = Sinks.tmpPath(s"scale_raw_$n")
@@ -53,8 +49,7 @@ object Scale {
     val fact = spark.read.parquet(factPath)
     val rows = timed("count fact")(fact.count())
     val expect = n.toLong * 1440L
-    println(s"[scale] fact rows $rows expect $expect " +
-      (if (rows == expect) "OK" else "MISMATCH"))
+    law(rows == expect, s"fact rows $rows expect $expect")
     // the reference's own verify query on the produced table — against
     // the bucket-partitioned layout this partition-prunes to one dir
     timed("latestFacts point query") {
@@ -85,8 +80,7 @@ object Scale {
         deltaStocks = Some(deltaKeys))
     }
     val after = timed("count after upsert")(spark.read.parquet(factPath).count())
-    println(s"[scale] rows after delta $after expect $expect " +
-      (if (after == expect) "OK" else "MISMATCH"))
+    law(after == expect, s"rows after delta $after expect $expect")
 
     // Join-skew evidence: one planted mega-key owning HALF the fact
     // table versus a uniform dimension. The plain shuffle join sends
@@ -123,8 +117,7 @@ object Scale {
         graft.ext.Skew.saltedJoin(skewed, dim, "k", "value", 32, 1000000L)
           .groupBy("grp").count().collect().map(_.getLong(1)).sum
       }
-      println(s"[scale] skew join rows plain=$plainN salted=$saltedN " +
-        (if (plainN == saltedN) "OK" else "MISMATCH"))
+      law(plainN == saltedN, s"skew join rows plain=$plainN salted=$saltedN")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
 
     // Snapshot-diff evidence at table scale: reconcile the full fact
@@ -151,8 +144,7 @@ object Scale {
       graft.ext.Diff.snapshotDiff(factNow, newSnap,
         Financials.Pk, Seq("value")).count()
     }
-    println(s"[scale] diff rows $diffRows expect $expectDiff " +
-      (if (diffRows == expectDiff) "OK" else "MISMATCH"))
+    law(diffRows == expectDiff, s"diff rows $diffRows expect $expectDiff")
     spark.stop()
   }
 }

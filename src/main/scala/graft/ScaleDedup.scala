@@ -83,23 +83,16 @@ object ScaleDedup {
 
   def main(args: Array[String]): Unit = {
     val sizes = if (args.nonEmpty) args.toSeq.map(_.toLong) else Seq(1000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Session.cpus(32)
+    val spark = Session.local(cpus)
     // Shuffle partitions sized to the LARGEST corpus, not the core
     // count: the signature build keeps per-doc aggregation state
     // (16 mins + a fingerprint set), and ~150k docs/partition keeps a
     // partition's hash-agg state in memory. At 32 partitions the 10M
     // run spills (LSH stage 83 s); sized, it stays ~linear — exactly
     // the partition-sizing rule the 100-TB notes prescribe.
-    val shufflePartitions =
-      math.max(cpus.toInt, (sizes.max / 150000L).toInt)
-    val spark = Tuning.localIo(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val shufflePartitions = math.max(cpus, (sizes.max / 150000L).toInt)
+    spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toLong)
     println(s"[scale-dedup] shuffle.partitions = $shufflePartitions")
     import graft.ext.{Dedup, Graph, Similarity}
     import graft.sources.Sinks
@@ -110,6 +103,11 @@ object ScaleDedup {
       val secs = (System.nanoTime() - t0) / 1e9
       println(f"[scale-dedup] $name%-28s $secs%8.2f s")
       (r, secs)
+    }
+    // a broken count law fails the run, never just prints
+    def law(ok: Boolean, what: String): Unit = {
+      require(ok, s"[scale-dedup] $what MISMATCH")
+      println(s"[scale-dedup] $what OK")
     }
 
     for (n <- sizes) {
@@ -132,9 +130,9 @@ object ScaleDedup {
       val nPairs = pairs.count()
       val expectExact = (n + 98) / 100  // ids 1, 101, 201, …
       val expectNear = (n + 48) / 100   // ids 51, 151, …
-      val pairsOk = nPairs >= expectExact && nPairs <= expectExact + expectNear
-      println(s"[scale-dedup] pairs=$nPairs expect≈${expectExact + expectNear} " +
-        s"(exact=$expectExact guaranteed) " + (if (pairsOk) "OK" else "MISMATCH"))
+      law(nPairs >= expectExact && nPairs <= expectExact + expectNear,
+        s"pairs=$nPairs expect≈${expectExact + expectNear} " +
+          s"(exact=$expectExact guaranteed)")
 
       // q46 law: connected components over the pair graph + full universe.
       val (cc, tCc) = timed("connected components (q46 law)") {
@@ -149,9 +147,7 @@ object ScaleDedup {
         Dedup.survivors(cc, scores, "doc_id", "score").count()
       }
       // disjoint 2-cliques: every detected pair removes exactly one doc
-      val survOk = nSurv == n - nPairs
-      println(s"[scale-dedup] survivors=$nSurv expect=${n - nPairs} " +
-        (if (survOk) "OK" else "MISMATCH"))
+      law(nSurv == n - nPairs, s"survivors=$nSurv expect=${n - nPairs}")
       println(f"[scale-dedup] chain total ${tPairs + tCc + tSurv}%.2f s " +
         f"(${(tPairs + tCc + tSurv) * 1e9 / n}%.0f ns/doc)")
 
@@ -163,12 +159,11 @@ object ScaleDedup {
       }
       val vecs = spark.read.parquet(vecsPath)
       val bits = Similarity.bitsFor(n)
-      val (nTopk, tIvf) = timed(s"ivf topk (q45 law, bits=$bits)") {
+      val (nTopk, _) = timed(s"ivf topk (q45 law, bits=$bits)") {
         Similarity.ivfTopK(vecs, "vec_id", "embedding",
           vecs.filter(col("vec_id") < 100), 10, bits, EmbDims, 4).count()
       }
-      println(s"[scale-dedup] ivf rows=$nTopk expect=1000 " +
-        (if (nTopk == 1000L) "OK" else "MISMATCH") + f" ($tIvf%.2f s)")
+      law(nTopk == 1000L, s"ivf rows=$nTopk expect=1000")
     }
     spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ext.Graph
@@ -49,15 +49,7 @@ object ScaleGraph {
     val cliqueN = args.drop(1).headOption.map(_.toLong).getOrElse(1000000L)
     val dim = args.drop(2).headOption.map(_.toInt).getOrElse(20)
     val B = 64L // chain block size (> the 25-round fast-path bound)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Tuning.localIo(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus(32))
 
     def timed[A](name: String)(f: => A): A = {
       val t0 = System.nanoTime()

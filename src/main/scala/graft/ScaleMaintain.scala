@@ -75,16 +75,7 @@ object ScaleMaintain {
     val stride = args.drop(2).headOption.map(_.toInt).getOrElse(20)
     require(nCommits % stride == 0,
       "nCommits must be a multiple of stride so the final-value law is closed")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = Tuning.localIo(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .appName("graft-scale-maintain")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus(32))
     val deltaRows = nKeys / stride
 
     // ---- law 1: per-commit cost flat as the log grows ----

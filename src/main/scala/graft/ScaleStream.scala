@@ -154,17 +154,7 @@ object ScaleStream {
   def main(args: Array[String]): Unit = {
     val nTumbling = args.headOption.map(_.toLong).getOrElse(10000000L)
     val nUsers = args.drop(1).headOption.map(_.toLong).getOrElse(50000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = Tuning.localIo(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .appName("graft-scale-stream")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus(32))
 
     // ---- tumbling counts (q37 shape): dedup + windowed agg ----
     val tumbleDir = Sinks.tmpPath(s"scale_stream_tumble_$nTumbling")

@@ -101,15 +101,7 @@ object ScaleText {
       if (args.nonEmpty) args.toSeq.map(_.toLong) else Seq(1000000L, 5000000L)
     sizes.foreach(n => require(n % V == 0,
       s"corpus size $n must be a multiple of V=$V for the uniform-frequency law"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Tuning.localIo(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus(32))
 
     def timed[T](name: String)(f: => T): T = {
       val t0 = System.nanoTime()

@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session-level I/O tuning shared by every entry point (Bench, Verify,
-  * Explain, Probe, the Scale harnesses and the test base). Two measured
+/** Session-level I/O tuning shared by every entry point: [[Session.local]]
+  * (Bench, Verify, Explain, StageSf, the Scale harnesses and the test
+  * base) and the perfbench session. Two measured
   * fixes from the round-19 optimization pass (guide §1/§7.3 evidence in
   * OPTIMIZATION_r19.md):
   *

@@ -141,7 +141,7 @@ object Sinks {
   def writeRawZone(df: DataFrame, path: String): Unit =
     df.withColumn("load_date", to_date(col("loaded_at")))
       // zstd: ~30% faster to write than snappy on large JSON payload
-      // strings (measured via Probe) AND a better ratio — the right
+      // strings (measured by stage timing) AND a better ratio — the right
       // trade for a cold raw zone at 100 TB
       .write.mode("overwrite").option("compression", "zstd")
       .partitionBy("load_date").parquet(path)

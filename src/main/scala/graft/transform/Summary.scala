@@ -35,7 +35,7 @@ object Summary {
     // NOTE the executed-plan TEXT shows one from_json copy per consumed
     // field (CollapseProject inlines `p` into every extraction); codegen
     // subexpression elimination evaluates the identical parse ONCE per
-    // row — measured via Probe: 5,500 × ~40 KB docs profile in <1 s,
+    // row — measured by stage timing: 5,500 × ~40 KB docs profile in <1 s,
     // impossible under 50 real parses.
     val p = latest.withColumn("p",
       Financials.parsePayload(col("payload"), graft.model.Schemas.profilePayload))

@@ -3,17 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (one JVM, Test/fork=true).
-  * Same required engine config as Bench/Verify: UTC session TZ and the
-  * nanos-as-long parquet read (Tables.events).
+/** Shared local SparkSession for all suites (one JVM, Test/fork=true),
+  * from the same factory as Bench/Verify. Pinned at 4 cores and 4
+  * shuffle partitions: specs never follow SPARK_GRAFT_CPUS.
   */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = Tuning.localIo(SparkSession.builder())
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.local(4)
 }

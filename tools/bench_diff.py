@@ -3,6 +3,8 @@
 the full {"metric":"total",...,"queries":{...}} record). Usage:
   python3 tools/bench_diff.py BEFORE.json AFTER.json [top_n]
 Prints per-query deltas sorted by absolute seconds saved, plus totals.
+Bench records a failed query as a negative time: such rows print as
+FAILED, sort below every timed row and never count as a delta.
 """
 import json, sys
 
@@ -10,6 +12,14 @@ def load(p):
     with open(p) as f:
         rec = json.loads(f.readline())
     return rec["queries"], rec["value"]
+
+def nfailed(queries):
+    return sum(1 for v in queries.values() if v < 0)
+
+def cell(v, missing):
+    if v is None:
+        return f"{missing:>8s}"
+    return "  FAILED" if v < 0 else f"{v:8.2f}"
 
 def main():
     before, tb = load(sys.argv[1])
@@ -19,18 +29,16 @@ def main():
     rows = []
     for n in names:
         b, a = before.get(n), after.get(n)
-        if b is None or a is None:
-            rows.append((0.0, n, b, a))
-        else:
-            rows.append((b - a, n, b, a))
-    rows.sort(key=lambda r: -abs(r[0]))
-    print(f"total: {tb:.1f} -> {ta:.1f}  ({tb-ta:+.1f} s)")
+        timed = b is not None and a is not None and b >= 0 and a >= 0
+        rows.append((b - a if timed else None, n, b, a))
+    rows.sort(key=lambda r: (r[0] is None, -abs(r[0] or 0.0)))
+    print(f"total: {tb:.1f} -> {ta:.1f}  ({tb-ta:+.1f} s)  "
+          f"failed: {nfailed(before)} -> {nfailed(after)}")
     print(f"{'query':34s} {'before':>8s} {'after':>8s} {'delta':>8s} {'ratio':>6s}")
     for d, n, b, a in rows[:top]:
-        bs = f"{b:8.2f}" if b is not None else "     new"
-        as_ = f"{a:8.2f}" if a is not None else "    gone"
-        rat = f"{a/b:6.2f}" if (b and a and b > 0) else "      "
-        print(f"{n:34s} {bs} {as_} {d:+8.2f} {rat}")
+        ds = f"{d:+8.2f}" if d is not None else " " * 8
+        rat = f"{a/b:6.2f}" if (d is not None and b > 0) else "      "
+        print(f"{n:34s} {cell(b, 'new')} {cell(a, 'gone')} {ds} {rat}")
 
 if __name__ == "__main__":
     main()
