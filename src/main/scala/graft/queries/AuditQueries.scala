@@ -317,7 +317,7 @@ object AuditQueries {
     // keys vanish, resurrected keys resolve by commit order, live
     // rows carry their latest upsert — the lakehouse DELETE semantic
     // the append-only LWW changelog (q129) cannot express. Same
-    // kernel cost as q129: partition-pruned scan + one max_by
+    // kernel cost as q129: partition-pruned scan + one top-1 window
     // compaction; the liveness filter is one predicate AFTER the
     // per-key reduction.
     "q181_ops_snapshot" -> ((s, d) =>

@@ -202,7 +202,8 @@ object RelationalQueries {
 
     // S6/J3 — keyed last-write-wins dedup (the upsert kernel) on events:
     // latest event per (user_id, event_type). Aggregate-based (max_by),
-    // not window — map-side combine, no per-key sort (SURVEY.md §2.5).
+    // not window — a key has many events, so the map-side combine pays
+    // for its sort (SURVEY.md §2.5).
     "q16_upsert_dedup" -> ((s, d) => {
       Upsert.latestByKey(
         Tables.events(s, d)

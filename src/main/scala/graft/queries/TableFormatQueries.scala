@@ -302,7 +302,7 @@ object TableFormatQueries {
     // the three-commit ops log, resolving through the engine's own
     // snapshot plan via the pre-CBO rule (the merge-on-read discipline:
     // the table IS its plan — EXPLAIN shows the _commit partition
-    // filters and the max_by compaction, not an opaque scan). Must
+    // filters and the top-1 window compaction, not an opaque scan). Must
     // equal the library read exactly — q181's oracle verbatim.
     "q211_log_table_snapshot" -> ((s, d) =>
       s.read.format(fmt)

@@ -1,8 +1,8 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.transform.Upsert
 
 /** Versioned keyed changelog with time travel — "read the table AS OF
   * commit v". The table is a commit-partitioned parquet changelog: each
@@ -29,10 +29,11 @@ import graft.transform.Upsert
   *    window beyond the atomic directory add;
   *  - `snapshotAt` PARTITION-PRUNES to commits ≤ v (the `_commit <=
   *    v` filter is a partition filter — later commits are never read),
-  *    then compacts via [[Upsert.latestByKey]]'s `max_by` aggregate:
-  *    one shuffle on the key with map-side partial combine, no sort,
-  *    AQE-splittable — the same kernel the streaming changelog sinks
-  *    compact with;
+  *    then compacts with a top-1 window per key: one hash shuffle on
+  *    the key, then one sort per reduce task ([[compact]]). The
+  *    streaming sinks' `max_by` aggregate would sort every row on both
+  *    sides of the shuffle here, for a partial combine that a log of
+  *    about one version per key cannot use;
   *  - history growth is bounded operationally by `checkpoint`: fold
   *    commits ≤ v into a base commit written as v's replacement and
   *    drop the olds — same math as the streaming compaction,
@@ -1471,13 +1472,33 @@ object Changelog {
     else upTo.filter(col(CommitCol) >= floor)
   }
 
-  /** Keyed last-write-wins in the shape's version order (`max_by`: one
-    * shuffle on the key with map-side partial combine). `_commit` and
-    * `_op` survive for the caller.
+  /** [[compact]]'s per-key rank; never in its output. */
+  private val RankCol = "_graft_rank"
+
+  /** Keyed last-write-wins in the shape's version order: the keys, then
+    * the other columns in log order, `_commit` and `_op` kept for the
+    * caller. Plans as Exchange → Sort → WindowGroupLimit → Window →
+    * Filter: one hash shuffle on the keys, then one sort per reduce
+    * task, each key keeping its newest row. The explicit repartition
+    * keeps that sort after the shuffle (without it the partial group
+    * limit sorts the scan map-side); it is elided when the input is
+    * already hash-partitioned on the keys (the feed's sort-merge
+    * semi-join). A partial combine before the shuffle (`max_by`, as in
+    * [[graft.transform.Upsert.latestByKey]]) pays off only when many
+    * versions of a key share one input partition; a log holds about
+    * one version per key, and on Spark 4.1 that aggregate sorts every
+    * row on both sides of the exchange. Two rows of one key in one
+    * commit tie, and the tie picks an arbitrary row, as `max_by` did;
+    * on an ops log [[opsVersion]] breaks a tombstone/upsert tie.
     */
-  private def compact(rows: DataFrame, keys: Seq[String]): DataFrame =
-    Upsert.latestByKey(rows, keys,
-      if (isOps(rows)) opsVersion else col(CommitCol))
+  private def compact(rows: DataFrame, keys: Seq[String]): DataFrame = {
+    val version = if (isOps(rows)) opsVersion else col(CommitCol)
+    val newest = Window.partitionBy(keys.map(col): _*).orderBy(version.desc)
+    rows.repartition(keys.map(col): _*)
+      .withColumn(RankCol, row_number().over(newest))
+      .filter(col(RankCol) === 1)
+      .select((keys ++ rows.columns.filterNot(keys.contains)).map(col): _*)
+  }
 
   /** A compaction's LIVE rows, data columns only. */
   private def live(state: DataFrame): DataFrame =
@@ -1619,7 +1640,7 @@ object Changelog {
   // filtered OUT, and the change feed gains the `delete` label.
   // Tombstones are ordinary rows — a delete commit is still O(delta)
   // appended metadata+keys, and snapshots still partition-prune and
-  // compact with the same max_by kernel. Checkpointing PHYSICALLY
+  // compact with the same top-1 window. Checkpointing PHYSICALLY
   // ERASES tombstoned history: the fold keeps only live rows, so after
   // `checkpoint(v)` no file below the horizon holds the deleted rows'
   // data — the right-to-be-forgotten guarantee a logical tombstone
@@ -1632,8 +1653,8 @@ object Changelog {
     * commit carrying both an upsert and a tombstone for one key is a
     * realistic interleave (a streaming CDC micro-batch mixing an
     * update and a later delete of the same key, landed under one
-    * batchId) and `max_by` alone would tie arbitrarily — whether the
-    * key survived would be nondeterministic. Precedence is DELETE
+    * batchId) and the commit id alone would tie arbitrarily — whether
+    * the key survived would be nondeterministic. Precedence is DELETE
     * WINS: deterministic, and the conservative reading of "the batch's
     * last word on this key included a delete". Callers who need
     * intra-commit ordering finer than that must split the commit.

@@ -51,7 +51,8 @@ import graft.streaming.CdcSource
   * Delta resolves through a rule rather than a row-serving scan). Three
   * consequences:
   *  - EXPLAIN shows the real physical plan — the `_commit <= v`
-  *    partition filters, the base-floor pruning, the max_by compaction;
+  *    partition filters, the base-floor pruning, the top-1 window
+  *    compaction;
   *  - a filter the user stacks on top participates in Catalyst's
   *    ordinary pushdown into the underlying parquet scans;
   *  - an eq/range filter on a KEY column is recognized by the rule and

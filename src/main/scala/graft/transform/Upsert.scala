@@ -8,12 +8,15 @@ import org.apache.spark.sql.functions._
   * Financilas.py:167–184, Summary.py:223–249).
   *
   * Scale notes: implemented with `max_by(struct(*), version)` under
-  * groupBy rather than a `row_number` window. Both need one shuffle on
-  * the key, but the aggregate gets map-side partial combining (each
-  * input partition reduces to ≤1 row per key before the exchange), while
-  * the window must shuffle and SORT every row. At 100 TB with a hot key
-  * the window sort spills; the aggregate doesn't. AQE skew-split also
-  * applies to the aggregate exchange.
+  * groupBy rather than a `row_number` window. Spark 4.1 cannot
+  * hash-aggregate the struct buffer, so this plans as Sort → partial
+  * SortAggregate → Exchange → Sort → final SortAggregate: every row is
+  * sorted on both sides of the one shuffle. The partial combine pays
+  * that map-side sort back only when many versions of a key share one
+  * input partition (a raw feed's re-deliveries). A source of about one
+  * version per key (a changelog read) is cheaper as a key shuffle plus
+  * a top-1 window, which sorts once, after the shuffle — see
+  * `Changelog.compact`.
   */
 object Upsert {
 

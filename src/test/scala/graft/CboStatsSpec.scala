@@ -19,15 +19,6 @@ class CboStatsSpec extends SparkSpec {
   private def planOf(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
 
-  private def withConfs[T](kvs: (String, String)*)(f: => T): T = {
-    val old = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   test("column stats flip a filtered dim join from SMJ to hint-free BHJ") {
     // dim: 2000 rows, 50 groups, with an incompressible padding column
     // so the on-disk size comfortably exceeds any sane threshold

@@ -9,4 +9,16 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = Session.local(4)
+
+  /** Run `f` with the session confs `kvs` set, then restore them: the
+    * session is shared by every suite.
+    */
+  def withConfs[T](kvs: (String, String)*)(f: => T): T = {
+    val old = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
 }
