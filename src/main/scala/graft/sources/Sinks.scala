@@ -2,8 +2,15 @@ package graft.sources
 
 import java.io.File
 
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.ParquetReadOptions
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Library write paths (reference S3/S5) plus the physical-layout policy
   * for the two big tables (SURVEY.md §4.3):
@@ -182,6 +189,50 @@ object Sinks {
     else None
   }
 
+  /** Read a fact layout — the bucket-partitioned form or the flat
+    * [[writeFact]] form — with its schema taken from ONE part file's
+    * footer on the driver. `spark.read.parquet(path)` with no schema
+    * runs Spark's schema inference as a Spark job of its own, even
+    * though it reads a single footer (mergeSchema=false): on a point
+    * lookup that is one job of two, all metadata. The footer carries
+    * the schema inference returns (Spark's own row metadata), so the
+    * read is the same without that job. The `bucket` partition column
+    * is still discovered from the directory names. A layout with no
+    * part file (or a file without Spark's row metadata) takes the
+    * inferring read, which fails loudly on a missing or empty layout.
+    */
+  def readLayout(spark: SparkSession, path: String): DataFrame =
+    firstPartFile(path).flatMap(footerSchema) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None         => spark.read.parquet(path)
+    }
+
+  /** The first data file of a layout in name order, searched through
+    * `col=value` directories: two listings on the bucketed layout, one
+    * on the flat one. Hidden (`_`, `.`) names are commit markers,
+    * sidecars and checksums, never data — the rule Spark's listing uses.
+    */
+  private def firstPartFile(dir: String): Option[Path] = {
+    val (dirs, files) = LogFs.list(dir)
+      .filterNot(s => s.getPath.getName.startsWith("_") ||
+        s.getPath.getName.startsWith("."))
+      .sortBy(_.getPath.getName).partition(_.isDirectory)
+    files.headOption.map(_.getPath).orElse(dirs.iterator
+      .filter(_.getPath.getName.contains("="))
+      .flatMap(d => firstPartFile(d.getPath.toString)).nextOption())
+  }
+
+  private def footerSchema(file: Path): Option[StructType] = {
+    val rd = ParquetFileReader.open(
+      HadoopInputFile.fromPath(file, LogFs.hadoopConf),
+      ParquetReadOptions.builder()
+        .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
+    try Option(rd.getFooter.getFileMetaData.getKeyValueMetaData
+        .get(ParquetReadSupport.SPARK_METADATA_KEY))
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+    finally rd.close()
+  }
+
   /** The stock-hash bucket of the MAINTAINED fact layout. `hash` is the
     * same Murmur3(seed 42) as `repartition(n, col)`'s HashPartitioning,
     * so `pmod(hash(stock), n)` equals the shuffle partition id — after a
@@ -264,7 +315,7 @@ object Sinks {
     *                     second full copy of the same rows (guide §1.2:
     *                     don't compute things you throw away).
     */
-  def upsertFactDelta(spark: org.apache.spark.sql.SparkSession,
+  def upsertFactDelta(spark: SparkSession,
                       path: String, incoming: DataFrame,
                       buckets: Int = 32,
                       deltaStocks: Option[DataFrame] = None,
@@ -334,7 +385,7 @@ object Sinks {
             "or None to derive the universe from the delta itself.")
     }
     val guarded = delta.filter(col("bucket").isin(touchedSeq: _*))
-    val existing = spark.read.parquet(path)
+    val existing = readLayout(spark, path)
       .filter(col("bucket").isin(touchedSeq: _*))
     // ONE exchange for the whole merge+write (the q38 fusion, applied
     // to the touched subset): the tagged union repartitions on `stock`,
@@ -380,7 +431,7 @@ object Sinks {
     *    or a durable staged copy, and the overwrite job reads only
     *    the staging dir — no read-your-own-overwrite race at all.
     */
-  def deleteFactKeys(spark: org.apache.spark.sql.SparkSession,
+  def deleteFactKeys(spark: SparkSession,
                      path: String, stocks: DataFrame,
                      buckets: Int = 32): Unit = {
     require(stocks.columns.length == 1,
@@ -401,7 +452,7 @@ object Sinks {
     if (touched.nonEmpty) {
       val staging = s"${path.stripSuffix("/")}__delete_staging"
       deleteRecursively(staging)
-      spark.read.parquet(path)
+      readLayout(spark, path)
         .filter(col("bucket").isin(touched: _*))
         .join(broadcast(keys), Seq("stock"), "left_anti")
         .write.mode("overwrite").parquet(staging)

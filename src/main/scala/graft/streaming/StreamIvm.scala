@@ -120,7 +120,7 @@ object StreamIvm {
           else {
             val touched = dayFacts.select(col("bucket")).distinct()
               .collect().map(_.getInt(0)).toIndexedSeq
-            Some(s.read.parquet(factPath)
+            Some(Sinks.readLayout(s, factPath)
               .filter(col("bucket").isin(touched: _*))
               .join(broadcast(dayFacts.select(Financials.Pk.map(col): _*)),
                 Financials.Pk, "left_semi"))

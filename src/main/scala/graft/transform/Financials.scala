@@ -17,8 +17,10 @@ import graft.model.Schemas
   *       → explode(dates) → explode(metrics)
   *       → derived time columns → value cast + NaN guard
   *       → PK dedup (agg, pane-precedence order)
-  * Exactly two exchanges (the two keyed aggregates); all scalar work
-  * stays inside whole-stage codegen.
+  * ONE exchange: the latest-per-symbol aggregate hash-partitions on
+  * `symbol`, which becomes `stock`, and the PK dedup reuses that
+  * partitioning (stock ⊆ PK). All scalar work stays inside whole-stage
+  * codegen.
   */
 object Financials {
 
@@ -149,13 +151,16 @@ object Financials {
       .select("stock", "yf_name", "statement_type", "metric", "stockcurrency",
         "financialcurrency", "calendar_year", "period", "value", "date")
 
-  /** Fused normalize → maintained-layout write, ONE full-table exchange
-    * total: repartition on `stock` BEFORE the PK dedup — since stock ⊆
-    * PK, HashPartitioning(stock) satisfies the dedup aggregation's
+  /** Fused normalize → maintained-layout write, TWO exchanges: the
+    * latest-per-symbol aggregate's (raw payloads, at the session's
+    * shuffle width), then a repartition into `buckets` on `stock` BEFORE
+    * the PK dedup (the unpivoted leaf rows). Since stock ⊆ PK,
+    * HashPartitioning(stock) satisfies the dedup aggregation's
     * ClusteredDistribution(PK), so the dedup runs co-located and the
-    * layout write needs no second repartition (`normalize` + a separate
-    * layout write computes the identical table with TWO full-table
-    * exchanges). The destination layout is the bucket-PARTITIONED one
+    * layout write needs no third exchange. (`normalize` +
+    * Sinks.writeFactPartitioned also pays two: it dedups at the shuffle
+    * width, then re-shuffles the deduped rows into the buckets.) The
+    * destination layout is the bucket-PARTITIONED one
     * (Sinks.writeFactPartitioned): `bucket = pmod(hash(stock), n)` is
     * exactly the repartition's shuffle partition id, so each write task
     * holds one bucket and partitionBy adds no exchange and no sort (the
@@ -219,13 +224,16 @@ object Financials {
     * Sinks.writeFactPartitioned / normalizeInto / upsertFactDelta), so
     * the pruning predicate can never disagree with the directory law. A
     * layout without the sidecar (e.g. the flat writeFact form) falls
-    * back to an unpruned — correct, just wider — scan.
+    * back to an unpruned — correct, just wider — scan. The layout is
+    * read through Sinks.readLayout (schema from a part-file footer), so
+    * a lookup runs ONE Spark job: the scan, with no inference job.
     */
-  def latestFactsAt(spark: org.apache.spark.sql.SparkSession, path: String,
-                    symbol: String, k: Int = 10): DataFrame =
+  def latestFactsAt(spark: SparkSession, path: String,
+                    symbol: String, k: Int = 10): DataFrame = {
+    val fact = graft.sources.Sinks.readLayout(spark, path)
     graft.sources.Sinks.readLayoutBuckets(path) match {
-      case Some(n) => latestFacts(spark.read.parquet(path), symbol, k, n)
-      case None    =>
-        latestFacts(spark.read.parquet(path).drop("bucket"), symbol, k)
+      case Some(n) => latestFacts(fact, symbol, k, n)
+      case None    => latestFacts(fact.drop("bucket"), symbol, k)
     }
+  }
 }

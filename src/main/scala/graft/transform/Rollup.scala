@@ -65,7 +65,7 @@ object Rollup {
         require(recorded == buckets,
           s"mergeDelta called with buckets=$buckets but the layout at " +
             s"$path was written with buckets=$recorded")
-        Some(spark.read.parquet(path)
+        Some(Sinks.readLayout(spark, path)
           .filter(col("bucket").isin(touched: _*)))
       case None => None
     }

@@ -32,13 +32,15 @@ object Summary {
 
     // reduced parse schema: only the profile fields — the statement
     // panes are never materialized by this pipeline (Schemas.profilePayload).
-    // NOTE the executed-plan TEXT shows one from_json copy per consumed
-    // field (CollapseProject inlines `p` into every extraction); codegen
-    // subexpression elimination evaluates the identical parse ONCE per
-    // row — measured by stage timing: 5,500 × ~40 KB docs profile in <1 s,
-    // impossible under 50 real parses.
-    val p = latest.withColumn("p",
-      Financials.parsePayload(col("payload"), graft.model.Schemas.profilePayload))
+    // The parse sits behind a one-element generator: a plain projection
+    // of `p` is inlined by CollapseProject into every field extraction
+    // below (50 from_json copies in the optimized plan, each one more
+    // expression to optimize and codegen), while a Generate is a barrier
+    // it cannot collapse through, so the plan keeps the two copies of
+    // parsePayload (direct + retry) and each row is parsed once.
+    val p = latest.select(col("symbol"), inline(array(struct(
+      Financials.parsePayload(col("payload"), graft.model.Schemas.profilePayload)
+        .as("p")))))
     // Summary.py:151 `info = obj.get('info') or obj` — all-or-nothing:
     // when the payload has no `info` key, EVERY profile field reads from
     // the root object; when info exists, fields come from info only (a

@@ -224,6 +224,77 @@ class LayoutSpec extends SparkSpec {
     assert(q.collect().toSeq === unpruned.collect().toSeq)
   }
 
+  test("latestFactsAt runs one Spark job: the schema comes from a footer, not an inference job") {
+    val path = Sinks.tmpPath("test_fact_one_job")
+    Sinks.deleteRecursively(path)
+    Financials.normalizeInto(RawZoneGen.payloads(spark, 6), path, buckets = 8)
+    Financials.latestFactsAt(spark, path, "S00002").collect() // warm caches
+    val (jobs, _) = observe(Financials.latestFactsAt(spark, path, "S00003").collect(): Unit)
+    assert(jobs === 1)
+  }
+
+  test("readLayout: same lookups and schema as the inferring read on every maintained layout") {
+    val buckets = 8
+    val stocks = (0 until 8).map(i => f"S$i%05d") :+ "NOPE"
+    def sameAsInferred(path: String, what: String): Unit = {
+      val inferred = spark.read.parquet(path)
+      assert(Sinks.readLayout(spark, path).schema === inferred.schema, what)
+      stocks.foreach { s =>
+        val got = Financials.latestFactsAt(spark, path, s, k = 7)
+        val want = Financials.latestFacts(inferred, s, k = 7, buckets = buckets)
+        assert(got.schema === want.schema, s"$what $s")
+        assert(got.collect().toSeq === want.collect().toSeq, s"$what $s")
+      }
+    }
+    val built = Sinks.tmpPath("test_read_layout_built")
+    Sinks.deleteRecursively(built)
+    Financials.normalizeInto(RawZoneGen.payloads(spark, 6), built, buckets)
+    sameAsInferred(built, "normalizeInto")
+
+    val path = Sinks.tmpPath("test_read_layout")
+    Sinks.deleteRecursively(path)
+    val base = Financials.normalize(RawZoneGen.payloads(spark, 6))
+    Sinks.writeFactPartitioned(base, path, buckets)
+    sameAsInferred(path, "writeFactPartitioned")
+
+    val delta = Financials.normalize(RawZoneGen.payloads(spark, 8))
+      .filter(col("stock").isin("S00003", "S00007"))
+      .withColumn("value", col("value") + lit(100000.0))
+    Sinks.upsertFactDelta(spark, path, delta, buckets)
+    sameAsInferred(path, "upsertFactDelta")
+    assert(Financials.latestFactsAt(spark, path, "S00007").count() === 10L)
+
+    // delete every stock of one bucket: its directory is vacuumed
+    val live = stocks.init.filterNot(_ == "S00006")
+    val bucketOf = spark.range(1).select(live.map(s =>
+      pmod(hash(lit(s)), lit(buckets)).as(s)): _*).head()
+    val (emptied, goners) = live.groupBy(s => bucketOf.getAs[Int](s)).head
+    Sinks.deleteFactKeys(spark, path, goners.toDF("stock"), buckets)
+    assert(!new File(s"$path/bucket=$emptied").exists())
+    sameAsInferred(path, "deleteFactKeys")
+    goners.foreach(s =>
+      assert(Financials.latestFactsAt(spark, path, s).isEmpty, s))
+  }
+
+  test("latestFactsAt on the flat writeFact layout (no sidecar): unpruned fallback") {
+    val path = Sinks.tmpPath("test_fact_flat")
+    Sinks.deleteRecursively(path)
+    val fact = Financials.normalize(RawZoneGen.payloads(spark, 6))
+    Sinks.writeFact(fact, path, buckets = 4)
+    assert(Sinks.readLayoutBuckets(path) === None)
+    val rows = Financials.latestFactsAt(spark, path, "S00003", k = 5)
+    assert(!rows.columns.contains("bucket"))
+    val scan = rows.queryExecution.sparkPlan.collectLeaves().collectFirst {
+      case f: FileSourceScanExec => f
+    }.get
+    assert(scan.metadata("PartitionFilters") === "[]")
+    assert(rows.collect().toSeq ===
+      Financials.latestFacts(fact, "S00003", k = 5).collect().toSeq)
+    val (jobs, _) = observe(
+      Financials.latestFactsAt(spark, path, "S00001", k = 5).collect(): Unit)
+    assert(jobs === 1)
+  }
+
   test("expirePartitions: metadata-only sweep — survivors byte-identical, guard loud (q179)") {
     import org.apache.spark.sql.functions.{col, concat, lit, lpad}
     val path = Sinks.tmpPath("test_retention_sweep")

@@ -1,12 +1,17 @@
 package graft
 
+import java.security.MessageDigest
 import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.queries.ReferenceQueries
-import graft.transform.Financials
+import graft.ingest.RawZoneGen
+import graft.sources.Sinks
+import graft.transform.{Financials, Summary}
 
 /** G1 flagship unpivot: exact golden multiset on the reference-shaped
   * fixture, plus the row-count law over generated payloads
@@ -125,5 +130,39 @@ class UnpivotSpec extends SparkSpec {
     assert(rows.length === 5) // AAA has 5 facts
     val dates = rows.map(_.getAs[java.sql.Date]("date").toString)
     assert(dates === dates.sorted.reverse)
+  }
+
+  test("Summary.normalize parses each payload once: at most 2 from_json in the plan, rows unchanged") {
+    import spark.implicits._
+    val noInfo = Seq(("NOI", """{"summary":"Zeta Ltd was founded in 1950. """ +
+        """It is headquartered in Oslo, Norway.","symbol":"ZZZ"}""",
+      Timestamp.valueOf("2025-01-02 00:00:00"))).toDF("symbol", "payload", "loaded_at")
+    val raw = ReferenceQueries.fixtureRaw(spark)
+      .unionByName(RawZoneGen.payloads(spark, 12))
+      .unionByName(noInfo)
+    val out = Summary.normalize(raw)
+    val plan = out.queryExecution.optimizedPlan.toString
+    assert("from_json".r.findAllIn(plan).length <= 2, plan)
+    // digest of the rows the per-field parse returned (recorded before
+    // the generator; updated_at is the wall clock)
+    val rows = out.drop("updated_at").collect().map(_.toString).sorted
+    val md5 = MessageDigest.getInstance("MD5")
+      .digest(rows.mkString("\n").getBytes("UTF-8")).map("%02x".format(_)).mkString
+    assert(rows.length === 16)
+    assert(md5 === "8dadaf24f2fa63fffc4a5f8486cf4e82")
+  }
+
+  test("exchanges: normalize plans one, normalizeInto's layout write two (AQE off)") {
+    def exchanges(p: SparkPlan) = p.collect { case e: ShuffleExchangeExec => e }.size
+    withConfs("spark.sql.adaptive.enabled" -> "false") {
+      val raw = RawZoneGen.payloads(spark, 6)
+      // the PK dedup reuses the latest-per-symbol hash partitioning
+      assert(exchanges(Financials.normalize(raw).queryExecution.executedPlan) === 1)
+      val path = Sinks.tmpPath("test_normalize_into_exchanges")
+      Sinks.deleteRecursively(path)
+      val (_, queries) = observe(Financials.normalizeInto(raw, path, buckets = 8))
+      // latest-per-symbol at the shuffle width, then the bucket repartition
+      assert(queries.map(q => exchanges(q.executedPlan)) === Seq(2))
+    }
   }
 }
