@@ -264,36 +264,28 @@ object Changelog {
     if (ids.isEmpty) None else Some(ids.max)
   }
 
-  /** The first parquet file of the oldest commit directory — ONE
-    * file's footer decides the log's shape (every commit carries _op
-    * or none does, by induction on [[requireMatchingShape]]) — never a
-    * listing of the whole log, whose cost would grow with history.
+  /** Whether the log's rows carry [[OpCol]], from the footer of its
+    * first data file in name order — ONE file decides the log's shape
+    * (every commit carries _op or none does, by induction on
+    * [[requireMatchingShape]]). The walk lists the log root and the
+    * directories down to that file, never the whole log, so its cost
+    * does not grow with history. None on a log with no landed data.
     */
-  private def shapeProbe(path: String): Option[String] = {
-    def firstParquet(dir: String): Option[String] = {
-      val children = LogFs.list(dir).sortBy(_.getPath.getName)
-      children.find(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath.toString)
-        .orElse(children.filter(_.isDirectory)
-          .flatMap(d => firstParquet(d.getPath.toString).toSeq).headOption)
-    }
-    LogFs.list(path)
-      .filter(_.getPath.getName.startsWith(s"$CommitCol="))
-      .sortBy(_.getPath.getName)
-      .flatMap(d => firstParquet(d.getPath.toString).toSeq).headOption
-  }
+  private def logHasOp(path: String): Option[Boolean] =
+    ParquetMeta.dataFiles(path).nextOption()
+      .map(f => ParquetMeta.schema(f.getPath).columns.contains(OpCol))
 
   /** Whether the log is OPS-shaped (rows carry [[OpCol]]) — ONE
-    * footer read, the same probe [[requireMatchingShape]] uses; loud on
-    * an empty log (shape is undefined there). Table metadata and write
-    * routing only: the read and fold verbs take the shape from the
-    * schema Spark already inferred for their own scan.
+    * driver-side footer read, the same probe [[requireMatchingShape]]
+    * uses; loud on an empty log (shape is undefined there). Table
+    * metadata and write routing only: the read and fold verbs take the
+    * shape from the schema Spark already inferred for their own scan.
     */
-  private[graft] def isOpsLog(spark: SparkSession, path: String): Boolean = {
-    val probe = shapeProbe(path)
-    require(probe.nonEmpty,
+  private[graft] def isOpsLog(path: String): Boolean = {
+    val hasOp = logHasOp(path)
+    require(hasOp.nonEmpty,
       s"$path has no landed commit data — the log's shape is undefined")
-    spark.read.parquet(probe.get).columns.contains(OpCol)
+    hasOp.get
   }
 
   // ---- Write-path shape guard ---------------------------------------
@@ -304,18 +296,16 @@ object Changelog {
     * upsert vanishes from every snapshot); an ops delta into a plain
     * log would surface tombstones as data rows. The read verbs trust
     * the shape this guard keeps uniform — one driver-side footer read,
-    * only when the log already exists.
+    * no Spark job, only when the log already exists.
     */
   private[graft] def requireMatchingShape(delta: DataFrame, path: String): Unit = {
-    shapeProbe(path).foreach { f =>
-      val logHasOp = delta.sparkSession.read
-        .parquet(f).columns.contains(OpCol)
+    logHasOp(path).foreach { logOp =>
       val deltaHasOp = delta.columns.contains(OpCol)
-      require(!logHasOp || deltaHasOp,
+      require(!logOp || deltaHasOp,
         s"$path is an OPS log but the delta carries no $OpCol — such rows " +
           "would compact as DEAD (liveness filter is _op = 'u'); use " +
           "commitUpsert/commitDelete, or carry _op explicitly")
-      require(logHasOp || !deltaHasOp,
+      require(logOp || !deltaHasOp,
         s"$path is a PLAIN log but the delta carries $OpCol — tombstones " +
           "would read as ordinary rows; start an ops log at a fresh path")
     }
@@ -455,52 +445,25 @@ object Changelog {
   // and the commit's ROW COUNT — the count read from the landed
   // directory's parquet FOOTERS (metadata-only, no data scan, and
   // derived from the final on-disk content so a torn write can never
-  // record a count its files don't hold). Written AFTER the data lands
-  // by every verb; re-landing a deterministic delta recomputes the
-  // identical marker (the redelivery contract). Markers are
+  // record a count its files don't hold), counted through any
+  // sub-partition directories (`_commit=v/bucket=K/`, from
+  // [[commitIdempotent]]'s `alsoPartitionBy`). Written AFTER the data
+  // lands by every verb; re-landing a deterministic delta recomputes
+  // the identical marker (the redelivery contract). Markers are
   // OBSERVABILITY, never the read path: a commit without one reads
   // fine and surfaces null verb/writer in DESCRIBE HISTORY.
 
   private val InfoPrefix = "_graft_info_"
 
-  /** The landed commit directory's exact row count, from parquet
-    * footer metadata only (one open per file, no column IO).
+  /** The landed commit directory's exact row count and total
+    * UNCOMPRESSED byte size, from parquet footer metadata only (one
+    * open per data file, through any sub-partition directories, no
+    * column IO). The bytes are the row groups' total_byte_size — the
+    * number that bounds a consumer's in-memory batch, which is why the
+    * CDC byte-budget admission reads this and not the file sizes.
     */
-  def commitDirRowCount(path: String, commitId: Long): Long =
-    dirRowCount(LogFs.child(path, s"$CommitCol=$commitId"))
-
-  /** Footer-metadata row count of any parquet directory (no column
-    * IO) — shared with the row-level spool's observability.
-    */
-  private[graft] def dirRowCount(dir: String): Long =
-    LogFs.list(dir)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map { s =>
-        val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            s.getPath, LogFs.hadoopConf))
-        try rd.getRecordCount finally rd.close()
-      }.sum
-
-  /** The landed commit directory's total UNCOMPRESSED byte size, from
-    * parquet footer metadata only (the row groups' total_byte_size —
-    * the number that bounds a consumer's in-memory batch, which is why
-    * the CDC byte-budget admission reads this and not the file sizes).
-    */
-  def commitDirByteSize(path: String, commitId: Long): Long = {
-    val dir = LogFs.child(path, s"$CommitCol=$commitId")
-    LogFs.list(dir)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map { s =>
-        val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            s.getPath, LogFs.hadoopConf))
-        try {
-          import scala.jdk.CollectionConverters._
-          rd.getFooter.getBlocks.asScala.map(_.getTotalByteSize).sum
-        } finally rd.close()
-      }.sum
-  }
+  def commitDirStats(path: String, commitId: Long): (Long, Long) =
+    ParquetMeta.dirStats(LogFs.child(path, s"$CommitCol=$commitId"))
 
   /** Record commit `commitId`'s operation metadata (verb, writer, and
     * the footer-derived row count). Public so custom landing paths
@@ -518,7 +481,7 @@ object Changelog {
           "marker is tab-delimited; use a flat identifier")
     }
     LogFs.writeAtomic(LogFs.child(path, s"$InfoPrefix$commitId"),
-      s"v1\n$verb\t$writer\t${commitDirRowCount(path, commitId)}")
+      s"v1\n$verb\t$writer\t${commitDirStats(path, commitId)._1}")
   }
 
   /** All recorded operation metadata: commitId → (verb, writer, rows). */
@@ -603,18 +566,13 @@ object Changelog {
                      keys: Seq[String]): DataFrame = {
     val ids = commitIds(path)
     require(ids.nonEmpty, s"$path has no commits — nothing to describe")
-    def walk(dir: String): Seq[org.apache.hadoop.fs.FileStatus] =
-      LogFs.list(dir).flatMap(s =>
-        if (s.isDirectory) walk(s.getPath.toString) else Seq(s))
-    val files = ids.flatMap(id =>
-      walk(LogFs.child(path, s"$CommitCol=$id")))
-      .filter(_.getPath.getName.endsWith(".parquet"))
+    val files = ParquetMeta.dataFiles(path).toSeq
     val h = horizonOf(path)
     val m = currentMapping(path)
       .getOrElse(ColumnMapping(Map.empty, Set.empty))
     val row = org.apache.spark.sql.Row(
       path, keys.mkString(","),
-      if (isOpsLog(spark, path)) "ops" else "plain",
+      if (isOpsLog(path)) "ops" else "plain",
       java.lang.Long.valueOf(ids.max),
       if (h == Long.MinValue) null else java.lang.Long.valueOf(h),
       java.lang.Long.valueOf(ids.size.toLong),
@@ -1345,8 +1303,7 @@ object Changelog {
     def landed(id: Long): Boolean = {
       val dir = LogFs.child(path, s"$CommitCol=$id")
       LogFs.exists(LogFs.child(dir, "_SUCCESS")) ||
-        LogFs.list(dir).exists(s =>
-          s.isFile && s.getPath.getName.endsWith(".parquet"))
+        ParquetMeta.dataFiles(dir).hasNext
     }
     val landedSince = windowIds.filter { id =>
       val deadline = System.currentTimeMillis() + 60000L

@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Small-file compaction — the OPTIMIZE/maintenance pass every
@@ -25,29 +24,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Compaction {
 
-  private def listParquet(spark: SparkSession,
-                          path: String): Seq[(String, Long)] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(p, true)
-    val out = Seq.newBuilder[(String, Long)]
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet"))
-        out += ((f.getPath.toString, f.getLen))
-    }
-    out.result()
-  }
-
-  /** Data bytes in `path` per the driver-side listing (parquet files
+  /** Data bytes in `path` per the driver-side listing (data files
     * only — excludes _SUCCESS/metadata sidecars).
     */
   def dataBytes(spark: SparkSession, path: String): Long =
-    listParquet(spark, path).map(_._2).sum
+    ParquetMeta.dataFiles(path).map(_.getLen).sum
 
-  /** Parquet file count under `path` (sizing-law assertions). */
+  /** Data file count under `path` (sizing-law assertions). */
   def fileCount(spark: SparkSession, path: String): Int =
-    listParquet(spark, path).size
+    ParquetMeta.dataFiles(path).size
 
   /** Compact `inPath` into `outPath` at ~`targetBytes` per file.
     * Returns the file count written.

@@ -190,7 +190,7 @@ object GraftLog {
       * stats-skipping lookup. The snapshot and feed read the shape
       * from their own scan, so a plain read never pays this probe.
       */
-    lazy val opsShape: Boolean = Changelog.isOpsLog(spark, opts.path)
+    lazy val opsShape: Boolean = Changelog.isOpsLog(opts.path)
 
     /** The read's version coordinate, pinned at load: explicit
       * version, resolved timestamp, or the head as listed NOW.

@@ -410,11 +410,9 @@ object GraftRowLevel {
         CdcSource.spoolRepresentation(snapshot)
           .write.mode("overwrite").parquet(spoolDir)
         spoolsPlanned.incrementAndGet()
-        lastSpoolRows.set(Changelog.dirRowCount(spoolDir))
+        lastSpoolRows.set(ParquetMeta.dirStats(spoolDir)._1)
       }
-      LogFs.list(spoolDir)
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        .sortBy(_.getPath.getName)
+      ParquetMeta.dataFiles(spoolDir)
         .map(st =>
           CdcSource.SpoolFile(st.getPath.toString): InputPartition)
         .toArray

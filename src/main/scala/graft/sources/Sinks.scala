@@ -2,15 +2,8 @@ package graft.sources
 
 import java.io.File
 
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.ParquetReadOptions
-import org.apache.parquet.format.converter.ParquetMetadataConverter
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Library write paths (reference S3/S5) plus the physical-layout policy
   * for the two big tables (SURVEY.md §4.3):
@@ -202,36 +195,11 @@ object Sinks {
     * inferring read, which fails loudly on a missing or empty layout.
     */
   def readLayout(spark: SparkSession, path: String): DataFrame =
-    firstPartFile(path).flatMap(footerSchema) match {
+    ParquetMeta.dataFiles(path).nextOption()
+      .flatMap(f => ParquetMeta.schema(f.getPath).sparkSchema) match {
       case Some(schema) => spark.read.schema(schema).parquet(path)
       case None         => spark.read.parquet(path)
     }
-
-  /** The first data file of a layout in name order, searched through
-    * `col=value` directories: two listings on the bucketed layout, one
-    * on the flat one. Hidden (`_`, `.`) names are commit markers,
-    * sidecars and checksums, never data — the rule Spark's listing uses.
-    */
-  private def firstPartFile(dir: String): Option[Path] = {
-    val (dirs, files) = LogFs.list(dir)
-      .filterNot(s => s.getPath.getName.startsWith("_") ||
-        s.getPath.getName.startsWith("."))
-      .sortBy(_.getPath.getName).partition(_.isDirectory)
-    files.headOption.map(_.getPath).orElse(dirs.iterator
-      .filter(_.getPath.getName.contains("="))
-      .flatMap(d => firstPartFile(d.getPath.toString)).nextOption())
-  }
-
-  private def footerSchema(file: Path): Option[StructType] = {
-    val rd = ParquetFileReader.open(
-      HadoopInputFile.fromPath(file, LogFs.hadoopConf),
-      ParquetReadOptions.builder()
-        .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
-    try Option(rd.getFooter.getFileMetaData.getKeyValueMetaData
-        .get(ParquetReadSupport.SPARK_METADATA_KEY))
-      .map(DataType.fromJson(_).asInstanceOf[StructType])
-    finally rd.close()
-  }
 
   /** The stock-hash bucket of the MAINTAINED fact layout. `hash` is the
     * same Murmur3(seed 42) as `repartition(n, col)`'s HashPartitioning,

@@ -14,7 +14,7 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, 
 import org.apache.spark.sql.types.{ArrayType, BinaryType, BooleanType, DateType, DecimalType, DoubleType, FloatType, IntegerType, LongType, MapType, StringType, StructType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import graft.sources.{Changelog, LogFs}
+import graft.sources.{Changelog, LogFs, ParquetMeta}
 
 /** The ops log's CHANGE DATA FEED as a Structured Streaming SOURCE —
   * the Delta-style `readStream ... option("readChangeFeed", true)`
@@ -361,37 +361,30 @@ object CdcSource {
       LogFs.child(LogFs.child(checkpointLocation, "graft_cdc_spool"),
         s"batch_${start}_${end}_c${colsToken}_n$ns")
 
-    /** Commit `c`'s slice count under the row AND byte budgets — from
-      * the commit directory's parquet FOOTERS (metadata-only; immutable
-      * once landed, so the count is deterministic per commit). The
-      * budgets bound the batch by the commit's OWN row count /
-      * uncompressed byte size — the feed's rows are at most that
-      * (suppression only shrinks it). When both budgets are set the
-      * slice count is the MAX of the two ceilings: every slice then
-      * satisfies both.
+    /** The slice count of a commit whose footers hold `rows` rows and
+      * `bytes` uncompressed bytes ([[Changelog.commitDirStats]] —
+      * metadata-only; immutable once landed, so the count is
+      * deterministic per commit). The budgets bound the batch by the
+      * commit's OWN row count / uncompressed byte size — the feed's rows
+      * are at most that (suppression only shrinks it). When both budgets
+      * are set the slice count is the MAX of the two ceilings: every
+      * slice then satisfies both.
       */
-    private def slicesFor(c: Long): Int = {
-      val byRows = opts.maxRowsPerTrigger.fold(1L) { budget =>
-        val n = Changelog.commitDirRowCount(opts.path, c)
-        math.max(1L, (n + budget - 1) / budget)
-      }
-      val byBytes = opts.maxBytesPerTrigger.fold(1L) { budget =>
-        val b = Changelog.commitDirByteSize(opts.path, c)
-        math.max(1L, (b + budget - 1) / budget)
-      }
-      math.max(byRows, byBytes).toInt
+    private def slicesFor(rows: Long, bytes: Long): Int = {
+      def ceil(n: Long, budget: Option[Long]): Long =
+        budget.fold(1L)(b => math.max(1L, (n + b - 1) / b))
+      math.max(ceil(rows, opts.maxRowsPerTrigger),
+        ceil(bytes, opts.maxBytesPerTrigger)).toInt
     }
 
-    /** Whole commit `c` still fits a batch that already admitted
-      * `rows`/`bytes` — the multi-commit leg of budget admission: a
-      * feed of many SMALL commits batches several per trigger instead
-      * of degrading to one-commit-per-trigger (each far below budget).
+    /** A batch of `rows`/`bytes` in total is within every set budget —
+      * the multi-commit leg of budget admission: a feed of many SMALL
+      * commits batches several per trigger instead of degrading to
+      * one-commit-per-trigger (each far below budget).
       */
-    private def fitsBudgets(c: Long, rows: Long, bytes: Long): Boolean =
-      opts.maxRowsPerTrigger.forall(b =>
-        rows + Changelog.commitDirRowCount(opts.path, c) <= b) &&
-        opts.maxBytesPerTrigger.forall(b =>
-          bytes + Changelog.commitDirByteSize(opts.path, c) <= b)
+    private def fitsBudgets(rows: Long, bytes: Long): Boolean =
+      opts.maxRowsPerTrigger.forall(rows <= _) &&
+        opts.maxBytesPerTrigger.forall(bytes <= _)
 
     /** A MAPPED stream never serves a window that mixes name-epochs:
       * historical mapping commits (renames below the stream's start
@@ -450,30 +443,25 @@ object CdcSource {
         else CdcOffset(st.version, st.slice + 1, st.nSlices)
       } else {
         // budget admission on a fresh commit: slice count from its
-        // footers. An over-budget commit serves as ⌈size/budget⌉
-        // key-hash slices, one per micro-batch; a WITHIN-budget commit
-        // admits as a whole, and subsequent whole commits keep
-        // admitting while the CUMULATIVE footer rows/bytes stay within
-        // every set budget (and under maxCommitsPerTrigger when set) —
-        // many small commits batch instead of degrading to
-        // one-commit-per-trigger.
+        // footers (each candidate commit's opened once per call). An
+        // over-budget commit serves as ⌈size/budget⌉ key-hash slices,
+        // one per micro-batch; a WITHIN-budget commit admits as a
+        // whole, and subsequent whole commits keep admitting while the
+        // CUMULATIVE footer rows/bytes stay within every set budget
+        // (and under maxCommitsPerTrigger when set) — many small
+        // commits batch instead of degrading to one-commit-per-trigger.
         val next = st.version + 1
-        val ns = slicesFor(next)
+        var (rows, bytes) = Changelog.commitDirStats(opts.path, next)
+        val ns = slicesFor(rows, bytes)
         if (ns > 1) CdcOffset(st.version, 1, ns)
         else {
           val maxCommits = opts.maxCommitsPerTrigger.getOrElse(Long.MaxValue)
           var end = next
-          var rows = opts.maxRowsPerTrigger.fold(0L)(_ =>
-            Changelog.commitDirRowCount(opts.path, next))
-          var bytes = opts.maxBytesPerTrigger.fold(0L)(_ =>
-            Changelog.commitDirByteSize(opts.path, next))
-          while (end < head && (end - st.version) < maxCommits &&
-              fitsBudgets(end + 1, rows, bytes)) {
-            end += 1
-            rows += opts.maxRowsPerTrigger.fold(0L)(_ =>
-              Changelog.commitDirRowCount(opts.path, end))
-            bytes += opts.maxBytesPerTrigger.fold(0L)(_ =>
-              Changelog.commitDirByteSize(opts.path, end))
+          var admits = true
+          while (admits && end < head && (end - st.version) < maxCommits) {
+            val (r, b) = Changelog.commitDirStats(opts.path, end + 1)
+            admits = fitsBudgets(rows + r, bytes + b)
+            if (admits) { end += 1; rows += r; bytes += b }
           }
           CdcOffset(capAtMappingBoundary(st.version, end))
         }
@@ -608,9 +596,7 @@ object CdcSource {
       lastSpooledColumns.set(schema.fieldNames.toSeq)
       val serveDir =
         if (ns == 1) dir else LogFs.child(dir, s"_slice=$serveSlice")
-      LogFs.list(serveDir)
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        .sortBy(_.getPath.getName)
+      ParquetMeta.dataFiles(serveDir)
         .map(st => SpoolFile(st.getPath.toString): InputPartition)
         .toArray
     }

@@ -41,7 +41,7 @@ class ColumnMappingSpec extends SparkSpec {
     spark.sql("ALTER TABLE cmspec1.t RENAME COLUMN v TO price")
     // ONE commit, verb rename_column, zero rows
     assert(Changelog.commitInfos(path)(2L)._1 == "rename_column")
-    assert(Changelog.commitDirRowCount(path, 2L) == 0L)
+    assert(Changelog.commitDirStats(path, 2L)._1 == 0L)
     // head serves the LOGICAL name with untouched values
     val head = spark.table("cmspec1.t")
     assert(head.schema.fieldNames.toSeq == Seq("k", "price", "note"))
