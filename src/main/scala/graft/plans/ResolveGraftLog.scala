@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+import org.apache.spark.sql.graftbridge.FilterBridge
 import graft.sources.{Changelog, GraftLog}
 
 /** Resolves [[graft.sources.GraftLog]] relations into the engine's own
@@ -29,21 +29,24 @@ import graft.sources.{Changelog, GraftLog}
   *    PruneFileSourcePartitions) then prune its parquet scans exactly
   *    as they do for direct library calls.
   *
-  * The filter-driven leg is the COMMIT-STATS SKIPPING surface: when the
-  * pushed condition carries eq/range conjuncts on a key column of an
-  * ops-shaped snapshot read, the relation resolves through
-  * [[Changelog.rangeLookupOps]] / [[Changelog.rangeLookupOpsString]]
-  * with the widest window the conjuncts imply — commits whose recorded
-  * stats exclude the window are dropped DRIVER-SIDE, before any footer
-  * opens. Soundness: the lookup equals `snapshot.filter(window)` by the
-  * library's own spec-pinned contract, the extracted window is a
-  * SUPERSET of the condition (strict bounds widen to inclusive; unknown
+  * The filter-driven leg is the COMMIT-STATS SKIPPING surface: the
+  * deterministic conjuncts of the pushed condition of an ops-shaped
+  * snapshot read are translated to `sources.Filter` (the vocabulary
+  * every data source is handed) and [[Changelog.KeyRange.extract]]
+  * turns them into one range per constrained key column; when any
+  * range comes out, the relation resolves through [[Changelog.lookup]]
+  * — commits whose recorded stats exclude a range are dropped
+  * DRIVER-SIDE, before any footer opens. Soundness: the lookup equals
+  * the snapshot filtered to the ranges by the library's own
+  * spec-pinned contract, each range is a SUPERSET of the condition
+  * (strict integral bounds tighten to the adjacent integer; unknown
   * shapes contribute nothing), and the ORIGINAL filter stays on top —
   * so the rewrite can only remove rows the filter would drop anyway.
-  * The condition may mix arbitrary other conjuncts; only deterministic
-  * comparisons against literals feed the window.
+  * The condition may mix arbitrary other conjuncts; only comparisons
+  * of a key column against a literal feed the ranges.
   */
-case class ResolveGraftLog(spark: SparkSession) extends Rule[LogicalPlan] {
+case class ResolveGraftLog(spark: SparkSession) extends Rule[LogicalPlan]
+    with PredicateHelper {
 
   /** Splice sites already served the MEMOIZED library plan this apply:
     * one LogTable instance appearing at TWO read positions of one query
@@ -156,7 +159,7 @@ case class ResolveGraftLog(spark: SparkSession) extends Rule[LogicalPlan] {
   }
 
   /** The snapshot plan for `table` under pushed condition `cond` —
-    * stats-skipping lookup when a key-column window is extractable,
+    * stats-skipping lookup when key ranges are extractable,
     * the plain snapshot otherwise. Feed reads and mergeSchema reads
     * never skip (the feed's candidates are already commit-pruned; the
     * evolved read's union-schema fold is a different plan).
@@ -175,113 +178,19 @@ case class ResolveGraftLog(spark: SparkSession) extends Rule[LogicalPlan] {
     if (opts.readChangeFeed || !table.opsShape || opts.mergeSchema)
       sitePlan(table, seen)
     else {
-      val conjuncts = splitConjuncts(cond).filter(_.deterministic)
-      val window = opts.keys.iterator.map(k => k -> boundsFor(k, conjuncts))
-        .collectFirst { case (k, Some(b)) => k -> b }
-      // a mapped (rename-only) log still skips: the window is on a KEY
-      // column (never mapped), and the lookup's physical output is
+      val filters = splitConjunctivePredicates(cond).filter(_.deterministic)
+        .flatMap(FilterBridge.translate)
+      // a mapped (rename-only) log still skips: the ranges are on KEY
+      // columns (never mapped), and the lookup's physical output is
       // projected to the table's logical names before the splice
-      window match {
-        case Some((k, LongBounds(lo, hi))) =>
+      Changelog.KeyRange.extract(opts.keys, filters) match {
+        case Seq() => sitePlan(table, seen)
+        case ranges =>
           Changelog.applyMapping(
-            Changelog.rangeLookupOps(spark, opts.path, opts.keys,
-              table.pinnedVersion, k, lo, hi), table.pinnedMapping)
+            Changelog.lookup(spark, opts.path, opts.keys,
+              table.pinnedVersion, ranges), table.pinnedMapping)
             .queryExecution.optimizedPlan
-        case Some((k, StringBounds(lo, hi))) =>
-          Changelog.applyMapping(
-            Changelog.rangeLookupOpsString(spark, opts.path, opts.keys,
-              table.pinnedVersion, k, lo, hi), table.pinnedMapping)
-            .queryExecution.optimizedPlan
-        case None => sitePlan(table, seen)
       }
-    }
-  }
-
-  private def splitConjuncts(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => splitConjuncts(l) ++ splitConjuncts(r)
-    case other     => Seq(other)
-  }
-
-  private sealed trait Bounds
-  private case class LongBounds(lo: Long, hi: Long) extends Bounds
-  private case class StringBounds(lo: String, hi: String) extends Bounds
-
-  /** The widest [lo, hi] window the conjuncts imply for key column
-    * `key` — inclusive. STRICT bounds on integral keys TIGHTEN to the
-    * adjacent integer (`k > 5` → lo 6, `k < 5` → hi 4): integer
-    * semantics make the tightened window still a superset of the
-    * satisfying set, and a one-sided strict probe at a commit's
-    * recorded boundary (`k > max_of_commit`) then skips the commit
-    * instead of admitting it on the shared endpoint. Saturating at
-    * Long.Min/Max (a `k > Long.MaxValue` conjunct is unsatisfiable —
-    * the kept original filter yields empty either way, so the
-    * saturated window is merely conservative, never wrong). Long/int
-    * keys take open sides at Long.Min/Max; string keys need an
-    * equality (no greatest string exists to close an open side).
-    */
-  private def boundsFor(key: String,
-                        conjuncts: Seq[Expression]): Option[Bounds] = {
-    def keyed(a: Expression): Boolean = a match {
-      case ar: AttributeReference => ar.name == key
-      case _ => false
-    }
-    def longLit(l: Literal): Option[Long] = l.dataType match {
-      case LongType    => Option(l.value).map(_.asInstanceOf[Long])
-      case IntegerType => Option(l.value).map(_.asInstanceOf[Int].toLong)
-      case _ => None
-    }
-    def strLit(l: Literal): Option[String] = l.dataType match {
-      case StringType => Option(l.value).map(_.toString)
-      case _ => None
-    }
-    // strict-bound tightening, saturating at the long extremes
-    def nextUp(v: Long): Long = if (v == Long.MaxValue) v else v + 1
-    def nextDown(v: Long): Long = if (v == Long.MinValue) v else v - 1
-    var lo: Option[Long] = None
-    var hi: Option[Long] = None
-    var seq: Option[String] = None
-    conjuncts.foreach {
-      case EqualTo(a, l: Literal) if keyed(a) =>
-        longLit(l).foreach { v => lo = Some(lo.fold(v)(math.max(_, v)))
-          hi = Some(hi.fold(v)(math.min(_, v))) }
-        strLit(l).foreach(v => seq = Some(v))
-      case EqualTo(l: Literal, a) if keyed(a) =>
-        longLit(l).foreach { v => lo = Some(lo.fold(v)(math.max(_, v)))
-          hi = Some(hi.fold(v)(math.min(_, v))) }
-        strLit(l).foreach(v => seq = Some(v))
-      case GreaterThanOrEqual(a, l: Literal) if keyed(a) =>
-        longLit(l).foreach(v => lo = Some(lo.fold(v)(math.max(_, v))))
-      case GreaterThan(a, l: Literal) if keyed(a) =>
-        longLit(l).map(nextUp).foreach(v =>
-          lo = Some(lo.fold(v)(math.max(_, v))))
-      case LessThanOrEqual(a, l: Literal) if keyed(a) =>
-        longLit(l).foreach(v => hi = Some(hi.fold(v)(math.min(_, v))))
-      case LessThan(a, l: Literal) if keyed(a) =>
-        longLit(l).map(nextDown).foreach(v =>
-          hi = Some(hi.fold(v)(math.min(_, v))))
-      // literal-first range forms mirror
-      case GreaterThanOrEqual(l: Literal, a) if keyed(a) =>
-        longLit(l).foreach(v => hi = Some(hi.fold(v)(math.min(_, v))))
-      case GreaterThan(l: Literal, a) if keyed(a) =>
-        longLit(l).map(nextDown).foreach(v =>
-          hi = Some(hi.fold(v)(math.min(_, v))))
-      case LessThanOrEqual(l: Literal, a) if keyed(a) =>
-        longLit(l).foreach(v => lo = Some(lo.fold(v)(math.max(_, v))))
-      case LessThan(l: Literal, a) if keyed(a) =>
-        longLit(l).map(nextUp).foreach(v =>
-          lo = Some(lo.fold(v)(math.max(_, v))))
-      case _ => ()
-    }
-    seq match {
-      case Some(v) => Some(StringBounds(v, v))
-      case None if lo.isDefined || hi.isDefined =>
-        val l = lo.getOrElse(Long.MinValue)
-        val h = hi.getOrElse(Long.MaxValue)
-        // contradictory conjuncts (k = 5 AND k = 9): an inverted window
-        // is legal for rangeLookupOps only if lo <= hi, so hand the
-        // empty case back to the plain plan (the filter yields empty)
-        if (l <= h) Some(LongBounds(l, h)) else None
-      case None => None
     }
   }
 }

@@ -519,11 +519,12 @@ object AuditQueries {
       Changelog.snapshotAt(s, path, Seq("o_orderkey"), Long.MaxValue)
     }),
 
-    // STATS-PRUNED POINT LOOKUP — per-commit key-range statistics (the
-    // lakehouse data-skipping story at the COMMIT level): markers
-    // record each commit's [min, max] o_orderkey, and the lookup skips
-    // — driver-side, before any footer opens — every commit whose
-    // range excludes the key. Key 20 exercises the full delete cycle
+    // STATS-PRUNED POINT LOOKUP — Changelog.lookup over a point range
+    // (lo == hi). Per-commit key-range statistics (the lakehouse
+    // data-skipping story at the COMMIT level): markers record each
+    // commit's [min, max] o_orderkey, and the lookup skips —
+    // driver-side, before any footer opens — every commit whose range
+    // excludes the key. Key 20 exercises the full delete cycle
     // through the stats path: upserted (commit 0), tombstoned (commit
     // 1), resurrected at +1000 (commit 2) — LWW through tombstones
     // must survive the pruned read. On this fixture every commit
@@ -534,8 +535,8 @@ object AuditQueries {
       val path = opsLog(s, d, "orders_ops_log_q197")
       for (c <- 0L to 2L)
         Changelog.writeCommitStats(s, path, c, "o_orderkey")
-      Changelog.pointLookupOps(s, path, Seq("o_orderkey"), 2L,
-        "o_orderkey", 20L)
+      Changelog.lookup(s, path, Seq("o_orderkey"), 2L,
+        Seq(Changelog.KeyRange.LongRange("o_orderkey", 20L, 20L)))
     }),
 
     // STATS-PRUNED RANGE LOOKUP — the range form of q197: a commit is
@@ -549,8 +550,8 @@ object AuditQueries {
       val path = opsLog(s, d, "orders_ops_log_q198")
       for (c <- 0L to 2L)
         Changelog.writeCommitStats(s, path, c, "o_orderkey")
-      Changelog.rangeLookupOps(s, path, Seq("o_orderkey"), 2L,
-        "o_orderkey", 15L, 45L)
+      Changelog.lookup(s, path, Seq("o_orderkey"), 2L,
+        Seq(Changelog.KeyRange.LongRange("o_orderkey", 15L, 45L)))
     }),
 
     // MERGE INTO the ops log — the lakehouse three-clause merge as ONE
@@ -882,7 +883,8 @@ object AuditQueries {
           col("sum_measure").as("sum_price"))
     }),
 
-    // STATS-PRUNED POINT LOOKUP ON A STRING KEY — q197 generalized:
+    // STATS-PRUNED POINT LOOKUP ON A STRING KEY — q197 over a
+    // StringRange:
     // per-commit markers now record min/max/null-count per COLUMN
     // (writeCommitStatsMulti), string order is unsigned UTF-8 bytes
     // on both the driver's skip decision and Spark's scan, and the
@@ -891,20 +893,22 @@ object AuditQueries {
     // skipping itself is spec-pinned on disjoint string ranges.
     "q202_ops_point_lookup_str" -> ((s, d) => {
       val path = docsOpsLog(s, d, "docs_ops_log_q202")
-      Changelog.pointLookupOpsString(s, path, Seq("doc_key"), 2L,
-        "doc_key", "D00000020")
+      Changelog.lookup(s, path, Seq("doc_key"), 2L,
+        Seq(Changelog.KeyRange.StringRange("doc_key", "D00000020",
+          "D00000020")))
     }),
 
     // STATS-PRUNED RANGE LOOKUP ON A STRING KEY — q198's range form
-    // for the string-keyed log: the window crosses every delete
+    // (a StringRange) for the string-keyed log: the window crosses every delete
     // class (live originals, +500 updates, tombstoned-and-gone keys,
     // +1000 resurrections) and the window predicate pushes into the
     // scan, so commit skipping and parquet row-group skipping still
     // compose on the string column.
     "q203_ops_range_lookup_str" -> ((s, d) => {
       val path = docsOpsLog(s, d, "docs_ops_log_q203")
-      Changelog.rangeLookupOpsString(s, path, Seq("doc_key"), 2L,
-        "doc_key", "D00000015", "D00000045")
+      Changelog.lookup(s, path, Seq("doc_key"), 2L,
+        Seq(Changelog.KeyRange.StringRange("doc_key", "D00000015",
+          "D00000045")))
     }),
 
     // OPTIMIZE AT HEAD WITHOUT LOSING HISTORY — the maintenance verb

@@ -362,7 +362,7 @@ object TableFormatQueries {
         .load()),
 
     // FILTER-DRIVEN COMMIT SKIPPING ON THE TABLE SURFACE — the pushed
-    // key predicate routes the relation through rangeLookupOps, so the
+    // key predicate routes the relation through Changelog.lookup, so the
     // commit-stats index prunes whole commit directories DRIVER-SIDE:
     // on a log whose commits hold disjoint key ranges, the probe
     // `o_orderkey > 3m/4` must read ONLY `_commit=1` — proven

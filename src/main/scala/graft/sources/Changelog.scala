@@ -1726,10 +1726,6 @@ object Changelog {
   def optimizeOps(spark: SparkSession, path: String, keys: Seq[String],
                   newCommitId: Long, clusterCol: String, domain: Long,
                   numFiles: Int, writer: String = SoloWriter): Unit = {
-    require(keys.contains(clusterCol),
-      s"clusterCol $clusterCol must be one of the key columns " +
-        s"[${keys.mkString(", ")}] — the base's stats marker feeds " +
-        "rangeLookupOps, whose skipping is only sound on a key column")
     optimizeLanding(spark, path, keys, newCommitId, writer,
       statsCols = Seq(clusterCol))(
       ZOrderLayout.rangeClustered(_, clusterCol, domain, numFiles))
@@ -1741,7 +1737,7 @@ object Changelog {
     * ([[ZOrderLayout.rankClusteredString]] — no single-task sort, no
     * sampling), the remaining key columns break ties so the order is
     * total, and the base's multi-column stats marker records the
-    * string min/max that [[rangeLookupOpsString]] skips by. Same
+    * string min/max that [[lookup]] skips by. Same
     * contract as the numeric form: a pure rewrite under the
     * maintenance mutex, history intact, snapshots value-identical.
     */
@@ -1749,11 +1745,6 @@ object Changelog {
                         keys: Seq[String], newCommitId: Long,
                         clusterCol: String, numFiles: Int,
                         writer: String = SoloWriter): Unit = {
-    require(keys.contains(clusterCol),
-      s"clusterCol $clusterCol must be one of the key columns " +
-        s"[${keys.mkString(", ")}] — the base's stats marker feeds " +
-        "rangeLookupOpsString, whose skipping is only sound on a key " +
-        "column")
     optimizeLanding(spark, path, keys, newCommitId, writer,
       statsCols = Seq(clusterCol))(
       ZOrderLayout.rankClusteredString(_, clusterCol, numFiles,
@@ -1774,22 +1765,16 @@ object Changelog {
   def optimizeOpsZOrder(spark: SparkSession, path: String,
                         keys: Seq[String], newCommitId: Long,
                         xCol: String, yCol: String, bits: Int,
-                        numFiles: Int, writer: String = SoloWriter): Unit = {
-    Seq(xCol, yCol).foreach { c =>
-      require(keys.contains(c),
-        s"z-order column $c must be one of the key columns " +
-          s"[${keys.mkString(", ")}] — the base's stats marker feeds " +
-          "the range lookups, whose skipping is only sound on key " +
-          "columns")
-    }
+                        numFiles: Int, writer: String = SoloWriter): Unit =
     optimizeLanding(spark, path, keys, newCommitId, writer,
       statsCols = Seq(xCol, yCol))(
       ZOrderLayout.zClustered(_, xCol, yCol, bits, numFiles))
-  }
 
   /** The shared OPTIMIZE landing: fold the live head state, place it
     * with `place`, land under the claim + maintenance mutex, record
-    * the stats/base/info markers. Marker ORDER is the crash-safety
+    * the stats/base/info markers. Every stats column must be a key
+    * column: the base's marker feeds [[lookup]], whose skipping is
+    * only sound on key columns. Marker ORDER is the crash-safety
     * law: stats before base. A crash after the data landed but before
     * the markers leaves an ordinary (unmarked) commit — reads stay
     * correct, only un-pruned; re-run under the same id to finish (the
@@ -1798,41 +1783,46 @@ object Changelog {
   private def optimizeLanding(spark: SparkSession, path: String,
                               keys: Seq[String], newCommitId: Long,
                               writer: String, statsCols: Seq[String])
-                             (place: DataFrame => DataFrame): Unit =
-      withMaintenanceMutex(path, s"optimize@$newCommitId:$writer") {
-    val ids = commitIds(path)
-    require(ids.nonEmpty, s"$path has no commits to optimize")
-    val head = ids.max
-    require(newCommitId > head,
-      s"optimize must land as a NEW commit above the head $head of " +
-        s"$path, got $newCommitId — rewriting an existing commit would " +
-        "destroy the changes it carried")
-    claimCommit(path, newCommitId, writer)
-    val staging = s"${path.stripSuffix("/")}__opt_staging_v$newCommitId"
-    LogFs.delete(staging)
-    // the base is a pure rewrite of the live state — logically-dropped
-    // columns are projected out of it (the checkpoint fold's reclaim
-    // law: every read served FROM the base is at/above the base, and
-    // drops only accumulate, so no reachable read wants those bytes;
-    // reads below the base open the original commits, untouched)
-    val folded = compact(
-      window(readLog(spark, path, mergeSchema = true), path, head), keys)
-    require(isOps(folded),
-      s"$path is a PLAIN log — an OPTIMIZE base is an ops rewrite; " +
-        "cluster a plain log's fold with checkpoint(..., cluster)")
-    reclaimDropped(live(folded), path, head)
-      .withColumn(OpCol, lit("u"))
-      .write.mode("overwrite").parquet(staging)
-    val staged = spark.read.parquet(staging)
-    val dir = LogFs.child(path, s"$CommitCol=$newCommitId")
-    if (staged.isEmpty) staged.write.mode("overwrite").parquet(dir)
-    else place(staged).write.mode("overwrite").parquet(dir)
-    if (!staged.isEmpty) writeCommitStatsMulti(spark, path, newCommitId,
-      statsCols)
-    LogFs.writeAtomic(LogFs.child(path, s"$BasePrefix$newCommitId"),
-      newCommitId.toString)
-    writeCommitInfo(path, newCommitId, "optimize", writer)
-    LogFs.delete(staging)
+                             (place: DataFrame => DataFrame): Unit = {
+    statsCols.foreach(c => require(keys.contains(c),
+      s"cluster column $c must be one of the key columns " +
+        s"[${keys.mkString(", ")}] — the base's stats marker feeds " +
+        "lookup, whose skipping is only sound on key columns"))
+    withMaintenanceMutex(path, s"optimize@$newCommitId:$writer") {
+      val ids = commitIds(path)
+      require(ids.nonEmpty, s"$path has no commits to optimize")
+      val head = ids.max
+      require(newCommitId > head,
+        s"optimize must land as a NEW commit above the head $head of " +
+          s"$path, got $newCommitId — rewriting an existing commit would " +
+          "destroy the changes it carried")
+      claimCommit(path, newCommitId, writer)
+      val staging = s"${path.stripSuffix("/")}__opt_staging_v$newCommitId"
+      LogFs.delete(staging)
+      // the base is a pure rewrite of the live state — logically-dropped
+      // columns are projected out of it (the checkpoint fold's reclaim
+      // law: every read served FROM the base is at/above the base, and
+      // drops only accumulate, so no reachable read wants those bytes;
+      // reads below the base open the original commits, untouched)
+      val folded = compact(
+        window(readLog(spark, path, mergeSchema = true), path, head), keys)
+      require(isOps(folded),
+        s"$path is a PLAIN log — an OPTIMIZE base is an ops rewrite; " +
+          "cluster a plain log's fold with checkpoint(..., cluster)")
+      reclaimDropped(live(folded), path, head)
+        .withColumn(OpCol, lit("u"))
+        .write.mode("overwrite").parquet(staging)
+      val staged = spark.read.parquet(staging)
+      val dir = LogFs.child(path, s"$CommitCol=$newCommitId")
+      if (staged.isEmpty) staged.write.mode("overwrite").parquet(dir)
+      else place(staged).write.mode("overwrite").parquet(dir)
+      if (!staged.isEmpty) writeCommitStatsMulti(spark, path, newCommitId,
+        statsCols)
+      LogFs.writeAtomic(LogFs.child(path, s"$BasePrefix$newCommitId"),
+        newCommitId.toString)
+      writeCommitInfo(path, newCommitId, "optimize", writer)
+      LogFs.delete(staging)
+    }
   }
 
   /** `!(a <=> b)` for a column of type `dt`, with MAP types
@@ -2047,7 +2037,7 @@ object Changelog {
     * directories), reads below fail loudly through the horizon guard,
     * and the reclaimed directories are physically gone. The base's
     * own stats marker SURVIVES (the directory was not rewritten — its
-    * ranges still bound it, so rangeLookup pruning stays armed).
+    * ranges still bound it, so lookup pruning stays armed).
     * Idempotent: a re-run finds nothing left to sweep. Runs under the
     * maintenance mutex like every verb that rewrites shared state.
     */
@@ -2485,188 +2475,181 @@ object Changelog {
         (s.getPath.getName.stripPrefix(StatsPrefix).toLong, byCol)
       }.toMap
 
-  /** The state of the key(s) matching `statsCol == value` AS OF `v`,
-    * compacting ONLY the commits whose stats admit the value (plus
-    * every unstamped commit, conservatively). At a 10k-commit log
-    * where the key was touched in 3 commits, the lookup reads 3
-    * commit directories instead of opening 10k footers — the Delta
-    * data-skipping story at the commit level. Result is identical to
-    * `snapshotAt(...).filter(statsCol === value)` (spec-pinned,
-    * including through tombstones and resurrections).
+  /** An inclusive range on one KEY column — what a stats-skipping
+    * [[lookup]] prunes by. Each case carries its driver-side admit test
+    * over a commit's recorded [[ColStats]] and its in-scan probe; a
+    * missing marker, or a marker of another type, admits (be exact,
+    * not clever), an all-null marker never does. A point is a range
+    * with `lo == hi`. `toString` is the rendering spool observability
+    * reports (`k in [1, 5]`, `s = 'x'`, `s in ['a', 'b']`).
     */
-  def pointLookupOps(spark: SparkSession, path: String, keys: Seq[String],
-                     v: Long, statsCol: String, value: Long): DataFrame =
-    rangeLookupOps(spark, path, keys, v, statsCol, value, value)
-
-  /** The state of every key with `statsCol` in `[valueLo, valueHi]`
-    * AS OF `v` — the range form of [[pointLookupOps]]: a commit is
-    * compacted iff its recorded [min, max] INTERSECTS the probe
-    * window (or it carries no stats). The window filter is also
-    * pushed into the scan, so within an admitted commit parquet
-    * row-group stats prune further — commit skipping and row-group
-    * skipping compose.
-    */
-  def rangeLookupOps(spark: SparkSession, path: String, keys: Seq[String],
-                     v: Long, statsCol: String, valueLo: Long,
-                     valueHi: Long, mergeSchema: Boolean = false): DataFrame = {
-    require(valueLo <= valueHi,
-      s"need valueLo <= valueHi, got $valueLo > $valueHi")
-    rangeLookupImpl(spark, path, keys, v, statsCol,
-      admits = {
-        case LongColStats(lo, hi, _) => hi >= valueLo && lo <= valueHi
-        case _: AllNullColStats      => false // no non-null values at all
-        case _                       => true  // type mismatch: be exact, not clever
-      },
-      probe = col(statsCol) >= valueLo && col(statsCol) <= valueHi,
-      mergeSchema = mergeSchema)
+  sealed trait KeyRange {
+    def key: String
+    def admits(stats: ColStats): Boolean
+    def probe: Column
   }
 
-  /** [[pointLookupOps]] for a STRING key column — same skipping
-    * contract; the driver's admit decision compares in unsigned UTF-8
-    * byte order, exactly the order the recorded min/max were computed
-    * in (Spark's UTF8String), so skip and scan can never disagree.
-    */
-  def pointLookupOpsString(spark: SparkSession, path: String,
-                           keys: Seq[String], v: Long, statsCol: String,
-                           value: String, mergeSchema: Boolean = false)
-      : DataFrame =
-    rangeLookupOpsString(spark, path, keys, v, statsCol, value, value,
-      mergeSchema)
-
-  /** [[rangeLookupOps]] for a STRING key column. */
-  def rangeLookupOpsString(spark: SparkSession, path: String,
-                           keys: Seq[String], v: Long, statsCol: String,
-                           valueLo: String, valueHi: String,
-                           mergeSchema: Boolean = false): DataFrame = {
-    require(utf8Compare(valueLo, valueHi) <= 0,
-      s"need valueLo <= valueHi (UTF-8 order), got '$valueLo' > '$valueHi'")
-    rangeLookupImpl(spark, path, keys, v, statsCol,
-      admits = {
-        case StringColStats(lo, hi, _) =>
-          utf8Compare(hi, valueLo) >= 0 && utf8Compare(lo, valueHi) <= 0
-        case _: AllNullColStats => false
-        case _                  => true
-      },
-      probe = col(statsCol) >= valueLo && col(statsCol) <= valueHi,
-      mergeSchema = mergeSchema)
-  }
-
-  /** One column's contribution to a multi-window lookup: the stats
-    * column, its driver-side admit test, and the in-scan probe.
-    */
-  private[graft] case class LookupWindow(statsCol: String,
-                                         admits: ColStats => Boolean,
-                                         probe: org.apache.spark.sql.Column)
-
-  /** The INTERSECTION lookup over several constrained key columns —
-    * what a composite-key point/range read prunes by: a commit is
-    * admitted iff EVERY window's recorded stats admit it (a commit
-    * outside any one column's range cannot hold a row satisfying the
-    * conjunction), so each additional constrained column can only
-    * shrink the opened set. Same conservatism per column as the
-    * single-column forms: a missing marker (or a marker lacking the
-    * column) admits.
-    */
-  private[graft] def rangeLookupOpsWindows(spark: SparkSession,
-                                           path: String, keys: Seq[String],
-                                           v: Long,
-                                           windows: Seq[LookupWindow],
-                                           mergeSchema: Boolean = false)
-      : DataFrame =
-    rangeLookupImpl(spark, path, keys, v, windows, mergeSchema)
-
-  /** The [[LookupWindow]] of a long-typed inclusive range. */
-  private[graft] def longWindow(statsCol: String, valueLo: Long,
-                                valueHi: Long): LookupWindow =
-    LookupWindow(statsCol,
-      admits = {
-        case LongColStats(lo, hi, _) => hi >= valueLo && lo <= valueHi
+  object KeyRange {
+    final case class LongRange(key: String, lo: Long, hi: Long)
+        extends KeyRange {
+      require(lo <= hi, s"need lo <= hi on $key, got $lo > $hi")
+      def admits(stats: ColStats): Boolean = stats match {
+        case LongColStats(mn, mx, _) => mx >= lo && mn <= hi
         case _: AllNullColStats      => false
         case _                       => true
-      },
-      probe = col(statsCol) >= valueLo && col(statsCol) <= valueHi)
+      }
+      def probe: Column = col(key) >= lo && col(key) <= hi
+      override def toString: String = s"$key in [$lo, $hi]"
+    }
 
-  /** The [[LookupWindow]] of a string-typed inclusive range (UTF-8
-    * order — the order the recorded min/max were computed in).
-    */
-  private[graft] def stringWindow(statsCol: String, valueLo: String,
-                                  valueHi: String): LookupWindow =
-    LookupWindow(statsCol,
-      admits = {
-        case StringColStats(lo, hi, _) =>
-          utf8Compare(hi, valueLo) >= 0 && utf8Compare(lo, valueHi) <= 0
+    /** Bounds compare in unsigned UTF-8 byte order — the order the
+      * recorded min/max were computed in (Spark's UTF8String), so skip
+      * and scan can never disagree.
+      */
+    final case class StringRange(key: String, lo: String, hi: String)
+        extends KeyRange {
+      require(utf8Compare(lo, hi) <= 0,
+        s"need lo <= hi (UTF-8 order) on $key, got '$lo' > '$hi'")
+      def admits(stats: ColStats): Boolean = stats match {
+        case StringColStats(mn, mx, _) =>
+          utf8Compare(mx, lo) >= 0 && utf8Compare(mn, hi) <= 0
         case _: AllNullColStats => false
         case _                  => true
-      },
-      probe = col(statsCol) >= valueLo && col(statsCol) <= valueHi)
+      }
+      def probe: Column = col(key) >= lo && col(key) <= hi
+      override def toString: String =
+        if (lo == hi) s"$key = '$lo'" else s"$key in ['$lo', '$hi']"
+    }
 
-  /** Shared lookup kernel: select the commit directories ≤ v (and ≥
-    * the base floor) whose recorded stats ADMIT every window — commits
-    * without a marker, or whose marker lacks a window's column, are
-    * conservatively included — then compact only those under the
-    * conjunction of the probes (which also pushes into the scan,
-    * composing with parquet row-group skipping).
+    /** The ranges pushed conjuncts imply — one per key column any of
+      * them constrains, to be INTERSECTED by [[lookup]] (a commit
+      * outside any one column's range cannot hold a row satisfying the
+      * conjunction). Every range is a superset of the conjuncts'
+      * satisfying set:
+      *  - `And` splits; any other composite contributes nothing;
+      *  - strict integral bounds TIGHTEN to the adjacent integer
+      *    (`k > 5` → lo 6), saturating at Long.Min/Max, and open sides
+      *    take Long.Min/Max;
+      *  - a string key needs both bounds (an equality or a closed
+      *    range: no greatest string closes an open side), picked in
+      *    UTF-8 order; strict string bounds stay inclusive;
+      *  - a contradictory window (`k = 5 AND k = 9`) yields no range.
+      * Callers keep the original condition on top, so pruning may only
+      * drop rows the condition drops anyway.
+      */
+    def extract(keys: Seq[String],
+                filters: Seq[org.apache.spark.sql.sources.Filter])
+        : Seq[KeyRange] = {
+      import org.apache.spark.sql.sources._
+      def conjuncts(f: Filter): Seq[Filter] = f match {
+        case And(l, r) => conjuncts(l) ++ conjuncts(r)
+        case other     => Seq(other)
+      }
+      val flat = filters.flatMap(conjuncts)
+      def longOf(v: Any): Option[Long] = v match {
+        case l: Long => Some(l)
+        case i: Int  => Some(i.toLong)
+        case _       => None
+      }
+      def up(x: Long) = if (x == Long.MaxValue) x else x + 1
+      def down(x: Long) = if (x == Long.MinValue) x else x - 1
+      keys.flatMap { key =>
+        var lo: Option[Long] = None
+        var hi: Option[Long] = None
+        var slo: Option[String] = None
+        var shi: Option[String] = None
+        def raise(x: Long): Unit = lo = Some(lo.fold(x)(math.max(_, x)))
+        def lower(x: Long): Unit = hi = Some(hi.fold(x)(math.min(_, x)))
+        def raiseS(x: String): Unit =
+          slo = Some(slo.fold(x)(s => if (utf8Compare(s, x) >= 0) s else x))
+        def lowerS(x: String): Unit =
+          shi = Some(shi.fold(x)(s => if (utf8Compare(s, x) <= 0) s else x))
+        flat.foreach {
+          case EqualTo(`key`, s: String) => raiseS(s); lowerS(s)
+          case EqualTo(`key`, v) =>
+            longOf(v).foreach { x => raise(x); lower(x) }
+          case GreaterThan(`key`, s: String) => raiseS(s)
+          case GreaterThan(`key`, v) => longOf(v).map(up).foreach(raise)
+          case GreaterThanOrEqual(`key`, s: String) => raiseS(s)
+          case GreaterThanOrEqual(`key`, v) => longOf(v).foreach(raise)
+          case LessThan(`key`, s: String) => lowerS(s)
+          case LessThan(`key`, v) => longOf(v).map(down).foreach(lower)
+          case LessThanOrEqual(`key`, s: String) => lowerS(s)
+          case LessThanOrEqual(`key`, v) => longOf(v).foreach(lower)
+          case _ => ()
+        }
+        (slo, shi, lo, hi) match {
+          case (Some(l), Some(h), _, _) =>
+            if (utf8Compare(l, h) <= 0) Some(StringRange(key, l, h)) else None
+          case (_, _, None, None) => None
+          case (_, _, l, h) =>
+            val a = l.getOrElse(Long.MinValue)
+            val b = h.getOrElse(Long.MaxValue)
+            if (a <= b) Some(LongRange(key, a, b)) else None
+        }
+      }
+    }
+  }
+
+  /** The state AS OF `v` of every key inside ALL of `ranges`,
+    * compacting ONLY the commits whose recorded stats admit every
+    * range (plus every unstamped commit, conservatively). At a
+    * 10k-commit log where the key was touched in 3 commits, the lookup
+    * reads 3 commit directories instead of opening 10k footers — the
+    * Delta data-skipping story at the commit level. The probes are
+    * also pushed into the scan, so within an admitted commit parquet
+    * row-group stats prune further. Result is identical to
+    * `snapshotAt(...)` filtered to the ranges (spec-pinned, including
+    * through tombstones and resurrections). `mergeSchema` folds the
+    * admitted commits' footers into their union (an EVOLVED log's
+    * lookup must not let one footer's column set drop later-added
+    * columns).
     */
-  private def rangeLookupImpl(spark: SparkSession, path: String,
-                              keys: Seq[String], v: Long, statsCol: String,
-                              admits: ColStats => Boolean,
-                              probe: org.apache.spark.sql.Column,
-                              mergeSchema: Boolean): DataFrame =
-    rangeLookupImpl(spark, path, keys, v,
-      Seq(LookupWindow(statsCol, admits, probe)), mergeSchema)
-
-  private def rangeLookupImpl(spark: SparkSession, path: String,
-                              keys: Seq[String], v: Long,
-                              windows: Seq[LookupWindow],
-                              mergeSchema: Boolean): DataFrame = {
-    require(windows.nonEmpty, "range lookup needs at least one window")
-    // every stats column must be a KEY column (value constant across a
-    // key's versions): with a non-key statsCol, pushing the window
-    // predicate BEFORE the LWW compaction would resurrect a stale
-    // version whenever the key's latest value moved out of range in a
-    // stats-skipped commit, and tombstones (null data columns) would
-    // be filtered out, un-deleting keys — silently violating the
-    // "identical to snapshotAt(...).filter(...)" contract.
+  def lookup(spark: SparkSession, path: String, keys: Seq[String], v: Long,
+             ranges: Seq[KeyRange], mergeSchema: Boolean = false)
+      : DataFrame = {
+    require(ranges.nonEmpty, "a lookup needs at least one key range")
+    // every range must be on a KEY column (value constant across a
+    // key's versions): on a non-key column, pushing the probe BEFORE
+    // the LWW compaction would resurrect a stale version whenever the
+    // key's latest value moved out of range in a stats-skipped commit,
+    // and tombstones (null data columns) would be filtered out,
+    // un-deleting keys — silently violating the snapshot contract.
     // COLUMN MAPPING never reaches this path: key columns refuse to
     // rename/drop (resolveMappedColumn), so a probe-able stats
     // column's logical and physical spellings coincide by
-    // construction — "a renamed stats column" is an unreachable
-    // state, closed at the rename verb, not translated here. The
-    // RECORDING surface (writeCommitStatsMulti / CALL analyze) does
-    // resolve logical spellings for non-key audit columns.
-    windows.foreach(w => require(keys.contains(w.statsCol),
-      s"statsCol ${w.statsCol} must be one of the key columns " +
+    // construction. The RECORDING surface (writeCommitStatsMulti /
+    // CALL analyze) does resolve logical spellings for non-key audit
+    // columns.
+    ranges.foreach(r => require(keys.contains(r.key),
+      s"range column ${r.key} must be one of the key columns " +
         s"[${keys.mkString(", ")}] — a non-key stats column changes " +
-        "across a key's versions, making the pre-compaction window " +
+        "across a key's versions, making the pre-compaction range " +
         "filter (and the commit skipping) silently wrong"))
-    requireAboveHorizon(path, v, "range-lookup version")
+    requireAboveHorizon(path, v, "lookup version")
     val stats = commitColumnStats(path)
     val floor = baseFloor(path, v)
-    val probe = windows.map(_.probe).reduce(_ && _)
     val selected = LogFs.list(path)
       .filter { s =>
         val n = s.getPath.getName
         n.startsWith(s"$CommitCol=") && {
           val id = n.stripPrefix(s"$CommitCol=").toLong
-          id <= v && id >= floor && windows.forall(w =>
-            stats.get(id).forall(_.get(w.statsCol).forall(w.admits)))
+          id <= v && id >= floor && ranges.forall(r =>
+            stats.get(id).forall(_.get(r.key).forall(r.admits)))
         }
       }
-    // mergeSchema folds the ADMITTED commits' footers into their union
-    // (an EVOLVED log's lookup must not let one footer's column set
-    // silently drop later-added columns); fixed-schema logs keep the
-    // single-footer inference
     val ms = mergeSchema.toString
     val log =
       if (selected.isEmpty)
-        // nothing admits the window: any commit's schema gives the
+        // nothing admits the ranges: any commit's schema gives the
         // shape, the false filter gives the empty result without a scan
         spark.read.option("mergeSchema", ms).parquet(path)
           .filter(lit(false))
       else
         spark.read.option("basePath", path).option("mergeSchema", ms)
           .parquet(selected.map(_.getPath.toString): _*)
-    live(compact(log.filter(col(CommitCol) <= v && probe), keys))
+    live(compact(log.filter(col(CommitCol) <= v &&
+      ranges.map(_.probe).reduce(_ && _)), keys))
   }
 
   /** MERGE INTO the ops log — the lakehouse three-clause merge,
@@ -2741,64 +2724,54 @@ object Changelog {
     * (their commits are gone) and the stats marker AT v — the fold
     * REWROTE `_commit=v` with the full live state, so a pre-fold
     * marker's range no longer bounds the directory's content and a
-    * stale one would make [[pointLookupOps]] silently wrong-skip
+    * stale one would make [[lookup]] silently wrong-skip
     * (recompute with [[writeCommitStats]] after the checkpoint if the
     * base should be skippable). Commit STAMPS survive on purpose —
     * the folded base still answers "as of" its instant exactly.
     */
   private def vacuumBelow(path: String, v: Long,
                           statsAtVStale: Boolean = true): Unit = {
-    LogFs.list(path)
-      .filter { s =>
-        val n = s.getPath.getName
-        n.startsWith(s"$CommitCol=") &&
-          n.stripPrefix(s"$CommitCol=").toLong < v
-      }
-      .foreach(s => LogFs.delete(s.getPath.toString))
+    // one listing serves every marker class: deleting a commit dir
+    // never adds or removes a root-level marker file
+    val listed = LogFs.list(path)
+    def idBelow(n: String, prefix: String): Boolean =
+      n.startsWith(prefix) && n.stripPrefix(prefix).toLong < v
+    def drop(p: org.apache.hadoop.fs.FileStatus => Boolean): Unit =
+      listed.filter(p).foreach(s => LogFs.delete(s.getPath.toString))
+    drop(s => idBelow(s.getPath.getName, s"$CommitCol="))
     // the stats marker AT v is stale when the caller REWROTE the
     // directory (a checkpoint's fold — the old ranges no longer bound
     // it; `analyze` re-arms) but still load-bearing when the caller
     // only reclaimed history below an INTACT base (vacuumRetain)
-    LogFs.list(path)
-      .filter { s =>
-        val n = s.getPath.getName
-        s.isFile && n.startsWith(StatsPrefix) && {
-          val id = n.stripPrefix(StatsPrefix).toLong
-          id < v || (statsAtVStale && id == v)
-        }
+    drop { s =>
+      val n = s.getPath.getName
+      s.isFile && n.startsWith(StatsPrefix) && {
+        val id = n.stripPrefix(StatsPrefix).toLong
+        id < v || (statsAtVStale && id == v)
       }
-      .foreach(s => LogFs.delete(s.getPath.toString))
+    }
     // claim markers below the horizon are stale (their commit dirs are
     // gone and no writer may land below the horizon again); the claim
     // AT v stays — the folded base is still commit v. Base markers
     // below v go with their vacuumed commits; a base AT v stays valid
-    // (the fold is itself a complete base).
-    LogFs.list(path)
-      .filter { s =>
-        val n = s.getPath.getName
-        s.isFile &&
-          ((n.startsWith(ClaimPrefix) &&
-            n.stripPrefix(ClaimPrefix).toLong < v) ||
-           (n.startsWith(BasePrefix) &&
-            n.stripPrefix(BasePrefix).toLong < v) ||
-           // info markers go with their vacuumed commits; the marker AT
-           // v was re-recorded as 'checkpoint' by the fold, so only
-           // strictly-below entries are stale
-           (n.startsWith(InfoPrefix) &&
-            n.stripPrefix(InfoPrefix).toLong < v))
-      }
-      .foreach(s => LogFs.delete(s.getPath.toString))
+    // (the fold is itself a complete base). Info markers go with their
+    // vacuumed commits; the marker AT v was re-recorded as
+    // 'checkpoint' by the fold, so only strictly-below entries are
+    // stale
+    drop { s =>
+      val n = s.getPath.getName
+      s.isFile && (idBelow(n, ClaimPrefix) || idBelow(n, BasePrefix) ||
+        idBelow(n, InfoPrefix))
+    }
     // sink epoch→commit map markers point at a commit id in their
     // CONTENT; one below the horizon maps a folded commit — a replayed
     // epoch can never legally re-land there (Spark only redelivers the
     // last uncommitted epoch, which is above any sane horizon), so the
     // marker is stale metadata and goes with the claims
-    LogFs.list(path)
-      .filter { s =>
-        s.isFile && s.getPath.getName.startsWith(SinkMapPrefix) &&
-          scala.util.Try(LogFs.readString(s.getPath.toString).trim.toLong)
-            .toOption.exists(_ < v)
-      }
-      .foreach(s => LogFs.delete(s.getPath.toString))
+    drop { s =>
+      s.isFile && s.getPath.getName.startsWith(SinkMapPrefix) &&
+        scala.util.Try(LogFs.readString(s.getPath.toString).trim.toLong)
+          .toOption.exists(_ < v)
+    }
   }
 }

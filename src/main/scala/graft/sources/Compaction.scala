@@ -27,11 +27,11 @@ object Compaction {
   /** Data bytes in `path` per the driver-side listing (data files
     * only — excludes _SUCCESS/metadata sidecars).
     */
-  def dataBytes(spark: SparkSession, path: String): Long =
+  def dataBytes(path: String): Long =
     ParquetMeta.dataFiles(path).map(_.getLen).sum
 
   /** Data file count under `path` (sizing-law assertions). */
-  def fileCount(spark: SparkSession, path: String): Int =
+  def fileCount(path: String): Int =
     ParquetMeta.dataFiles(path).size
 
   /** Compact `inPath` into `outPath` at ~`targetBytes` per file.
@@ -40,7 +40,7 @@ object Compaction {
   def compact(spark: SparkSession, inPath: String, outPath: String,
               targetBytes: Long): Int = {
     require(targetBytes > 0, s"targetBytes must be > 0, got $targetBytes")
-    val bytes = dataBytes(spark, inPath)
+    val bytes = dataBytes(inPath)
     val nFiles = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
     spark.read.parquet(inPath)
       .repartition(nFiles)

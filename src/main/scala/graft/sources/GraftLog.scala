@@ -55,8 +55,8 @@ import graft.streaming.CdcSource
   *    compaction;
   *  - a filter the user stacks on top participates in Catalyst's
   *    ordinary pushdown into the underlying parquet scans;
-  *  - an eq/range filter on a KEY column is recognized by the rule and
-  *    routed through [[Changelog.rangeLookupOps]] — the commit-stats
+  *  - eq/range filters on KEY columns are recognized by the rule and
+  *    routed through [[Changelog.lookup]] — the commit-stats
   *    file index then prunes whole commit directories DRIVER-SIDE
   *    before any footer opens, and the pruning is visible structurally:
   *    `df.inputFiles` lists only admitted `_commit=` directories

@@ -40,8 +40,8 @@ import graft.streaming.{CdcSource, LogSink}
   * discipline for serving a derived read through a row-serving
   * interface). One snapshot materialization is a row-level rewrite's
   * honest cost — and it is PRUNED, not blind: pushed eq/range
-  * conjuncts on a key column route the spool source through
-  * [[Changelog.rangeLookupOps]], so the commit-stats index drops
+  * conjuncts on key columns route the spool source through
+  * [[Changelog.lookup]], so the commit-stats index drops
   * whole commit directories driver-side before any footer opens (the
   * q215 skipping surface, now under UPDATE). The spool is swept at
   * commit/abort; a crash in between leaves only staging debris,
@@ -84,7 +84,7 @@ object GraftRowLevel {
   private[graft] val spoolsPlanned =
     new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** The last built row-level scan's extracted key window (rendered),
+  /** The last built row-level scan's extracted key ranges (rendered),
     * None when the spool was the full snapshot — spec observability
     * for the pruning leg.
     */
@@ -197,9 +197,10 @@ object GraftRowLevel {
     * PRUNING-ONLY: every filter is reported back as post-scan (Spark
     * re-applies the full condition above), and the pushed conjuncts
     * only SHRINK the spool, twice over —
-    *  - eq/range conjuncts on a KEY column narrow the spool SOURCE to
-    *    the stats-skipping lookup (whole commit directories dropped
-    *    driver-side — a provable superset of the condition);
+    *  - eq/range conjuncts on KEY columns narrow the spool SOURCE to
+    *    the stats-skipping lookup over [[Changelog.KeyRange.extract]]'s
+    *    ranges (whole commit directories dropped driver-side — a
+    *    provable superset of the condition);
     *  - every TRANSLATABLE filter then applies to the snapshot before
     *    it spools, so the materialized spool is O(matched rows), not
     *    O(snapshot) — at scale, `UPDATE … WHERE <selective>` stages
@@ -213,11 +214,11 @@ object GraftRowLevel {
                                          spoolDir: String)
       extends ScanBuilder with SupportsPushDownFilters {
 
-    private var windows: Seq[KeyWindow] = Seq.empty
+    private var ranges: Seq[Changelog.KeyRange] = Seq.empty
     private var pruning: Array[Filter] = Array.empty
 
     override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-      windows = extractWindows(opts.keys, filters)
+      ranges = Changelog.KeyRange.extract(opts.keys, filters.toSeq)
       pruning = filters
       filters // all of them re-evaluate above the scan — pruning only
     }
@@ -225,121 +226,27 @@ object GraftRowLevel {
     override def pushedFilters(): Array[Filter] = Array.empty
 
     override def build(): Scan =
-      new SnapshotSpoolScan(spark, opts, head, spoolDir, windows, pruning)
-  }
-
-  private[graft] sealed trait KeyWindow { def key: String }
-  private[graft] case class LongWindow(key: String, lo: Long, hi: Long)
-      extends KeyWindow
-  private[graft] case class StringWindow(key: String, lo: String,
-                                         hi: String)
-      extends KeyWindow
-
-  /** The widest inclusive window the pushed conjuncts imply for EVERY
-    * key column any of them constrains — the
-    * [[graft.plans.ResolveGraftLog]] extraction re-stated over
-    * `sources.Filter` (the shape V2ScanRelationPushDown hands a V1
-    * pushdown), one window per constrained column: the lookup kernel
-    * INTERSECTS them (a commit outside any one column's recorded range
-    * cannot hold a row satisfying the conjunction), so a composite-key
-    * statement prunes by every column its condition pins, not just the
-    * first. Strings prune by equality AND by closed ranges (both
-    * bounds present — the stats marker records UTF-8 min/max, the same
-    * order the probe compares in). `And` splits; any other composite
-    * contributes nothing. Strict bounds widen to inclusive — pruning
-    * may only over-admit, never drop (the full condition re-evaluates
-    * above the scan).
-    */
-  private[graft] def extractWindows(keys: Seq[String],
-                                    filters: Array[Filter])
-      : Seq[KeyWindow] = {
-    import org.apache.spark.sql.sources._
-    def conjuncts(f: Filter): Seq[Filter] = f match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case other     => Seq(other)
-    }
-    val flat = filters.toSeq.flatMap(conjuncts)
-    def longOf(v: Any): Option[Long] = v match {
-      case l: Long => Some(l)
-      case i: Int  => Some(i.toLong)
-      case _       => None
-    }
-    def strOf(v: Any): Option[String] = v match {
-      case s: String => Some(s)
-      case _         => None
-    }
-    keys.flatMap { key =>
-      var lo: Option[Long] = None
-      var hi: Option[Long] = None
-      var slo: Option[String] = None
-      var shi: Option[String] = None
-      def maxS(a: Option[String], x: String) =
-        Some(a.fold(x)(v => if (v >= x) v else x))
-      def minS(a: Option[String], x: String) =
-        Some(a.fold(x)(v => if (v <= x) v else x))
-      flat.foreach {
-        case EqualTo(a, v) if a == key =>
-          longOf(v).foreach { x =>
-            lo = Some(lo.fold(x)(math.max(_, x)))
-            hi = Some(hi.fold(x)(math.min(_, x)))
-          }
-          strOf(v).foreach { s => slo = maxS(slo, s); shi = minS(shi, s) }
-        case GreaterThan(a, v) if a == key =>
-          longOf(v).foreach(x => lo = Some(lo.fold(x)(math.max(_, x))))
-          strOf(v).foreach(s => slo = maxS(slo, s))
-        case GreaterThanOrEqual(a, v) if a == key =>
-          longOf(v).foreach(x => lo = Some(lo.fold(x)(math.max(_, x))))
-          strOf(v).foreach(s => slo = maxS(slo, s))
-        case LessThan(a, v) if a == key =>
-          longOf(v).foreach(x => hi = Some(hi.fold(x)(math.min(_, x))))
-          strOf(v).foreach(s => shi = minS(shi, s))
-        case LessThanOrEqual(a, v) if a == key =>
-          longOf(v).foreach(x => hi = Some(hi.fold(x)(math.min(_, x))))
-          strOf(v).foreach(s => shi = minS(shi, s))
-        case _ => ()
-      }
-      (slo, shi) match {
-        // a string window needs BOTH bounds (the stats lookup is a
-        // closed range); half-open long windows widen to ±∞
-        case (Some(l), Some(h)) if l <= h => Some(StringWindow(key, l, h))
-        case _ if lo.isDefined || hi.isDefined =>
-          val l = lo.getOrElse(Long.MinValue)
-          val h = hi.getOrElse(Long.MaxValue)
-          if (l <= h) Some(LongWindow(key, l, h)) else None
-        case _ => None
-      }
-    }
+      new SnapshotSpoolScan(spark, opts, head, spoolDir, ranges, pruning)
   }
 
   private class SnapshotSpoolScan(spark: SparkSession, opts: GraftLog.Opts,
                                   head: Long, spoolDir: String,
-                                  windows: Seq[KeyWindow],
+                                  ranges: Seq[Changelog.KeyRange],
                                   pruning: Array[Filter])
       extends Scan with Batch {
 
     GraftRowLevel.lastWindow.set(
-      if (windows.isEmpty) None
-      else Some(windows.map {
-        case LongWindow(k, lo, hi) => s"$k in [$lo, $hi]"
-        case StringWindow(k, lo, hi) if lo == hi => s"$k = '$lo'"
-        case StringWindow(k, lo, hi) => s"$k in ['$lo', '$hi']"
-      }.mkString(" & ")))
+      if (ranges.isEmpty) None else Some(ranges.mkString(" & ")))
 
     private val snapshot: DataFrame = {
       import org.apache.spark.sql.functions.{col, lit}
       val source =
-        if (windows.nonEmpty)
-          // one lookup window per constrained key column — the kernel
+        if (ranges.nonEmpty)
+          // one range per constrained key column — the lookup
           // INTERSECTS their stats admissions, so a composite-key
           // statement opens strictly fewer commits than any single
-          // column's window alone
-          Changelog.rangeLookupOpsWindows(spark, opts.path, opts.keys,
-            head,
-            windows.map {
-              case LongWindow(k, lo, hi)   => Changelog.longWindow(k, lo, hi)
-              case StringWindow(k, lo, hi) =>
-                Changelog.stringWindow(k, lo, hi)
-            },
+          // column's range alone
+          Changelog.lookup(spark, opts.path, opts.keys, head, ranges,
             mergeSchema = opts.mergeSchema)
         else Changelog.snapshotAt(spark, opts.path, opts.keys, head,
           opts.mergeSchema)
@@ -393,8 +300,8 @@ object GraftRowLevel {
 
     override def description(): String = {
       val pruned =
-        if (windows.isEmpty) "full"
-        else s"key-windows on ${windows.map(_.key).mkString(", ")}"
+        if (ranges.isEmpty) "full"
+        else s"key ranges on ${ranges.map(_.key).mkString(", ")}"
       s"graft_log row-level snapshot spool over ${opts.path} @ $head " +
         s"($pruned)"
     }

@@ -44,3 +44,14 @@ object FunctionBridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.tableFunctionRegistry.registerFunction(id, info, builder)
 }
+
+/** Catalyst predicate → `sources.Filter` (`DataSourceStrategy.
+  * translateFilter` is `protected[sql]`): the one vocabulary the
+  * changelog's key-range extraction reads, whichever surface pushed
+  * the predicate. Top-level columns only; None when untranslatable.
+  */
+object FilterBridge {
+  def translate(e: Expression): Option[org.apache.spark.sql.sources.Filter] =
+    org.apache.spark.sql.execution.datasources.DataSourceStrategy
+      .translateFilter(e, supportNestedPredicatePushdown = false)
+}

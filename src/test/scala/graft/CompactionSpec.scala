@@ -16,13 +16,13 @@ class CompactionSpec extends SparkSpec {
     val df = (0L until 20000L).map(i => (i, s"row_$i", i * 0.5))
       .toDF("id", "name", "v")
     df.repartition(64).write.mode("overwrite").parquet(in)
-    assert(Compaction.fileCount(spark, in) == 64)
+    assert(Compaction.fileCount(in) == 64)
 
-    val bytes = Compaction.dataBytes(spark, in)
+    val bytes = Compaction.dataBytes(in)
     val target = bytes / 3 + 1 // expect ceil(bytes/target) = 3
     val n = Compaction.compact(spark, in, out, target)
     assert(n == 3)
-    assert(Compaction.fileCount(spark, out) == 3)
+    assert(Compaction.fileCount(out) == 3)
     // content identity (multiset)
     val a = Compaction.read(spark, out).as[(Long, String, Double)]
       .collect().sorted.toSeq
@@ -36,7 +36,7 @@ class CompactionSpec extends SparkSpec {
     (0L until 100L).toDF("id").repartition(8)
       .write.mode("overwrite").parquet(in)
     assert(Compaction.compact(spark, in, out, Long.MaxValue / 2) == 1)
-    assert(Compaction.fileCount(spark, out) == 1)
+    assert(Compaction.fileCount(out) == 1)
     assert(Compaction.read(spark, out).count() == 100L)
   }
 }

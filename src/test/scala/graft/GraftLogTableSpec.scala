@@ -456,7 +456,7 @@ class GraftLogTableSpec extends SparkSpec {
       .snapshotAt(spark, path, Seq("k"), Long.MaxValue)
       .as[(Long, Double)].collect().toMap
     val spools0 = GraftRowLevel.spoolsPlanned.get()
-    // key-window predicate: the spool routes through rangeLookupOps
+    // key-range predicate: the spool routes through Changelog.lookup
     spark.sql("UPDATE glogspec5.t SET v = v + 7.0 WHERE k >= 30 AND k < 35")
     assert(GraftRowLevel.spoolsPlanned.get() == spools0 + 1,
       "UPDATE must pay exactly one snapshot spool")

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.ext.TopK
 import graft.sources.{Changelog, Sinks}
+import graft.sources.Changelog.KeyRange.{LongRange, StringRange}
 
 /** Unit tests for the round-10 lakehouse additions: skew-resistant
   * two-phase grouped top-k (ext/TopK) and the commit-partitioned
@@ -989,12 +990,12 @@ class TopKChangelogSpec extends SparkSpec {
       spark.range(150, 160).select(col("id").as("k")), path, 3L)
     for (c <- 0L to 3L) Changelog.writeCommitStats(spark, path, c, "k")
     def lookup(k: Long) =
-      Changelog.pointLookupOps(spark, path, Seq("k"), 3L, "k", k)
+      Changelog.lookup(spark, path, Seq("k"), 3L, Seq(LongRange("k", k, k)))
     // a key ONLY commit 1 admits (commit 3's range is 150–159): the
     // scan's file index holds commit 1's directory and no other — the
     // skipping happened at PLANNING time, before any footer opened
-    val plan149 = Changelog.pointLookupOps(spark, path, Seq("k"), 3L,
-        "k", 149L)
+    val plan149 = Changelog.lookup(spark, path, Seq("k"), 3L,
+        Seq(LongRange("k", 149L, 149L)))
       .queryExecution.executedPlan.toString
     assert(plan149.contains("_commit=1") &&
       !plan149.contains("_commit=0") && !plan149.contains("_commit=2") &&
@@ -1016,21 +1017,21 @@ class TopKChangelogSpec extends SparkSpec {
           .filter(col("k") === k).as[(Long, String)].collect().toSeq, s"k=$k")
     // the RANGE form (q198): [100, 149] intersects only commit 1's
     // range; the window compacts exactly the unpruned slice
-    val planR = Changelog.rangeLookupOps(spark, path, Seq("k"), 3L,
-        "k", 100L, 149L)
+    val planR = Changelog.lookup(spark, path, Seq("k"), 3L,
+        Seq(LongRange("k", 100L, 149L)))
       .queryExecution.executedPlan.toString
     assert(planR.contains("_commit=1") && !planR.contains("_commit=0") &&
       !planR.contains("_commit=2") && !planR.contains("_commit=3"),
       s"range lookup planned outside the admitting commits:\n" +
         planR.take(2000))
-    assert(Changelog.rangeLookupOps(spark, path, Seq("k"), 3L,
-        "k", 90L, 160L)
+    assert(Changelog.lookup(spark, path, Seq("k"), 3L,
+        Seq(LongRange("k", 90L, 160L)))
       .as[(Long, String)].collect().toMap ==
       Changelog.snapshotAt(spark, path, Seq("k"), 3L)
         .filter(col("k").between(90L, 160L))
         .as[(Long, String)].collect().toMap)
     intercept[IllegalArgumentException](
-      Changelog.rangeLookupOps(spark, path, Seq("k"), 3L, "k", 5L, 1L))
+      Changelog.lookup(spark, path, Seq("k"), 3L, Seq(LongRange("k", 5L, 1L))))
     // a commit WITHOUT stats is conservatively included: drop commit
     // 1's marker, the lookup still answers exactly
     assert(new java.io.File(path, "_graft_stats_1").delete())
@@ -1045,12 +1046,13 @@ class TopKChangelogSpec extends SparkSpec {
     val left = Changelog.commitColumnStats(path).keySet
     assert(!left.contains(2L) && !left.contains(0L),
       s"stale markers survived the fold: $left")
-    assert(Changelog.pointLookupOps(spark, path, Seq("k"), 3L, "k", 160L)
+    assert(Changelog.lookup(spark, path, Seq("k"), 3L,
+        Seq(LongRange("k", 160L, 160L)))
       .as[(Long, String)].collect().toSeq == Seq((160L, "b160")))
     // statsCol must be a KEY column: a non-key column changes across a
     // key's versions, making pre-compaction filtering silently wrong
     val ek = intercept[IllegalArgumentException](
-      Changelog.rangeLookupOps(spark, path, Seq("k"), 3L, "v2", 0L, 1L))
+      Changelog.lookup(spark, path, Seq("k"), 3L, Seq(LongRange("v2", 0L, 1L))))
     assert(ek.getMessage.contains("key column"))
   }
 
@@ -1087,8 +1089,8 @@ class TopKChangelogSpec extends SparkSpec {
     assert(st(3L)("aux") == Changelog.AllNullColStats(10L))
     // a lookup in the b-range plans ONLY commits 1 and 3 (the a-range
     // commits 0/2 excluded by their string stats)
-    val plan = Changelog.rangeLookupOpsString(spark, path, Seq("k"), 3L,
-        "k", "b040", "b070")
+    val plan = Changelog.lookup(spark, path, Seq("k"), 3L,
+        Seq(StringRange("k", "b040", "b070")))
       .queryExecution.executedPlan.toString
     // exactly two directories in the scan's file index (1 and 3; the
     // rendered path list truncates, so count + exclusions carry the
@@ -1098,8 +1100,8 @@ class TopKChangelogSpec extends SparkSpec {
       s"string lookup planned outside the admitting commits:\n" +
         plan.take(2000))
     // exactness across every delete class, vs the unpruned snapshot
-    val got = Changelog.rangeLookupOpsString(spark, path, Seq("k"), 3L,
-        "k", "b040", "b070")
+    val got = Changelog.lookup(spark, path, Seq("k"), 3L,
+        Seq(StringRange("k", "b040", "b070")))
       .select("k", "v").as[(String, String)].collect().toMap
     val want = Changelog.snapshotAt(spark, path, Seq("k"), 3L)
       .filter(col("k") >= "b040" && col("k") <= "b070")
@@ -1107,19 +1109,19 @@ class TopKChangelogSpec extends SparkSpec {
     assert(got == want && got.size == 21 && !got.contains("b055"))
     // point form: a rewritten key resolves to its LATEST version
     // through the pruned read
-    assert(Changelog.pointLookupOpsString(spark, path, Seq("k"), 3L,
-        "k", "a042")
+    assert(Changelog.lookup(spark, path, Seq("k"), 3L,
+        Seq(StringRange("k", "a042", "a042")))
       .select("k", "v").as[(String, String)].collect().toSeq ==
       Seq(("a042", "wa042")))
     // out-of-universe probe: every commit skipped, exact empty
-    assert(Changelog.pointLookupOpsString(spark, path, Seq("k"), 3L,
-      "k", "zzz").isEmpty)
+    assert(Changelog.lookup(spark, path, Seq("k"), 3L,
+      Seq(StringRange("k", "zzz", "zzz"))).isEmpty)
     // an ALL-NULL column as the probe target would wrong-skip only if
     // the admit logic were wrong — prove the skip is sound: aux is a
     // non-key column, so the guard refuses it loudly instead
     intercept[IllegalArgumentException](
-      Changelog.pointLookupOpsString(spark, path, Seq("k"), 3L,
-        "k2", "x"))
+      Changelog.lookup(spark, path, Seq("k"), 3L,
+        Seq(StringRange("k2", "x", "x"))))
     // UTF-8 vs UTF-16 order: a supplementary-plane key sorts ABOVE
     // 0xFFFF-class chars in UTF-8 byte order (Spark's order) while
     // Java's compareTo would sort it below — the driver must agree
@@ -1135,8 +1137,8 @@ class TopKChangelogSpec extends SparkSpec {
       path, 5L)
     for (c <- 4L to 5L)
       Changelog.writeCommitStatsMulti(spark, path, c, Seq("k"))
-    assert(Changelog.pointLookupOpsString(spark, path, Seq("k"), 5L,
-        "k", supp)
+    assert(Changelog.lookup(spark, path, Seq("k"), 5L,
+        Seq(StringRange("k", supp, supp)))
       .select("k", "v").as[(String, String)].collect().toSeq ==
       Seq((supp, "vs")))
   }
@@ -1369,7 +1371,8 @@ class TopKChangelogSpec extends SparkSpec {
     // stats markers + pruned lookup through the URI
     for (c <- 0L to 2L) Changelog.writeCommitStats(spark, path, c, "k")
     assert(new java.io.File(base, "_graft_stats_2").isFile)
-    assert(Changelog.pointLookupOps(spark, path, Seq("k"), 2L, "k", 3L)
+    assert(Changelog.lookup(spark, path, Seq("k"), 2L,
+        Seq(LongRange("k", 3L, 3L)))
       .as[(Long, String)].collect().toSeq == Seq((3L, "c")))
     // shallow clone URI → URI (local fs on both sides: hardlinks)
     val destBase = Sinks.tmpPath("changelog_spec_hadoopfs_clone")
@@ -1571,8 +1574,9 @@ class TopKChangelogSpec extends SparkSpec {
           s"want ${expectTouched(lo, hi)}")
     // the string stats marker feeds the skipping lookup exactly
     assert(Changelog.commitColumnStats(path)(3L).contains("k"))
-    assert(Changelog.pointLookupOpsString(spark, path, Seq("k"),
-        Long.MaxValue, "k", key(20)).as[(String, String)]
+    assert(Changelog.lookup(spark, path, Seq("k"),
+        Long.MaxValue, Seq(StringRange("k", key(20), key(20))))
+      .as[(String, String)]
       .collect().toSeq == Seq((key(20), "r20")))
   }
 
@@ -1618,8 +1622,8 @@ class TopKChangelogSpec extends SparkSpec {
     val stats = Changelog.commitColumnStats(path)(2L)
     assert(stats.contains("x") && stats.contains("y"))
     // commit-level skipping composes on either dimension
-    assert(Changelog.rangeLookupOps(spark, path, Seq("x", "y"),
-        Long.MaxValue, "y", 5L, 5L)
+    assert(Changelog.lookup(spark, path, Seq("x", "y"),
+        Long.MaxValue, Seq(LongRange("y", 5L, 5L)))
       .count() == 32L)
   }
 
