@@ -1323,9 +1323,8 @@ object TableFormatQueries {
           "CALL glog.system.vacuum('orders_ops_q245', 99)").collect())
         .isFailure, "retain_version above the head must refuse loudly")
       s.sql("CALL glog.system.vacuum('orders_ops_q245', 3)").collect()
-      require(!LogFs.exists(LogFs.child(path,
-          s"${Changelog.CommitCol}=0")) &&
-        !LogFs.exists(LogFs.child(path, s"${Changelog.CommitCol}=2")),
+      require(!LogFs.exists(Changelog.commitDir(path, 0L)) &&
+        !LogFs.exists(Changelog.commitDir(path, 2L)),
         "directories below the base must be physically gone")
       require(scala.util.Try(s.sql(
           "SELECT * FROM glog.orders_ops_q245 VERSION AS OF 1")
@@ -1376,9 +1375,8 @@ object TableFormatQueries {
       // the real reclaim: t=4.25s resolves to the base (commit 3)
       s.sql("CALL glog.system.vacuum_at('orders_ops_q254', " +
         "'1970-01-01 00:00:04.250')").collect()
-      require(!LogFs.exists(LogFs.child(path,
-          s"${Changelog.CommitCol}=0")) &&
-        !LogFs.exists(LogFs.child(path, s"${Changelog.CommitCol}=2")),
+      require(!LogFs.exists(Changelog.commitDir(path, 0L)) &&
+        !LogFs.exists(Changelog.commitDir(path, 2L)),
         "directories below the base must be physically gone")
       require(scala.util.Try(s.sql(
           "SELECT * FROM glog.orders_ops_q254 VERSION AS OF 1")
@@ -1638,8 +1636,7 @@ object TableFormatQueries {
         "SELECT o_orderkey, o_totalprice + 10000.0, 'late' " +
         "FROM orders_src_q251 WHERE o_orderkey % 2 = 0")
       val lateCommit = Changelog.commitInfos(loc).keys.max
-      require(s.read.parquet(
-          s"$loc/${Changelog.CommitCol}=$lateCommit").columns
+      require(s.read.parquet(Changelog.commitDir(loc, lateCommit)).columns
           .contains("o_totalprice"),
         "post-rename commits must land under the PHYSICAL column name")
       // renaming onto an existing logical name refuses

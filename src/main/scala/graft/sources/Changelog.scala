@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -42,6 +43,109 @@ import org.apache.spark.sql.functions._
 object Changelog {
 
   val CommitCol = "_commit"
+
+  // ---- The log's names: one listing ---------------------------------
+  //
+  // The log root holds `_commit=<id>` commit directories and
+  // `_graft_<kind>_<key>` marker files (underscore-prefixed, so Spark's
+  // file index skips them), parsed in [[Listing]] and nowhere else. A
+  // verb takes ONE listing where it first needs the root and passes it
+  // down; a read that must see its own write, or a racing writer's,
+  // takes a fresh one.
+
+  /** A marker class: `prefix + key`, the key a commit id, or a
+    * free-form name for [[Marker.Check]] and [[Marker.SinkMap]].
+    */
+  private[graft] final case class Marker(prefix: String) {
+    def at(path: String, key: Any): String = LogFs.child(path, s"$prefix$key")
+  }
+
+  private[graft] object Marker {
+    val Stamp = Marker("_graft_ts_")
+    val Claim = Marker("_graft_claim_")
+    val Info = Marker("_graft_info_")
+    val Base = Marker("_graft_base_")
+    val Stats = Marker("_graft_stats_")
+    val Mapping = Marker("_graft_mapping_")
+    val Check = Marker("_graft_check_")
+    /** Streaming-sink epoch→commit map markers (multi-writer mode),
+      * `_graft_sinkmap_<queryId>_<epoch>` holding the commit id the
+      * epoch landed at, and idempotent-append txn markers
+      * (`_graft_sinkmap_txn_<writer>_<version>`). [[vacuumBelow]]
+      * sweeps them by the commit id in their content.
+      */
+    val SinkMap = Marker("_graft_sinkmap_")
+    val all: Seq[Marker] =
+      Seq(Stamp, Claim, Info, Base, Stats, Mapping, Check, SinkMap)
+    /** The classes [[vacuumBelow]] deletes with the commits they
+      * describe. Stamps outlive a fold on purpose.
+      */
+    val sweptBelow: Seq[Marker] = Seq(Claim, Info, Base, Stats)
+    /** The classes [[cloneAt]] copies at or below the clone version. */
+    val cloned: Seq[Marker] = Seq(Stamp, Claim, Info, Base, Stats, Mapping)
+  }
+
+  private val CommitPrefix = s"$CommitCol="
+
+  /** Commit `id`'s directory under the log root. */
+  private[graft] def commitDir(path: String, id: Long): String =
+    LogFs.child(path, s"$CommitPrefix$id")
+
+  /** One `LogFs.list` of the log root ([[Listing.of]]), parsed: the
+    * commit directories and the marker files by class. A name of no
+    * class (`_SUCCESS`, the horizon, an unknown `_graft_` file) is
+    * ignored.
+    */
+  private[graft] final class Listing private (val path: String,
+                                              entries: Seq[FileStatus]) {
+    private val named = entries.map(s => s.getPath.getName -> s)
+
+    /** The landed commits as (id, directory) in NAME order, the order
+      * a directory walk visits: `_commit=10` before `_commit=2`.
+      */
+    val commitDirs: Seq[(Long, String)] = named.sortBy(_._1).collect {
+      case (n, s) if n.startsWith(CommitPrefix) =>
+        n.stripPrefix(CommitPrefix).toLong -> s.getPath.toString
+    }
+
+    /** The landed commit ids, ascending. */
+    val commitIds: Seq[Long] = commitDirs.map(_._1).sorted
+
+    def head: Option[Long] = commitIds.lastOption
+
+    private val markers: Map[Marker, Seq[(String, FileStatus)]] =
+      named.filter(_._2.isFile).flatMap { case (n, s) =>
+        Marker.all.find(m => n.startsWith(m.prefix))
+          .map(m => m -> (n.stripPrefix(m.prefix) -> s))
+      }.groupMap(_._1)(_._2)
+
+    /** The markers of class `m` as (key, file). */
+    def keyed(m: Marker): Seq[(String, FileStatus)] =
+      markers.getOrElse(m, Nil)
+
+    /** The id-keyed markers of class `m` as (id, file), id ascending. */
+    def ids(m: Marker): Seq[(Long, FileStatus)] =
+      keyed(m).map { case (k, s) => k.toLong -> s }.sortBy(_._1)
+
+    /** Whether the root-level file `name` is listed. */
+    def has(name: String): Boolean = named.exists(_._1 == name)
+
+    /** The newest base at or below `v` (reads at v start there). */
+    def baseFloor(v: Long): Long =
+      ids(Marker.Base).map(_._1).filter(_ <= v)
+        .foldLeft(Long.MinValue)(math.max)
+
+    /** The log's first data file in name order, listing only the
+      * commit directories on the way to it.
+      */
+    def firstDataFile: Option[FileStatus] =
+      commitDirs.iterator.flatMap(d => ParquetMeta.dataFiles(d._2))
+        .nextOption()
+  }
+
+  private[graft] object Listing {
+    def of(path: String): Listing = new Listing(path, LogFs.list(path))
+  }
 
   // ---- Checkpoint horizon -------------------------------------------
   //
@@ -89,13 +193,15 @@ object Changelog {
     }
   }
 
-  private def requireAboveHorizon(path: String, v: Long, what: String): Unit = {
+  /** Loud when `v` is below the horizon; returns the horizon. */
+  private def requireAboveHorizon(path: String, v: Long, what: String): Long = {
     val h = horizonOf(path)
     require(v >= h,
       s"$what $v is below the checkpoint horizon $h of $path — history " +
         "below the horizon was folded away; a snapshot there would read " +
         "empty and a change feed would mislabel every surviving key as " +
         "insert. Re-base the reader at or above the horizon.")
+    h
   }
 
   // ---- Commit timestamps: AS OF TIMESTAMP ---------------------------
@@ -119,16 +225,14 @@ object Changelog {
   // horizon fails through the same loud horizon guard as a versioned
   // read (retention applies to clock addressing too, never silently).
 
-  private val TsPrefix = "_graft_ts_"
-
   /** All recorded (commitId, tsMillis) stamps, commit-id ascending. */
   def commitTimestamps(path: String): Seq[(Long, Long)] =
-    LogFs.list(path)
-      .filter(s => s.isFile && s.getPath.getName.startsWith(TsPrefix))
-      .map { s =>
-        (s.getPath.getName.stripPrefix(TsPrefix).toLong,
-          LogFs.readString(s.getPath.toString).trim.toLong)
-      }.sortBy(_._1)
+    commitTimestamps(Listing.of(path))
+
+  private def commitTimestamps(l: Listing): Seq[(Long, Long)] =
+    l.ids(Marker.Stamp).map { case (id, s) =>
+      id -> LogFs.readString(s.getPath.toString).trim.toLong
+    }
 
   /** Record commit `commitId`'s timestamp. Must stamp an EXISTING
     * commit (stamp after the commit lands — a stamp for data that
@@ -137,17 +241,19 @@ object Changelog {
     * written (equal re-stamp = idempotent no-op).
     */
   def stampCommit(path: String, commitId: Long, tsMillis: Long): Unit = {
-    require(LogFs.isDirectory(LogFs.child(path, s"$CommitCol=$commitId")),
+    val l = Listing.of(path)
+    require(l.commitIds.contains(commitId),
       s"cannot stamp commit $commitId of $path — no $CommitCol=$commitId " +
         "directory exists; stamp AFTER the commit lands")
-    commitTimestamps(path).find(_._1 == commitId) match {
+    val stamps = commitTimestamps(l)
+    stamps.find(_._1 == commitId) match {
       case Some((_, t)) =>
         require(t == tsMillis,
           s"commit $commitId of $path is already stamped $t and stamps " +
             s"are immutable — got $tsMillis; a changed commit time would " +
             "silently re-aim every AS OF TIMESTAMP read")
       case None =>
-        commitTimestamps(path).foreach { case (cid, t) =>
+        stamps.foreach { case (cid, t) =>
           require(cid > commitId || t <= tsMillis,
             s"non-monotone stamp: commit $commitId at $tsMillis would " +
               s"precede earlier commit $cid stamped $t — AS OF TIMESTAMP " +
@@ -157,8 +263,7 @@ object Changelog {
               s"follow later commit $cid stamped $t — AS OF TIMESTAMP " +
               "needs stamps non-decreasing in commit order")
         }
-        LogFs.writeAtomic(LogFs.child(path, s"$TsPrefix$commitId"),
-          tsMillis.toString)
+        LogFs.writeAtomic(Marker.Stamp.at(path, commitId), tsMillis.toString)
     }
   }
 
@@ -172,13 +277,24 @@ object Changelog {
     stampCommit(path, commitId, tsMillis)
   }
 
-  /** Resolve "as of `tsMillis`" to a commit id: the latest stamped
-    * commit at or before the instant. Loud on the three silent-wrong
-    * paths: a log with no stamps, a LIVE commit directory that was
-    * never stamped (resolution would silently skip it), and an
-    * instant before the first commit (nothing existed — an empty
-    * read would masquerade as an empty table).
+  /** Every commit's stamp, commit-id ascending — loud on a log with
+    * no stamps and on a LIVE commit that was never stamped (a clock
+    * read would silently skip it). `use` names the clock read,
+    * `otherwise` its versioned alternative.
     */
+  private def clockOf(l: Listing, use: String,
+                      otherwise: String): Seq[(Long, Long)] = {
+    val stamps = commitTimestamps(l)
+    require(stamps.nonEmpty, s"${l.path} has no stamped commits — " +
+      s"stampCommit each commit to enable $use")
+    val unstamped = l.commitIds.filterNot(stamps.map(_._1).toSet)
+    require(unstamped.isEmpty,
+      s"commits [${unstamped.mkString(", ")}] of ${l.path} are " +
+        s"unstamped — $use cannot place them on the clock; stamp them " +
+        s"or use $otherwise")
+    stamps
+  }
+
   /** The stream-start coordinate for "serve commits stamped AT or
     * AFTER `tsMillis`" (Delta's `startingTimestamp` semantics): the
     * latest commit id stamped strictly BEFORE the instant — the feed
@@ -188,31 +304,24 @@ object Changelog {
     * cannot be placed on the clock.
     */
   def versionBeforeTimestamp(path: String, tsMillis: Long): Long = {
-    val stamps = commitTimestamps(path)
-    require(stamps.nonEmpty,
-      s"$path has no stamped commits — stampCommit each commit to " +
-        "enable timestamp-addressed streams")
-    val stamped = stamps.map(_._1).toSet
-    val unstamped = commitIds(path).filterNot(stamped).sorted
-    require(unstamped.isEmpty,
-      s"commits [${unstamped.mkString(", ")}] of $path are unstamped — " +
-        "a timestamp start cannot place them on the clock; stamp them " +
-        "or use startingVersion")
+    val stamps = clockOf(Listing.of(path), "timestamp-addressed streams",
+      "startingVersion")
     val before = stamps.filter(_._2 < tsMillis).map(_._1)
     if (before.nonEmpty) before.max else stamps.map(_._1).min - 1
   }
 
-  def versionAtTimestamp(path: String, tsMillis: Long): Long = {
-    val stamps = commitTimestamps(path)
-    require(stamps.nonEmpty,
-      s"$path has no stamped commits — stampCommit each commit to " +
-        "enable AS OF TIMESTAMP reads")
-    val stamped = stamps.map(_._1).toSet
-    val unstamped = commitIds(path).filterNot(stamped).sorted
-    require(unstamped.isEmpty,
-      s"commits [${unstamped.mkString(", ")}] of $path are unstamped — " +
-        "AS OF TIMESTAMP cannot place them on the clock; stamp them or " +
-        "use versioned reads")
+  /** Resolve "as of `tsMillis`" to a commit id: the latest stamped
+    * commit at or before the instant. Loud on the three silent-wrong
+    * paths: a log with no stamps, a LIVE commit directory that was
+    * never stamped (resolution would silently skip it), and an
+    * instant before the first commit (nothing existed — an empty
+    * read would masquerade as an empty table).
+    */
+  def versionAtTimestamp(path: String, tsMillis: Long): Long =
+    versionAtTimestamp(Listing.of(path), tsMillis)
+
+  private[graft] def versionAtTimestamp(l: Listing, tsMillis: Long): Long = {
+    val stamps = clockOf(l, "AS OF TIMESTAMP reads", "versioned reads")
     require(tsMillis >= stamps.head._2,
       s"timestamp $tsMillis predates the log's first commit " +
         s"(${stamps.head._1} stamped ${stamps.head._2}) — nothing " +
@@ -247,32 +356,23 @@ object Changelog {
       versionAtTimestamp(path, t0Millis),
       versionAtTimestamp(path, t1Millis), trackCols)
 
-  /** All landed commit ids of the log (directory listing). */
-  private def commitIds(path: String): Seq[Long] =
-    LogFs.list(path)
-      .map(_.getPath.getName).filter(_.startsWith(s"$CommitCol="))
-      .map(_.stripPrefix(s"$CommitCol=").toLong)
-
   /** The head commit id of the log, if any commits have landed — the
     * version a "latest" read pins itself to ([[GraftLog]] resolves its
     * default `versionAsOf` here ONCE at load, so a query planned
     * against the head stays on that head even if commits land before
     * the action runs).
     */
-  def headVersion(path: String): Option[Long] = {
-    val ids = commitIds(path)
-    if (ids.isEmpty) None else Some(ids.max)
-  }
+  def headVersion(path: String): Option[Long] = Listing.of(path).head
 
   /** Whether the log's rows carry [[OpCol]], from the footer of its
     * first data file in name order — ONE file decides the log's shape
     * (every commit carries _op or none does, by induction on
-    * [[requireMatchingShape]]). The walk lists the log root and the
-    * directories down to that file, never the whole log, so its cost
-    * does not grow with history. None on a log with no landed data.
+    * [[requireMatchingShape]]). The walk lists the directories down to
+    * that file, never the whole log, so its cost does not grow with
+    * history. None on a log with no landed data.
     */
-  private def logHasOp(path: String): Option[Boolean] =
-    ParquetMeta.dataFiles(path).nextOption()
+  private def logHasOp(l: Listing): Option[Boolean] =
+    l.firstDataFile
       .map(f => ParquetMeta.schema(f.getPath).columns.contains(OpCol))
 
   /** Whether the log is OPS-shaped (rows carry [[OpCol]]) — ONE
@@ -281,10 +381,13 @@ object Changelog {
     * metadata and write routing only: the read and fold verbs take the
     * shape from the schema Spark already inferred for their own scan.
     */
-  private[graft] def isOpsLog(path: String): Boolean = {
-    val hasOp = logHasOp(path)
+  private[graft] def isOpsLog(path: String): Boolean =
+    isOpsLog(Listing.of(path))
+
+  private def isOpsLog(l: Listing): Boolean = {
+    val hasOp = logHasOp(l)
     require(hasOp.nonEmpty,
-      s"$path has no landed commit data — the log's shape is undefined")
+      s"${l.path} has no landed commit data — the log's shape is undefined")
     hasOp.get
   }
 
@@ -298,8 +401,10 @@ object Changelog {
     * the shape this guard keeps uniform — one driver-side footer read,
     * no Spark job, only when the log already exists.
     */
-  private[graft] def requireMatchingShape(delta: DataFrame, path: String): Unit = {
-    logHasOp(path).foreach { logOp =>
+  private[graft] def requireMatchingShape(delta: DataFrame,
+                                         l: Listing): Unit = {
+    val path = l.path
+    logHasOp(l).foreach { logOp =>
       val deltaHasOp = delta.columns.contains(OpCol)
       require(!logOp || deltaHasOp,
         s"$path is an OPS log but the delta carries no $OpCol — such rows " +
@@ -332,23 +437,15 @@ object Changelog {
   // (Delta's txnAppId contract) and route contended appends through
   // [[commitWithRetry]].
 
-  private val ClaimPrefix = "_graft_claim_"
-
   /** The default writer identity: all claims by unnamed callers are
     * one logical writer (the single-writer deployment), preserving
     * every pre-OCC behavior including same-id redelivery.
     */
   val SoloWriter = "solo"
 
-  /** All claimed commit ids of the log (marker listing). */
-  private def claimIds(path: String): Seq[Long] =
-    LogFs.list(path)
-      .filter(s => s.isFile && s.getPath.getName.startsWith(ClaimPrefix))
-      .map(_.getPath.getName.stripPrefix(ClaimPrefix).toLong)
-
   /** The writer holding commit `commitId`'s claim, if any. */
   def claimHolder(path: String, commitId: Long): Option[String] = {
-    val p = LogFs.child(path, s"$ClaimPrefix$commitId")
+    val p = Marker.Claim.at(path, commitId)
     if (LogFs.exists(p)) Some(LogFs.readString(p).trim) else None
   }
 
@@ -358,7 +455,7 @@ object Changelog {
     */
   private[graft] def claimCommit(path: String, commitId: Long,
                           writer: String): Unit = {
-    val p = LogFs.child(path, s"$ClaimPrefix$commitId")
+    val p = Marker.Claim.at(path, commitId)
     if (!LogFs.claimExclusive(p, writer)) {
       val holder = LogFs.readString(p).trim
       require(holder == writer,
@@ -383,13 +480,15 @@ object Changelog {
     */
   private[graft] def claimNextId(path: String, writer: String,
                                  maxAttempts: Int = 50): Long = {
-    var floor = (commitIds(path) ++ claimIds(path)).foldLeft(-1L)(math.max)
+    val l = Listing.of(path)
+    var floor = (l.commitIds ++ l.ids(Marker.Claim).map(_._1))
+      .foldLeft(-1L)(math.max)
     var attempt = 0
     while (attempt < maxAttempts) {
       attempt += 1
       val target = floor + 1
-      if (LogFs.claimExclusive(
-          LogFs.child(path, s"$ClaimPrefix$target"), writer)) return target
+      if (LogFs.claimExclusive(Marker.Claim.at(path, target), writer))
+        return target
       floor = target
     }
     throw new IllegalStateException(
@@ -429,13 +528,6 @@ object Changelog {
     try body finally LogFs.delete(p)
   }
 
-  /** Streaming-sink epoch→commit map markers (multi-writer mode):
-    * `_graft_sinkmap_<queryId>_<epoch>`, content = the commit id the
-    * epoch landed at. One tiny file per commit — the claim markers'
-    * asymptotics — swept below checkpoint horizons like claims.
-    */
-  private[graft] val SinkMapPrefix = "_graft_sinkmap_"
-
   // ---- Operation metadata: commitInfo --------------------------------
   //
   // Commits record stats/stamps/claims but — before round 15 — not the
@@ -453,8 +545,6 @@ object Changelog {
   // OBSERVABILITY, never the read path: a commit without one reads
   // fine and surfaces null verb/writer in DESCRIBE HISTORY.
 
-  private val InfoPrefix = "_graft_info_"
-
   /** The landed commit directory's exact row count and total
     * UNCOMPRESSED byte size, from parquet footer metadata only (one
     * open per data file, through any sub-partition directories, no
@@ -463,7 +553,7 @@ object Changelog {
     * CDC byte-budget admission reads this and not the file sizes.
     */
   def commitDirStats(path: String, commitId: Long): (Long, Long) =
-    ParquetMeta.dirStats(LogFs.child(path, s"$CommitCol=$commitId"))
+    ParquetMeta.dirStats(commitDir(path, commitId))
 
   /** Record commit `commitId`'s operation metadata (verb, writer, and
     * the footer-derived row count). Public so custom landing paths
@@ -480,24 +570,24 @@ object Changelog {
         s"commitInfo $what '$v' contains a tab/newline — the info " +
           "marker is tab-delimited; use a flat identifier")
     }
-    LogFs.writeAtomic(LogFs.child(path, s"$InfoPrefix$commitId"),
+    LogFs.writeAtomic(Marker.Info.at(path, commitId),
       s"v1\n$verb\t$writer\t${commitDirStats(path, commitId)._1}")
   }
 
   /** All recorded operation metadata: commitId → (verb, writer, rows). */
   def commitInfos(path: String): Map[Long, (String, String, Long)] =
-    LogFs.list(path)
-      .filter(s => s.isFile && s.getPath.getName.startsWith(InfoPrefix))
-      .map { s =>
-        val lines = LogFs.readString(s.getPath.toString).split("\n")
-        require(lines.headOption.contains("v1"),
-          s"unrecognized info marker format in ${s.getPath}")
-        // bounded split: exactly (verb, writer, rows) — a malformed
-        // marker (too few fields) still fails loudly on p(2)
-        val p = lines(1).split("\t", 3)
-        (s.getPath.getName.stripPrefix(InfoPrefix).toLong,
-          (p(0), p(1), p(2).toLong))
-      }.toMap
+    commitInfos(Listing.of(path))
+
+  private def commitInfos(l: Listing): Map[Long, (String, String, Long)] =
+    l.ids(Marker.Info).map { case (id, s) =>
+      val lines = LogFs.readString(s.getPath.toString).split("\n")
+      require(lines.headOption.contains("v1"),
+        s"unrecognized info marker format in ${s.getPath}")
+      // bounded split: exactly (verb, writer, rows) — a malformed
+      // marker (too few fields) still fails loudly on p(2)
+      val p = lines(1).split("\t", 3)
+      (id, (p(0), p(1), p(2).toLong))
+    }.toMap
 
   /** [[describeHistory]]'s schema — shared with the SQL-addressable
     * history child table ([[GraftLogCatalog]]'s `cat.t.history`).
@@ -513,13 +603,14 @@ object Changelog {
   /** DESCRIBE HISTORY — one row per landed commit: id, the recorded
     * verb/writer/row-count (null where a commit predates the info
     * markers), and the commit's stamp when the log is clock-addressed.
-    * Driver-side metadata assembly, O(commits) — the same asymptotics
-    * as the marker listings every read already does.
+    * Driver-side metadata assembly from one root listing plus the
+    * markers' contents, O(commits).
     */
   def describeHistory(spark: SparkSession, path: String): DataFrame = {
-    val stamps = commitTimestamps(path).toMap
-    val infos = commitInfos(path)
-    val rows = commitIds(path).sorted.map { id =>
+    val l = Listing.of(path)
+    val stamps = commitTimestamps(l).toMap
+    val infos = commitInfos(l)
+    val rows = l.commitIds.map { id =>
       org.apache.spark.sql.Row(id,
         infos.get(id).map(_._1).orNull,
         infos.get(id).map(_._2).orNull,
@@ -527,9 +618,7 @@ object Changelog {
         stamps.get(id).map(java.lang.Long.valueOf).orNull)
     }
     spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](
-        scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-      HistorySchema)
+      scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava, HistorySchema)
   }
 
   /** [[describeDetail]]'s schema — shared with the SQL-addressable
@@ -557,48 +646,42 @@ object Changelog {
     * ergonomics): physical coordinates, shape, head/horizon, commit
     * and base counts, data-file count + on-disk bytes, and the
     * evolution state (union-read forced? renamed/dropped columns?).
-    * Driver-side metadata assembly: marker listings plus one
+    * Driver-side metadata assembly: one root listing plus one
     * recursive file listing of the commit directories — O(files),
     * the same order as any maintenance verb's sweep, never a data
     * job. Null horizon = nothing folded yet.
     */
   def describeDetail(spark: SparkSession, path: String,
                      keys: Seq[String]): DataFrame = {
-    val ids = commitIds(path)
+    val l = Listing.of(path)
+    val ids = l.commitIds
     require(ids.nonEmpty, s"$path has no commits — nothing to describe")
-    val files = ParquetMeta.dataFiles(path).toSeq
+    val files = l.commitDirs.flatMap(d => ParquetMeta.dataFiles(d._2))
     val h = horizonOf(path)
-    val m = currentMapping(path)
-      .getOrElse(ColumnMapping(Map.empty, Set.empty))
+    val m = mappingAt(l, Long.MaxValue).getOrElse(NoMapping)
     val row = org.apache.spark.sql.Row(
       path, keys.mkString(","),
-      if (isOpsLog(path)) "ops" else "plain",
+      if (isOpsLog(l)) "ops" else "plain",
       java.lang.Long.valueOf(ids.max),
       if (h == Long.MinValue) null else java.lang.Long.valueOf(h),
       java.lang.Long.valueOf(ids.size.toLong),
-      java.lang.Long.valueOf(baseIds(path).size.toLong),
+      java.lang.Long.valueOf(l.ids(Marker.Base).size.toLong),
       java.lang.Long.valueOf(files.size.toLong),
       java.lang.Long.valueOf(files.map(_.getLen).sum),
-      java.lang.Boolean.valueOf(isEvolvedLog(path)),
+      java.lang.Boolean.valueOf(isEvolvedLog(l)),
       m.renames.toSeq.sortBy(_._1)
-        .map { case (p, l) => s"$l<-$p" }.mkString(","),
+        .map { case (p, lg) => s"$lg<-$p" }.mkString(","),
       m.dropped.toSeq.sorted.mkString(","),
-      checkConstraints(path).toSeq.sortBy(_._1)
+      checkConstraints(l).toSeq.sortBy(_._1)
         .map { case (n, sql) => s"$n: CHECK ($sql)" }.mkString("; "))
-    spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](
-        java.util.List.of(row)), DetailSchema)
+    spark.createDataFrame(java.util.List.of(row), DetailSchema)
   }
 
-  /** The append write itself, claim-free — the checkpoint fold lands
-    * through this (it REWRITES an id that is legitimately claimed by
-    * whoever committed it; its own guard is the horizon ordering).
+  /** The dynamic-overwrite write itself, claim-free — the checkpoint
+    * fold lands through this (it REWRITES an id that is legitimately
+    * claimed by whoever committed it; its own guard is the horizon
+    * ordering).
     */
-  private def appendCommit(delta: DataFrame, path: String,
-                           commitId: Long): Unit =
-    delta.withColumn(CommitCol, lit(commitId))
-      .write.partitionBy(CommitCol).mode("append").parquet(path)
-
   private def overwriteCommit(delta: DataFrame, path: String, commitId: Long,
                               alsoPartitionBy: Seq[String]): Unit =
     delta.withColumn(CommitCol, lit(commitId))
@@ -626,10 +709,10 @@ object Changelog {
     * appends the `_op` column; plain logs take the schema as-is. The
     * empty frame cannot ride [[commit]]'s dynamic partition overwrite
     * (zero rows land zero partitions — the [[checkpoint]] empty-fold
-    * special case, shared here), so the genesis writes its directory
-    * directly. Loud when `path` already holds commits — CREATE makes a
-    * table; an existing log is ADOPTED by registration, never
-    * re-created over.
+    * special case, shared here), so the genesis lands as an empty
+    * schema commit pinned at id 0. Loud when `path` already holds
+    * commits — CREATE makes a table; an existing log is ADOPTED by
+    * registration, never re-created over.
     */
   def createLog(spark: SparkSession, path: String,
                 tableSchema: org.apache.spark.sql.types.StructType,
@@ -637,19 +720,14 @@ object Changelog {
     require(!tableSchema.fieldNames.exists(n =>
       n.toLowerCase == CommitCol || n.toLowerCase == OpCol),
       s"the table schema carries a reserved column ($CommitCol/$OpCol)")
-    require(commitIds(path).isEmpty,
+    require(Listing.of(path).commitIds.isEmpty,
       s"$path already holds commits — CREATE makes a fresh log; adopt " +
         "an existing one by registering it")
     val shape =
       if (ops) tableSchema.add(OpCol, org.apache.spark.sql.types.StringType)
       else tableSchema
-    claimCommit(path, 0L, writer)
-    val dir = LogFs.child(path, s"$CommitCol=0")
-    LogFs.delete(dir)
-    spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), shape)
-      .write.mode("overwrite").parquet(dir)
-    writeCommitInfo(path, 0L, "create", writer)
+    landEmptySchemaCommit(spark, path, shape, "create", writer,
+      at = Some(0L)): Unit
   }
 
   /** SCHEMA EVOLUTION as a COMMIT (the q143/q185 law, packaged as a
@@ -670,8 +748,7 @@ object Changelog {
                        newFields: Seq[org.apache.spark.sql.types.StructField],
                        writer: String = SoloWriter): Long = {
     require(newFields.nonEmpty, "ADD COLUMNS needs at least one column")
-    val current = spark.read.option("mergeSchema", "true").parquet(path)
-      .schema.fields.filter(_.name != CommitCol)
+    val current = unionSchema(spark, path).fields
     val existing = current.map(_.name.toLowerCase).toSet
     newFields.foreach { f =>
       // case-INSENSITIVE like the duplicate check below: under Spark's
@@ -728,22 +805,30 @@ object Changelog {
     id
   }
 
+  /** The union (mergeSchema) schema of the log's footers, `_commit`
+    * excluded — the shape every metadata-only schema verb lands.
+    */
+  private def unionSchema(spark: SparkSession, path: String)
+      : org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType(readLog(spark, path,
+      mergeSchema = true).schema.filter(_.name != CommitCol))
+
   /** Land ONE empty commit whose parquet footer carries `shape` —
     * the shared substrate of every metadata-only schema verb
-    * (add_columns / rename_column / drop_column): claims the next id,
-    * writes a zero-row parquet directory, records the verb. No data
-    * is read or rewritten at any scale.
+    * (create / add_columns / rename_column / drop_column): claims the
+    * next id (or `at`), writes a zero-row parquet directory, records
+    * the verb. No data is read or rewritten at any scale.
     */
   private def landEmptySchemaCommit(spark: SparkSession, path: String,
       shape: org.apache.spark.sql.types.StructType, verb: String,
-      writer: String,
-      markerFor: Option[Long => (String, String)] = None): Long = {
-    val id = claimNextId(path, writer)
-    val dir = LogFs.child(path, s"$CommitCol=$id")
+      writer: String, markerFor: Option[Long => (String, String)] = None,
+      at: Option[Long] = None): Long = {
+    val id = at.fold(claimNextId(path, writer)) { id =>
+      claimCommit(path, id, writer); id }
+    val dir = commitDir(path, id)
     LogFs.delete(dir)
-    spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), shape)
-      .write.mode("overwrite").parquet(dir)
+    spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](),
+      shape).write.mode("overwrite").parquet(dir)
     // the verb's state marker (mapping / constraint) lands BEFORE the
     // info marker: a crash between the two leaves the state ACTIVE
     // with a null verb in DESCRIBE HISTORY — a visible anomaly on an
@@ -751,8 +836,8 @@ object Changelog {
     // never the inverse (a recorded 'rename_column' whose mapping
     // silently never changed, which no reader could detect)
     markerFor.foreach { f =>
-      val (name, content) = f(id)
-      LogFs.writeAtomic(LogFs.child(path, name), content)
+      val (marker, content) = f(id)
+      LogFs.writeAtomic(marker, content)
     }
     writeCommitInfo(path, id, verb, writer)
     id
@@ -782,19 +867,22 @@ object Changelog {
     * can never have Spark infer the schema from an arbitrary
     * pre-evolution footer and silently drop the added columns (the
     * registration flag becomes a no-op the log itself subsumes).
-    * Load-path cost: ONE marker stat plus the mapping listing every
-    * mapped read already does — never a content read per commit (the
-    * pre-marker implementation opened every `_graft_info_*` marker
-    * at every load: a per-query GET storm at object-store commit
-    * counts; spec-pinned at zero content reads now). A log evolved
+    * Load-path cost: the load's one root listing (the marker's
+    * presence, and the mapping markers) — never a content read per
+    * commit (the pre-marker implementation opened every
+    * `_graft_info_*` marker at every load: a per-query GET storm at
+    * object-store commit counts; spec-pinned at zero content reads
+    * now). A log evolved
     * by a PRE-MARKER build of this library carries no marker — one
     * re-run of any evolving verb (or writing the marker by hand)
     * migrates it; this library's own verbs have always landed
     * through [[commitAddColumns]].
     */
-  def isEvolvedLog(path: String): Boolean =
-    LogFs.exists(LogFs.child(path, EvolvedMarker)) ||
-      currentMapping(path).exists(_.dropped.nonEmpty)
+  def isEvolvedLog(path: String): Boolean = isEvolvedLog(Listing.of(path))
+
+  private[graft] def isEvolvedLog(l: Listing): Boolean =
+    l.has(EvolvedMarker) ||
+      mappingAt(l, Long.MaxValue).exists(_.dropped.nonEmpty)
 
   // ---- Column mapping: RENAME/DROP COLUMN as metadata ----------------
   //
@@ -832,8 +920,6 @@ object Changelog {
   //    checkpoint rewrite — Delta's semantics exactly; logical drop
   //    now, physical reclaim with maintenance.
 
-  private[graft] val MappingPrefix = "_graft_mapping_"
-
   /** The logical↔physical name state of a mapped log. `renames` maps
     * PHYSICAL → LOGICAL (identity entries never stored); `dropped`
     * holds physical names whose column is logically deleted.
@@ -848,6 +934,8 @@ object Changelog {
       physicalByLogical.getOrElse(logical, logical)
     def isEmpty: Boolean = renames.isEmpty && dropped.isEmpty
   }
+
+  private val NoMapping = ColumnMapping(Map.empty, Set.empty)
 
   private def serializeMapping(m: ColumnMapping): String = {
     val rs = m.renames.toSeq.sortBy(_._1)
@@ -869,15 +957,12 @@ object Changelog {
   /** The mapping in force at version `v` — the newest marker ≤ v;
     * None when the log has never been renamed/dropped below v.
     */
-  def mappingAt(path: String, v: Long): Option[ColumnMapping] = {
-    val markers = LogFs.list(path)
-      .filter(s => s.isFile && s.getPath.getName.startsWith(MappingPrefix))
-      .map(s => (s.getPath.getName.stripPrefix(MappingPrefix).toLong,
-        s.getPath.toString))
-      .filter(_._1 <= v)
-    if (markers.isEmpty) None
-    else Some(parseMapping(LogFs.readString(markers.maxBy(_._1)._2)))
-  }
+  def mappingAt(path: String, v: Long): Option[ColumnMapping] =
+    mappingAt(Listing.of(path), v)
+
+  private[graft] def mappingAt(l: Listing, v: Long): Option[ColumnMapping] =
+    l.ids(Marker.Mapping).filter(_._1 <= v).lastOption
+      .map(m => parseMapping(LogFs.readString(m._2.getPath.toString)))
 
   /** The mapping in force at the head (write-side coordinate). */
   def currentMapping(path: String): Option[ColumnMapping] =
@@ -888,17 +973,16 @@ object Changelog {
     * restart). Empty string = no mapping.
     */
   def mappingFingerprint(path: String): String =
-    currentMapping(path).map(serializeMapping).getOrElse("")
+    mappingFingerprint(Listing.of(path))
 
-  /** All mapping-marker commit ids — the feed's window-stability
-    * probe (a marker strictly inside a feed window means the names
-    * changed mid-window).
+  private[graft] def mappingFingerprint(l: Listing): String =
+    mappingAt(l, Long.MaxValue).map(serializeMapping).getOrElse("")
+
+  /** Whether a mapping commit lies in `(v0, v1]` — the feed's
+    * window-stability probe (the names changed mid-window).
     */
-  private[graft] def mappingIds(path: String): Seq[Long] =
-    LogFs.list(path)
-      .filter(s => s.isFile &&
-        s.getPath.getName.startsWith(MappingPrefix))
-      .map(_.getPath.getName.stripPrefix(MappingPrefix).toLong)
+  private[graft] def mappingMovedIn(l: Listing, v0: Long, v1: Long): Boolean =
+    l.ids(Marker.Mapping).exists { case (id, _) => id > v0 && id <= v1 }
 
   /** Project a PHYSICAL-name frame to its LOGICAL shape under `m`:
     * dropped columns vanish, renamed columns surface their logical
@@ -931,11 +1015,8 @@ object Changelog {
     * user of the table sees, minus nothing. One footer-union listing.
     */
   def logicalColumns(spark: SparkSession, path: String): Seq[String] = {
-    val m = currentMapping(path)
-      .getOrElse(ColumnMapping(Map.empty, Set.empty))
-    spark.read.option("mergeSchema", "true").parquet(path)
-      .schema.fields.map(_.name)
-      .filter(n => n != CommitCol && n != OpCol)
+    val m = currentMapping(path).getOrElse(NoMapping)
+    unionSchema(spark, path).fieldNames.filter(_ != OpCol)
       .filterNot(m.dropped.contains).map(m.logicalOf).toSeq
   }
 
@@ -955,12 +1036,9 @@ object Changelog {
         "row identity and lives in the registration, not the log; " +
         "renaming or dropping it would desynchronize every registered " +
         "reader (re-key by writing a new table)")
-    val m = currentMapping(path)
-      .getOrElse(ColumnMapping(Map.empty, Set.empty))
-    val physical = spark.read.option("mergeSchema", "true").parquet(path)
-      .schema.fields.map(_.name)
-      .filter(n => n != CommitCol && n != OpCol)
-      .filterNot(m.dropped.contains)
+    val m = currentMapping(path).getOrElse(NoMapping)
+    val physical = unionSchema(spark, path).fieldNames
+      .filter(_ != OpCol).filterNot(m.dropped.contains)
     val hits = physical.filter(p =>
       m.logicalOf(p).equalsIgnoreCase(name))
     require(hits.nonEmpty,
@@ -991,10 +1069,8 @@ object Changelog {
     require(newName.toLowerCase != CommitCol &&
       newName.toLowerCase != OpCol,
       s"RENAME COLUMN to $newName: reserved changelog column")
-    val m = currentMapping(path)
-      .getOrElse(ColumnMapping(Map.empty, Set.empty))
-    val union = spark.read.option("mergeSchema", "true").parquet(path)
-      .schema.fields.filter(_.name != CommitCol)
+    val m = currentMapping(path).getOrElse(NoMapping)
+    val union = unionSchema(spark, path)
     val otherLogical = union.map(_.name)
       .filter(n => n != OpCol && n != physical)
       .filterNot(m.dropped.contains).map(m.logicalOf)
@@ -1006,10 +1082,9 @@ object Changelog {
         m.renames - physical // renamed back to its birth name
       else m.renames.updated(physical, newName)
     val next = m.copy(renames = renamed)
-    landEmptySchemaCommit(spark, path,
-      org.apache.spark.sql.types.StructType(union), "rename_column",
+    landEmptySchemaCommit(spark, path, union, "rename_column",
       writer, markerFor = Some(id =>
-        (s"$MappingPrefix$id", serializeMapping(next))))
+        (Marker.Mapping.at(path, id), serializeMapping(next))))
   }
 
   /** DROP COLUMN as metadata: one empty commit (verb `drop_column`)
@@ -1028,15 +1103,11 @@ object Changelog {
       writer: String = SoloWriter): Long = {
     val physical = resolveMappedColumn(spark, path, keys, name,
       "DROP COLUMN")
-    val m = currentMapping(path)
-      .getOrElse(ColumnMapping(Map.empty, Set.empty))
-    val union = spark.read.option("mergeSchema", "true").parquet(path)
-      .schema.fields.filter(_.name != CommitCol)
+    val m = currentMapping(path).getOrElse(NoMapping)
     val next = ColumnMapping(m.renames - physical, m.dropped + physical)
-    landEmptySchemaCommit(spark, path,
-      org.apache.spark.sql.types.StructType(union), "drop_column",
-      writer, markerFor = Some(id =>
-        (s"$MappingPrefix$id", serializeMapping(next))))
+    landEmptySchemaCommit(spark, path, unionSchema(spark, path),
+      "drop_column", writer, markerFor = Some(id =>
+        (Marker.Mapping.at(path, id), serializeMapping(next))))
   }
 
   // ---- Table CHECK constraints ---------------------------------------
@@ -1068,22 +1139,20 @@ object Changelog {
   // constraint refuses loudly (drop the constraint first) — stricter
   // than Delta's RESTORE, which silently resurrects violating rows.
 
-  private[graft] val ConstraintPrefix = "_graft_check_"
-
   /** The log's CHECK constraints: name → predicate SQL (logical
-    * column names). One marker listing + one tiny content read per
-    * constraint — only ever paid on logs that declared one.
+    * column names). One tiny content read per constraint, from the
+    * caller's listing — only ever paid on logs that declared one.
     */
   def checkConstraints(path: String): Map[String, String] =
-    LogFs.list(path)
-      .filter(s => s.isFile &&
-        s.getPath.getName.startsWith(ConstraintPrefix))
-      .map { s =>
-        val parts = LogFs.readString(s.getPath.toString).split("\n", 2)
-        require(parts.headOption.contains("v1") && parts.length == 2,
-          s"unrecognized constraint marker format in ${s.getPath}")
-        (s.getPath.getName.stripPrefix(ConstraintPrefix), parts(1))
-      }.toMap
+    checkConstraints(Listing.of(path))
+
+  private def checkConstraints(l: Listing): Map[String, String] =
+    l.keyed(Marker.Check).map { case (name, s) =>
+      val parts = LogFs.readString(s.getPath.toString).split("\n", 2)
+      require(parts.headOption.contains("v1") && parts.length == 2,
+        s"unrecognized constraint marker format in ${s.getPath}")
+      (name, parts(1))
+    }.toMap
 
   /** ADD CONSTRAINT <name> CHECK (<predicateSql>): validates the
     * predicate against the current LOGICAL schema AND the existing
@@ -1122,12 +1191,10 @@ object Changelog {
         s"cannot ADD CONSTRAINT $name CHECK ($predicateSql) on $path " +
           s"— $violating existing row(s) violate it")
     }
-    val union = spark.read.option("mergeSchema", "true").parquet(path)
-      .schema.fields.filter(_.name != CommitCol)
-    landEmptySchemaCommit(spark, path,
-      org.apache.spark.sql.types.StructType(union), "add_constraint",
+    landEmptySchemaCommit(spark, path, unionSchema(spark, path),
+      "add_constraint",
       writer, markerFor = Some(_ =>
-        (s"$ConstraintPrefix$name", s"v1\n$predicateSql")))
+        (Marker.Check.at(path, name), s"v1\n$predicateSql")))
   }
 
   /** DROP CONSTRAINT: removes the marker (enforcement stops), then
@@ -1138,15 +1205,13 @@ object Changelog {
     */
   def dropCheckConstraint(spark: SparkSession, path: String,
       name: String, writer: String = SoloWriter): Long = {
-    require(checkConstraints(path).contains(name),
+    val declared = checkConstraints(path)
+    require(declared.contains(name),
       s"no constraint named $name on $path — declared: " +
-        s"[${checkConstraints(path).keys.toSeq.sorted.mkString(", ")}]")
-    LogFs.delete(LogFs.child(path, s"$ConstraintPrefix$name"))
-    val union = spark.read.option("mergeSchema", "true").parquet(path)
-      .schema.fields.filter(_.name != CommitCol)
-    landEmptySchemaCommit(spark, path,
-      org.apache.spark.sql.types.StructType(union), "drop_constraint",
-      writer)
+        s"[${declared.keys.toSeq.sorted.mkString(", ")}]")
+    LogFs.delete(Marker.Check.at(path, name))
+    landEmptySchemaCommit(spark, path, unionSchema(spark, path),
+      "drop_constraint", writer)
   }
 
   /** Wrap a PHYSICAL-name delta in the log's constraint guards: each
@@ -1155,14 +1220,14 @@ object Changelog {
     * raise_error in a guard projection, so enforcement adds no second
     * scan and no file lands. Constraint predicates speak LOGICAL
     * names; their column references translate to the delta's physical
-    * spelling here. Zero-cost on unconstrained logs (one listing).
+    * spelling here. Zero-cost on unconstrained logs (no IO beyond the
+    * caller's listing).
     */
-  private[graft] def withConstraintChecks(delta: DataFrame,
-                                          path: String): DataFrame = {
-    val cs = checkConstraints(path)
+  private def withConstraintChecks(delta: DataFrame,
+                                   l: Listing): DataFrame = {
+    val cs = checkConstraints(l)
     if (cs.isEmpty) return delta
-    val m = currentMapping(path)
-      .getOrElse(ColumnMapping(Map.empty, Set.empty))
+    val m = mappingAt(l, Long.MaxValue).getOrElse(NoMapping)
     // guard in the LOGICAL namespace (the predicates' own): rename
     // every present column logical-ward, filter, rename back — two
     // pure projections bracketing the guard, zero shuffle, and
@@ -1199,24 +1264,35 @@ object Changelog {
     */
   private[graft] def validateStagedConstraints(spark: SparkSession,
       path: String, stagedFiles: Seq[String]): Unit = {
-    if (stagedFiles.isEmpty || checkConstraints(path).isEmpty) return
+    if (stagedFiles.isEmpty) return
+    val l = Listing.of(path)
+    if (checkConstraints(l).isEmpty) return
     val staged = spark.read.parquet(stagedFiles: _*)
     // the guard throws inside the count job on the first violation
-    withConstraintChecks(staged, path).count(): Unit
+    withConstraintChecks(staged, l).count(): Unit
   }
 
   /** [[commit]] with the verb the info marker records — the internal
     * entry every higher verb (upsert/delete/merge/restore) routes
     * through so DESCRIBE HISTORY names the operation, not the plumbing.
+    * `overwrite` (the sub-partition columns) lands it as
+    * [[commitIdempotent]]'s dynamic overwrite instead of an append.
     */
   private def commitVerbed(delta: DataFrame, path: String, commitId: Long,
-                           writer: String, verb: String): Unit = {
+                           writer: String, verb: String,
+                           overwrite: Option[Seq[String]] = None): Unit = {
     require(commitId >= 0, s"commitId must be >= 0, got $commitId")
     require(!delta.columns.contains(CommitCol),
       s"Changelog reserves column name $CommitCol; rename it on the input")
-    requireMatchingShape(delta, path)
+    val l = Listing.of(path)
+    requireMatchingShape(delta, l)
     claimCommit(path, commitId, writer)
-    appendCommit(withConstraintChecks(delta, path), path, commitId)
+    val checked = withConstraintChecks(delta, l)
+    overwrite match {
+      case Some(by) => overwriteCommit(checked, path, commitId, by)
+      case None => checked.withColumn(CommitCol, lit(commitId))
+        .write.partitionBy(CommitCol).mode("append").parquet(path)
+    }
     writeCommitInfo(path, commitId, verb, writer)
   }
 
@@ -1237,16 +1313,9 @@ object Changelog {
     */
   def commitIdempotent(delta: DataFrame, path: String, commitId: Long,
                        alsoPartitionBy: Seq[String] = Nil,
-                       writer: String = SoloWriter): Unit = {
-    require(commitId >= 0, s"commitId must be >= 0, got $commitId")
-    require(!delta.columns.contains(CommitCol),
-      s"Changelog reserves column name $CommitCol; rename it on the input")
-    requireMatchingShape(delta, path)
-    claimCommit(path, commitId, writer)
-    overwriteCommit(withConstraintChecks(delta, path), path, commitId,
-      alsoPartitionBy)
-    writeCommitInfo(path, commitId, "append", writer)
-  }
+                       writer: String = SoloWriter): Unit =
+    commitVerbed(delta, path, commitId, writer, "append",
+      Some(alsoPartitionBy))
 
   /** OPTIMISTIC MULTI-WRITER COMMIT — the Delta/Iceberg commit loop on
     * the claim primitive. The caller computed `delta` against the log
@@ -1295,13 +1364,14 @@ object Changelog {
                                         deltaKeys: DataFrame,
                                         readVersion: Long,
                                         target: Long): Seq[Long] = {
-    val bases = baseIds(path).toSet
-    val windowIds = (commitIds(path) ++ claimIds(path))
+    val l = Listing.of(path)
+    val bases = l.ids(Marker.Base).map(_._1).toSet
+    val windowIds = (l.commitIds ++ l.ids(Marker.Claim).map(_._1))
       .filter(id => id > readVersion && id < target &&
         !bases.contains(id))
       .distinct.sorted
     def landed(id: Long): Boolean = {
-      val dir = LogFs.child(path, s"$CommitCol=$id")
+      val dir = commitDir(path, id)
       LogFs.exists(LogFs.child(dir, "_SUCCESS")) ||
         ParquetMeta.dataFiles(dir).hasNext
     }
@@ -1313,7 +1383,7 @@ object Changelog {
         require(System.currentTimeMillis() < deadline,
           s"commit $id of $path has been claimed but unlanded for " +
             "60s — its writer likely crashed mid-commit; clear the " +
-            s"orphaned ${ClaimPrefix}$id marker to unblock writers")
+            s"orphaned ${Marker.Claim.prefix}$id marker to unblock writers")
         Thread.sleep(25L)
         in = landed(id)
         claimed = claimHolder(path, id).isDefined
@@ -1323,8 +1393,7 @@ object Changelog {
     if (landedSince.isEmpty) Nil
     else {
       val landedDf = spark.read.option("basePath", path).parquet(
-        landedSince.map(id =>
-          LogFs.child(path, s"$CommitCol=$id")): _*)
+        landedSince.map(commitDir(path, _)): _*)
       val clash = landedDf.select(keys.map(col): _*)
         .join(deltaKeys.select(keys.map(col): _*), keys, "left_semi")
       if (clash.isEmpty) Nil else landedSince
@@ -1336,7 +1405,7 @@ object Changelog {
     * writer).
     */
   private[graft] def releaseClaim(path: String, commitId: Long): Unit =
-    LogFs.delete(LogFs.child(path, s"$ClaimPrefix$commitId"))
+    LogFs.delete(Marker.Claim.at(path, commitId))
 
   def commitWithRetry(spark: SparkSession, path: String, keys: Seq[String],
                       delta: DataFrame, readVersion: Long, writer: String,
@@ -1344,15 +1413,14 @@ object Changelog {
     require(maxAttempts >= 1, s"maxAttempts must be >= 1, got $maxAttempts")
     require(!delta.columns.contains(CommitCol),
       s"Changelog reserves column name $CommitCol; rename it on the input")
-    requireMatchingShape(delta, path)
-    var floor = math.max(commitIds(path).foldLeft(-1L)(math.max),
-      readVersion)
+    val l = Listing.of(path)
+    requireMatchingShape(delta, l)
+    var floor = math.max(l.head.getOrElse(-1L), readVersion)
     var attempt = 0
     while (true) {
       attempt += 1
       val target = floor + 1
-      if (LogFs.claimExclusive(
-          LogFs.child(path, s"$ClaimPrefix$target"), writer)) {
+      if (LogFs.claimExclusive(Marker.Claim.at(path, target), writer)) {
         val clashIds = conflictingCommits(spark, path, keys,
           delta.select(keys.map(col): _*), readVersion, target)
         if (clashIds.nonEmpty) {
@@ -1371,8 +1439,8 @@ object Changelog {
         // namespace — a shared-root append would collide in the
         // committer's `_temporary/0` under exactly the concurrency
         // this method exists for
-        withConstraintChecks(delta, path).write.mode("overwrite")
-          .parquet(LogFs.child(path, s"$CommitCol=$target"))
+        withConstraintChecks(delta, l).write.mode("overwrite")
+          .parquet(commitDir(path, target))
         writeCommitInfo(path, target, "occ-append", writer)
         return target
       }
@@ -1420,11 +1488,11 @@ object Changelog {
 
   /** `log` pruned to the commits a read AS OF `v` must consider — both
     * partition filters, so later (and, on an ops log, pre-base) commit
-    * directories are never opened.
+    * directories are never opened. Only an ops log needs the listing.
     */
-  private def window(log: DataFrame, path: String, v: Long): DataFrame = {
+  private def window(log: DataFrame, l: => Listing, v: Long): DataFrame = {
     val upTo = log.filter(col(CommitCol) <= v)
-    val floor = if (isOps(log)) baseFloor(path, v) else Long.MinValue
+    val floor = if (isOps(log)) l.baseFloor(v) else Long.MinValue
     if (floor == Long.MinValue) upTo
     else upTo.filter(col(CommitCol) >= floor)
   }
@@ -1474,7 +1542,8 @@ object Changelog {
   def snapshotAt(spark: SparkSession, path: String, keys: Seq[String],
                  v: Long, mergeSchema: Boolean = false): DataFrame = {
     requireAboveHorizon(path, v, "snapshot version")
-    live(compact(window(readLog(spark, path, mergeSchema), path, v), keys))
+    live(compact(window(readLog(spark, path, mergeSchema), Listing.of(path),
+      v), keys))
   }
 
   /** CHANGE DATA FEED between two snapshots — every key whose state
@@ -1521,13 +1590,15 @@ object Changelog {
         keys.filter(generated.contains).mkString(", "))
     val log = spark.read.parquet(path)
     val ops = isOps(log)
+    lazy val l = Listing.of(path)
     // base commits are pure rewrites (zero changes): excluding them
     // from the candidate scan keeps the feed O(delta) across an
     // OPTIMIZE — without it, a window containing a base would treat
     // the whole table as touched (then suppress every no-op: correct
     // but O(table))
     val basesInWindow =
-      if (ops) baseIds(path).filter(id => id > v0 && id <= v1) else Nil
+      if (ops) l.ids(Marker.Base).map(_._1).filter(id => id > v0 && id <= v1)
+      else Nil
     val candidateCommits = {
       val inWindow = col(CommitCol) > v0 && col(CommitCol) <= v1
       if (basesInWindow.isEmpty) inWindow
@@ -1561,7 +1632,7 @@ object Changelog {
       .select(keys.map(col): _*).distinct()
     val touched = keyFilter.fold(touchedAll)(f => touchedAll.filter(expr(f)))
     def stateAt(v: Long) =
-      compact(window(log, path, v).join(touched, keys, "left_semi"), keys)
+      compact(window(log, l, v).join(touched, keys, "left_semi"), keys)
     // a plain row is always an upsert
     val isLive = if (ops) col(OpCol) === "u" else lit(true)
     val newSide = stateAt(v1).select(
@@ -1691,17 +1762,9 @@ object Changelog {
   // Markers are swept with their commits by the vacuum and travel with
   // clones, like stats markers.
 
-  private val BasePrefix = "_graft_base_"
-
   /** All base-commit ids of the log, ascending. */
   def baseIds(path: String): Seq[Long] =
-    LogFs.list(path)
-      .filter(s => s.isFile && s.getPath.getName.startsWith(BasePrefix))
-      .map(_.getPath.getName.stripPrefix(BasePrefix).toLong).sorted
-
-  /** The newest base at or below `v` (reads at v start here). */
-  private def baseFloor(path: String, v: Long): Long =
-    baseIds(path).filter(_ <= v).foldLeft(Long.MinValue)(math.max)
+    Listing.of(path).ids(Marker.Base).map(_._1)
 
   /** OPTIMIZE AT HEAD WITHOUT LOSING HISTORY — what a clustered
     * [[checkpoint]] deliberately is not: recluster the
@@ -1789,9 +1852,9 @@ object Changelog {
         s"[${keys.mkString(", ")}] — the base's stats marker feeds " +
         "lookup, whose skipping is only sound on key columns"))
     withMaintenanceMutex(path, s"optimize@$newCommitId:$writer") {
-      val ids = commitIds(path)
-      require(ids.nonEmpty, s"$path has no commits to optimize")
-      val head = ids.max
+      val l = Listing.of(path)
+      val head = l.head.getOrElse(throw new IllegalArgumentException(
+        s"$path has no commits to optimize"))
       require(newCommitId > head,
         s"optimize must land as a NEW commit above the head $head of " +
           s"$path, got $newCommitId — rewriting an existing commit would " +
@@ -1805,20 +1868,20 @@ object Changelog {
       // drops only accumulate, so no reachable read wants those bytes;
       // reads below the base open the original commits, untouched)
       val folded = compact(
-        window(readLog(spark, path, mergeSchema = true), path, head), keys)
+        window(readLog(spark, path, mergeSchema = true), l, head), keys)
       require(isOps(folded),
         s"$path is a PLAIN log — an OPTIMIZE base is an ops rewrite; " +
           "cluster a plain log's fold with checkpoint(..., cluster)")
-      reclaimDropped(live(folded), path, head)
+      reclaimDropped(live(folded), l, head)
         .withColumn(OpCol, lit("u"))
         .write.mode("overwrite").parquet(staging)
       val staged = spark.read.parquet(staging)
-      val dir = LogFs.child(path, s"$CommitCol=$newCommitId")
+      val dir = commitDir(path, newCommitId)
       if (staged.isEmpty) staged.write.mode("overwrite").parquet(dir)
       else place(staged).write.mode("overwrite").parquet(dir)
       if (!staged.isEmpty) writeCommitStatsMulti(spark, path, newCommitId,
         statsCols)
-      LogFs.writeAtomic(LogFs.child(path, s"$BasePrefix$newCommitId"),
+      LogFs.writeAtomic(Marker.Base.at(path, newCommitId),
         newCommitId.toString)
       writeCommitInfo(path, newCommitId, "optimize", writer)
       LogFs.delete(staging)
@@ -1876,9 +1939,9 @@ object Changelog {
     * Pre-drop commits ABOVE the fold keep their bytes (time travel
     * still owns them) until a later fold passes the drop.
     */
-  private def reclaimDropped(folded: DataFrame, path: String,
+  private def reclaimDropped(folded: DataFrame, l: Listing,
                              v: Long): DataFrame =
-    mappingAt(path, v).map(_.dropped).filter(_.nonEmpty) match {
+    mappingAt(l, v).map(_.dropped).filter(_.nonEmpty) match {
       case Some(dropped) =>
         folded.drop(dropped.toSeq.filter(folded.columns.contains): _*)
       case None => folded
@@ -1975,8 +2038,9 @@ object Changelog {
     LogFs.delete(staging)
     val log = readLog(spark, path, mergeSchema = true)
     val ops = isOps(log)
+    val l = Listing.of(path)
     val fold = reclaimDropped(
-      compact(window(log, path, v), keys).drop(CommitCol), path, v)
+      compact(window(log, l, v), keys).drop(CommitCol), l, v)
     (if (ops) fold.write.partitionBy(OpCol) else fold.write)
       .mode("overwrite").parquet(staging)
     val hasLive = !ops || LogFs.exists(LogFs.child(staging, s"$OpCol=u"))
@@ -1989,7 +2053,7 @@ object Changelog {
     // commit v's own deleted rows with it)
     def land(df: DataFrame, layout: Option[RangeCluster]): Unit =
       if (df.isEmpty) {
-        val dir = LogFs.child(path, s"$CommitCol=$v")
+        val dir = commitDir(path, v)
         LogFs.delete(dir)
         df.write.mode("overwrite").parquet(dir)
       } else overwriteCommit(layout.fold(df)(c => ZOrderLayout
@@ -1999,7 +2063,7 @@ object Changelog {
     // with tombstones lands unclustered: phase 2 is its clustered,
     // live-only landing.
     if (!hasLive && !hasDead)
-      land(reclaimDropped(log.drop(CommitCol).limit(0), path, v), None)
+      land(reclaimDropped(log.drop(CommitCol).limit(0), l, v), None)
     else land(spark.read.parquet(staging), if (hasDead) None else cluster)
     testAfterFold.get()()
     // the fold REWROTE _commit=v: its pre-fold info marker no longer
@@ -2043,13 +2107,14 @@ object Changelog {
     */
   def vacuumRetain(path: String, retainVersion: Long): Unit =
       withMaintenanceMutex(path, s"vacuumRetain@$retainVersion") {
-    val head = headVersion(path).getOrElse(
+    val l = Listing.of(path)
+    val head = l.head.getOrElse(
       throw new IllegalArgumentException(
         s"$path has no commits — nothing to vacuum"))
     require(retainVersion <= head,
       s"retain_version $retainVersion exceeds the head $head of $path " +
         "— retention cannot be promised above versions that exist")
-    val b = baseFloor(path, retainVersion)
+    val b = l.baseFloor(retainVersion)
     require(b != Long.MinValue,
       s"no base commit at or below $retainVersion of $path — vacuum " +
         "reclaims history BELOW a fold, never un-folded commits " +
@@ -2088,15 +2153,14 @@ object Changelog {
   def resolveStaleTxn(path: String, writer: String,
                       txnVersion: Long): Unit =
       withMaintenanceMutex(path, s"resolveStaleTxn@${writer}_$txnVersion") {
-    val marker = LogFs.child(path,
-      s"${SinkMapPrefix}txn_${writer}_$txnVersion")
+    val marker = Marker.SinkMap.at(path, s"txn_${writer}_$txnVersion")
     require(LogFs.exists(marker),
       s"no txn marker for (writer=$writer, txnVersion=$txnVersion) on " +
         s"$path — nothing to resolve")
     val content = LogFs.readString(marker).trim
     content.toLongOption match {
       case Some(id) =>
-        require(!LogFs.exists(LogFs.child(path, s"$CommitCol=$id")),
+        require(!LogFs.exists(commitDir(path, id)),
           s"txn (writer=$writer, txnVersion=$txnVersion) LANDED as " +
             s"commit $id — a completed transaction is never resolved " +
             "away; roll the TABLE back with restoreOps if you must " +
@@ -2168,17 +2232,12 @@ object Changelog {
     */
   def cloneAt(spark: SparkSession, path: String, dest: String,
               v: Long): Unit = {
-    val h0 = horizonOf(path)
-    requireAboveHorizon(path, v, "clone version")
+    val h0 = requireAboveHorizon(path, v, "clone version")
     require(!LogFs.exists(dest),
       s"clone destination $dest already exists — cloning over a live " +
         "log would interleave two histories; pick a fresh path")
-    val src = LogFs.list(path)
-      .filter { s =>
-        val n = s.getPath.getName
-        n.startsWith(s"$CommitCol=") &&
-          n.stripPrefix(s"$CommitCol=").toLong <= v
-      }
+    val l = Listing.of(path)
+    val src = l.commitDirs.filter(_._1 <= v)
     require(src.nonEmpty,
       s"$path has no commits <= $v to clone")
     LogFs.mkdirs(dest)
@@ -2191,63 +2250,42 @@ object Changelog {
     // O(bytes) — the same trade Delta's CLONE makes between shallow
     // (metadata-only) and deep (copied) clones.
     val zeroCopy = LogFs.isLocal(path) && LogFs.isLocal(dest)
-    // a concurrent checkpoint's vacuum racing this walk usually fails
-    // it loudly (a linked-from directory vanishes mid-walk), but one
-    // window is silent: a directory EMPTIED between our listing and
-    // its walk links zero files without error. The horizon re-check
-    // below closes it — every vacuum advances the horizon FIRST, so a
-    // changed horizon means some cloned directory may be torn; the
-    // partial clone is removed and the failure is loud (re-run: if the
-    // fold moved past v, the initial guard now refuses — correct, that
-    // history is gone).
-    try src.foreach { d =>
-      val name = d.getPath.getName
-      if (zeroCopy)
-        Sinks.hardlinkTree(LogFs.localPath(d.getPath.toString),
-          LogFs.localPath(LogFs.child(dest, name)))
-      else LogFs.copyTree(d.getPath.toString, LogFs.child(dest, name))
-    }
-    catch { case t: Throwable =>
+    // any failure from here on removes the partial clone
+    try {
+      src.foreach { case (id, dir) =>
+        if (zeroCopy) Sinks.hardlinkTree(LogFs.localPath(dir),
+          LogFs.localPath(commitDir(dest, id)))
+        else LogFs.copyTree(dir, commitDir(dest, id))
+      }
+      // a vacuum racing the walk may EMPTY a directory between our
+      // listing and its walk (zero files linked, no error). Every vacuum
+      // advances the horizon FIRST, so a moved horizon means a possibly
+      // torn clone: fail loudly (a re-run past the fold now refuses).
+      val h1 = horizonOf(path)
+      require(h1 == h0,
+        s"a checkpoint raced this clone of $path (horizon moved $h0 -> " +
+          s"$h1) — the linked commits may be torn; the partial clone " +
+          "was removed, re-run against the folded log")
+      if (h0 != Long.MinValue) writeHorizon(dest, h0)
+      // the markers of the commits ≤ v travel verbatim (writeAtomic: no
+      // torn marker). Stamps are already monotone; stats and bases stay
+      // valid on immutable, byte-identical directories; claims keep a
+      // new writer from "winning" an id that already holds data.
+      Marker.cloned.foreach { m =>
+        l.ids(m).filter(_._1 <= v).foreach { case (id, s) =>
+          LogFs.writeAtomic(m.at(dest, id),
+            LogFs.readString(s.getPath.toString))
+        }
+      }
+      // the evolution marker travels unconditionally: a false positive
+      // below the evolution is a harmless mergeSchema read, a loss above
+      // it would drop the added columns from a fresh registration
+      if (l.has(EvolvedMarker))
+        LogFs.writeAtomic(LogFs.child(dest, EvolvedMarker), "v1")
+    } catch { case t: Throwable =>
       LogFs.delete(dest)
       throw t
     }
-    if (horizonOf(path) != h0) {
-      LogFs.delete(dest)
-      require(false,
-        s"a checkpoint raced this clone of $path (horizon moved $h0 -> " +
-          s"${horizonOf(path)}) — the linked commits may be torn; the " +
-          "partial clone was removed, re-run against the folded log")
-    }
-    if (h0 != Long.MinValue) writeHorizon(dest, h0)
-    commitTimestamps(path).filter(_._1 <= v).foreach { case (cid, ts) =>
-      stampCommit(dest, cid, ts)
-    }
-    // stats markers stay valid on the clone (the cloned directories
-    // are immutable) — carried verbatim so point lookups skip there
-    // too. Claims travel because the cloned commits are LANDED on the
-    // clone — without them a new writer could "win" an id that already
-    // holds data and interleave histories. Base markers ≤ v stay valid
-    // (the cloned base is byte-identical) and keep the clone's reads
-    // pruned. writeAtomic keeps the no-torn-marker law on the clone.
-    def markerId(n: String): Option[Long] =
-      Seq(StatsPrefix, ClaimPrefix, BasePrefix, InfoPrefix,
-          MappingPrefix)
-        .collectFirst { case p if n.startsWith(p) =>
-          n.stripPrefix(p).toLong }
-    LogFs.list(path)
-      .filter(s => s.isFile &&
-        markerId(s.getPath.getName).exists(_ <= v))
-      .foreach { s =>
-        LogFs.writeAtomic(LogFs.child(dest, s.getPath.getName),
-          LogFs.readString(s.getPath.toString))
-      }
-    // the singleton evolution marker travels unconditionally: it has
-    // no commit id to bound by, and a false positive on a clone cut
-    // below the evolution is a harmless mergeSchema read, while
-    // losing it on a clone cut above would silently drop the added
-    // columns from a fresh registration of the clone
-    if (LogFs.exists(LogFs.child(path, EvolvedMarker)))
-      LogFs.writeAtomic(LogFs.child(dest, EvolvedMarker), "v1")
   }
 
   /** RESTORE the ops table to its state at version `v`, landed as NEW
@@ -2273,9 +2311,9 @@ object Changelog {
   def restoreOps(spark: SparkSession, path: String, keys: Seq[String],
                  v: Long, newCommitId: Long): Unit = {
     requireAboveHorizon(path, v, "restore target version")
-    val ids = commitIds(path)
-    require(ids.nonEmpty, s"$path has no commits to restore")
-    val head = ids.max
+    val l = Listing.of(path)
+    val head = l.head.getOrElse(throw new IllegalArgumentException(
+      s"$path has no commits to restore"))
     require(v <= head,
       s"restore target $v is beyond the head commit $head of $path")
     require(newCommitId > head,
@@ -2289,7 +2327,7 @@ object Changelog {
     // column's values would re-write them into a fresh post-drop
     // commit (invisible to mapped reads, but deferring their
     // physical reclaim past the next fold)
-    val droppedNow = mappingAt(path, head)
+    val droppedNow = mappingAt(l, head)
       .map(_.dropped).getOrElse(Set.empty[String])
     val dataCols = target.columns.filterNot(keys.contains)
       .filterNot(droppedNow.contains).toSeq
@@ -2335,8 +2373,6 @@ object Changelog {
   // exact. Markers are sound because commits are immutable once
   // landed (the append-only discipline) and the stats are computed
   // from the commit directory's own final content.
-
-  private val StatsPrefix = "_graft_stats_"
 
   /** Per-column commit statistics: the null count plus `[min, max]`
     * over the non-null values (absent when the column is all-null in
@@ -2389,7 +2425,7 @@ object Changelog {
   def writeCommitStatsMulti(spark: SparkSession, path: String,
                             commitId: Long, rawCols: Seq[String]): Unit = {
     require(rawCols.nonEmpty, "writeCommitStatsMulti needs at least one column")
-    val dir = LogFs.child(path, s"$CommitCol=$commitId")
+    val dir = commitDir(path, commitId)
     require(LogFs.isDirectory(dir),
       s"cannot write stats for commit $commitId of $path — no " +
         s"$CommitCol=$commitId directory exists")
@@ -2401,8 +2437,7 @@ object Changelog {
     // marker records and the lookups consult (keys, the only
     // probe-able stats columns, never map, so lookups are unaffected;
     // this makes the RECORDING surface speak both spellings)
-    val mapping = currentMapping(path)
-      .getOrElse(ColumnMapping(Map.empty, Set.empty))
+    val mapping = currentMapping(path).getOrElse(NoMapping)
     val cols = rawCols.map { c =>
       if (schema.fieldNames.contains(c)) c
       else {
@@ -2440,7 +2475,7 @@ object Changelog {
         case _ => s"$c\tlong\t$nulls\t${row.getLong(mi)}\t${row.getLong(ma)}"
       }
     }
-    LogFs.writeAtomic(LogFs.child(path, s"$StatsPrefix$commitId"),
+    LogFs.writeAtomic(Marker.Stats.at(path, commitId),
       ("v2" +: lines).mkString("\n"))
   }
 
@@ -2451,29 +2486,30 @@ object Changelog {
 
   /** All recorded commit statistics: commitId → column → stats. */
   def commitColumnStats(path: String): Map[Long, Map[String, ColStats]] =
-    LogFs.list(path)
-      .filter(s => s.isFile && s.getPath.getName.startsWith(StatsPrefix))
-      .map { s =>
-        val lines = LogFs.readString(s.getPath.toString).split("\n").toSeq
-        require(lines.headOption.contains("v2"),
-          s"unrecognized stats marker format in ${s.getPath} — " +
-            s"expected a v2 header, got '${lines.headOption.getOrElse("")}'")
-        val byCol = lines.tail.filter(_.nonEmpty).map { ln =>
-          val p = ln.split("\t")
-          p(1) match {
-            case "long" =>
-              p(0) -> (LongColStats(p(3).toLong, p(4).toLong,
-                p(2).toLong): ColStats)
-            case "string" =>
-              p(0) -> (StringColStats(unb64(p(3)), unb64(p(4)),
-                p(2).toLong): ColStats)
-            case "allnull" => p(0) -> (AllNullColStats(p(2).toLong): ColStats)
-            case other => throw new IllegalArgumentException(
-              s"unrecognized stats kind '$other' in ${s.getPath}")
-          }
-        }.toMap
-        (s.getPath.getName.stripPrefix(StatsPrefix).toLong, byCol)
+    commitColumnStats(Listing.of(path))
+
+  private def commitColumnStats(l: Listing)
+      : Map[Long, Map[String, ColStats]] =
+    l.ids(Marker.Stats).map { case (id, s) =>
+      val lines = LogFs.readString(s.getPath.toString).split("\n").toSeq
+      require(lines.headOption.contains("v2"),
+        s"unrecognized stats marker format in ${s.getPath} — " +
+          s"expected a v2 header, got '${lines.headOption.getOrElse("")}'")
+      id -> lines.tail.filter(_.nonEmpty).map { ln =>
+        val p = ln.split("\t")
+        p(1) match {
+          case "long" =>
+            p(0) -> (LongColStats(p(3).toLong, p(4).toLong,
+              p(2).toLong): ColStats)
+          case "string" =>
+            p(0) -> (StringColStats(unb64(p(3)), unb64(p(4)),
+              p(2).toLong): ColStats)
+          case "allnull" => p(0) -> (AllNullColStats(p(2).toLong): ColStats)
+          case other => throw new IllegalArgumentException(
+            s"unrecognized stats kind '$other' in ${s.getPath}")
+        }
       }.toMap
+    }.toMap
 
   /** An inclusive range on one KEY column — what a stats-skipping
     * [[lookup]] prunes by. Each case carries its driver-side admit test
@@ -2627,27 +2663,24 @@ object Changelog {
         "across a key's versions, making the pre-compaction range " +
         "filter (and the commit skipping) silently wrong"))
     requireAboveHorizon(path, v, "lookup version")
-    val stats = commitColumnStats(path)
-    val floor = baseFloor(path, v)
-    val selected = LogFs.list(path)
-      .filter { s =>
-        val n = s.getPath.getName
-        n.startsWith(s"$CommitCol=") && {
-          val id = n.stripPrefix(s"$CommitCol=").toLong
-          id <= v && id >= floor && ranges.forall(r =>
-            stats.get(id).forall(_.get(r.key).forall(r.admits)))
-        }
-      }
+    val l = Listing.of(path)
+    val stats = commitColumnStats(l)
+    val floor = l.baseFloor(v)
+    val selected = l.commitDirs.collect {
+      case (id, dir) if id <= v && id >= floor && ranges.forall(r =>
+          stats.get(id).forall(_.get(r.key).forall(r.admits))) => dir
+    }
     val ms = mergeSchema.toString
     val log =
-      if (selected.isEmpty)
-        // nothing admits the ranges: any commit's schema gives the
-        // shape, the false filter gives the empty result without a scan
-        spark.read.option("mergeSchema", ms).parquet(path)
-          .filter(lit(false))
-      else
+      if (selected.nonEmpty)
         spark.read.option("basePath", path).option("mergeSchema", ms)
-          .parquet(selected.map(_.getPath.toString): _*)
+          .parquet(selected: _*)
+      // nothing admits the ranges: one commit's footer (or, for the
+      // union, every footer) gives the shape, and the false filter the
+      // empty result without a scan
+      else if (mergeSchema)
+        spark.read.option("mergeSchema", ms).parquet(path).filter(lit(false))
+      else ParquetMeta.read(spark, path, l.firstDataFile).filter(lit(false))
     live(compact(log.filter(col(CommitCol) <= v &&
       ranges.map(_.probe).reduce(_ && _)), keys))
   }
@@ -2676,9 +2709,8 @@ object Changelog {
                    source: DataFrame, newCommitId: Long,
                    deleteWhen: Option[org.apache.spark.sql.Column] = None)
       : Unit = {
-    val ids = commitIds(path)
-    require(ids.nonEmpty, s"$path has no commits to merge into")
-    val head = ids.max
+    val head = headVersion(path).getOrElse(throw new IllegalArgumentException(
+      s"$path has no commits to merge into"))
     require(newCommitId > head,
       s"merge must land as a NEW commit above the head $head of $path, " +
         s"got $newCommitId — commit ids are the version order")
@@ -2719,59 +2751,38 @@ object Changelog {
 
   /** Drop every `_commit=<id>` directory with id strictly below `v` —
     * the vacuum step shared by all checkpoint flavors; callers must
-    * have landed the folded base and the horizon first. Also drops
-    * two marker classes the fold invalidates: stats markers BELOW v
-    * (their commits are gone) and the stats marker AT v — the fold
-    * REWROTE `_commit=v` with the full live state, so a pre-fold
-    * marker's range no longer bounds the directory's content and a
-    * stale one would make [[lookup]] silently wrong-skip
-    * (recompute with [[writeCommitStats]] after the checkpoint if the
-    * base should be skippable). Commit STAMPS survive on purpose —
-    * the folded base still answers "as of" its instant exactly.
+    * have landed the folded base and the horizon first — and the
+    * markers that described them. A stale stats marker AT v (the fold
+    * REWROTE `_commit=v`) would make [[lookup]] silently wrong-skip;
+    * commit STAMPS survive, the folded base still answers "as of" its
+    * instant exactly.
     */
   private def vacuumBelow(path: String, v: Long,
                           statsAtVStale: Boolean = true): Unit = {
     // one listing serves every marker class: deleting a commit dir
     // never adds or removes a root-level marker file
-    val listed = LogFs.list(path)
-    def idBelow(n: String, prefix: String): Boolean =
-      n.startsWith(prefix) && n.stripPrefix(prefix).toLong < v
-    def drop(p: org.apache.hadoop.fs.FileStatus => Boolean): Unit =
-      listed.filter(p).foreach(s => LogFs.delete(s.getPath.toString))
-    drop(s => idBelow(s.getPath.getName, s"$CommitCol="))
-    // the stats marker AT v is stale when the caller REWROTE the
-    // directory (a checkpoint's fold — the old ranges no longer bound
-    // it; `analyze` re-arms) but still load-bearing when the caller
-    // only reclaimed history below an INTACT base (vacuumRetain)
-    drop { s =>
-      val n = s.getPath.getName
-      s.isFile && n.startsWith(StatsPrefix) && {
-        val id = n.stripPrefix(StatsPrefix).toLong
-        id < v || (statsAtVStale && id == v)
+    val l = Listing.of(path)
+    def drop(s: FileStatus): Unit = LogFs.delete(s.getPath.toString)
+    l.commitDirs.filter(_._1 < v).foreach(d => LogFs.delete(d._2))
+    // no writer may land below the horizon again. At v the claim, base
+    // and info stay (the fold is commit v, a complete base, re-recorded
+    // as 'checkpoint'); the stats marker at v is stale when the caller
+    // REWROTE the directory (`analyze` re-arms) but still load-bearing
+    // below an INTACT base (vacuumRetain)
+    Marker.sweptBelow.foreach { m =>
+      l.ids(m).foreach { case (id, s) =>
+        if (id < v || (m == Marker.Stats && statsAtVStale && id == v))
+          drop(s)
       }
-    }
-    // claim markers below the horizon are stale (their commit dirs are
-    // gone and no writer may land below the horizon again); the claim
-    // AT v stays — the folded base is still commit v. Base markers
-    // below v go with their vacuumed commits; a base AT v stays valid
-    // (the fold is itself a complete base). Info markers go with their
-    // vacuumed commits; the marker AT v was re-recorded as
-    // 'checkpoint' by the fold, so only strictly-below entries are
-    // stale
-    drop { s =>
-      val n = s.getPath.getName
-      s.isFile && (idBelow(n, ClaimPrefix) || idBelow(n, BasePrefix) ||
-        idBelow(n, InfoPrefix))
     }
     // sink epoch→commit map markers point at a commit id in their
     // CONTENT; one below the horizon maps a folded commit — a replayed
     // epoch can never legally re-land there (Spark only redelivers the
     // last uncommitted epoch, which is above any sane horizon), so the
     // marker is stale metadata and goes with the claims
-    drop { s =>
-      s.isFile && s.getPath.getName.startsWith(SinkMapPrefix) &&
-        scala.util.Try(LogFs.readString(s.getPath.toString).trim.toLong)
-          .toOption.exists(_ < v)
+    l.keyed(Marker.SinkMap).foreach { case (_, s) =>
+      if (scala.util.Try(LogFs.readString(s.getPath.toString).trim.toLong)
+          .toOption.exists(_ < v)) drop(s)
     }
   }
 }

@@ -168,6 +168,9 @@ object GraftLog {
 
     private val spark = SparkSession.active
 
+    /** The one root listing every load-time pin below reads. */
+    private val loaded = Changelog.Listing.of(rawOpts.path)
+
     /** The load-time options with evolution NORMALIZED IN: a log whose
       * history holds an `add_columns` commit reads through the union
       * (mergeSchema) path whether or not the registration remembered
@@ -182,7 +185,7 @@ object GraftLog {
     val opts: Opts =
       if (rawOpts.readChangeFeed || rawOpts.mergeSchema) rawOpts
       else rawOpts.copy(
-        mergeSchema = Changelog.isEvolvedLog(rawOpts.path))
+        mergeSchema = Changelog.isEvolvedLog(loaded))
 
     /** Ops vs plain, sniffed once from a footer (the write guard's
       * probe) — routes the WRITE surface (INSERT's verb, the DELETE /
@@ -197,14 +200,14 @@ object GraftLog {
       */
     val pinnedVersion: Long = opts.versionAsOf
       .orElse(opts.timestampAsOfMillis.map(
-        Changelog.versionAtTimestamp(opts.path, _)))
-      .getOrElse(Changelog.headVersion(opts.path).getOrElse(
+        Changelog.versionAtTimestamp(loaded, _)))
+      .getOrElse(loaded.head.getOrElse(
         throw new IllegalArgumentException(
           s"${opts.path} has no commits — nothing to read")))
 
     /** Feed end, pinned at load like the snapshot version. */
-    val pinnedEnd: Long = opts.endingVersion
-      .getOrElse(Changelog.headVersion(opts.path).getOrElse(-1L))
+    val pinnedEnd: Long =
+      opts.endingVersion.getOrElse(loaded.head.getOrElse(-1L))
 
     /** The column mapping (RENAME/DROP COLUMN metadata) in force at
       * the pinned read coordinate, resolved ONCE at load like the
@@ -230,16 +233,14 @@ object GraftLog {
     val pinnedMapping: Option[Changelog.ColumnMapping] =
       if (opts.readChangeFeed) {
         val start = opts.startingVersion.get
-        require(!Changelog.mappingIds(opts.path)
-            .exists(id => id > start && id <= pinnedEnd),
+        require(!Changelog.mappingMovedIn(loaded, start, pinnedEnd),
           s"${opts.path}: the column mapping changed INSIDE the " +
             s"feed window ($start, $pinnedEnd] — old_/new_ names " +
             "would be ambiguous across the window; split the " +
             "window at the mapping commit (for a restarting stream: " +
             "set startingVersion at/after it — the checkpointed " +
             "offset governs the resume)")
-        val m = Changelog.mappingAt(opts.path, pinnedEnd)
-          .filterNot(_.isEmpty)
+        val m = Changelog.mappingAt(loaded, pinnedEnd).filterNot(_.isEmpty)
         // a logically-DROPPED column has no feed: tracking it would
         // resurrect deleted data from pre-drop footers
         m.foreach { mm =>
@@ -251,8 +252,7 @@ object GraftLog {
           }
         }
         m
-      } else Changelog.mappingAt(opts.path, pinnedVersion)
-        .filterNot(_.isEmpty)
+      } else Changelog.mappingAt(loaded, pinnedVersion).filterNot(_.isEmpty)
 
     /** Feed tracked columns in PHYSICAL space (the diff runs over the
       * footers' names) and the output rename back to logical.
@@ -471,7 +471,11 @@ object GraftLog {
                 columns = None,
                 keyFilter = opts.keyFilter,
                 maxRowsPerTrigger = num("maxRowsPerTrigger"),
-                maxBytesPerTrigger = num("maxBytesPerTrigger"))
+                maxBytesPerTrigger = num("maxBytesPerTrigger"),
+                logicalBy = streamMapping.fold(
+                  Map.empty[String, String])(_.renames),
+                mappingPin = streamMapping.map(_ =>
+                  Changelog.mappingFingerprint(opts.path)))
               val streamOpts =
                 if (opts.readChangeFeed)
                   // the FEED stream of a mapped log: tracked columns
@@ -481,11 +485,7 @@ object GraftLog {
                   // the mapping moved
                   base.copy(
                     trackCols = streamMapping.fold(opts.trackCols)(m =>
-                      opts.trackCols.map(m.physicalOf)),
-                    logicalBy = streamMapping.fold(
-                      Map.empty[String, String])(_.renames),
-                    mappingPin = streamMapping.map(_ =>
-                      Changelog.mappingFingerprint(opts.path)))
+                      opts.trackCols.map(m.physicalOf)))
                 else {
                   // the SNAPSHOT table's own stream: upserted row
                   // values, table-shaped — every non-key column is a
@@ -505,11 +505,7 @@ object GraftLog {
                   base.copy(
                     trackCols = streamMapping.fold(logicalTracked)(m =>
                       logicalTracked.map(m.physicalOf)),
-                    tableShape = true,
-                    logicalBy = streamMapping.fold(
-                      Map.empty[String, String])(_.renames),
-                    mappingPin = streamMapping.map(_ =>
-                      Changelog.mappingFingerprint(opts.path)))
+                    tableShape = true)
                 }
               CdcSource.microBatchStream(LogTable.this.schema(),
                 streamOpts, checkpointLocation)
@@ -860,8 +856,8 @@ object GraftLog {
         // replace the folded state with just this txn's delta.
         val idOpt: Option[Long] = txnVersion match {
           case Some(tv) =>
-            val marker = LogFs.child(path,
-              s"${Changelog.SinkMapPrefix}txn_${writer}_$tv")
+            val marker = Changelog.Marker.SinkMap.at(path,
+              s"txn_${writer}_$tv")
             if (LogFs.claimExclusive(marker, s"pending:$writer")) {
               val fresh = Changelog.claimNextId(path, writer)
               // record the id (overwrite our own pending content) so
@@ -871,8 +867,7 @@ object GraftLog {
             } else {
               val content = LogFs.readString(marker).trim
               val landed = content.toLongOption.exists { prev =>
-                LogFs.exists(LogFs.child(path,
-                  s"${Changelog.CommitCol}=$prev"))
+                LogFs.exists(Changelog.commitDir(path, prev))
               }
               require(landed,
                 s"txn (writer=$writer, txnVersion=$tv) on $path has " +
@@ -888,7 +883,7 @@ object GraftLog {
           case None => Some(Changelog.claimNextId(path, writer))
         }
         idOpt.foreach { id =>
-          val dir = LogFs.child(path, s"${Changelog.CommitCol}=$id")
+          val dir = Changelog.commitDir(path, id)
           LogFs.delete(dir)
           LogFs.mkdirs(dir)
           staged.zipWithIndex.foreach { case (f, i) =>

@@ -393,7 +393,7 @@ object GraftRowLevel {
               "its keys — landing would lose those updates; re-run the " +
               "statement (it will re-derive against the new head)")
         }
-        val dir = LogFs.child(path, s"${Changelog.CommitCol}=$id")
+        val dir = Changelog.commitDir(path, id)
         LogFs.delete(dir)
         LogFs.mkdirs(dir)
         staged.zipWithIndex.foreach { case (f, i) =>

@@ -93,6 +93,7 @@ private[graft] object LogFs {
 
   /** Children of `dir` (empty if the dir does not exist). */
   def list(dir: String): Seq[FileStatus] = {
+    listCounter.get()(dir)
     val f = fs(dir)
     val p = new Path(dir)
     if (!f.exists(p)) Seq.empty else f.listStatus(p).toSeq
@@ -110,6 +111,12 @@ private[graft] object LogFs {
     */
   private[graft] val contentReads =
     new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** Each [[list]] call hands its dir to this counter — a TEST hook
+    * for listing-count pins; a no-op by default, never read by the engine.
+    */
+  private[graft] val listCounter =
+    new java.util.concurrent.atomic.AtomicReference[String => Unit](_ => ())
 
   def readString(path: String): String = {
     contentReads.incrementAndGet()

@@ -8,6 +8,7 @@ import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -63,6 +64,19 @@ private[graft] object ParquetMeta {
       .getBlocks.asScala
     (blocks.map(_.getRowCount).sum, blocks.map(_.getTotalByteSize).sum)
   }
+
+  /** `spark.read.parquet(path)` without its schema-inference job (a
+    * Spark job even for one footer): the schema is Spark's own row
+    * metadata from `file`'s footer; partition columns are still
+    * discovered from directory names. No file, or no row metadata:
+    * the inferring read, loud on a missing or empty directory.
+    */
+  def read(spark: SparkSession, path: String,
+           file: Option[FileStatus]): DataFrame =
+    file.flatMap(f => schema(f.getPath).sparkSchema) match {
+      case Some(s) => spark.read.schema(s).parquet(path)
+      case None    => spark.read.parquet(path)
+    }
 
   /** [[stats]] summed over every data file under `dir`. */
   def dirStats(dir: String): (Long, Long) =

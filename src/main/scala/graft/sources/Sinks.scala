@@ -182,24 +182,13 @@ object Sinks {
     else None
   }
 
-  /** Read a fact layout — the bucket-partitioned form or the flat
-    * [[writeFact]] form — with its schema taken from ONE part file's
-    * footer on the driver. `spark.read.parquet(path)` with no schema
-    * runs Spark's schema inference as a Spark job of its own, even
-    * though it reads a single footer (mergeSchema=false): on a point
-    * lookup that is one job of two, all metadata. The footer carries
-    * the schema inference returns (Spark's own row metadata), so the
-    * read is the same without that job. The `bucket` partition column
-    * is still discovered from the directory names. A layout with no
-    * part file (or a file without Spark's row metadata) takes the
-    * inferring read, which fails loudly on a missing or empty layout.
+  /** Read a fact layout — bucket-partitioned or the flat [[writeFact]]
+    * form — with the schema of its first part file's footer
+    * ([[ParquetMeta.read]]): on a point lookup the inference job would
+    * be one job of two, all metadata.
     */
   def readLayout(spark: SparkSession, path: String): DataFrame =
-    ParquetMeta.dataFiles(path).nextOption()
-      .flatMap(f => ParquetMeta.schema(f.getPath).sparkSchema) match {
-      case Some(schema) => spark.read.schema(schema).parquet(path)
-      case None         => spark.read.parquet(path)
-    }
+    ParquetMeta.read(spark, path, ParquetMeta.dataFiles(path).nextOption())
 
   /** The stock-hash bucket of the MAINTAINED fact layout. `hash` is the
     * same Murmur3(seed 42) as `repartition(n, col)`'s HashPartitioning,

@@ -175,7 +175,7 @@ object CdcSource {
     */
   private[streaming] def feedSchema(opts: Opts): StructType = {
     val spark = SparkSession.active
-    val head = commitHead(opts.path).getOrElse(
+    val head = Changelog.headVersion(opts.path).getOrElse(
       throw new IllegalArgumentException(
         s"${opts.path} has no commits — the CDC source needs an " +
           "existing ops log to derive the feed schema"))
@@ -200,22 +200,6 @@ object CdcSource {
           s"feed schema [${schema.fieldNames.mkString(", ")}]")
       StructType(cs.map(schema(_)))
     }
-  }
-
-  private def commitHead(path: String): Option[Long] = {
-    val ids = LogFs.list(path)
-      .map(_.getPath.getName)
-      .filter(_.startsWith(s"${Changelog.CommitCol}="))
-      .map(_.stripPrefix(s"${Changelog.CommitCol}=").toLong)
-    if (ids.isEmpty) None else Some(ids.max)
-  }
-
-  private def commitFloor(path: String): Option[Long] = {
-    val ids = LogFs.list(path)
-      .map(_.getPath.getName)
-      .filter(_.startsWith(s"${Changelog.CommitCol}="))
-      .map(_.stripPrefix(s"${Changelog.CommitCol}=").toLong)
-    if (ids.isEmpty) None else Some(ids.min)
   }
 
   /** Source offset: `version` = every commit ≤ it fully consumed, PLUS
@@ -343,7 +327,7 @@ object CdcSource {
     private var availableNowCap: Option[Long] = None
 
     override def prepareForTriggerAvailableNow(): Unit =
-      availableNowCap = commitHead(opts.path)
+      availableNowCap = Changelog.headVersion(opts.path)
 
     // the spool dir carries a token of the COLUMN SET and KEY FILTER
     // it was computed under: a restart whose options differ (wider
@@ -396,9 +380,10 @@ object CdcSource {
       * zero feed rows) is served alone on the next trigger. Unmapped
       * streams are untouched (their windows stay byte-identical).
       */
-    private def capAtMappingBoundary(startV: Long, endV: Long): Long = {
+    private def capAtMappingBoundary(l: Changelog.Listing, startV: Long,
+                                     endV: Long): Long = {
       if (opts.mappingPin.isEmpty || endV <= startV + 1) return endV
-      val inside = Changelog.mappingIds(opts.path)
+      val inside = l.ids(Changelog.Marker.Mapping).map(_._1)
         .filter(id => id > startV && id <= endV)
       if (inside.isEmpty) endV
       else {
@@ -411,7 +396,8 @@ object CdcSource {
       opts.startVersion.getOrElse {
         val h = Changelog.horizonOf(opts.path)
         if (h != Long.MinValue) h
-        else commitFloor(opts.path).getOrElse(0L) - 1L
+        else Changelog.Listing.of(opts.path).commitIds.headOption
+          .getOrElse(0L) - 1L
       })
 
     override def deserializeOffset(json: String): Offset =
@@ -425,7 +411,8 @@ object CdcSource {
 
     override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
       val st = start.asInstanceOf[CdcOffset]
-      val listed = commitHead(opts.path).getOrElse(st.version)
+      val l = Changelog.Listing.of(opts.path)
+      val listed = l.head.getOrElse(st.version)
       val head = availableNowCap.fold(listed)(math.min(listed, _))
       if (!opts.budgeted) {
         require(st.slice == 0,
@@ -433,7 +420,7 @@ object CdcSource {
             s"${st.slice} of ${st.nSlices}) but no row/byte budget is " +
             "set any more — restore the option until the in-flight " +
             "commit drains, then remove it at a commit boundary")
-        CdcOffset(capAtMappingBoundary(st.version, math.min(head,
+        CdcOffset(capAtMappingBoundary(l, st.version, math.min(head,
           st.version + opts.maxCommitsPerTrigger.getOrElse(1L))))
       } else if (st.version >= head) st
       else if (st.slice > 0) {
@@ -463,13 +450,13 @@ object CdcSource {
             admits = fitsBudgets(rows + r, bytes + b)
             if (admits) { end += 1; rows += r; bytes += b }
           }
-          CdcOffset(capAtMappingBoundary(st.version, end))
+          CdcOffset(capAtMappingBoundary(l, st.version, end))
         }
       }
     }
 
     override def reportLatestOffset(): Offset = {
-      val listed = commitHead(opts.path)
+      val listed = Changelog.headVersion(opts.path)
       val capped = availableNowCap.fold(listed)(c =>
         listed.map(math.min(_, c)))
       capped.map(CdcOffset(_): Offset).orNull
@@ -517,7 +504,8 @@ object CdcSource {
       // RESTART re-pins against the new names (Delta's
       // schema-change-stops-the-stream discipline)
       opts.mappingPin.foreach { pin =>
-        require(Changelog.mappingFingerprint(opts.path) == pin,
+        val l = Changelog.Listing.of(opts.path)
+        require(Changelog.mappingFingerprint(l) == pin,
           s"${opts.path}: the column mapping changed while this " +
             "stream was running — the pinned logical names no longer " +
             "match the table; restart the stream to re-pin")
@@ -527,8 +515,7 @@ object CdcSource {
         // mapping commit (capAtMappingBoundary keeps fresh windows
         // clear of this by construction)
         if (winEnd - winStart > 1)
-          require(!Changelog.mappingIds(opts.path)
-              .exists(id => id > winStart && id <= winEnd),
+          require(!Changelog.mappingMovedIn(l, winStart, winEnd),
             s"${opts.path}: the offset log's window ($winStart, " +
               s"$winEnd] spans a mapping commit — drain it one " +
               "commit at a time (maxCommitsPerTrigger=1) past the " +

@@ -173,7 +173,7 @@ object LogSink {
         org.apache.spark.sql.SparkSession.active
           .createDataFrame(new util.ArrayList[org.apache.spark.sql.Row](),
             s),
-        path)
+        Changelog.Listing.of(path))
       val queryId = info.queryId()
       // SupportsStreamingUpdateAsAppend (the Kafka-sink discipline):
       // an UPDATE-mode streaming aggregation's per-batch output — the
@@ -265,7 +265,7 @@ object LogSink {
     // orphaned claim — the documented commitWithRetry operator state.
 
     private def epochMarker(epochId: Long): String =
-      LogFs.child(path, s"${Changelog.SinkMapPrefix}${queryId}_$epochId")
+      Changelog.Marker.SinkMap.at(path, s"${queryId}_$epochId")
 
     private def resolveEpochCommit(epochId: Long): Long = {
       val marker = epochMarker(epochId)
@@ -288,11 +288,7 @@ object LogSink {
     private def resolveBase(epochId: Long): Long =
       if (LogFs.exists(baseMarker)) LogFs.readString(baseMarker).trim.toLong
       else {
-        val head = LogFs.list(path)
-          .map(_.getPath.getName)
-          .filter(_.startsWith(s"${Changelog.CommitCol}="))
-          .map(_.stripPrefix(s"${Changelog.CommitCol}=").toLong)
-          .foldLeft(-1L)(math.max)
+        val head = Changelog.Listing.of(path).head.getOrElse(-1L)
         val b = head + 1 - epochId
         LogFs.writeAtomic(baseMarker, b.toString)
         b
@@ -321,7 +317,7 @@ object LogSink {
       Changelog.validateStagedConstraints(
         org.apache.spark.sql.SparkSession.active, path,
         staged.toIndexedSeq)
-      val dir = LogFs.child(path, s"${Changelog.CommitCol}=$commitId")
+      val dir = Changelog.commitDir(path, commitId)
       // replace-don't-append: a redelivered epoch overwrites any
       // complete or partial earlier attempt (the commitIdempotent
       // discipline, file-level)

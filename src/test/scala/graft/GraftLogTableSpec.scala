@@ -371,8 +371,7 @@ class GraftLogTableSpec extends SparkSpec {
     // simulate the loser's view of an in-flight duplicate: the winner
     // claimed the marker but has not landed its commit yet
     graft.sources.LogFs.writeAtomic(
-      graft.sources.LogFs.child(path,
-        s"${Changelog.SinkMapPrefix}txn_appd_7"), "pending:appd")
+      Changelog.Marker.SinkMap.at(path, "txn_appd_7"), "pending:appd")
     val e = intercept[Exception] {
       Seq((900L, 9.0)).toDF("k", "v").writeTo("glogspec35.t")
         .option("writer", "appd").option("txnVersion", "7").append()
@@ -381,8 +380,7 @@ class GraftLogTableSpec extends SparkSpec {
       s"expected the in-flight/crashed diagnosis, got: ${e.getMessage}")
     // same refusal when the marker records an id whose commit is gone
     graft.sources.LogFs.writeAtomic(
-      graft.sources.LogFs.child(path,
-        s"${Changelog.SinkMapPrefix}txn_appd_8"), "9999")
+      Changelog.Marker.SinkMap.at(path, "txn_appd_8"), "9999")
     intercept[Exception] {
       Seq((901L, 9.1)).toDF("k", "v").writeTo("glogspec35.t")
         .option("writer", "appd").option("txnVersion", "8").append()

@@ -854,6 +854,24 @@ class TopKChangelogSpec extends SparkSpec {
     assert(h.getMessage.contains("horizon"))
   }
 
+  test("cloneAt of a stamped, checkpointed log: the stamps a checkpoint " +
+       "keeps below its horizon travel, and the clone reads at v") {
+    val origin = Sinks.tmpPath("changelog_spec_clone_stamped_src")
+    val dest = Sinks.tmpPath("changelog_spec_clone_stamped_dst")
+    Sinks.deleteRecursively(origin); Sinks.deleteRecursively(dest)
+    for (c <- 0L to 3L)
+      Changelog.commitStamped(Seq(("k", s"v$c"), (s"k$c", "x")).toDF("k", "v"),
+        origin, c, 1000L * (c + 1))
+    Changelog.checkpoint(spark, origin, Seq("k"), 2L)
+    Changelog.cloneAt(spark, origin, dest, 3L)
+    def snap(p: String) = Changelog.snapshotAt(spark, p, Seq("k"), 3L)
+      .as[(String, String)].collect().toMap
+    assert(snap(dest) == snap(origin))
+    assert(Changelog.commitTimestamps(dest) ==
+      Changelog.commitTimestamps(origin).filter(_._1 <= 3L))
+    assert(Changelog.versionAtTimestamp(dest, 3500L) == 2L)
+  }
+
   test("restoreOps lands the MINIMAL diff as a new commit: head serves " +
        "the target state, history stays readable, untouched keys " +
        "contribute nothing (q194)") {
