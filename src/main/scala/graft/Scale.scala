@@ -44,7 +44,7 @@ object Scale {
     }
     val raw = spark.read.parquet(rawPath)
     timed("normalize+writeFact") {
-      Financials.normalizeInto(raw, factPath, buckets) // fused: one exchange
+      Financials.normalizeInto(raw, factPath, buckets) // fused: one exchange, of the raw rows
     }
     val fact = spark.read.parquet(factPath)
     val rows = timed("count fact")(fact.count())

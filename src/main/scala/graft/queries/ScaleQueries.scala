@@ -139,7 +139,7 @@ object ScaleQueries {
       val syms = n(d)
       val factPath = Sinks.tmpPath(s"fact_$syms")
       val raw = s.read.parquet(RawZoneGen.stagedPath(s, syms))
-      Financials.normalizeInto(raw, factPath) // fused: one exchange
+      Financials.normalizeInto(raw, factPath) // fused: one exchange, of the raw rows
       s.read.parquet(factPath).drop("bucket") // physical partition col
     }),
 

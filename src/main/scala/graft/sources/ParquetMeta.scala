@@ -69,14 +69,18 @@ private[graft] object ParquetMeta {
     * Spark job even for one footer): the schema is Spark's own row
     * metadata from `file`'s footer; partition columns are still
     * discovered from directory names. No file, or no row metadata:
-    * the inferring read, loud on a missing or empty directory.
+    * the inferring read, loud on a missing or empty directory. A
+    * `basePath` above `path` discovers the partition columns between
+    * them.
     */
-  def read(spark: SparkSession, path: String,
-           file: Option[FileStatus]): DataFrame =
+  def read(spark: SparkSession, path: String, file: Option[FileStatus],
+           basePath: Option[String] = None): DataFrame = {
+    val reader = basePath.foldLeft(spark.read)(_.option("basePath", _))
     file.flatMap(f => schema(f.getPath).sparkSchema) match {
-      case Some(s) => spark.read.schema(s).parquet(path)
-      case None    => spark.read.parquet(path)
+      case Some(s) => reader.schema(s).parquet(path)
+      case None    => reader.parquet(path)
     }
+  }
 
   /** [[stats]] summed over every data file under `dir`. */
   def dirStats(dir: String): (Long, Long) =

@@ -3,7 +3,10 @@ package graft.sources
 import java.io.File
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Murmur3HashFunction
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Library write paths (reference S3/S5) plus the physical-layout policy
   * for the two big tables (SURVEY.md §4.3):
@@ -190,6 +193,16 @@ object Sinks {
   def readLayout(spark: SparkSession, path: String): DataFrame =
     ParquetMeta.read(spark, path, ParquetMeta.dataFiles(path).nextOption())
 
+  /** Bucket `k` of the maintained layout alone: lists `path/bucket=k`
+    * only, with the schema of its first part file's footer; `basePath`
+    * keeps the `bucket` column. None when that bucket holds no data.
+    */
+  def readBucket(spark: SparkSession, path: String, k: Int): Option[DataFrame] = {
+    val dir = s"$path/bucket=$k"
+    ParquetMeta.dataFiles(dir).nextOption()
+      .map(f => ParquetMeta.read(spark, dir, Some(f), basePath = Some(path)))
+  }
+
   /** The stock-hash bucket of the MAINTAINED fact layout. `hash` is the
     * same Murmur3(seed 42) as `repartition(n, col)`'s HashPartitioning,
     * so `pmod(hash(stock), n)` equals the shuffle partition id — after a
@@ -199,6 +212,12 @@ object Sinks {
     */
   def factBucket(n: Int): org.apache.spark.sql.Column =
     pmod(hash(col("stock")), lit(n))
+
+  /** [[factBucket]] of one stock, on the driver. */
+  def bucketOf(stock: String, n: Int): Int = {
+    val h = Murmur3HashFunction.hash(UTF8String.fromString(stock), StringType, 42L).toInt
+    ((h % n) + n) % n
+  }
 
   /** Maintained fact layout: the stock-hash bucket is a PHYSICAL
     * partition column (`bucket=K/` directories), files inside each
@@ -353,8 +372,10 @@ object Sinks {
     val tagged = existing.withColumn("_gen", lit(0))
       .unionByName(guarded.withColumn("_gen", lit(1)))
       .repartition(buckets, col("stock"))
+    // in the layout's column order: latestByKey puts the keys first, and
+    // a rewritten bucket must not differ from its neighbours' files
     val merged = graft.transform.Upsert.latestByKey(tagged, pk, col("_gen"))
-      .drop("_gen")
+      .select(existing.columns.map(col): _*)
       .sortWithinPartitions(("bucket" +: pk).map(col): _*)
     merged.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")

@@ -1,6 +1,7 @@
 package graft.transform
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Functions._
 import graft.model.Schemas
@@ -13,14 +14,14 @@ import graft.model.Schemas
   * dict loops + batched upserts (≈276 transactions). Spark shape: ONE
   * declarative DAG —
   *   raw → latest-per-symbol (agg) → from_json(typed schema)
-  *       → 6-pane stack (union of projections, no shuffle)
-  *       → explode(dates) → explode(metrics)
-  *       → derived time columns → value cast + NaN guard
-  *       → PK dedup (agg, pane-precedence order)
+  *       → 6-pane stack (one generator over the panes, no shuffle)
+  *       → posexplode(dates) → derived time columns, once per date
+  *       → posexplode(metrics) → value cast + NaN guard
+  *       → PK dedup (top-1 window, later leaf wins)
   * ONE exchange: the latest-per-symbol aggregate hash-partitions on
-  * `symbol`, which becomes `stock`, and the PK dedup reuses that
-  * partitioning (stock ⊆ PK). All scalar work stays inside whole-stage
-  * codegen.
+  * `symbol`, which becomes `stock`, and the PK dedup's window reuses
+  * that partitioning (stock ⊆ PK), so its sort is the only sort of the
+  * leaf rows. All scalar work stays inside whole-stage codegen.
   */
 object Financials {
 
@@ -66,19 +67,26 @@ object Financials {
     * (Financilas.py:16–30); see Schemas.financials.
     */
   def normalize(raw: DataFrame): DataFrame =
-    pkDedup(derivedFacts(raw))
+    pkDedup(leaves(latestPayloads(graft.ingest.RawZone.resolve(raw))), Pk)
+      .select(Columns.map(col): _*)
 
-  /** Everything up to (not including) the final PK dedup — one row per
-    * emitted (pane, date, metric) leaf, carrying `pane_prec`.
+  /** The fact table's columns, in the reference DDL's order. */
+  private val Columns = Seq("stock", "yf_name", "statement_type", "metric",
+    "stockcurrency", "financialcurrency", "calendar_year", "period", "value", "date")
+
+  /** J2 semantics: one payload per symbol, latest loaded_at wins
+    * (load_one_row's LIMIT 1 over the unique (symbol, loaded_at) key).
+    * Takes the [[graft.ingest.RawZone.resolve]]d columns (S10:
+    * candidate-name resolution, Financilas.py:113–133).
     */
-  private def derivedFacts(raw: DataFrame): DataFrame = {
-    // S10: candidate-name column resolution with positional fallback and
-    // hard-fail on a missing payload column (Financilas.py:113–133).
-    // J2 semantics: one payload per symbol, latest loaded_at wins
-    // (load_one_row's LIMIT 1 over the unique (symbol, loaded_at) key).
-    val latest = Upsert.latestByKey(
-      graft.ingest.RawZone.resolve(raw), Seq("symbol"), col("loaded_at"))
+  private def latestPayloads(resolved: DataFrame): DataFrame =
+    Upsert.latestByKey(resolved, Seq("symbol"), col("loaded_at"))
 
+  /** One row per emitted (pane, date, metric) leaf of the latest
+    * payloads, carrying the dedup's order: `pane_prec`, then the leaf's
+    * `date_pos` and `metric_pos` in its document.
+    */
+  private def leaves(latest: DataFrame): DataFrame = {
     val parsed = latest
       .withColumn("p", parsePayload(col("payload")))
       .select(
@@ -112,67 +120,66 @@ object Financials {
         col("ps.pane").as("pane"))
 
     // Orientation: OUTER map keys are DATES, inner are METRICS
-    // (Financilas.py:84–96). explode is the built-in Generator — stays
-    // codegen-adjacent, no custom Generator needed.
-    val exploded = stacked
-      .select(col("*"), explode(col("pane")).as(Seq("date_str", "metrics")))
+    // (Financilas.py:84–96). The date columns are derived per (pane,
+    // date), before the metrics explode: a date key's parse, year and
+    // period are the same for every metric under it.
+    val dated = stacked
+      .select(col("*"), posexplode(col("pane")).as(Seq("date_pos", "date_str", "metrics")))
       .drop("pane")
-      .select(col("*"), explode(col("metrics")).as(Seq("metric", "value_str")))
-      .drop("metrics")
-
-    val derived = exploded
       .withColumn("date", dateFromPrefix(col("date_str")))   // F12
       .filter(col("date").isNotNull)                          // skip-on-parse-failure (Financilas.py:92)
+      .withColumn("calendar_year", year(col("date")))         // F13
+      .withColumn("period", periodOf(col("freq"), col("date"))) // F14
+
+    dated
+      .select(col("*"), posexplode(col("metrics")).as(Seq("metric_pos", "metric", "value_str")))
       .filter(length(col("metric")) > 0)                      // P9 truthy key
       // P7 — reference SKIPS non-scalar metric values (dict/list,
       // Financilas.py:99–100): a nested value survives the string-typed
       // pane parse as raw JSON text, so drop object/array-shaped leaves.
       .filter(col("value_str").isNull ||
         !(col("value_str").startsWith("{") || col("value_str").startsWith("[")))
-      .withColumn("calendar_year", year(col("date")))         // F13
-      .withColumn("period", periodOf(col("freq"), col("date"))) // F14
       // P7+P8: non-scalar leaf → uncastable string → null; NaN/Inf →
       // null. try_cast: a non-numeric scalar leaf (bare string token)
       // must degrade to null, not throw under ANSI — the reference
       // never aborts the run on one bad leaf.
       .withColumn("value", nanToNull(col("value_str").try_cast("double")))
-
-    derived.select("stock", "yf_name", "statement_type", "metric",
-      "stockcurrency", "financialcurrency", "calendar_year", "period",
-      "value", "date", "pane_prec")
+      .select((Columns :+ "pane_prec" :+ "date_pos" :+ "metric_pos").map(col): _*)
   }
 
-  /** PK dedup (stock, statement_type, metric, date): later pane wins —
-    * replicates ON-DUPLICATE-KEY last-write-wins under the reference's
-    * pane iteration order.
+  /** PK dedup (stock, statement_type, metric, date): the last write of
+    * the reference's ON-DUPLICATE-KEY loop wins — the later pane, then
+    * within one pane the later date key (two keys with one 10-character
+    * prefix, `2024-09-30` and `2024-09-30 00:00:00`, share a PK), then
+    * the later metric. A top-1 window over `keys` (⊇ Pk), so its sort is
+    * the rows' only sort, not a sort-aggregate on each side of it.
     */
-  private def pkDedup(derived: DataFrame): DataFrame =
-    Upsert.latestByKey(derived, Pk, col("pane_prec"))
-      .select("stock", "yf_name", "statement_type", "metric", "stockcurrency",
-        "financialcurrency", "calendar_year", "period", "value", "date")
+  private def pkDedup(leaves: DataFrame, keys: Seq[String]): DataFrame = {
+    val lastWrite = Window.partitionBy(keys.map(col): _*).orderBy(
+      col("pane_prec").desc, col("date_pos").desc, col("metric_pos").desc)
+    leaves.withColumn("_rn", row_number().over(lastWrite)).filter(col("_rn") === 1)
+  }
 
-  /** Fused normalize → maintained-layout write, TWO exchanges: the
-    * latest-per-symbol aggregate's (raw payloads, at the session's
-    * shuffle width), then a repartition into `buckets` on `stock` BEFORE
-    * the PK dedup (the unpivoted leaf rows). Since stock ⊆ PK,
-    * HashPartitioning(stock) satisfies the dedup aggregation's
-    * ClusteredDistribution(PK), so the dedup runs co-located and the
-    * layout write needs no third exchange. (`normalize` +
-    * Sinks.writeFactPartitioned also pays two: it dedups at the shuffle
-    * width, then re-shuffles the deduped rows into the buckets.) The
-    * destination layout is the bucket-PARTITIONED one
-    * (Sinks.writeFactPartitioned): `bucket = pmod(hash(stock), n)` is
-    * exactly the repartition's shuffle partition id, so each write task
-    * holds one bucket and partitionBy adds no exchange and no sort (the
-    * `bucket` sort prefix satisfies the writer's required ordering).
-    * Readers drop/prune the `bucket` virtual column; increments go
-    * through Sinks.upsertFactDelta and rewrite only touched buckets.
+  /** Fused normalize → maintained-layout write, ONE exchange: the
+    * resolved raw rows are hash-partitioned on `symbol` into `buckets`
+    * partitions, and latest-per-symbol, parse, unpivot, PK dedup and the
+    * layout write all run inside that partitioning (`symbol` becomes
+    * `stock`, and stock ⊆ PK). The destination layout is the
+    * bucket-PARTITIONED one (Sinks.writeFactPartitioned): `bucket =
+    * pmod(hash(stock), n)` is exactly the shuffle partition id, so each
+    * write task holds one bucket. The dedup's window sorts on `bucket +:
+    * Pk` first, so that one sort is also the layout's PK file order and
+    * the writer's `bucket` ordering: the `sortWithinPartitions` below
+    * plans no sort. The trade-off: the parse runs on `buckets` tasks,
+    * not at the session's shuffle width. Readers drop/prune the `bucket`
+    * virtual column; increments go through Sinks.upsertFactDelta and
+    * rewrite only touched buckets.
     */
   def normalizeInto(raw: DataFrame, path: String, buckets: Int = 32): Unit = {
-    pkDedup(derivedFacts(raw).repartition(buckets, col("stock")))
-      // bucket is a pure function of stock: recomputing it after the
-      // dedup is a projection — partitioning survives, no exchange
-      .withColumn("bucket", graft.sources.Sinks.factBucket(buckets))
+    val resolved = graft.ingest.RawZone.resolve(raw).repartition(buckets, col("symbol"))
+    pkDedup(leaves(latestPayloads(resolved))
+      .withColumn("bucket", graft.sources.Sinks.factBucket(buckets)), "bucket" +: Pk)
+      .select((Columns :+ "bucket").map(col): _*)
       .sortWithinPartitions(("bucket" +: Pk).map(col): _*)
       .write.mode("overwrite").partitionBy("bucket").parquet(path)
     graft.sources.Sinks.writeLayoutBuckets(path, buckets)
@@ -222,18 +229,24 @@ object Financials {
   /** [[latestFacts]] against a maintained-layout PATH: the bucket count
     * comes from the layout's own `_graft_buckets` sidecar (written by
     * Sinks.writeFactPartitioned / normalizeInto / upsertFactDelta), so
-    * the pruning predicate can never disagree with the directory law. A
-    * layout without the sidecar (e.g. the flat writeFact form) falls
-    * back to an unpruned — correct, just wider — scan. The layout is
-    * read through Sinks.readLayout (schema from a part-file footer), so
-    * a lookup runs ONE Spark job: the scan, with no inference job.
+    * the pruning predicate can never disagree with the directory law,
+    * and the read lists the symbol's bucket directory alone
+    * (Sinks.readBucket); a bucket with no directory holds no rows of the
+    * symbol, and the whole-layout read answers it, empty. A layout
+    * without the sidecar (e.g. the flat writeFact form) falls back to an
+    * unpruned — correct, just wider — scan. The schema comes from a
+    * part-file footer, so a lookup runs ONE Spark job: the scan, with no
+    * inference job.
     */
   def latestFactsAt(spark: SparkSession, path: String,
                     symbol: String, k: Int = 10): DataFrame = {
-    val fact = graft.sources.Sinks.readLayout(spark, path)
-    graft.sources.Sinks.readLayoutBuckets(path) match {
-      case Some(n) => latestFacts(fact, symbol, k, n)
-      case None    => latestFacts(fact.drop("bucket"), symbol, k)
+    import graft.sources.Sinks
+    Sinks.readLayoutBuckets(path) match {
+      case Some(n) =>
+        val fact = Sinks.readBucket(spark, path, Sinks.bucketOf(symbol, n))
+          .getOrElse(Sinks.readLayout(spark, path))
+        latestFacts(fact, symbol, k, n)
+      case None => latestFacts(Sinks.readLayout(spark, path).drop("bucket"), symbol, k)
     }
   }
 }

@@ -48,14 +48,28 @@ object Summary {
     // typed parse can't distinguish `"info": {}` from info-with-unknown-
     // keys, so the empty-dict edge resolves to the info side — a
     // deliberate, documented deviation (reference: {} is falsy → root).
-    def info(f: String): Column =
-      when(col("p.info").isNull, col(s"p.$f")).otherwise(col(s"p.info.$f"))
-    // long_summary fallback chain (Summary.py:158–162), cleaned
-    val longSummary = cleanText(pyOr(info("longBusinessSummary"),
-      col("p.summary"), col("p.profile.longBusinessSummary")))
-    val hq = hqParts(longSummary)
+    //
+    // Each shared value is bound to a column once, in staged
+    // projections: the info fields, then the cleaned long summary, then
+    // the HQ parts. pyOr and cleanText reference their operand several
+    // times, so one inlined select copies each field's expression into
+    // every use (4,139 optimized expression nodes); CollapseProject keeps
+    // a stage apart when its values are referenced more than once.
+    def info(f: String): Column = col(s"info_$f")
+    val staged = p
+      .select(col("symbol") +: col("p.summary").as("root_summary") +:
+        col("p.profile.longBusinessSummary").as("profile_summary") +:
+        graft.model.Schemas.info.fieldNames.toSeq.map(f =>
+          when(col("p.info").isNull, col(s"p.$f")).otherwise(col(s"p.info.$f"))
+            .as(s"info_$f")): _*)
+      // long_summary fallback chain (Summary.py:158–162), cleaned
+      .select(col("*"), cleanText(pyOr(info("longBusinessSummary"),
+        col("root_summary"), col("profile_summary"))).as("long_summary"))
+      .select(col("*"), hqParts(col("long_summary")).as("hq"))
+    val longSummary = col("long_summary")
+    def hq(f: String): Column = col(s"hq.$f")
 
-    p.select(
+    staged.select(
       pyOr(col("symbol"), info("symbol"), info("ticker")).as("stock"),
       cleanText(pyOr(info("longName"), info("shortName"),
         info("displayName"), info("name"))).as("yf_name"),

@@ -13,10 +13,11 @@ import org.apache.spark.sql.functions._
   * SortAggregate → Exchange → Sort → final SortAggregate: every row is
   * sorted on both sides of the one shuffle. The partial combine pays
   * that map-side sort back only when many versions of a key share one
-  * input partition (a raw feed's re-deliveries). A source of about one
-  * version per key (a changelog read) is cheaper as a key shuffle plus
-  * a top-1 window, which sorts once, after the shuffle — see
-  * `Changelog.compact`.
+  * input partition (a raw feed's re-deliveries), so it serves the raw
+  * zone's latest-per-symbol and the upserts here. A source of about one
+  * version per key is cheaper as a key shuffle plus a top-1 window,
+  * which sorts once, after the shuffle — see `Changelog.compact` and
+  * the fact PK dedup in `Financials`.
   */
 object Upsert {
 

@@ -203,6 +203,28 @@ class LayoutSpec extends SparkSpec {
     }.get
     assert(scan.selectedPartitions.partitionCount === 1)
     assert(rows.count() === 5L)
+    // the file index lists the symbol's bucket directory alone
+    assert(scan.relation.location.rootPaths.map(_.getName) ===
+      Seq(s"bucket=${Sinks.bucketOf("S00003", 8)}"))
+  }
+
+  test("bucketOf on the driver equals factBucket") {
+    val stocks = (0 until 40).map(i => f"S$i%05d") ++ Seq("", "ÄÖÜ", "BRK.B")
+    for (n <- Seq(1, 4, 8, 32, 512)) {
+      val want = stocks.toDF("stock").select(Sinks.factBucket(n)).as[Int].collect().toSeq
+      assert(stocks.map(Sinks.bucketOf(_, n)) === want, s"n=$n")
+    }
+  }
+
+  test("latestFactsAt: a symbol whose bucket directory does not exist returns 0 rows") {
+    val path = Sinks.tmpPath("test_fact_no_bucket_dir")
+    Sinks.deleteRecursively(path)
+    Financials.normalizeInto(RawZoneGen.payloads(spark, 2), path, buckets = 32)
+    val missing = (0 until 200).map(i => f"X$i%05d")
+      .find(s => !new File(s"$path/bucket=${Sinks.bucketOf(s, 32)}").exists()).get
+    val rows = Financials.latestFactsAt(spark, path, missing)
+    assert(rows.collect().isEmpty)
+    assert(rows.schema === Financials.latestFactsAt(spark, path, "S00001").schema)
   }
 
   test("latestFacts on the maintained layout: scan partition-prunes to one bucket") {

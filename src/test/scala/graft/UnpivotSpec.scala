@@ -4,7 +4,8 @@ import java.security.MessageDigest
 import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{GenerateExec, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -150,19 +151,107 @@ class UnpivotSpec extends SparkSpec {
       .digest(rows.mkString("\n").getBytes("UTF-8")).map("%02x".format(_)).mkString
     assert(rows.length === 16)
     assert(md5 === "8dadaf24f2fa63fffc4a5f8486cf4e82")
+    // each shared value is bound once (staged projections): over a
+    // parquet raw zone the inlined select optimized to 4,139 expression
+    // nodes
+    val rawDir = Sinks.tmpPath("test_summary_expr_nodes")
+    raw.write.mode("overwrite").parquet(rawDir)
+    val optimized = Summary.normalize(spark.read.parquet(rawDir)).queryExecution.optimizedPlan
+    val nodes = optimized.collect { case n =>
+      n.expressions.map(_.collect { case e => e }.size).sum }.sum
+    assert(nodes <= 1500, s"$nodes optimized expression nodes")
   }
 
-  test("exchanges: normalize plans one, normalizeInto's layout write two (AQE off)") {
-    def exchanges(p: SparkPlan) = p.collect { case e: ShuffleExchangeExec => e }.size
+  private def exchanges(p: SparkPlan) = p.collect { case e: ShuffleExchangeExec => e }.size
+
+  /** The operators above the leaf rows' generator (the metrics explode). */
+  private def aboveLeaves(p: SparkPlan): Seq[SparkPlan] = p match {
+    case _: GenerateExec => Nil
+    case _ => p +: p.children.flatMap(aboveLeaves)
+  }
+
+  /** The one physical plan `normalizeInto(raw, path, buckets)` ran. */
+  private def intoPlan(raw: DataFrame, name: String, buckets: Int): SparkPlan = {
+    val path = Sinks.tmpPath(name)
+    Sinks.deleteRecursively(path)
+    val (_, queries) = observe(Financials.normalizeInto(raw, path, buckets))
+    assert(queries.size === 1)
+    queries.head.executedPlan
+  }
+
+  test("exchanges: normalize plans one, normalizeInto's layout write one (AQE off)") {
     withConfs("spark.sql.adaptive.enabled" -> "false") {
       val raw = RawZoneGen.payloads(spark, 6)
       // the PK dedup reuses the latest-per-symbol hash partitioning
       assert(exchanges(Financials.normalize(raw).queryExecution.executedPlan) === 1)
-      val path = Sinks.tmpPath("test_normalize_into_exchanges")
-      Sinks.deleteRecursively(path)
-      val (_, queries) = observe(Financials.normalizeInto(raw, path, buckets = 8))
-      // latest-per-symbol at the shuffle width, then the bucket repartition
-      assert(queries.map(q => exchanges(q.executedPlan)) === Seq(2))
+      // the bucket repartition of the raw rows carries the whole build
+      assert(exchanges(intoPlan(raw, "test_normalize_into_exchanges", 8)) === 1)
+    }
+  }
+
+  test("the leaf rows are sorted once: one Sort, no aggregate above the leaf Generate (AQE off)") {
+    withConfs("spark.sql.adaptive.enabled" -> "false") {
+      val raw = RawZoneGen.payloads(spark, 6)
+      Seq("normalize" -> Financials.normalize(raw).queryExecution.executedPlan,
+        "normalizeInto" -> intoPlan(raw, "test_normalize_into_sorts", 8)).foreach {
+        case (what, plan) =>
+          val above = aboveLeaves(plan)
+          assert(above.count(_.isInstanceOf[SortExec]) === 1, s"$what:\n$plan")
+          assert(!above.exists(_.isInstanceOf[BaseAggregateExec]), s"$what:\n$plan")
+      }
+    }
+  }
+
+  /** Two date keys of one pane with one 10-character prefix share a PK:
+    * the later leaf in the document wins, as in the reference's
+    * ON-DUPLICATE-KEY loop, whichever of the two spellings comes first.
+    */
+  private def tiedDates: DataFrame = {
+    import spark.implicits._
+    val json =
+      """{"info": {"longName": "T"},
+        |"incomestatement": {"yearly": {"2024-09-30": {"Revenue": 1.0},
+        |  "2024-09-30 00:00:00": {"Revenue": 2.0}}, "quarterly": {}},
+        |"balancesheet": {"yearly": {"2024-09-30 00:00:00": {"Assets": 3.0},
+        |  "2024-09-30": {"Assets": 4.0}}, "quarterly": {}},
+        |"cashflow": {"yearly": {"2024-09-30": {"Cash": 9.0}},
+        |  "quarterly": {"2024-09-30": {"Cash": 5.0}, "2024-09-30 00:00:00": {"Cash": 6.0}}}}"""
+        .stripMargin.replace("\n", "")
+    Seq(("TIE", json, Timestamp.valueOf("2025-01-01 00:00:00")))
+      .toDF("symbol", "payload", "loaded_at")
+  }
+
+  private def layoutRows(raw: DataFrame, name: String, buckets: Int) = {
+    val path = Sinks.tmpPath(name)
+    Sinks.deleteRecursively(path)
+    Financials.normalizeInto(raw, path, buckets)
+    factTuples(spark.read.parquet(path).drop("bucket"))
+  }
+
+  test("PK dedup tie-break: the later leaf wins in normalize and normalizeInto, at 1 and 7 shuffle partitions") {
+    val want = Set(
+      ("TIE", "T", "IS", "Revenue", null, null, 2024, 4, Some(2.0), "2024-09-30"),
+      ("TIE", "T", "BS", "Assets", null, null, 2024, 4, Some(4.0), "2024-09-30"),
+      // the quarterly pane beats the yearly one, then its later key wins
+      ("TIE", "T", "CF", "Cash", null, null, 2024, 3, Some(6.0), "2024-09-30"))
+    for (n <- Seq("1", "7")) withConfs("spark.sql.shuffle.partitions" -> n) {
+      assert(factTuples(Financials.normalize(tiedDates)) === want, s"normalize, $n partitions")
+      assert(layoutRows(tiedDates, "test_tie_break", 4) === want, s"normalizeInto, $n partitions")
+    }
+  }
+
+  test("normalizeInto lands normalize's rows at 1 and 7 shuffle partitions and with AQE off") {
+    val raw = ReferenceQueries.fixtureRaw(spark)
+      .unionByName(RawZoneGen.payloads(spark, 12))
+      .unionByName(tiedDates)
+    val want = factTuples(Financials.normalize(raw))
+    assert(want.size > 100)
+    Seq(Seq("spark.sql.shuffle.partitions" -> "1"), Seq("spark.sql.shuffle.partitions" -> "7"),
+      Seq("spark.sql.adaptive.enabled" -> "false")).foreach { confs =>
+      withConfs(confs: _*) {
+        assert(factTuples(Financials.normalize(raw)) === want, confs.toString)
+        assert(layoutRows(raw, "test_into_invariance", 5) === want, confs.toString)
+      }
     }
   }
 }
