@@ -227,7 +227,7 @@ object Similarity {
     // Without this the signature subplan appears twice in the DAG and
     // Spark re-evaluates the bits×dims signature arithmetic per
     // consumer. In a deployment the index is a written artifact
-    // (writeFact-style clustered parquet) built once and searched many
+    // (a clustered parquet layout) built once and searched many
     // times; localCheckpoint is the in-session analogue of that build.
     val corpus = signedCorpus(vectors, idCol, embCol, bits, dims)
       .localCheckpoint()

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ingest.{RawZone, RawZoneGen}
 import graft.sources.{Changelog, Sinks}
-import graft.transform.{Financials, Rollup, Summary, Upsert}
+import graft.transform.{Financials, Summary, Upsert}
 
 /** Scale-proportional pipeline queries: the flagship G1 unpivot and the
   * Summary dimension build running on an sf-proportional synthetic raw
@@ -192,13 +192,12 @@ object ScaleQueries {
         val dayRaw = raw.filter(col("load_date") === lit(day))
         if (i == 0) Financials.normalizeInto(dayRaw, path)
         else {
-          // checkpoint the bucketed delta ONCE and hand the blocks to
-          // the upsert (materialized = true): the touched-bucket probe
-          // scans the in-memory delta instead of a second raw-partition
-          // pass, and the stray guard is structurally unnecessary —
-          // one materialization, one probe job, one merge job per day
-          val dayFacts = Financials.normalize(dayRaw)
-            .withColumn("bucket", Sinks.factBucket(32)).localCheckpoint()
+          // checkpoint the delta ONCE and hand the blocks to the upsert
+          // (materialized = true): the touched-bucket probe scans the
+          // in-memory delta instead of a second raw-partition pass, and
+          // the stray guard is structurally unnecessary — one
+          // materialization, one probe job, one merge job per day
+          val dayFacts = Financials.normalize(dayRaw).localCheckpoint()
           Sinks.upsertFactDelta(s, path, dayFacts, materialized = true)
         }
       }
@@ -226,64 +225,14 @@ object ScaleQueries {
       val rollPath = Sinks.tmpPath(s"rollup_ivm_$syms")
       Sinks.deleteRecursively(factPath)
       Sinks.deleteRecursively(rollPath) // re-runnable: day 1 starts fresh
-      val valueQ = (col("value") * 4).cast("long") // exact: values ∈ ℤ/4
+      // each day is the in-place IVM step the q131 stream runs per
+      // micro-batch (StreamIvm.applyBatch); the served read surfaces
+      // all-null groups as NULL
       days.zipWithIndex.foreach { case (day, i) =>
-        val dayRaw = raw.filter(col("load_date") === lit(day))
-        // ONE run of the parse+unpivot pipeline feeds EVERY consumer of
-        // the day (retraction probe, delta aggregate, fact write): the
-        // bucket column is stamped BEFORE the checkpoint, so the upsert
-        // reuses this materialization as-is (materialized = true — no
-        // second copy), the touched-bucket probe scans the in-memory
-        // blocks (no second raw-partition pass), and day 0's layout
-        // write reuses it too (the old normalizeInto re-ran the whole
-        // parse on the raw partition a second time). Guide §1.2.
-        val dayFacts = Financials.normalize(dayRaw)
-          .withColumn("bucket", Sinks.factBucket(32)).localCheckpoint()
-        val facts = dayFacts.drop("bucket")
-        val replaced =
-          if (i == 0) None
-          else {
-            // old versions this delta will overwrite: bucket-pruned
-            // fact read, PK semi-join against the delta — the same
-            // touched-bucket slice the upsert itself rewrites. Exact
-            // from the delta's own buckets (a raw symbol whose payload
-            // parses to zero facts replaces nothing). The delta side
-            // broadcasts: it is bounded by the increment (§3.2), so
-            // the table side is never shuffled for the retraction.
-            val touched = dayFacts.select(col("bucket")).distinct()
-              .collect().map(_.getInt(0)).toIndexedSeq
-            Some(s.read.parquet(factPath)
-              .filter(col("bucket").isin(touched: _*))
-              .join(broadcast(dayFacts.select(Financials.Pk.map(col): _*)),
-                Financials.Pk, "left_semi"))
-          }
-        val signed = replaced.fold(facts.withColumn("_sign", lit(1L)))(
-          r => facts.withColumn("_sign", lit(1L))
-            .unionByName(r.drop("bucket").withColumn("_sign", lit(-1L))))
-        // materialize BEFORE the upsert rewrites the files `replaced`
-        // lazily reads — Spark plans are lazy, the overwrite is not
-        val deltaAgg = signed.groupBy("stock", "calendar_year")
-          .agg(sum(col("_sign")).as("n_facts"),
-            sum(col("_sign") * when(col("value").isNotNull, 1L).otherwise(0L))
-              .as("nn"),
-            sum(col("_sign") * valueQ).as("sum_q"))
-          .localCheckpoint()
-        // the fact write and the rollup merge touch disjoint layouts
-        // and every shared input is checkpointed above — overlap them
-        // so the merge back-fills the upsert's task tail (§2.6)
-        graft.Tuning.inParallel(
-          if (i == 0) Sinks.writeFactPartitioned(facts, factPath)
-          else Sinks.upsertFactDelta(s, factPath, dayFacts,
-            materialized = true),
-          Rollup.mergeDelta(s, rollPath, deltaAgg,
-            Seq("stock", "calendar_year"), "n_facts"))
+        graft.streaming.StreamIvm.applyBatch(s,
+          raw.filter(col("load_date") === lit(day)), i == 0, factPath, rollPath)
       }
-      // derived read: all-null groups surface as NULL (nn disambiguates
-      // a true zero sum from a cancelled-to-null one)
-      s.read.parquet(rollPath).select(col("stock"), col("calendar_year"),
-        col("n_facts"),
-        when(col("nn") === 0L, lit(null).cast("double"))
-          .otherwise(col("sum_q").cast("double") / 4.0).as("sum_value"))
+      graft.streaming.StreamIvm.served(s.read.parquet(rollPath))
     }),
 
     // Time travel over a commit-partitioned fact changelog
@@ -493,12 +442,12 @@ object ScaleQueries {
 
     // Point lookup on the maintained fact layout — the reference's
     // `idx_symbol` verify query (Financilas.py:186–195, details.py:199)
-    // against the engine's clustered table: latestFacts derives the
-    // symbol's stock-hash bucket on the driver, so the scan PARTITION-
-    // PRUNES to one bucket directory and parquet min/max stats on the
-    // PK-sorted files prune row groups within it (Explain-asserted in
-    // LayoutSpec). The fixture table is staged per JVM; the timed work
-    // is the pruned read itself.
+    // against the engine's clustered table: latestFactsAt derives the
+    // symbol's stock-hash bucket on the driver from the layout's
+    // sidecar, so the scan reads that one bucket directory and parquet
+    // min/max stats on the PK-sorted files prune row groups within it
+    // (plan-asserted in LayoutSpec). The fixture table is staged per
+    // JVM; the timed work is the pruned read itself.
     "q57_clustered_point" -> ((s, d) =>
       Financials.latestFactsAt(s, stagedFactPath(s, n(d)), PointSymbol)),
 

@@ -16,10 +16,18 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - Raw-zone append sink: details.py:207–227 (per-symbol INSERT +
   *    COMMIT). Spark file-commit protocol gives task-level atomicity —
   *    the engine-side analogue of the reference's per-row transaction.
-  *  - Fact sink: the reference clusters the fact table on its PK
-  *    (Financilas.py:28); the parquet analogue is hash-distribute by the
-  *    leading key + sort files on the full PK, so scans get min/max
-  *    pruning and downstream per-stock work is co-located.
+  *  - The bucket layout: the reference keeps one fact table clustered
+  *    on its PK and maintained by `INSERT … ON DUPLICATE KEY UPDATE`
+  *    (Financilas.py:28, 167–184). Its parquet analogue is `bucket=K/`
+  *    directories of the stock hash ([[factBucket]]/[[bucketOf]], the
+  *    only bucket law), files inside each sorted on the PK, and a
+  *    `_graft_buckets` sidecar: scans get min/max pruning, per-stock
+  *    work is co-located, and an increment rewrites only the buckets it
+  *    touches. The fact build (`Financials.normalizeInto`,
+  *    [[writeFactPartitioned]]), its increments ([[upsertFactDelta]],
+  *    [[deleteFactKeys]]) and the q128 rollup (`Rollup.mergeDelta`) all
+  *    write it through [[writeBuckets]], and the three increments guard
+  *    the recorded count with [[requireBuckets]].
   */
 object Sinks {
 
@@ -149,30 +157,17 @@ object Sinks {
       .write.mode("overwrite").option("compression", "zstd")
       .partitionBy("load_date").parquet(path)
 
-  /** Fact table, laid out like the reference's clustered PK
-    * (stock, statement_type, metric, date — Financilas.py:28):
-    * hash-distributed on `stock` into a bounded file count and sorted
-    * within each file on the full PK. Parquet row-group min/max stats
-    * then prune point/range scans on the leading key, and every
-    * downstream per-stock operation (latestFacts, per-symbol exports)
-    * reads one co-located, pre-sorted file run.
-    */
-  def writeFact(df: DataFrame, path: String, buckets: Int = 32): Unit =
-    df.repartition(buckets, col("stock"))
-      .sortWithinPartitions("stock", "statement_type", "metric", "date")
-      .write.mode("overwrite").parquet(path)
-
-  /** Layout-metadata sidecar for the maintained fact layout: the bucket
-    * count is part of the PHYSICAL layout (the factBucket law baked into
-    * the directory structure), so it is recorded next to the data —
-    * readers derive it instead of trusting a caller-supplied count, and
-    * the incremental writer refuses a mismatched count instead of
-    * silently merging under the wrong bucket law. Underscore-prefixed,
-    * so Spark's parquet reader ignores it.
+  /** Layout-metadata sidecar of the bucket layout: the bucket count is
+    * part of the PHYSICAL layout (the [[factBucket]] law baked into the
+    * directory structure), so it is recorded next to the data — readers
+    * derive it instead of trusting a caller-supplied count, and the
+    * rewriting verbs refuse a mismatched count ([[requireBuckets]])
+    * instead of silently merging under the wrong bucket law.
+    * Underscore-prefixed, so Spark's parquet reader ignores it.
     */
   private val BucketsFileName = "_graft_buckets"
 
-  def writeLayoutBuckets(path: String, buckets: Int): Unit = {
+  private def writeLayoutBuckets(path: String, buckets: Int): Unit = {
     new File(path).mkdirs()
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(path, BucketsFileName), buckets.toString): Unit
@@ -185,30 +180,47 @@ object Sinks {
     else None
   }
 
-  /** Read a fact layout — bucket-partitioned or the flat [[writeFact]]
-    * form — with the schema of its first part file's footer
+  /** The guard of every verb that rewrites part of a bucket layout: a
+    * count other than the recorded one would merge and overwrite under
+    * the WRONG directories, so it fails loudly. A path with no sidecar
+    * (no layout yet, or one written before the sidecar) passes.
+    */
+  private[graft] def requireBuckets(path: String, buckets: Int, verb: String): Unit =
+    readLayoutBuckets(path).foreach { recorded =>
+      require(recorded == buckets,
+        s"$verb called with buckets=$buckets but the layout at $path was " +
+          s"written with buckets=$recorded (see $BucketsFileName)")
+    }
+
+  /** Read a fact layout — the bucket layout, or a flat parquet dir of
+    * facts — with the schema of its first part file's footer
     * ([[ParquetMeta.read]]): on a point lookup the inference job would
     * be one job of two, all metadata.
     */
   def readLayout(spark: SparkSession, path: String): DataFrame =
     ParquetMeta.read(spark, path, ParquetMeta.dataFiles(path).nextOption())
 
-  /** Bucket `k` of the maintained layout alone: lists `path/bucket=k`
-    * only, with the schema of its first part file's footer; `basePath`
-    * keeps the `bucket` column. None when that bucket holds no data.
+  /** Bucket `k` of the bucket layout alone: lists `path/bucket=k` only,
+    * with the schema of its first part file's footer; `basePath` keeps
+    * the `bucket` column. A bucket with no directory holds no rows: it
+    * reads as an empty frame on the layout's schema, which plans as an
+    * empty local relation and opens no data file.
     */
-  def readBucket(spark: SparkSession, path: String, k: Int): Option[DataFrame] = {
+  def readBucket(spark: SparkSession, path: String, k: Int): DataFrame = {
     val dir = s"$path/bucket=$k"
-    ParquetMeta.dataFiles(dir).nextOption()
-      .map(f => ParquetMeta.read(spark, dir, Some(f), basePath = Some(path)))
+    ParquetMeta.dataFiles(dir).nextOption() match {
+      case Some(f) => ParquetMeta.read(spark, dir, Some(f), basePath = Some(path))
+      case None    => readLayout(spark, path).limit(0)
+    }
   }
 
-  /** The stock-hash bucket of the MAINTAINED fact layout. `hash` is the
-    * same Murmur3(seed 42) as `repartition(n, col)`'s HashPartitioning,
-    * so `pmod(hash(stock), n)` equals the shuffle partition id — after a
+  /** The stock-hash bucket of the bucket layout. `hash` is the same
+    * Murmur3(seed 42) as `repartition(n, col)`'s HashPartitioning, so
+    * `pmod(hash(stock), n)` equals the shuffle partition id — after a
     * repartition on `stock` every task holds exactly one bucket value
-    * and the partitionBy write below emits one directory per task with
-    * NO extra exchange.
+    * and the partitionBy write of [[writeBuckets]] emits one directory
+    * per task with NO extra exchange. With [[bucketOf]], the only form
+    * of the bucket law.
     */
   def factBucket(n: Int): org.apache.spark.sql.Column =
     pmod(hash(col("stock")), lit(n))
@@ -219,28 +231,53 @@ object Sinks {
     ((h % n) + n) % n
   }
 
-  /** Maintained fact layout: the stock-hash bucket is a PHYSICAL
-    * partition column (`bucket=K/` directories), files inside each
-    * bucket sorted on the full PK. Same read properties as [[writeFact]]
-    * (co-located stocks, min/max row-group pruning on the PK prefix,
-    * plus partition pruning for callers that derive the bucket from the
-    * stock — Financials.latestFacts does), and one property writeFact
-    * cannot give: an incremental upsert can OVERWRITE ONLY THE BUCKETS
-    * A DELTA TOUCHES ([[upsertFactDelta]]) — O(delta), never
-    * O(history). Input must already carry the `bucket` column and be
-    * hash-partitioned on `stock` into `buckets` partitions; the sort
-    * prefix `bucket` satisfies the writer's required partition-column
-    * ordering, so no sort is inserted and the PK file order survives.
+  /** The one writer of the bucket layout (the fact table and the q128
+    * rollup): `bucket=K/` directories, files inside each bucket sorted
+    * on `keys`, and the `_graft_buckets` sidecar. `rows` must already
+    * carry `bucket` ([[factBucket]] of `buckets`) and be hash-partitioned
+    * on `stock` into `buckets` partitions — each caller's own plan has
+    * done that — so every task holds one bucket and the `bucket +: keys`
+    * sort prefix satisfies the writer's partition-column ordering: no
+    * exchange or sort is added beyond the caller's.
+    *
+    * `touched = None` is a full build: the layout is overwritten.
+    * `Some(bs)` rewrites buckets `bs` alone by dynamic partition
+    * overwrite, and other bucket directories keep their files
+    * byte-identical. Dynamic overwrite replaces only the directories
+    * the output holds rows for, so a touched bucket the rows left empty
+    * would keep its old files: such a bucket — one whose file names are
+    * the same after the write as before (every write's part files carry
+    * a fresh job id) — is deleted.
     */
-  def writeFactPartitioned(df: DataFrame, path: String,
-                           buckets: Int = 32): Unit = {
-    val pk = graft.transform.Financials.Pk
-    df.withColumn("bucket", factBucket(buckets))
-      .repartition(buckets, col("stock"))
-      .sortWithinPartitions(("bucket" +: pk).map(col): _*)
-      .write.mode("overwrite").partitionBy("bucket").parquet(path)
+  private[graft] def writeBuckets(rows: DataFrame, path: String, buckets: Int,
+                                  keys: Seq[String],
+                                  touched: Option[Seq[Int]] = None): Unit = {
+    def names(b: Int): Set[String] =
+      Option(new File(path, s"bucket=$b").list()).fold(Set.empty[String])(_.toSet)
+    val before = touched.toSeq.flatten.map(b => b -> names(b))
+    val writer = rows.sortWithinPartitions(("bucket" +: keys).map(col): _*)
+      .write.mode("overwrite").partitionBy("bucket")
+    touched.fold(writer)(_ => writer.option("partitionOverwriteMode", "dynamic"))
+      .parquet(path)
+    before.foreach { case (b, old) =>
+      if (old.nonEmpty && names(b) == old) deleteRecursively(s"$path/bucket=$b")
+    }
     writeLayoutBuckets(path, buckets)
   }
+
+  /** Full build of the fact table in the bucket layout, from a logical
+    * fact frame: bucket stamped, hash-partitioned on `stock`, written by
+    * [[writeBuckets]]. The layout's read properties: co-located stocks,
+    * min/max row-group pruning on the PK prefix, a lookup that lists one
+    * bucket directory ([[readBucket]]), and an increment that rewrites
+    * only the buckets it touches ([[upsertFactDelta]]) — O(delta), never
+    * O(history).
+    */
+  def writeFactPartitioned(df: DataFrame, path: String,
+                           buckets: Int = 32): Unit =
+    writeBuckets(df.withColumn("bucket", factBucket(buckets))
+      .repartition(buckets, col("stock")),
+      path, buckets, graft.transform.Financials.Pk)
 
   /** O(delta) incremental fact upsert — the engine-scale analogue of the
     * reference's `INSERT … ON DUPLICATE KEY UPDATE`, which touches only
@@ -250,9 +287,8 @@ object Sinks {
     *      layout (partition pruning — untouched buckets are never read);
     *   3. merge: existing rows whose PK collides with the delta are
     *      replaced (left-anti + union ≡ incoming-wins last-write-wins);
-    *   4. rewrite ONLY the touched buckets via dynamic partition
-    *      overwrite — untouched bucket directories keep their files
-    *      byte-identical.
+    *   4. rewrite ONLY the touched buckets ([[writeBuckets]]) —
+    *      untouched bucket directories keep their files byte-identical.
     * Per-increment cost is O(touched buckets) ≈ delta keys × (history /
     * `buckets`) in read, shuffle and write. SIZE `buckets` WITH THE
     * TABLE — roughly one bucket per file-sized chunk of history (the
@@ -270,8 +306,8 @@ object Sinks {
     * dynamic overwrite, the commit itself is not atomic across buckets;
     * a production deployment would put a transactional table format
     * over the same layout.)
-    */
-  /** @param deltaStocks optional ONE-column DataFrame of the stocks the
+    *
+    * @param deltaStocks optional ONE-column DataFrame of the stocks the
     *                     delta covers (a superset is fine — extra
     *                     buckets are read and rewritten unchanged). A
     *                     caller usually knows this cheaply — e.g. the
@@ -283,26 +319,20 @@ object Sinks {
     *                     single-pass.
     * @param materialized the caller guarantees `incoming` is ALREADY
     *                     eagerly materialized (localCheckpoint or
-    *                     equivalent) AND carries a correct `bucket`
-    *                     column (factBucket(buckets)). Skips the
-    *                     internal re-materialization — an IVM day step
-    *                     that checkpointed the delta for its own
-    *                     retraction aggregate would otherwise pay a
-    *                     second full copy of the same rows (guide §1.2:
-    *                     don't compute things you throw away).
+    *                     equivalent). Skips the internal
+    *                     re-materialization — an IVM day step that
+    *                     checkpointed the delta for its own retraction
+    *                     aggregate would otherwise pay a second full copy
+    *                     of the same rows (guide §1.2: don't compute
+    *                     things you throw away). The bucket is stamped
+    *                     here from `buckets` either way.
     */
   def upsertFactDelta(spark: SparkSession,
                       path: String, incoming: DataFrame,
                       buckets: Int = 32,
                       deltaStocks: Option[DataFrame] = None,
                       materialized: Boolean = false): Unit = {
-    // The bucket law is physical layout: a mismatched count would merge
-    // and overwrite under the WRONG directories. Refuse loudly.
-    readLayoutBuckets(path).foreach { recorded =>
-      require(recorded == buckets,
-        s"upsertFactDelta called with buckets=$buckets but the layout at " +
-          s"$path was written with buckets=$recorded (see _graft_buckets)")
-    }
+    requireBuckets(path, buckets, "upsertFactDelta")
     val pk = graft.transform.Financials.Pk
     // Materialize the delta ONCE up front: the stray guard below and
     // the merge job share a single run of the delta's upstream pipeline
@@ -319,23 +349,15 @@ object Sinks {
     // re-applies; the localCheckpoint stages WORK, not the only copy
     // of any data, unlike deleteFactKeys' surviving set (which IS
     // durably staged below for exactly that reason).
-    val delta =
-      if (materialized) {
-        require(incoming.columns.contains("bucket"),
-          "upsertFactDelta(materialized = true) requires the caller to " +
-            "have added the bucket column (Sinks.factBucket) before " +
-            "materializing — the bucket law is physical layout")
-        incoming
-      } else incoming.withColumn("bucket", factBucket(buckets))
-        .localCheckpoint()
+    val stamped = incoming.withColumn("bucket", factBucket(buckets))
+    val delta = if (materialized) stamped else stamped.localCheckpoint()
     val probe = deltaStocks match {
-      case Some(ks) =>
-        ks.select(pmod(hash(col(ks.columns.head)), lit(buckets)).as("bucket"))
+      case Some(ks) => ks.select(col(ks.columns.head).as("stock"))
+        .select(factBucket(buckets).as("bucket"))
       case None => delta.select("bucket")
     }
     val touched = probe.distinct()
-      .collect().map(_.getInt(0)).sorted
-    val touchedSeq = touched.toIndexedSeq
+      .collect().map(_.getInt(0)).sorted.toIndexedSeq
     // Guard the deltaStocks contract BEFORE the write: a delta row
     // whose bucket is not in the touched set would land in the merged
     // output alone — dynamic overwrite would then replace that bucket
@@ -351,7 +373,7 @@ object Sinks {
     // construction — the guard scan is skipped outright (one fewer job
     // per increment).
     deltaStocks.foreach { _ =>
-      val stray = delta.filter(!col("bucket").isin(touchedSeq: _*)).count()
+      val stray = delta.filter(!col("bucket").isin(touched: _*)).count()
       if (stray > 0)
         throw new IllegalStateException(
           s"upsertFactDelta: $stray delta row(s) fall outside the " +
@@ -360,9 +382,9 @@ object Sinks {
             "lost). Pass a deltaStocks that covers every delta stock, " +
             "or None to derive the universe from the delta itself.")
     }
-    val guarded = delta.filter(col("bucket").isin(touchedSeq: _*))
+    val guarded = delta.filter(col("bucket").isin(touched: _*))
     val existing = readLayout(spark, path)
-      .filter(col("bucket").isin(touchedSeq: _*))
+      .filter(col("bucket").isin(touched: _*))
     // ONE exchange for the whole merge+write (the q38 fusion, applied
     // to the touched subset): the tagged union repartitions on `stock`,
     // which satisfies the PK dedup's required distribution (stock ⊆ PK)
@@ -376,11 +398,7 @@ object Sinks {
     // a rewritten bucket must not differ from its neighbours' files
     val merged = graft.transform.Upsert.latestByKey(tagged, pk, col("_gen"))
       .select(existing.columns.map(col): _*)
-      .sortWithinPartitions(("bucket" +: pk).map(col): _*)
-    merged.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket").parquet(path)
-    writeLayoutBuckets(path, buckets) // legacy layouts gain the sidecar
+    writeBuckets(merged, path, buckets, pk, Some(touched))
   }
 
   /** Targeted DELETE on the bucketed fact layout — the
@@ -390,24 +408,20 @@ object Sinks {
     * — the [[upsertFactDelta]] discipline with a broadcast anti-join
     * in place of the merge — never O(table): at 100 TB a deletion
     * request touches a handful of bucket directories, not the corpus.
+    * A bucket whose every row is deleted is removed by [[writeBuckets]].
     *
-    * Two physical-layout subtleties the naive form gets wrong:
-    *  - dynamic partition overwrite replaces only bucket dirs PRESENT
-    *    in the output — a bucket whose every row is deleted emits no
-    *    rows and its directory (old data included!) would silently
-    *    survive. Fully-emptied touched buckets are vacuumed
-    *    explicitly.
-    *  - the surviving set must be MATERIALIZED DURABLY before the
-    *    overwrite starts: it is derived by reading the very
-    *    directories the write replaces. A `localCheckpoint` is NOT
-    *    enough on a real cluster — it stores the only copy as
-    *    executor-memory/disk blocks, so an executor loss after the
-    *    overwrite began would lose surviving rows forever. Instead
-    *    the surviving set is STAGED as a sibling parquet dir on the
-    *    layout's own filesystem (write + read-back + swap): every
-    *    failure point now leaves either the untouched source buckets
-    *    or a durable staged copy, and the overwrite job reads only
-    *    the staging dir — no read-your-own-overwrite race at all.
+    * The surviving set must be MATERIALIZED DURABLY before the
+    * overwrite starts: it is derived by reading the very directories
+    * the write replaces. A `localCheckpoint` is NOT enough on a real
+    * cluster — it stores the only copy as executor-memory/disk blocks,
+    * so an executor loss after the overwrite began would lose surviving
+    * rows forever. Instead the surviving set is STAGED as a sibling
+    * parquet dir on the layout's own filesystem (write + read-back +
+    * swap): every failure point now leaves either the untouched source
+    * buckets or a durable staged copy, and the overwrite job reads only
+    * the staging dir — no read-your-own-overwrite race at all. The
+    * read-back takes the schema the staging dir was written with, so
+    * it runs no inference job.
     */
   def deleteFactKeys(spark: SparkSession,
                      path: String, stocks: DataFrame,
@@ -417,34 +431,21 @@ object Sinks {
         s"to delete); got columns [${stocks.columns.mkString(", ")}] — " +
         "select the key column explicitly so a malformed frame fails " +
         "loudly instead of deleting the wrong rows")
-    readLayoutBuckets(path).foreach { recorded =>
-      require(recorded == buckets,
-        s"deleteFactKeys called with buckets=$buckets but the layout at " +
-          s"$path was written with buckets=$recorded (see _graft_buckets)")
-    }
-    val pk = graft.transform.Financials.Pk
+    requireBuckets(path, buckets, "deleteFactKeys")
     val keys = stocks.select(col(stocks.columns.head).as("stock"))
       .distinct().localCheckpoint() // bounded: the key list itself
-    val touched = keys.select(factBucket(buckets).cast("int").as("bucket"))
+    val touched = keys.select(factBucket(buckets).as("bucket"))
       .distinct().collect().map(_.getInt(0)).sorted.toIndexedSeq
     if (touched.nonEmpty) {
       val staging = s"${path.stripSuffix("/")}__delete_staging"
       deleteRecursively(staging)
-      readLayout(spark, path)
+      val survivors = readLayout(spark, path)
         .filter(col("bucket").isin(touched: _*))
         .join(broadcast(keys), Seq("stock"), "left_anti")
-        .write.mode("overwrite").parquet(staging)
-      val surviving = spark.read.parquet(staging)
-        .repartition(buckets, col("stock"))
-        .sortWithinPartitions(("bucket" +: pk).map(col): _*)
-      val nonEmpty = surviving.select(col("bucket").cast("int"))
-        .distinct().collect().map(_.getInt(0)).toSet
-      surviving.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket").parquet(path)
-      (touched.toSet -- nonEmpty).foreach(b =>
-        deleteRecursively(s"$path/bucket=$b"))
-      writeLayoutBuckets(path, buckets)
+      survivors.write.mode("overwrite").parquet(staging)
+      writeBuckets(spark.read.schema(survivors.schema).parquet(staging)
+        .repartition(buckets, col("stock")),
+        path, buckets, graft.transform.Financials.Pk, Some(touched))
       deleteRecursively(staging)
     }
   }

@@ -19,10 +19,13 @@ import graft.transform.{Financials, Rollup, Upsert}
   * recompute and no batch scheduler.
   *
   * Semantics are IDENTICAL to the batch loop by construction — the
-  * foreachBatch body IS the q128 day step, so the maintained rollup is
-  * bit-identical to a full recompute from the final fact state (shared
-  * oracle). What streaming adds is the delivery contract: increments
-  * apply in landing order, each exactly once per run.
+  * foreachBatch body and the q128 loop body are one function,
+  * [[applyBatch]], so the maintained rollup is bit-identical to a full
+  * recompute from the final fact state (shared oracle), and both serve
+  * it through one projection, [[served]]. What streaming adds is the
+  * delivery contract: increments apply in landing order, each exactly
+  * once per run. Both tables live in the bucket layout
+  * (Sinks.writeBuckets).
   *
   * Scale: every micro-batch is O(delta) end to end — the normalize
   * pipeline runs on the increment only, the retraction read is
@@ -76,9 +79,92 @@ object StreamIvm {
       path
     })
 
+  /** The bucket count of both maintained tables of the in-place loop. */
+  private val Buckets = 32
+
+  /** One day of the IN-PLACE maintenance loop — the q128 batch loop's
+    * day and the q131 stream's micro-batch, and the in-place twin of
+    * [[applyBatchMvcc]]: normalize the batch's payloads once, find the
+    * fact versions it replaces, build the signed `(stock,
+    * calendar_year)` delta aggregate ([[signedDelta]]), then write the
+    * facts (the full build on the `first` batch, an upsert after it)
+    * and merge the delta into the rollup, overlapped.
+    *
+    * Durability: the two localCheckpoints hold batch-sized state only
+    * (one day's facts; the per-key delta aggregate). Losing their
+    * blocks to an executor death fails THIS batch before/during its
+    * writes — and because this in-place variant's writes are not
+    * idempotent under retry, the cluster-grade deployment of the loop
+    * is [[applyBatchMvcc]], whose commits absorb at-least-once
+    * redelivery. Here the pattern is kept cheap deliberately; the MVCC
+    * variant is the durable answer, not a bigger checkpoint.
+    */
+  private[graft] def applyBatch(s: SparkSession, batch: DataFrame, first: Boolean,
+                                factPath: String, rollPath: String): Unit = {
+    // ONE run of the parse+unpivot pipeline feeds every consumer of the
+    // batch (retraction probe, delta aggregate, fact write): the probe
+    // scans the in-memory blocks, the upsert reuses the materialization
+    // as-is (materialized = true — no second copy), and the first
+    // batch's layout write reuses it too (guide §1.2).
+    val dayFacts = Financials.normalize(batch).localCheckpoint()
+    val replaced =
+      if (first) None
+      else {
+        // old versions this delta will overwrite: bucket-pruned fact
+        // read, PK semi-join against the delta — the same touched-bucket
+        // slice the upsert itself rewrites. Exact from the delta's own
+        // buckets (a raw symbol whose payload parses to zero facts
+        // replaces nothing). The delta side broadcasts: it is bounded by
+        // the increment (§3.2), so the table side is never shuffled.
+        val touched = dayFacts.select(Sinks.factBucket(Buckets)).distinct()
+          .collect().map(_.getInt(0)).toIndexedSeq
+        Some(Sinks.readLayout(s, factPath)
+          .filter(col("bucket").isin(touched: _*)).drop("bucket")
+          .join(broadcast(dayFacts.select(Financials.Pk.map(col): _*)),
+            Financials.Pk, "left_semi"))
+      }
+    // materialize BEFORE the upsert rewrites the files `replaced`
+    // lazily reads — plans are lazy, the overwrite is not
+    val deltaAgg = signedDelta(dayFacts, replaced).localCheckpoint()
+    // the fact write and the rollup merge touch disjoint layouts and
+    // every shared input is checkpointed above — overlap them so the
+    // merge back-fills the upsert's task tail (§2.6)
+    graft.Tuning.inParallel(
+      if (first) Sinks.writeFactPartitioned(dayFacts, factPath, Buckets)
+      else Sinks.upsertFactDelta(s, factPath, dayFacts, Buckets,
+        materialized = true),
+      Rollup.mergeDelta(s, rollPath, deltaAgg,
+        Seq("stock", "calendar_year"), "n_facts", Buckets))
+  }
+
+  /** The signed delta aggregate of one batch: +1-signed `facts`,
+    * −1-signed `replaced` versions, summed per `(stock, calendar_year)`
+    * into the additive partials `n_facts`, `nn` (non-null values) and
+    * `sum_q` (quarter-scaled value sum — exact: values ∈ ℤ/4).
+    */
+  private def signedDelta(facts: DataFrame, replaced: Option[DataFrame]): DataFrame = {
+    val valueQ = (col("value") * 4).cast("long")
+    val signed = replaced.fold(facts.withColumn("_sign", lit(1L)))(
+      r => facts.withColumn("_sign", lit(1L))
+        .unionByName(r.withColumn("_sign", lit(-1L))))
+    signed.groupBy("stock", "calendar_year")
+      .agg(sum(col("_sign")).as("n_facts"),
+        sum(col("_sign") *
+          when(col("value").isNotNull, 1L).otherwise(0L)).as("nn"),
+        sum(col("_sign") * valueQ).as("sum_q"))
+  }
+
+  /** The served projection of a maintained rollup (q128, q131 and the
+    * MVCC loop): `sum_value` is NULL for an all-null group — `nn`
+    * disambiguates a true zero sum from a cancelled-to-null one.
+    */
+  private[graft] def served(rollup: DataFrame): DataFrame =
+    rollup.select(col("stock"), col("calendar_year"), col("n_facts"),
+      when(col("nn") === 0L, lit(null).cast("double"))
+        .otherwise(col("sum_q").cast("double") / 4.0).as("sum_value"))
+
   /** Run the maintenance stream over the staged landing dir and return
-    * the served rollup (same projection contract as q128: NULL sum for
-    * an all-null group via the non-null-count disambiguator).
+    * the served rollup ([[served]]).
     */
   def maintainedRollup(s: SparkSession, rawPath: String,
                        tag: String): DataFrame = {
@@ -89,70 +175,18 @@ object StreamIvm {
     Sinks.deleteRecursively(factPath) // re-runnable: batch 0 starts fresh
     Sinks.deleteRecursively(rollPath)
     Sinks.deleteRecursively(ckptDir)
-    val valueQ = (col("value") * 4).cast("long") // exact: values ∈ ℤ/4
     val q = s.readStream.schema(rawSchema)
       .option("maxFilesPerTrigger", 1) // one increment per micro-batch
       .parquet(landing)
       .writeStream
       .option("checkpointLocation", ckptDir)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        // ---- the q128 day step, verbatim, on this micro-batch ----
-        // Durability note: the two localCheckpoints below hold
-        // micro-batch-sized state only (one day's facts; the per-key
-        // delta aggregate). Losing their blocks to an executor death
-        // fails THIS batch before/during its writes — and because this
-        // in-place variant's writes are not idempotent under retry,
-        // the cluster-grade deployment of this loop is applyBatchMvcc
-        // below, whose commits absorb at-least-once redelivery. Here
-        // the pattern is kept cheap deliberately; the MVCC variant is
-        // the durable answer, not a bigger checkpoint.
-        // ONE run of the parse+unpivot pipeline feeds every consumer of
-        // the batch (retraction probe, delta aggregate, fact write):
-        // bucket stamped before the checkpoint so the upsert reuses the
-        // materialization as-is, the probe scans the in-memory blocks,
-        // and batch 0's layout write reuses it too (the old
-        // normalizeInto re-ran the whole parse a second time).
-        val dayFacts = Financials.normalize(batch)
-          .withColumn("bucket", Sinks.factBucket(32)).localCheckpoint()
-        val facts = dayFacts.drop("bucket")
-        val replaced =
-          if (batchId == 0L) None
-          else {
-            val touched = dayFacts.select(col("bucket")).distinct()
-              .collect().map(_.getInt(0)).toIndexedSeq
-            Some(Sinks.readLayout(s, factPath)
-              .filter(col("bucket").isin(touched: _*))
-              .join(broadcast(dayFacts.select(Financials.Pk.map(col): _*)),
-                Financials.Pk, "left_semi"))
-          }
-        val signed = replaced.fold(facts.withColumn("_sign", lit(1L)))(
-          r => facts.withColumn("_sign", lit(1L))
-            .unionByName(r.drop("bucket").withColumn("_sign", lit(-1L))))
-        // materialize BEFORE the upsert rewrites the files `replaced`
-        // lazily reads — plans are lazy, the overwrite is not
-        val deltaAgg = signed.groupBy("stock", "calendar_year")
-          .agg(sum(col("_sign")).as("n_facts"),
-            sum(col("_sign") *
-              when(col("value").isNotNull, 1L).otherwise(0L)).as("nn"),
-            sum(col("_sign") * valueQ).as("sum_q"))
-          .localCheckpoint()
-        // the fact write and the rollup merge touch disjoint layouts
-        // and every shared input is checkpointed above — overlap them
-        // so the merge back-fills the upsert's task tail (§2.6)
-        graft.Tuning.inParallel(
-          if (batchId == 0L) Sinks.writeFactPartitioned(facts, factPath)
-          else Sinks.upsertFactDelta(s, factPath, dayFacts,
-            materialized = true),
-          Rollup.mergeDelta(s, rollPath, deltaAgg,
-            Seq("stock", "calendar_year"), "n_facts"))
+        applyBatch(s, batch, batchId == 0L, factPath, rollPath)
       }
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    s.read.parquet(rollPath).select(col("stock"), col("calendar_year"),
-      col("n_facts"),
-      when(col("nn") === 0L, lit(null).cast("double"))
-        .otherwise(col("sum_q").cast("double") / 4.0).as("sum_value"))
+    served(s.read.parquet(rollPath))
   }
 
   // ---- MVCC / exactly-once variant -----------------------------------
@@ -199,14 +233,12 @@ object StreamIvm {
   private[graft] def applyBatchMvcc(s: SparkSession, batch: DataFrame,
                                     b: Long, factLog: String,
                                     rollLog: String): Unit = {
-    val valueQ = (col("value") * 4).cast("long") // exact: values ∈ ℤ/4
     // bucket stamped before the ONE checkpoint: the fact commit below
     // reuses the materialization without a second bucket projection,
     // and the touched probe scans the in-memory blocks instead of a
     // second pass over the landing file.
     val dayFacts = Financials.normalize(batch)
-      .withColumn("bucket", Sinks.factBucket(32)).localCheckpoint()
-    val facts = dayFacts.drop("bucket")
+      .withColumn("bucket", Sinks.factBucket(Buckets)).localCheckpoint()
     val replaced =
       if (b == 0L) None
       else {
@@ -219,19 +251,11 @@ object StreamIvm {
           .join(broadcast(dayFacts.select(Financials.Pk.map(col): _*)),
             Financials.Pk, "left_semi"))
       }
-    val signed = replaced.fold(facts.withColumn("_sign", lit(1L)))(
-      r => facts.withColumn("_sign", lit(1L))
-        .unionByName(r.withColumn("_sign", lit(-1L))))
     // materialize BEFORE the fact commit: attempt #2 of this batch
     // overwrites files a lazy `hist` plan under the SAME commit id
     // could never read anyway (the < b filter), but the delta must
     // also not re-read its own day's landing file mid-overwrite
-    val deltaAgg = signed.groupBy("stock", "calendar_year")
-      .agg(sum(col("_sign")).as("n_facts"),
-        sum(col("_sign") *
-          when(col("value").isNotNull, 1L).otherwise(0L)).as("nn"),
-        sum(col("_sign") * valueQ).as("sum_q"))
-      .localCheckpoint()
+    val deltaAgg = signedDelta(dayFacts.drop("bucket"), replaced).localCheckpoint()
     // the two commits land in disjoint logs from checkpointed inputs —
     // overlap them (§2.6)
     graft.Tuning.inParallel(
@@ -243,20 +267,17 @@ object StreamIvm {
 
   /** The served rollup of the MVCC loop: signed deltas SUM across all
     * rollup-log commits (additive — no merge step ever ran), keys whose
-    * liveness count cancelled to zero vanish, and the projection
-    * contract matches q128 (NULL sum iff nn = 0). Reading the log is
-    * O(commits); the compaction discipline documented on Changelog
-    * (fold commits ≤ v into a base commit) bounds it operationally.
+    * liveness count cancelled to zero vanish, and the projection is
+    * [[served]]. Reading the log is O(commits); the compaction
+    * discipline documented on Changelog (fold commits ≤ v into a base
+    * commit) bounds it operationally.
     */
   private[graft] def servedRollup(s: SparkSession, rollLog: String): DataFrame =
-    s.read.parquet(rollLog)
+    served(s.read.parquet(rollLog)
       .groupBy(col("stock"), col("calendar_year"))
       .agg(sum(col("n_facts")).as("n_facts"), sum(col("nn")).as("nn"),
         sum(col("sum_q")).as("sum_q"))
-      .filter(col("n_facts") =!= 0L)
-      .select(col("stock"), col("calendar_year"), col("n_facts"),
-        when(col("nn") === 0L, lit(null).cast("double"))
-          .otherwise(col("sum_q").cast("double") / 4.0).as("sum_value"))
+      .filter(col("n_facts") =!= 0L))
 
   /** Run the exactly-once maintenance stream over the staged landing
     * dir and return the served rollup — the third maintenance path

@@ -160,29 +160,27 @@ object Financials {
     leaves.withColumn("_rn", row_number().over(lastWrite)).filter(col("_rn") === 1)
   }
 
-  /** Fused normalize → maintained-layout write, ONE exchange: the
-    * resolved raw rows are hash-partitioned on `symbol` into `buckets`
+  /** Fused normalize → bucket-layout write, ONE exchange: the resolved
+    * raw rows are hash-partitioned on `symbol` into `buckets`
     * partitions, and latest-per-symbol, parse, unpivot, PK dedup and the
-    * layout write all run inside that partitioning (`symbol` becomes
-    * `stock`, and stock ⊆ PK). The destination layout is the
-    * bucket-PARTITIONED one (Sinks.writeFactPartitioned): `bucket =
+    * layout write (Sinks.writeBuckets) all run inside that partitioning
+    * (`symbol` becomes `stock`, and stock ⊆ PK): `bucket =
     * pmod(hash(stock), n)` is exactly the shuffle partition id, so each
     * write task holds one bucket. The dedup's window sorts on `bucket +:
     * Pk` first, so that one sort is also the layout's PK file order and
-    * the writer's `bucket` ordering: the `sortWithinPartitions` below
-    * plans no sort. The trade-off: the parse runs on `buckets` tasks,
-    * not at the session's shuffle width. Readers drop/prune the `bucket`
-    * virtual column; increments go through Sinks.upsertFactDelta and
-    * rewrite only touched buckets.
+    * the writer's `bucket` ordering: the writer plans no second sort.
+    * The trade-off: the parse runs on `buckets` tasks, not at the
+    * session's shuffle width. Readers drop/prune the `bucket` virtual
+    * column; increments go through Sinks.upsertFactDelta and rewrite
+    * only touched buckets.
     */
   def normalizeInto(raw: DataFrame, path: String, buckets: Int = 32): Unit = {
     val resolved = graft.ingest.RawZone.resolve(raw).repartition(buckets, col("symbol"))
-    pkDedup(leaves(latestPayloads(resolved))
-      .withColumn("bucket", graft.sources.Sinks.factBucket(buckets)), "bucket" +: Pk)
-      .select((Columns :+ "bucket").map(col): _*)
-      .sortWithinPartitions(("bucket" +: Pk).map(col): _*)
-      .write.mode("overwrite").partitionBy("bucket").parquet(path)
-    graft.sources.Sinks.writeLayoutBuckets(path, buckets)
+    graft.sources.Sinks.writeBuckets(
+      pkDedup(leaves(latestPayloads(resolved))
+        .withColumn("bucket", graft.sources.Sinks.factBucket(buckets)), "bucket" +: Pk)
+        .select((Columns :+ "bucket").map(col): _*),
+      path, buckets, Pk)
   }
 
   /** Typed API boundary (SURVEY.md §1.3): the fact table as
@@ -197,43 +195,24 @@ object Financials {
 
   /** The reference's own verify query (Financilas.py:186–195): latest 10
     * facts for one symbol, ordered date desc, statement, metric.
-    * Plans as TakeOrderedAndProject — no full sort at scale.
-    *
-    * Against the maintained bucket-partitioned layout (a `bucket`
-    * column is present) the symbol's bucket is derived on the driver
-    * and added as an equality predicate, so the scan PARTITION-PRUNES
-    * to one bucket directory — the engine analogue of the reference's
-    * `idx_symbol` lookup (details.py:199) — and parquet min/max stats
-    * on the PK-sorted files prune row groups within it.
-    *
-    * CONTRACT: `buckets` must equal the count the layout was WRITTEN
-    * with — the bucket predicate is a pure function of (symbol,
-    * buckets), so a mismatched count prunes to the wrong directory and
-    * returns silently empty/short results, not an error. Prefer
-    * [[latestFactsAt]], which derives the recorded count from the
-    * layout's `_graft_buckets` sidecar instead of trusting the caller.
+    * Plans as TakeOrderedAndProject — no full sort at scale. A `bucket`
+    * column of the bucket layout is dropped from the answer; to read one
+    * bucket of a layout on disk, use [[latestFactsAt]].
     */
-  def latestFacts(fact: DataFrame, symbol: String, k: Int = 10,
-                  buckets: Int = 32): DataFrame = {
-    val pruned =
-      if (fact.columns.contains("bucket"))
-        fact.filter(col("bucket") ===
-          pmod(hash(lit(symbol)), lit(buckets)))
-      else fact
-    pruned.filter(col("stock") === symbol)
+  def latestFacts(fact: DataFrame, symbol: String, k: Int = 10): DataFrame =
+    fact.filter(col("stock") === symbol)
       .orderBy(col("date").desc, col("statement_type"), col("metric"))
       .limit(k)
       .drop("bucket")
-  }
 
-  /** [[latestFacts]] against a maintained-layout PATH: the bucket count
-    * comes from the layout's own `_graft_buckets` sidecar (written by
-    * Sinks.writeFactPartitioned / normalizeInto / upsertFactDelta), so
-    * the pruning predicate can never disagree with the directory law,
-    * and the read lists the symbol's bucket directory alone
-    * (Sinks.readBucket); a bucket with no directory holds no rows of the
-    * symbol, and the whole-layout read answers it, empty. A layout
-    * without the sidecar (e.g. the flat writeFact form) falls back to an
+  /** [[latestFacts]] against a bucket-layout PATH — the engine analogue
+    * of the reference's `idx_symbol` lookup (details.py:199): the bucket
+    * count comes from the layout's own `_graft_buckets` sidecar, so the
+    * symbol's bucket can never disagree with the directory law, and the
+    * read lists that bucket's directory alone (Sinks.readBucket); parquet
+    * min/max stats on the PK-sorted files prune row groups within it. A
+    * bucket with no directory holds no rows of the symbol and reads no
+    * data file. A flat parquet dir without the sidecar falls back to an
     * unpruned — correct, just wider — scan. The schema comes from a
     * part-file footer, so a lookup runs ONE Spark job: the scan, with no
     * inference job.
@@ -241,12 +220,10 @@ object Financials {
   def latestFactsAt(spark: SparkSession, path: String,
                     symbol: String, k: Int = 10): DataFrame = {
     import graft.sources.Sinks
-    Sinks.readLayoutBuckets(path) match {
-      case Some(n) =>
-        val fact = Sinks.readBucket(spark, path, Sinks.bucketOf(symbol, n))
-          .getOrElse(Sinks.readLayout(spark, path))
-        latestFacts(fact, symbol, k, n)
-      case None => latestFacts(Sinks.readLayout(spark, path).drop("bucket"), symbol, k)
+    val fact = Sinks.readLayoutBuckets(path) match {
+      case Some(n) => Sinks.readBucket(spark, path, Sinks.bucketOf(symbol, n))
+      case None    => Sinks.readLayout(spark, path)
     }
+    latestFacts(fact, symbol, k)
   }
 }

@@ -23,11 +23,14 @@ import graft.sources.Sinks
   * At 100 TB: the fact history is never rescanned — each increment
   * touches `O(delta)` fact rows (the replaced versions come from the
   * same bucket-pruned read the fact upsert itself performs) and the
-  * merge rewrites only the rollup buckets the delta keys hash into,
-  * under the same `bucket=K/` dynamic-overwrite layout as the fact
-  * table. Rollup size is bounded by the key domain (stocks × years —
-  * thousands), so even the touched-bucket read is KB-scale while the
-  * maintained table serves exact aggregates over billions of facts.
+  * merge rewrites only the rollup buckets the delta keys hash into. The
+  * rollup is stored in the fact table's bucket layout, written by the
+  * same writer (Sinks.writeBuckets) under the same bucket law, so a
+  * bucket whose every key was retracted is removed, not left serving
+  * its old rows. Rollup size is bounded by the key domain (stocks ×
+  * years — thousands), so even the touched-bucket read is KB-scale
+  * while the maintained table serves exact aggregates over billions of
+  * facts.
   *
   * Determinism: partials are integers (counts, quarter-scaled value
   * sums) — merge order cannot perturb them, so the maintained table is
@@ -55,24 +58,18 @@ object Rollup {
                  buckets: Int = 32): Unit = {
     require(keys.nonEmpty && deltaAgg.columns.contains(countCol),
       s"need keys and a $countCol column in ${deltaAgg.columns.mkString(",")}")
+    Sinks.requireBuckets(path, buckets, "mergeDelta")
     val partials = deltaAgg.columns.filterNot(keys.contains).toSeq
     val withBucket = deltaAgg.withColumn("bucket", Sinks.factBucket(buckets))
     val touched = withBucket.select("bucket").distinct()
       .collect().map(_.getInt(0)).sorted.toIndexedSeq
     if (touched.isEmpty) return // empty increment: nothing to rewrite
-    val existing = Sinks.readLayoutBuckets(path) match {
-      case Some(recorded) =>
-        require(recorded == buckets,
-          s"mergeDelta called with buckets=$buckets but the layout at " +
-            s"$path was written with buckets=$recorded")
-        Some(Sinks.readLayout(spark, path)
-          .filter(col("bucket").isin(touched: _*)))
-      case None => None
-    }
+    val existing = Sinks.readLayoutBuckets(path).map(_ =>
+      Sinks.readLayout(spark, path).filter(col("bucket").isin(touched: _*)))
     // ONE exchange end to end: repartition on stock satisfies the
     // grouping's required distribution (stock ⊆ bucket+keys, and bucket
     // is a pure function of stock), and is the physical bucket layout —
-    // the partitionBy write below adds no further shuffle or sort.
+    // the partitionBy write adds no further shuffle or sort.
     val unioned = existing.fold(withBucket)(_.unionByName(withBucket))
       .repartition(buckets, col(keys.head))
     val merged = unioned
@@ -80,10 +77,6 @@ object Rollup {
       .agg(sum(col(partials.head)).as(partials.head),
         partials.tail.map(c => sum(col(c)).as(c)): _*)
       .filter(col(countCol) =!= 0L)
-      .sortWithinPartitions(("bucket" +: keys).map(col): _*)
-    merged.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket").parquet(path)
-    Sinks.writeLayoutBuckets(path, buckets)
+    Sinks.writeBuckets(merged, path, buckets, keys, Some(touched))
   }
 }

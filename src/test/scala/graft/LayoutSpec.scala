@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.FileSourceScanExec
 import graft.ingest.RawZoneGen
 import graft.sources.Sinks
-import graft.transform.Financials
+import graft.transform.{Financials, Rollup}
 
 /** The maintained (bucket-partitioned) fact layout: O(delta) incremental
   * upsert — untouched buckets' files stay byte-identical across an
@@ -227,25 +227,6 @@ class LayoutSpec extends SparkSpec {
     assert(rows.schema === Financials.latestFactsAt(spark, path, "S00001").schema)
   }
 
-  test("latestFacts on the maintained layout: scan partition-prunes to one bucket") {
-    val path = Sinks.tmpPath("test_fact_prune")
-    Sinks.deleteRecursively(path)
-    Sinks.writeFactPartitioned(
-      Financials.normalize(RawZoneGen.payloads(spark, 6)), path, buckets = 4)
-    val q = Financials.latestFacts(spark.read.parquet(path), "S00003",
-      k = 5, buckets = 4)
-    val scan = q.queryExecution.sparkPlan.collectLeaves().collectFirst {
-      case f: FileSourceScanExec => f
-    }.get
-    assert(scan.metadata("PartitionFilters").contains("bucket"),
-      s"no bucket partition filter in ${scan.metadata("PartitionFilters")}")
-    assert(scan.selectedPartitions.partitionCount === 1) // one bucket dir read
-    // and the pruned lookup returns exactly the unpruned answer
-    val unpruned = Financials.latestFacts(
-      Financials.normalize(RawZoneGen.payloads(spark, 6)), "S00003", k = 5)
-    assert(q.collect().toSeq === unpruned.collect().toSeq)
-  }
-
   test("latestFactsAt runs one Spark job: the schema comes from a footer, not an inference job") {
     val path = Sinks.tmpPath("test_fact_one_job")
     Sinks.deleteRecursively(path)
@@ -263,7 +244,7 @@ class LayoutSpec extends SparkSpec {
       assert(Sinks.readLayout(spark, path).schema === inferred.schema, what)
       stocks.foreach { s =>
         val got = Financials.latestFactsAt(spark, path, s, k = 7)
-        val want = Financials.latestFacts(inferred, s, k = 7, buckets = buckets)
+        val want = Financials.latestFacts(inferred, s, k = 7)
         assert(got.schema === want.schema, s"$what $s")
         assert(got.collect().toSeq === want.collect().toSeq, s"$what $s")
       }
@@ -298,11 +279,11 @@ class LayoutSpec extends SparkSpec {
       assert(Financials.latestFactsAt(spark, path, s).isEmpty, s))
   }
 
-  test("latestFactsAt on the flat writeFact layout (no sidecar): unpruned fallback") {
+  test("latestFactsAt on a flat parquet dir (no sidecar): unpruned fallback") {
     val path = Sinks.tmpPath("test_fact_flat")
     Sinks.deleteRecursively(path)
     val fact = Financials.normalize(RawZoneGen.payloads(spark, 6))
-    Sinks.writeFact(fact, path, buckets = 4)
+    fact.write.parquet(path)
     assert(Sinks.readLayoutBuckets(path) === None)
     val rows = Financials.latestFactsAt(spark, path, "S00003", k = 5)
     assert(!rows.columns.contains("bucket"))
@@ -315,6 +296,35 @@ class LayoutSpec extends SparkSpec {
     val (jobs, _) = observe(
       Financials.latestFactsAt(spark, path, "S00001", k = 5).collect(): Unit)
     assert(jobs === 1)
+  }
+
+  test("each bucket-layout writer runs a pinned number of Spark jobs") {
+    val buckets = 4
+    def jobs(f: => Unit): Int = observe(f)._1
+    val built = Sinks.tmpPath("test_jobs_built")
+    Sinks.deleteRecursively(built)
+    assert(jobs(Financials.normalizeInto(RawZoneGen.payloads(spark, 6), built, buckets)) === 2)
+
+    val path = Sinks.tmpPath("test_jobs_fact")
+    Sinks.deleteRecursively(path)
+    // inputs are checkpointed, as a caller's delta is, so the counts are
+    // the verbs' own jobs and not a rerun of the normalize pipeline
+    val base = Financials.normalize(RawZoneGen.payloads(spark, 6)).localCheckpoint()
+    assert(jobs(Sinks.writeFactPartitioned(base, path, buckets)) === 2)
+    val delta = Financials.normalize(RawZoneGen.payloads(spark, 8))
+      .filter(col("stock").isin("S00003", "S00007")).localCheckpoint()
+    assert(jobs(Sinks.upsertFactDelta(spark, path, delta, buckets)) === 5)
+    // the staging dir is read back on the schema it was written with:
+    // no inference job, and no job to find the emptied buckets
+    assert(jobs(Sinks.deleteFactKeys(spark, path, Seq("S00001").toDF("stock"), buckets)) === 7)
+
+    val roll = Sinks.tmpPath("test_jobs_rollup")
+    Sinks.deleteRecursively(roll)
+    def agg(df: org.apache.spark.sql.DataFrame) =
+      df.groupBy("stock").agg(count(lit(1)).as("n"), sum("value").as("s"))
+    Rollup.mergeDelta(spark, roll, agg(base), Seq("stock"), "n", buckets)
+    val deltaAgg = agg(delta).localCheckpoint()
+    assert(jobs(Rollup.mergeDelta(spark, roll, deltaAgg, Seq("stock"), "n", buckets)) === 4)
   }
 
   test("expirePartitions: metadata-only sweep — survivors byte-identical, guard loud (q179)") {

@@ -81,13 +81,15 @@ class RawZoneSpec extends SparkSpec {
     assert(one.count() === 1L) // only the i=0 stale payload
   }
 
-  test("writeFact: bounded file count, files sorted on the clustered PK") {
+  test("writeFactPartitioned: one file per bucket, files sorted on the clustered PK") {
     val path = Sinks.tmpPath("test_fact_layout")
     Sinks.deleteRecursively(path)
     val fact = Financials.normalize(RawZoneGen.payloads(spark, 6))
-    Sinks.writeFact(fact, path, buckets = 4)
-    val files = new File(path).listFiles().filter(_.getName.endsWith(".parquet"))
-    assert(files.length <= 4)
+    Sinks.writeFactPartitioned(fact, path, buckets = 4)
+    val dirs = new File(path).listFiles().filter(_.getName.startsWith("bucket="))
+    assert(dirs.nonEmpty && dirs.length <= 4)
+    dirs.foreach(d =>
+      assert(d.listFiles().count(_.getName.endsWith(".parquet")) === 1, d.getName))
     // within every file, rows are sorted by (stock, statement_type, metric, date)
     val byFile = spark.read.parquet(path)
       .select(input_file_name().as("f"), col("stock"), col("statement_type"),

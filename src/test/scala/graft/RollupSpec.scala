@@ -1,5 +1,7 @@
 package graft
 
+import java.io.File
+
 import graft.sources.Sinks
 import graft.transform.Rollup
 
@@ -19,6 +21,23 @@ class RollupSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3), Option(r.get(4)).map(_.asInstanceOf[Long])))
       .toSet
+
+  test("mergeDelta: a bucket whose every key is retracted is removed, not served") {
+    val path = Sinks.tmpPath("rollup_spec_emptied")
+    Sinks.deleteRecursively(path)
+    val buckets = 4
+    val (bA, bB) = (Sinks.bucketOf("A", buckets), Sinks.bucketOf("B", buckets))
+    assert(bA != bB, "A and B must hash to different buckets")
+    def merge(rows: (String, Long, Long, Long, Option[Long])*): Unit =
+      Rollup.mergeDelta(spark, path, rows.toDF("stock", "year", "n", "nn", "sum_q"),
+        Seq("stock", "year"), "n", buckets)
+    merge(("A", 2020L, 1L, 1L, Some(4L)), ("B", 2020L, 1L, 1L, Some(8L)))
+    // A's only key is retracted: the merge emits no row in A's bucket
+    merge(("A", 2020L, -1L, -1L, Some(-4L)))
+    assert(readRollup(path) === Set(("B", 2020L, 1L, 1L, Some(8L))))
+    assert(!new File(s"$path/bucket=$bA").exists())
+    assert(new File(s"$path/bucket=$bB").isDirectory)
+  }
 
   test("mergeDelta: insert, retraction-update, key deletion, null sums") {
     val path = Sinks.tmpPath("rollup_spec")
