@@ -140,7 +140,7 @@ object ScaleQueries {
       val factPath = Sinks.tmpPath(s"fact_$syms")
       val raw = s.read.parquet(RawZoneGen.stagedPath(s, syms))
       Financials.normalizeInto(raw, factPath) // fused: one exchange, of the raw rows
-      s.read.parquet(factPath).drop("bucket") // physical partition col
+      Sinks.readLayout(s, factPath).drop("bucket") // physical partition col
     }),
 
     // The Summary dimension over the same raw zone: one row per symbol,
@@ -201,7 +201,7 @@ object ScaleQueries {
           Sinks.upsertFactDelta(s, path, dayFacts, materialized = true)
         }
       }
-      s.read.parquet(path).drop("bucket")
+      Sinks.readLayout(s, path).drop("bucket")
     }),
 
     // Incremental aggregate maintenance (materialized-view upkeep) —
@@ -232,7 +232,7 @@ object ScaleQueries {
         graft.streaming.StreamIvm.applyBatch(s,
           raw.filter(col("load_date") === lit(day)), i == 0, factPath, rollPath)
       }
-      graft.streaming.StreamIvm.served(s.read.parquet(rollPath))
+      graft.streaming.StreamIvm.served(Sinks.readLayout(s, rollPath))
     }),
 
     // Time travel over a commit-partitioned fact changelog
@@ -361,7 +361,7 @@ object ScaleQueries {
       val goners = s.range(syms).filter(col("id") % 7 === 0)
         .select(format_string("S%05d", col("id")).as("stock"))
       Sinks.deleteFactKeys(s, path, goners)
-      s.read.parquet(path).drop("bucket")
+      Sinks.readLayout(s, path).drop("bucket")
     }),
 
     // Schema evolution across changelog commits — the drift every

@@ -479,10 +479,11 @@ object Changelog {
     * (cleared manually, exactly the [[commitWithRetry]] contract).
     */
   private[graft] def claimNextId(path: String, writer: String,
-                                 maxAttempts: Int = 50): Long = {
+                                 maxAttempts: Int = 50,
+                                 after: Long = -1L): Long = {
     val l = Listing.of(path)
     var floor = (l.commitIds ++ l.ids(Marker.Claim).map(_._1))
-      .foldLeft(-1L)(math.max)
+      .foldLeft(after)(math.max)
     var attempt = 0
     while (attempt < maxAttempts) {
       attempt += 1
@@ -494,6 +495,29 @@ object Changelog {
     throw new IllegalStateException(
       s"writer '$writer' lost the commit claim $maxAttempts times in a " +
         s"row on $path — contention is pathological; back off and retry")
+  }
+
+  /** The SERIALIZABLE claim of [[commitWithRetry]] and the row-level
+    * DML writes: claim the next free id above `readVersion`, then run
+    * [[conflictingCommits]] over the window since the read. A commit
+    * landed there that touches `deltaKeys`' keys means the delta was
+    * derived from state that has since changed: the claim is released
+    * and the failure is loud, naming `reader` and the caller's `fix`.
+    * Returns the claimed id, which the caller must land.
+    */
+  private[graft] def claimSerializable(spark: SparkSession, path: String,
+      keys: Seq[String], deltaKeys: DataFrame, readVersion: Long,
+      writer: String, reader: String, fix: String,
+      maxAttempts: Int = 50): Long = {
+    val id = claimNextId(path, writer, maxAttempts, after = readVersion)
+    val clash = conflictingCommits(spark, path, keys, deltaKeys,
+      readVersion, id)
+    if (clash.nonEmpty) releaseClaim(path, id)
+    require(clash.isEmpty,
+      s"conflict: commits [${clash.mkString(", ")}] landed since $reader " +
+        s"read version $readVersion of $path and touch this delta's keys " +
+        s"— blind landing would lose those updates; $fix")
+    id
   }
 
   // ---- Maintenance mutex: ONE maintenance actor per log -------------
@@ -572,6 +596,27 @@ object Changelog {
     }
     LogFs.writeAtomic(Marker.Info.at(path, commitId),
       s"v1\n$verb\t$writer\t${commitDirStats(path, commitId)._1}")
+  }
+
+  /** Land staged parquet files as commit `id` — the one landing of the
+    * staged writers (the streaming sink's epochs, SQL INSERT, row-level
+    * DML): the commit directory is replaced (a redelivered epoch
+    * overwrites any complete or partial earlier attempt), each staged
+    * file is renamed in as `part-%05d.parquet` in message order, a
+    * failed rename fails loudly, and the info marker is written last.
+    * No staged file leaves no directory, only the marker.
+    */
+  private[graft] def landStaged(path: String, id: Long, staged: Seq[String],
+                                verb: String, writer: String): Unit = {
+    val dir = commitDir(path, id)
+    LogFs.delete(dir)
+    if (staged.nonEmpty) LogFs.mkdirs(dir)
+    staged.zipWithIndex.foreach { case (f, i) =>
+      require(LogFs.fs(path).rename(new org.apache.hadoop.fs.Path(f),
+          new org.apache.hadoop.fs.Path(dir, f"part-$i%05d.parquet")),
+        s"failed to land staged $verb file $f into $dir")
+    }
+    writeCommitInfo(path, id, verb, writer)
   }
 
   /** All recorded operation metadata: commitId → (verb, writer, rows). */
@@ -810,8 +855,12 @@ object Changelog {
     */
   private def unionSchema(spark: SparkSession, path: String)
       : org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(readLog(spark, path,
-      mergeSchema = true).schema.filter(_.name != CommitCol))
+    withoutCommitCol(readLog(spark, path, mergeSchema = true))
+
+  private def withoutCommitCol(log: DataFrame)
+      : org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType(
+      log.schema.filter(_.name != CommitCol))
 
   /** Land ONE empty commit whose parquet footer carries `shape` —
     * the shared substrate of every metadata-only schema verb
@@ -1022,10 +1071,13 @@ object Changelog {
 
   /** Shared validation: resolve logical column `name` on the mapped
     * log (case-insensitive, the session default), refusing reserved
-    * and KEY columns. Returns the column's PHYSICAL name.
+    * and KEY columns. Returns the column's PHYSICAL name with the
+    * mapping and union schema it resolved against — the verb's one
+    * mapping read and one union read.
     */
   private def resolveMappedColumn(spark: SparkSession, path: String,
-      keys: Seq[String], name: String, verb: String): String = {
+      keys: Seq[String], name: String, verb: String)
+      : (String, ColumnMapping, org.apache.spark.sql.types.StructType) = {
     require(!name.exists(c => c == '\t' || c == '\n' || c == '\r'),
       s"$verb column name '$name' contains a tab/newline — mapping " +
         "markers are tab-delimited; use a flat identifier")
@@ -1037,7 +1089,8 @@ object Changelog {
         "renaming or dropping it would desynchronize every registered " +
         "reader (re-key by writing a new table)")
     val m = currentMapping(path).getOrElse(NoMapping)
-    val physical = unionSchema(spark, path).fieldNames
+    val union = unionSchema(spark, path)
+    val physical = union.fieldNames
       .filter(_ != OpCol).filterNot(m.dropped.contains)
     val hits = physical.filter(p =>
       m.logicalOf(p).equalsIgnoreCase(name))
@@ -1047,7 +1100,7 @@ object Changelog {
     require(hits.length == 1,
       s"$verb $name: ambiguous under case-insensitive resolution " +
         s"(physical candidates: [${hits.mkString(", ")}])")
-    hits.head
+    (hits.head, m, union)
   }
 
   /** RENAME COLUMN as metadata: one empty commit (verb
@@ -1060,8 +1113,8 @@ object Changelog {
   def commitRenameColumn(spark: SparkSession, path: String,
       keys: Seq[String], oldName: String, newName: String,
       writer: String = SoloWriter): Long = {
-    val physical = resolveMappedColumn(spark, path, keys, oldName,
-      "RENAME COLUMN")
+    val (physical, m, union) = resolveMappedColumn(spark, path, keys,
+      oldName, "RENAME COLUMN")
     require(!newName.exists(c => c == '\t' || c == '\n' || c == '\r'),
       s"RENAME COLUMN to '$newName' — mapping markers are " +
         "tab-delimited; use a flat identifier")
@@ -1069,8 +1122,6 @@ object Changelog {
     require(newName.toLowerCase != CommitCol &&
       newName.toLowerCase != OpCol,
       s"RENAME COLUMN to $newName: reserved changelog column")
-    val m = currentMapping(path).getOrElse(NoMapping)
-    val union = unionSchema(spark, path)
     val otherLogical = union.map(_.name)
       .filter(n => n != OpCol && n != physical)
       .filterNot(m.dropped.contains).map(m.logicalOf)
@@ -1101,12 +1152,11 @@ object Changelog {
   def commitDropColumn(spark: SparkSession, path: String,
       keys: Seq[String], name: String,
       writer: String = SoloWriter): Long = {
-    val physical = resolveMappedColumn(spark, path, keys, name,
-      "DROP COLUMN")
-    val m = currentMapping(path).getOrElse(NoMapping)
+    val (physical, m, union) = resolveMappedColumn(spark, path, keys,
+      name, "DROP COLUMN")
     val next = ColumnMapping(m.renames - physical, m.dropped + physical)
-    landEmptySchemaCommit(spark, path, unionSchema(spark, path),
-      "drop_column", writer, markerFor = Some(id =>
+    landEmptySchemaCommit(spark, path, union, "drop_column", writer,
+      markerFor = Some(id =>
         (Marker.Mapping.at(path, id), serializeMapping(next))))
   }
 
@@ -1168,16 +1218,19 @@ object Changelog {
       s"constraint name '$name' must use only [A-Za-z0-9._-] — it " +
         "names the on-disk marker")
     require(predicateSql.trim.nonEmpty, "empty CHECK predicate")
-    require(!checkConstraints(path).contains(name),
+    // one listing for the constraints, the head and the mapping, and
+    // one union read for the head frame and the landed shape
+    val l = Listing.of(path)
+    require(!checkConstraints(l).contains(name),
       s"constraint $name already exists on $path — DROP it first")
-    val head = headVersion(path).getOrElse(
+    val head = l.head.getOrElse(
       throw new IllegalArgumentException(
         s"$path has no commits — create the log before constraining it"))
+    val log = readLog(spark, path, mergeSchema = true)
     // resolve against the LOGICAL head frame: unknown/reserved names
     // and type errors refuse here, loudly, before anything lands
-    val snap = applyMapping(
-      snapshotAt(spark, path, keys, head, mergeSchema = true),
-      currentMapping(path))
+    val snap = applyMapping(snapshotOf(log, l, keys, head),
+      mappingAt(l, Long.MaxValue))
     val pred = org.apache.spark.sql.functions.expr(predicateSql)
     require(snap.select(pred.cast("boolean")).schema.head.dataType ==
       org.apache.spark.sql.types.BooleanType, // analysis forced here
@@ -1191,7 +1244,7 @@ object Changelog {
         s"cannot ADD CONSTRAINT $name CHECK ($predicateSql) on $path " +
           s"— $violating existing row(s) violate it")
     }
-    landEmptySchemaCommit(spark, path, unionSchema(spark, path),
+    landEmptySchemaCommit(spark, path, withoutCommitCol(log),
       "add_constraint",
       writer, markerFor = Some(_ =>
         (Marker.Check.at(path, name), s"v1\n$predicateSql")))
@@ -1260,14 +1313,16 @@ object Changelog {
     * before any of them land — the stream-sink leg of constraint
     * enforcement (the epoch's rows exist only as staged parquet by
     * the time the driver commits it). One read of the epoch's own
-    * files, only on constrained logs.
+    * files on the schema they were staged with, only on constrained
+    * logs.
     */
   private[graft] def validateStagedConstraints(spark: SparkSession,
-      path: String, stagedFiles: Seq[String]): Unit = {
+      path: String, stagedFiles: Seq[String],
+      stagedSchema: org.apache.spark.sql.types.StructType): Unit = {
     if (stagedFiles.isEmpty) return
     val l = Listing.of(path)
     if (checkConstraints(l).isEmpty) return
-    val staged = spark.read.parquet(stagedFiles: _*)
+    val staged = spark.read.schema(stagedSchema).parquet(stagedFiles: _*)
     // the guard throws inside the count job on the first violation
     withConstraintChecks(staged, l).count(): Unit
   }
@@ -1317,39 +1372,13 @@ object Changelog {
     commitVerbed(delta, path, commitId, writer, "append",
       Some(alsoPartitionBy))
 
-  /** OPTIMISTIC MULTI-WRITER COMMIT — the Delta/Iceberg commit loop on
-    * the claim primitive. The caller computed `delta` against the log
-    * state AS OF `readVersion` (pass the head it read; −1 for a fresh
-    * log) and wants it landed at the next free id:
-    *
-    *  1. target = max(current head, readVersion) + 1; atomically claim
-    *     it for `writer` — losing the claim means another writer is
-    *     landing that id: advance past it and try again (bounded by
-    *     `maxAttempts`);
-    *  2. holding the claim, run CONFLICT DETECTION: any commit landed
-    *     in (readVersion, target) whose keys intersect this delta's
-    *     keys means the state this delta was derived from has changed
-    *     underneath it — blind landing would silently lose that
-    *     writer's update (write skew). The claim is RELEASED and the
-    *     failure is loud: the caller must re-derive against the new
-    *     head (an automatic retry cannot — only the caller knows how
-    *     to recompute the delta). Key-DISJOINT concurrent commits
-    *     serialize cleanly in either order, so they simply land —
-    *     the same serializability contract Delta documents;
-    *  3. land the delta (plain append) and return the landed id.
-    *
-    * Scale: the claim is one marker create; conflict detection lists
-    * the (readVersion, target) window driver-side and key-joins ONLY
-    * those commit directories against the delta's keys — O(commits
-    * landed since the read), never O(table).
-    */
-  /** The OCC conflict window shared by [[commitWithRetry]] and the
-    * row-level DML writes: the landed commits in `(readVersion,
-    * target)` whose rows intersect `deltaKeys` — empty means the
-    * claimed `target` serializes cleanly after the read. The window is
-    * every id CLAIMED OR LANDED since the read: a claimed-but-still-
-    * writing commit's keys are unknowable, so each in-flight window id
-    * is awaited until its data lands (direct landings finish with
+  /** The OCC conflict window of [[claimSerializable]]: the landed
+    * commits in `(readVersion, target)` whose rows intersect
+    * `deltaKeys` — empty means the claimed `target` serializes cleanly
+    * after the read. The window is every id CLAIMED OR LANDED since
+    * the read: a claimed-but-still-writing commit's keys are
+    * unknowable, so each in-flight window id is awaited until its
+    * data lands (direct landings finish with
     * `_SUCCESS`; append landings show their data files at job commit)
     * or its claim is released (a refused writer deletes its claim). A
     * claimant that crashed before landing blocks the window — bounded
@@ -1359,11 +1388,10 @@ object Changelog {
     * Driver-side listing + ONE key-semi-join over only the window's
     * directories: O(commits landed since the read), never O(table).
     */
-  private[graft] def conflictingCommits(spark: SparkSession, path: String,
-                                        keys: Seq[String],
-                                        deltaKeys: DataFrame,
-                                        readVersion: Long,
-                                        target: Long): Seq[Long] = {
+  private def conflictingCommits(spark: SparkSession, path: String,
+                                 keys: Seq[String], deltaKeys: DataFrame,
+                                 readVersion: Long,
+                                 target: Long): Seq[Long] = {
     val l = Listing.of(path)
     val bases = l.ids(Marker.Base).map(_._1).toSet
     val windowIds = (l.commitIds ++ l.ids(Marker.Claim).map(_._1))
@@ -1407,6 +1435,31 @@ object Changelog {
   private[graft] def releaseClaim(path: String, commitId: Long): Unit =
     LogFs.delete(Marker.Claim.at(path, commitId))
 
+  /** OPTIMISTIC MULTI-WRITER COMMIT — the Delta/Iceberg commit loop on
+    * the claim primitive. The caller computed `delta` against the log
+    * state AS OF `readVersion` (pass the head it read; −1 for a fresh
+    * log) and wants it landed at the next free id:
+    *
+    *  1. [[claimSerializable]] claims the next id above every landed
+    *     or claimed commit and `readVersion` for `writer` — a lost
+    *     claim race advances past the id (bounded by `maxAttempts`) —
+    *     and, holding it, runs CONFLICT DETECTION: any commit landed
+    *     in (readVersion, target) whose keys intersect this delta's
+    *     keys means the state this delta was derived from has changed
+    *     underneath it — blind landing would silently lose that
+    *     writer's update (write skew). The claim is RELEASED and the
+    *     failure is loud: the caller must re-derive against the new
+    *     head (an automatic retry cannot — only the caller knows how
+    *     to recompute the delta). Key-DISJOINT concurrent commits
+    *     serialize cleanly in either order, so they simply land —
+    *     the same serializability contract Delta documents;
+    *  2. land the delta (a direct write) and return the landed id.
+    *
+    * Scale: the claim is one marker create; conflict detection lists
+    * the (readVersion, target) window driver-side and key-joins ONLY
+    * those commit directories against the delta's keys — O(commits
+    * landed since the read), never O(table).
+    */
   def commitWithRetry(spark: SparkSession, path: String, keys: Seq[String],
                       delta: DataFrame, readVersion: Long, writer: String,
                       maxAttempts: Int = 5): Long = {
@@ -1415,44 +1468,22 @@ object Changelog {
       s"Changelog reserves column name $CommitCol; rename it on the input")
     val l = Listing.of(path)
     requireMatchingShape(delta, l)
-    var floor = math.max(l.head.getOrElse(-1L), readVersion)
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val target = floor + 1
-      if (LogFs.claimExclusive(Marker.Claim.at(path, target), writer)) {
-        val clashIds = conflictingCommits(spark, path, keys,
-          delta.select(keys.map(col): _*), readVersion, target)
-        if (clashIds.nonEmpty) {
-          releaseClaim(path, target)
-          require(false,
-            s"conflict: commits [${clashIds.mkString(", ")}] landed " +
-              s"since writer '$writer' read version $readVersion of " +
-              s"$path and touch this delta's keys — blind landing " +
-              "would lose those updates; re-derive the delta against " +
-              "the new head and commit again")
-        }
-        // land DIRECTLY into the claimed commit directory (partition
-        // value rides on the dir name, like every partitioned write):
-        // the claim guarantees this writer owns the dir, and a direct
-        // write gives each concurrent writer its OWN job-staging
-        // namespace — a shared-root append would collide in the
-        // committer's `_temporary/0` under exactly the concurrency
-        // this method exists for
-        withConstraintChecks(delta, l).write.mode("overwrite")
-          .parquet(commitDir(path, target))
-        writeCommitInfo(path, target, "occ-append", writer)
-        return target
-      }
-      // claim lost: another writer is landing `target` — advance past
-      // it (the head listing may not show its directory yet)
-      floor = target
-      require(attempt < maxAttempts,
-        s"writer '$writer' lost the commit claim $maxAttempts times in " +
-          s"a row on $path — contention is pathological; back off and " +
-          "retry commitWithRetry from a fresh read")
-    }
-    -1L // unreachable
+    val target = claimSerializable(spark, path, keys,
+      delta.select(keys.map(col): _*), readVersion, writer,
+      s"writer '$writer'",
+      "re-derive the delta against the new head and commit again",
+      maxAttempts)
+    // land DIRECTLY into the claimed commit directory (partition value
+    // rides on the dir name, like every partitioned write): the claim
+    // guarantees this writer owns the dir, and a direct write gives
+    // each concurrent writer its OWN job-staging namespace — a
+    // shared-root append would collide in the committer's
+    // `_temporary/0` under exactly the concurrency this method exists
+    // for
+    withConstraintChecks(delta, l).write.mode("overwrite")
+      .parquet(commitDir(path, target))
+    writeCommitInfo(path, target, "occ-append", writer)
+    target
   }
 
   // ---- Reads: one snapshot, one feed, one fold -----------------------
@@ -1542,9 +1573,13 @@ object Changelog {
   def snapshotAt(spark: SparkSession, path: String, keys: Seq[String],
                  v: Long, mergeSchema: Boolean = false): DataFrame = {
     requireAboveHorizon(path, v, "snapshot version")
-    live(compact(window(readLog(spark, path, mergeSchema), Listing.of(path),
-      v), keys))
+    snapshotOf(readLog(spark, path, mergeSchema), Listing.of(path), keys, v)
   }
+
+  /** [[snapshotAt]] over a log scan the caller already holds. */
+  private def snapshotOf(log: DataFrame, l: => Listing, keys: Seq[String],
+                         v: Long): DataFrame =
+    live(compact(window(log, l, v), keys))
 
   /** CHANGE DATA FEED between two snapshots — every key whose state
     * differs between AS OF `v0` and AS OF `v1`, labeled `insert`,

@@ -491,12 +491,8 @@ object GraftLog {
                   // values, table-shaped — every non-key column is a
                   // tracked column, and the types must ride the spool
                   val schemaHere = LogTable.this.schema()
-                  schemaHere.fields.foreach { f =>
-                    require(graft.streaming.LogSink.supportedType(
-                      f.dataType),
-                      s"table column ${f.name} has type ${f.dataType} " +
-                        "— outside the streaming spool's type surface")
-                  }
+                  graft.streaming.LogSink.requireStageable(schemaHere,
+                    "table stream")
                   // tracked columns in PHYSICAL space (the diff runs
                   // over the footers' names); the spool renames its
                   // table-shaped output back to logical via logicalBy
@@ -522,8 +518,10 @@ object GraftLog {
     // append semantics on this log's discipline. Ops logs get the
     // constant `_op = 'u'` staged alongside (the table schema has no op
     // column to carry); executors stage files exactly like the
-    // streaming sink, and the driver commit renames them into the
-    // claimed `_commit=<id>` directory. INSERT OVERWRITE is NOT a
+    // streaming sink, behind the same write guard
+    // (LogSink.requireStageable), and the driver commit lands them at
+    // the claimed id through the one staged landing
+    // (Changelog.landStaged). INSERT OVERWRITE is NOT a
     // write path here — rollback is `restoreOps`, erasure is the
     // checkpoint. SQL TRUNCATE TABLE rides SupportsDelete's inherited
     // truncateTable() default → deleteWhere(always-true) → ONE
@@ -585,21 +583,10 @@ object GraftLog {
           // planning-time guards as the batch leg
           override def toStreaming: org.apache.spark.sql.connector
               .write.streaming.StreamingWrite = {
+            // every streamed row is an upsert of the table's snapshot
+            // shape (per-op feeds ride the LogSink format directly)
             val s = info.schema()
-            require(!s.fieldNames.contains(Changelog.CommitCol),
-              s"streaming input carries the reserved " +
-                s"${Changelog.CommitCol} column — the epoch claim " +
-                "assigns the commit id")
-            require(!s.fieldNames.contains(Changelog.OpCol),
-              s"streaming input carries ${Changelog.OpCol} — the " +
-                "table's schema is the snapshot shape; every streamed " +
-                "row is an upsert (per-op feeds ride the LogSink " +
-                "format directly)")
-            s.fields.foreach { f =>
-              require(graft.streaming.LogSink.supportedType(f.dataType),
-                s"streamed column ${f.name} has type ${f.dataType} — " +
-                  "outside the staged parquet writer's type surface")
-            }
+            graft.streaming.LogSink.requireStageable(s, "streamed")
             // a mapped log's stream stages PHYSICAL names, exactly
             // like the batch leg: the plan resolved against the
             // logical schema, rows are positional, only the staged
@@ -807,10 +794,10 @@ object GraftLog {
 
   /** The batch append: executors stage parquet files (the streaming
     * sink's writer with the epoch pinned at 0 under a per-write
-    * staging id), the driver claims the next free commit id and
-    * renames the staged files in — one INSERT, one commit, OCC-safe
-    * against concurrent writers by the claim. A zero-row insert is a
-    * no-op (no claim, no commit).
+    * staging id), the driver claims the next free commit id and lands
+    * the staged files through [[Changelog.landStaged]] — one INSERT,
+    * one commit, OCC-safe against concurrent writers by the claim. A
+    * zero-row insert is a no-op (no claim, no commit).
     */
   private class AppendBatchWrite(path: String, writer: String,
                                  schema: StructType, opsShape: Boolean,
@@ -818,23 +805,9 @@ object GraftLog {
                                  txnVersion: Option[Long] = None)
       extends BatchWrite {
 
-    // planning-time guards, BEFORE any task runs: the write schema must
-    // be the staged-file type surface, and its shape must match the log
-    {
-      require(!schema.fieldNames.contains(Changelog.CommitCol),
-        s"INSERT input carries the reserved ${Changelog.CommitCol} " +
-          "column — the commit id is assigned by the claim")
-      require(!schema.fieldNames.contains(Changelog.OpCol),
-        s"INSERT input carries ${Changelog.OpCol} — the table's schema " +
-          "is the snapshot shape; ops verbs ride the library calls")
-      schema.fields.foreach { f =>
-        require(graft.streaming.LogSink.supportedType(f.dataType),
-          s"INSERT column ${f.name} has type ${f.dataType} — the " +
-            "staged parquet writer covers long/int/short/byte/double/" +
-            "float/string/boolean/timestamp/date/binary/decimal/" +
-            "array/map (atomic keys)/struct only")
-      }
-    }
+    // planning-time guard, BEFORE any task runs (the shape matches the
+    // log by construction: the verb follows the log's shape)
+    graft.streaming.LogSink.requireStageable(schema, "INSERT")
 
     override def createBatchWriterFactory(
         info: PhysicalWriteInfo): DataWriterFactory =
@@ -842,7 +815,7 @@ object GraftLog {
         stagingId, if (opsShape) Some("u") else None)
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      val staged = messages.flatMap(graft.streaming.LogSink.stagedFileOf)
+      val staged = graft.streaming.LogSink.stagedFiles(messages)
       if (staged.nonEmpty) {
         // txn-idempotent slot resolution, Delta's txnAppId contract:
         // the (writer, txnVersion) marker is claimed EXCLUSIVELY
@@ -882,32 +855,13 @@ object GraftLog {
             }
           case None => Some(Changelog.claimNextId(path, writer))
         }
-        idOpt.foreach { id =>
-          val dir = Changelog.commitDir(path, id)
-          LogFs.delete(dir)
-          LogFs.mkdirs(dir)
-          staged.zipWithIndex.foreach { case (f, i) =>
-            val ok = LogFs.fs(path).rename(
-              new org.apache.hadoop.fs.Path(f),
-              new org.apache.hadoop.fs.Path(dir, f"part-$i%05d.parquet"))
-            require(ok, s"failed to land staged insert file $f into $dir")
-          }
-          Changelog.writeCommitInfo(path, id,
-            if (opsShape) "upsert" else "append", writer)
-        }
+        idOpt.foreach(Changelog.landStaged(path, _, staged,
+          if (opsShape) "upsert" else "append", writer))
       }
-      sweepStaging()
+      graft.streaming.LogSink.sweepStaging(path, stagingId, 0L)
     }
 
     override def abort(messages: Array[WriterCommitMessage]): Unit =
-      sweepStaging()
-
-    private def sweepStaging(): Unit = {
-      LogFs.delete(LogFs.child(LogFs.child(LogFs.child(path,
-        "__stream_staging"), s"query=$stagingId"), "epoch=0"))
-      val qdir = LogFs.child(LogFs.child(path, "__stream_staging"),
-        s"query=$stagingId")
-      if (LogFs.list(qdir).isEmpty) LogFs.delete(qdir)
-    }
+      graft.streaming.LogSink.sweepStaging(path, stagingId, 0L)
   }
 }

@@ -24,7 +24,12 @@ import graft.streaming.{CdcSource, LogSink}
   * operation per-row verbs, which land as the changelog's native
   * delta: updates and inserts as `_op = 'u'` upserts, deletes as
   * `_op = 'd'` tombstones, ONE OCC-claimed commit per statement
-  * (the q219 INSERT discipline, extended to the full DML surface).
+  * (the q219 INSERT discipline, extended to the full DML surface):
+  * the write stages through [[LogSink.StagingWriter]] behind the one
+  * write guard ([[LogSink.requireStageable]]), claims through the one
+  * serializable claim ([[Changelog.claimSerializable]]) and lands
+  * through the one staged landing ([[Changelog.landStaged]]) — the
+  * same parts the streaming sink and SQL INSERT use.
   * This is the reference's own core verb — `INSERT … ON DUPLICATE KEY
   * UPDATE` (reference `Financilas.py:167–184`) — in its SQL spelling:
   * a keyed LWW log makes every row-level write an upsert/tombstone
@@ -48,10 +53,9 @@ import graft.streaming.{CdcSource, LogSink}
   * never a torn table.
   *
   * Concurrency: the statement reads the head pinned when the
-  * operation is BUILT (analysis time), lands at
-  * [[Changelog.claimNextId]], and is SERIALIZABLE, not blind — the
-  * claimed id's conflict window is checked with
-  * [[Changelog.conflictingCommits]] before landing: a concurrent
+  * operation is BUILT (analysis time), and its claim is SERIALIZABLE,
+  * not blind — [[Changelog.claimSerializable]] checks the claimed
+  * id's conflict window before landing: a concurrent
   * commit that landed since the read and touches this delta's keys
   * refuses the statement loudly (first-committer-wins — re-run
   * re-derives against the new head), while key-disjoint concurrent
@@ -286,15 +290,8 @@ object GraftRowLevel {
       out
     }
 
-    {
-      snapshot.schema.fields.foreach { f =>
-        require(graft.streaming.LogSink.supportedType(f.dataType),
-          s"table column ${f.name} has type ${f.dataType} — row-level " +
-            "DML spools the snapshot through the staged-parquet surface " +
-            "(see LogSink.supportedType); widen the type surface or use " +
-            "the library verbs")
-      }
-    }
+    // the spool serves the snapshot through the staged-parquet types
+    LogSink.requireStageable(snapshot.schema, "row-level DML spool")
 
     override def readSchema(): StructType = snapshot.schema
 
@@ -333,20 +330,20 @@ object GraftRowLevel {
 
   /** The statement's delta write: executors stage one parquet file per
     * non-empty task (upserts and tombstones mixed, per-row `_op`), the
-    * driver claims the next free commit id and renames the staged
-    * files in — one statement, one commit, OCC-arbitrated by the
-    * claim. A zero-row delta is a no-op (no claim, no commit). Sweeps
-    * the operation's snapshot spool either way.
+    * driver claims the next free commit id through
+    * [[Changelog.claimSerializable]] and lands the staged files through
+    * [[Changelog.landStaged]] — one statement, one commit. A zero-row
+    * delta is a no-op (no claim, no commit). Sweeps the operation's
+    * snapshot spool either way.
     *
     * SERIALIZABLE, not blind: the statement's delta was derived from
-    * the head pinned at operation build (`readVersion`), so before
-    * landing, the claimed id's conflict window is checked with
-    * [[Changelog.conflictingCommits]] — a concurrent commit that
-    * landed since the read AND touches this delta's keys refuses the
-    * statement loudly (first-committer-wins; re-run it against the
-    * new head), exactly [[Changelog.commitWithRetry]]'s law.
-    * Key-DISJOINT concurrent commits serialize cleanly and the
-    * statement lands at the next free id.
+    * the head pinned at operation build (`readVersion`), so the claim
+    * checks the window since it — a concurrent commit that landed
+    * since the read AND touches this delta's keys refuses the
+    * statement loudly (first-committer-wins; re-run it against the new
+    * head), exactly [[Changelog.commitWithRetry]]'s law. Key-DISJOINT
+    * concurrent commits serialize cleanly and the statement lands at
+    * the next free id.
     */
   private class LogDeltaBatchWrite(path: String, keys: Seq[String],
                                    writer: String, rowSchema: StructType,
@@ -355,15 +352,7 @@ object GraftRowLevel {
       extends DeltaBatchWrite {
 
     {
-      require(!rowSchema.fieldNames.contains(Changelog.CommitCol) &&
-        !rowSchema.fieldNames.contains(Changelog.OpCol),
-        s"row-level write schema carries a reserved column " +
-          s"(${Changelog.CommitCol}/${Changelog.OpCol})")
-      rowSchema.fields.foreach { f =>
-        require(LogSink.supportedType(f.dataType),
-          s"row-level write column ${f.name} has type ${f.dataType} — " +
-            "outside the staged-parquet type surface")
-      }
+      LogSink.requireStageable(rowSchema, "row-level write")
       val missing = keys.filterNot(rowSchema.fieldNames.contains)
       require(missing.isEmpty,
         s"row-level write schema lacks key columns " +
@@ -374,49 +363,29 @@ object GraftRowLevel {
         info: PhysicalWriteInfo): DeltaWriterFactory =
       new LogDeltaWriterFactory(path, rowSchema, keys, stagingId)
 
-    override def commit(messages: Array[WriterCommitMessage]): Unit = {
+    override def commit(messages: Array[WriterCommitMessage]): Unit = try {
       GraftRowLevel.testInterleave.get()()
-      val staged = messages.flatMap(LogSink.stagedFileOf)
+      val staged = LogSink.stagedFiles(messages)
       if (staged.nonEmpty) {
         val spark = SparkSession.active
-        val id = Changelog.claimNextId(path, writer)
-        val clash = Changelog.conflictingCommits(spark, path, keys,
-          spark.read.parquet(staged.toIndexedSeq: _*)
-            .select(keys.map(org.apache.spark.sql.functions.col): _*),
-          readVersion, id)
-        if (clash.nonEmpty) {
-          Changelog.releaseClaim(path, id)
-          sweep()
-          require(false,
-            s"conflict: commits [${clash.mkString(", ")}] landed since " +
-              s"this $verb read version $readVersion of $path and touch " +
-              "its keys — landing would lose those updates; re-run the " +
-              "statement (it will re-derive against the new head)")
-        }
-        val dir = Changelog.commitDir(path, id)
-        LogFs.delete(dir)
-        LogFs.mkdirs(dir)
-        staged.zipWithIndex.foreach { case (f, i) =>
-          val ok = LogFs.fs(path).rename(
-            new org.apache.hadoop.fs.Path(f),
-            new org.apache.hadoop.fs.Path(dir, f"part-$i%05d.parquet"))
-          require(ok, s"failed to land staged delta file $f into $dir")
-        }
-        Changelog.writeCommitInfo(path, id, verb, writer)
+        // the delta's keys, read on the schema they were staged with
+        val deltaKeys = spark.read
+          .schema(LogSink.stagedSchema(rowSchema, stampsOp = true))
+          .parquet(staged: _*)
+          .select(keys.map(org.apache.spark.sql.functions.col): _*)
+        val id = Changelog.claimSerializable(spark, path, keys, deltaKeys,
+          readVersion, writer, s"this $verb",
+          "re-run the statement (it will re-derive against the new head)")
+        Changelog.landStaged(path, id, staged, verb, writer)
       }
-      sweep()
-    }
+    } finally sweep() // a refused statement leaves no spool or staging
 
     override def abort(messages: Array[WriterCommitMessage]): Unit =
       sweep()
 
     private def sweep(): Unit = {
       LogFs.delete(spoolDir)
-      LogFs.delete(LogFs.child(LogFs.child(LogFs.child(path,
-        "__stream_staging"), s"query=$stagingId"), "epoch=0"))
-      val qdir = LogFs.child(LogFs.child(path, "__stream_staging"),
-        s"query=$stagingId")
-      if (LogFs.list(qdir).isEmpty) LogFs.delete(qdir)
+      LogSink.sweepStaging(path, stagingId, 0L)
     }
   }
 

@@ -181,13 +181,8 @@ object CdcSource {
           "existing ops log to derive the feed schema"))
     val schema = Changelog.changesBetween(spark, opts.path, opts.keys,
       head, head + 1, opts.trackCols).schema
-    schema.fields.foreach { f =>
-      require(LogSink.supportedType(f.dataType),
-        s"feed column ${f.name} has type ${f.dataType} — the CDC " +
-          "source's spool readers decode long/int/short/byte/double/" +
-          "float/string/boolean/timestamp/date/binary/decimal/array/" +
-          "map (atomic keys)/struct only")
-    }
+    // the spool readers decode the staged-parquet type surface
+    LogSink.requireStageable(schema, "feed")
     // explicit projection: the spool (the window's write amplification)
     // is as narrow as the consumer declares, not as wide as the feed.
     // An OPTION rather than SupportsPushDownRequiredColumns because

@@ -24,34 +24,31 @@ import graft.sources.{Changelog, LogFs}
   * a full streaming TABLE FORMAT: streams write it, streams read its
   * change feed, batch reads time-travel it.
   *
+  * This object also holds the staged commit's shared parts, used by
+  * the sink, GraftLog's INSERT and GraftRowLevel's row-level DML:
+  * [[StagingWriter]] stages one parquet file per non-empty task under
+  * [[stagingDir]] (written directly with parquet-hadoop — no second
+  * Spark job), [[requireStageable]] is the one write-schema guard, and
+  * [[sweepStaging]] the one sweep; the driver commit lands the staged
+  * files through [[Changelog.landStaged]].
+  *
   * Exactly-once = the changelog's own discipline, mapped onto the DSv2
   * epoch protocol:
   *  - EPOCH IDS ARE COMMIT IDS (the q184/StreamIvm batchId contract);
-  *  - executors stage one parquet file per non-empty task under
-  *    `__stream_staging/epoch=<e>/` (written directly with
-  *    parquet-hadoop — no second Spark job inside the sink), and the
-  *    task's commit message names the staged file;
   *  - the DRIVER commit claims the epoch's commit id (the OCC
   *    arbitration — a FOREIGN writer holding the id fails loudly;
-  *    this query re-delivering its own epoch passes), REPLACES
-  *    `_commit=<epoch>` with the staged files via rename, and sweeps
-  *    the epoch's staging — so a redelivered epoch lands
-  *    byte-equivalently on top of any complete or partial earlier
-  *    attempt, and a crash between staging and commit leaves only
-  *    staging debris the next attempt replaces;
+  *    this query re-delivering its own epoch passes), lands the staged
+  *    files as `_commit=<id>` and sweeps the epoch's staging — so a
+  *    redelivered epoch lands byte-equivalently on top of any complete
+  *    or partial earlier attempt, and a crash between staging and
+  *    commit leaves only staging debris the next attempt replaces;
   *  - abort drops the epoch's staged files.
   *
   * The input schema must match the target log's shape (the
   * plain-vs-ops write guard runs at planning time, BEFORE any epoch
-  * starts) and is bounded to long/int/double/float/string/boolean/
-  * timestamp/date/binary/decimal (any precision)/struct/array/map
-  * columns — the staged files are written by the sink itself, not
-  * Spark's parquet writer, so the type surface is explicit (see
-  * [[LogSink.supportedType]]; timestamps stage as UTC-micros INT64 and
-  * dates as epoch-days INT32, Spark's own internal representations,
-  * and read back exactly; the widening lets the documents/embeddings
-  * shapes — binary media, float embeddings, token lists, feature
-  * maps — ride the streaming table format). Writer identity
+  * starts) and is bounded to [[supportedType]] (timestamps stage as
+  * UTC-micros INT64 and dates as epoch-days INT32, Spark's own internal
+  * representations, and read back exactly). Writer identity
   * comes from option `writer` (default [[Changelog.SoloWriter]]) —
   * give concurrent producers distinct ids, the claim arbitration does
   * the rest.
@@ -136,6 +133,67 @@ object LogSink {
       BigInt(2).pow(8 * n - 1) - 1 >= BigInt(10).pow(precision) - 1)
       .getOrElse(((precision * 3.32193 + 1) / 8 + 1).toInt)
 
+  /** The staged writers' one write-schema guard, run at planning time
+    * before any task stages a file: `schema` carries none of
+    * `reserved` (the claim assigns `_commit`; the table surfaces stamp
+    * `_op` themselves, so only the sink's per-op input may carry it)
+    * and every column is in the [[supportedType]] surface. The message
+    * names the refusing `surface`. The spools served back through the
+    * same type surface (row-level DML's snapshot, the table and feed
+    * streams) run it on their schemas too.
+    */
+  private[graft] def requireStageable(schema: StructType, surface: String,
+      reserved: Seq[String] = Seq(Changelog.CommitCol, Changelog.OpCol))
+      : Unit = {
+    val carried = reserved.filter(schema.fieldNames.contains)
+    require(carried.isEmpty,
+      s"$surface input carries the reserved column " +
+        s"${carried.mkString(", ")} — the claim assigns " +
+        s"${Changelog.CommitCol} and the table surfaces stamp " +
+        Changelog.OpCol)
+    schema.fields.foreach { f =>
+      require(supportedType(f.dataType),
+        s"$surface column ${f.name} has type ${f.dataType} — outside " +
+          "the staged-parquet type surface: long/int/short/byte/double/" +
+          "float/string/boolean/timestamp/date/binary/decimal/array/map " +
+          "(atomic keys)/struct only")
+    }
+  }
+
+  /** The schema of the files [[StagingWriter]] stages for `schema`:
+    * the writer's columns, then `_op` when the writer stamps it. A
+    * read of staged files takes it instead of inferring one.
+    */
+  private[graft] def stagedSchema(schema: StructType,
+                                  stampsOp: Boolean): StructType =
+    if (stampsOp) schema.add(Changelog.OpCol, StringType) else schema
+
+  /** `__stream_staging/query=<id>` under the log: one dir per writing
+    * query (or per INSERT / row-level statement), so two concurrent
+    * producers that both run epochs 0,1,2… never sweep each other's
+    * in-flight staged files.
+    */
+  private def queryStaging(path: String, queryId: String): String =
+    LogFs.child(LogFs.child(path, "__stream_staging"), s"query=$queryId")
+
+  /** The staged files of epoch `epochId` of `queryId` (a batch write
+    * stages as epoch 0 of its own id).
+    */
+  private def stagingDir(path: String, queryId: String,
+                         epochId: Long): String =
+    LogFs.child(queryStaging(path, queryId), s"epoch=$epochId")
+
+  /** Drop the epoch's staging and prune the query dir once its last
+    * epoch is gone — "no staging debris after committed epochs" stays
+    * true at the `__stream_staging` root.
+    */
+  private[graft] def sweepStaging(path: String, queryId: String,
+                                  epochId: Long): Unit = {
+    LogFs.delete(stagingDir(path, queryId, epochId))
+    val qdir = queryStaging(path, queryId)
+    if (LogFs.list(qdir).isEmpty) LogFs.delete(qdir)
+  }
+
   private[streaming] class LogTable(schema: StructType,
                                     options: CaseInsensitiveStringMap)
       extends Table with SupportsWrite {
@@ -157,16 +215,8 @@ object LogSink {
         .getOrElse(if (multiWriter) s"q_${info.queryId()}"
                    else Changelog.SoloWriter)
       val s = info.schema()
-      require(!s.fieldNames.contains(Changelog.CommitCol),
-        s"LogSink input carries the reserved ${Changelog.CommitCol} " +
-          "column — the epoch id IS the commit coordinate")
-      s.fields.foreach { f =>
-        require(LogSink.supportedType(f.dataType),
-          s"LogSink input column ${f.name} has type ${f.dataType} — " +
-            "the staged parquet writer covers long/int/short/byte/" +
-            "double/float/string/boolean/timestamp/date/binary/" +
-            "decimal/array/map (atomic keys)/struct only")
-      }
+      // the sink's input is log-shaped: an ops feed carries its own _op
+      requireStageable(s, "LogSink", reserved = Seq(Changelog.CommitCol))
       // the plain-vs-ops shape guard, BEFORE any epoch runs: a plain
       // stream into an ops log would land rows that compact as DEAD
       Changelog.requireMatchingShape(
@@ -208,24 +258,6 @@ object LogSink {
                                          multiWriter: Boolean,
                                          constantOp: Option[String] = None)
       extends StreamingWrite {
-
-    // staging is namespaced by QUERY, not just epoch: two concurrent
-    // producers both run epochs 0,1,2…, and a shared epoch dir would
-    // let one query's commit sweep the other's in-flight staged files
-    private def stagingDir(epochId: Long): String =
-      LogFs.child(LogFs.child(LogFs.child(path, "__stream_staging"),
-        s"query=$queryId"), s"epoch=$epochId")
-
-    /** Sweep the epoch's staging and prune the per-query parent once
-      * its last epoch is gone — "no staging debris after committed
-      * epochs" stays true at the `__stream_staging` root.
-      */
-    private def sweepStaging(epochId: Long): Unit = {
-      LogFs.delete(stagingDir(epochId))
-      val qdir = LogFs.child(LogFs.child(path, "__stream_staging"),
-        s"query=$queryId")
-      if (LogFs.list(qdir).isEmpty) LogFs.delete(qdir)
-    }
 
     // ---- epoch → commit mapping -------------------------------------
     //
@@ -309,37 +341,23 @@ object LogSink {
           Changelog.claimCommit(path, id, writer)
           id
         }
-      val staged = messages.collect { case StagedFile(f) => f }
+      val staged = stagedFiles(messages)
       // CHECK constraints: validate the epoch's staged files BEFORE
       // any rename lands them — a violating epoch fails loudly here
       // and nothing lands (one read of the epoch's own files, only on
       // constrained logs)
       Changelog.validateStagedConstraints(
-        org.apache.spark.sql.SparkSession.active, path,
-        staged.toIndexedSeq)
-      val dir = Changelog.commitDir(path, commitId)
-      // replace-don't-append: a redelivered epoch overwrites any
-      // complete or partial earlier attempt (the commitIdempotent
-      // discipline, file-level)
-      LogFs.delete(dir)
-      if (staged.nonEmpty) {
-        LogFs.mkdirs(dir)
-        staged.zipWithIndex.foreach { case (f, i) =>
-          val fs = LogFs.fs(path)
-          val ok = fs.rename(new org.apache.hadoop.fs.Path(f),
-            new org.apache.hadoop.fs.Path(dir, f"part-$i%05d.parquet"))
-          require(ok, s"failed to land staged epoch file $f into $dir")
-        }
-      }
-      // operation metadata like every batch verb (a redelivered epoch
-      // re-records the identical marker)
-      Changelog.writeCommitInfo(path, commitId, "stream-epoch", writer)
-      sweepStaging(epochId)
+        org.apache.spark.sql.SparkSession.active, path, staged,
+        stagedSchema(schema, constantOp.isDefined))
+      // a redelivered epoch replaces any earlier attempt's commit, and
+      // re-records the identical info marker
+      Changelog.landStaged(path, commitId, staged, "stream-epoch", writer)
+      sweepStaging(path, queryId, epochId)
     }
 
     override def abort(epochId: Long,
                        messages: Array[WriterCommitMessage]): Unit =
-      sweepStaging(epochId)
+      sweepStaging(path, queryId, epochId)
   }
 
   private class LogWriterFactory(path: String, schema: StructType,
@@ -370,11 +388,10 @@ object LogSink {
         constantOp)
   }
 
-  private[graft] def stagedFileOf(
-      m: WriterCommitMessage): Option[String] = m match {
-    case StagedFile(f) => Some(f)
-    case _ => None
-  }
+  /** The staged files a write's task messages name, in task order. */
+  private[graft] def stagedFiles(
+      messages: Array[WriterCommitMessage]): IndexedSeq[String] =
+    messages.toIndexedSeq.collect { case StagedFile(f) => f }
 
   /** Writes the task's rows to ONE staged parquet file with the
     * parquet-hadoop example API (the [[CdcSource]] spool reader's
@@ -469,15 +486,12 @@ object LogSink {
 
     private val messageType: MessageType = {
       val b = Types.buildMessage()
-      schema.fields.foreach(f => b.addField(parquetField(f.name, f.dataType)))
-      if (constantOp.isDefined || perRowOp) b.addField(
-        Types.optional(BINARY).as(stringType()).named(Changelog.OpCol))
+      stagedSchema(schema, constantOp.isDefined || perRowOp).fields
+        .foreach(f => b.addField(parquetField(f.name, f.dataType)))
       b.named("graft_log_epoch")
     }
 
-    private val file = LogFs.child(
-      LogFs.child(LogFs.child(LogFs.child(path, "__stream_staging"),
-        s"query=$queryId"), s"epoch=$epochId"),
+    private val file = LogFs.child(stagingDir(path, queryId, epochId),
       s"stage-$partitionId-$taskId-${java.util.UUID.randomUUID()}.parquet")
 
     private lazy val out: ParquetWriter[

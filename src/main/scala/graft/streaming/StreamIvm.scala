@@ -186,7 +186,7 @@ object StreamIvm {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    served(s.read.parquet(rollPath))
+    served(Sinks.readLayout(s, rollPath))
   }
 
   // ---- MVCC / exactly-once variant -----------------------------------

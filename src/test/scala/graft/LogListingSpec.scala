@@ -94,6 +94,32 @@ class LogListingSpec extends SparkSpec {
       Changelog.snapshotAt(spark, path, Seq("k"), 3L)) == ((0, 0)))
   }
 
+  test("schema verbs read the table state once: one listing before the " +
+       "claim's own, one union read") {
+    val path = freshDir("schema_verbs")
+    Changelog.commitUpsert((0L until 10L).map(k => (k, k * 1.0, s"w$k"))
+      .toDF("k", "v", "w"), path, 0L)
+    // (root listings, Spark jobs) of one verb
+    def cost(f: => Unit): (Int, Int) = {
+      var roots = 0
+      val (jobs, _) = observe { roots = rootListings(path)(f) }
+      (roots, jobs)
+    }
+    // when each verb re-read the mapping, head and union on its own:
+    // rename (3, 3), drop (3, 3), add constraint (5, 6), a pre-validated
+    // add constraint (5, 3)
+    assert(cost(Changelog.commitRenameColumn(spark, path, Seq("k"), "v",
+      "v2")) == ((2, 2)))
+    assert(cost(Changelog.commitDropColumn(spark, path, Seq("k"), "w")) ==
+      ((2, 2)))
+    assert(cost(Changelog.addCheckConstraint(spark, path, Seq("k"), "pos",
+      "v2 >= 0")) == ((2, 5)))
+    assert(cost(Changelog.addCheckConstraint(spark, path, Seq("k"), "pos2",
+      "v2 >= -1", validated = true)) == ((2, 2)))
+    assert(Changelog.headVersion(path).contains(4L))
+    assert(Changelog.logicalColumns(spark, path) == Seq("k", "v2"))
+  }
+
   test("a lookup no commit admits answers empty without a Spark job, in " +
        "the snapshot's schema") {
     val path = freshDir("empty_lookup")
